@@ -60,9 +60,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it parallelizes at every measured size (e.g. ann_pq_topk 1.19→0.68 s
     # at sf0.1, 1.16→0.71 s at 50k-vector scale; ann_topk 0.72→0.35 /
     # 0.73→0.40; family-wide ~2.5 s at sf0.1, ~1.5 s at 10x). A production
-    # 10^9-vector table is multi-row-group and splits in the scan anyway;
-    # SPARK_GRAFT_SPREAD=N still forces a spread via _docs-style wiring if
-    # an unsplittable vector dump ever needs it.
+    # 10^9-vector table is multi-row-group and splits in the scan anyway.
+    # SPARK_GRAFT_SPREAD only tunes spread_unsplittable, which this read
+    # does not call, so no env setting spreads it.
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 

@@ -103,3 +103,80 @@ def test_inline_equals_fanout(spark, docs_df, oracle_results):
         exp_spans = [(s.kind, s.text, s.media_ref, s.offset) for s in exp.out_spans]
         assert got_spans == exp_spans
         assert r["plain_text"] == exp.plain_text
+
+
+def _long_doc_corpus() -> list[tuple[str, str | None]]:
+    """Docs around the catalyst engine's giant-doc cutoff (8*256-17 chars):
+    the sf corpora top out near 600 chars, so nothing else on the default
+    path sees a document that length."""
+    import random
+
+    from text_extraction_system_spark.operators import restitch
+
+    cutoff = 8 * restitch.DEFAULT_FANOUT_THRESHOLD - 17
+    rng = random.Random(7)
+    vocab = ["a", "to", "of", "the", "and", "der", "und", "le", "et", "data",
+             "model", "Spark.", "text,", "page"]
+    heads = ["1", "2.1", "3.2.1", "4."]
+
+    def words(n: int) -> list[str]:
+        # a numbered token opening an 8-word span makes it a section heading
+        return [rng.choice(heads) if i % 8 == 0 and rng.random() < 0.2
+                else rng.choice(vocab) for i in range(n)]
+
+    def exact(n_chars: int) -> str:
+        # 1-2 char words pack the most spans into the length (and make the
+        # media spans outweigh the text, so the OCR branch fires)
+        t = " ".join(rng.choice(["a", "b", "of", "to"])
+                     for _ in range(n_chars))[:n_chars]
+        return t[:-1] + "z" if t.endswith(" ") else t
+
+    return [
+        ("cut-1", exact(cutoff - 1)),
+        ("cut", exact(cutoff)),
+        ("cut+1", exact(cutoff + 1)),
+        ("words3000", " ".join(words(3000))),
+        ("spaces", " " * (cutoff + 500)),
+        ("empty", ""),
+        ("null", None),
+    ]
+
+
+def test_long_docs_default_engine_matches_oracle_and_catalyst(spark):
+    """The default engine sends every doc, giant or not, through one kernel
+    pass; it must equal the oracle on every field (structure included) and
+    the catalyst engine, which fans the long docs out, row for row."""
+    corpus = _long_doc_corpus()
+    docs = spark.createDataFrame(corpus, "doc_id string, text string")
+
+    def snap(df):
+        return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
+
+    got = snap(pipeline.extract_from_documents(docs))
+    assert got == snap(pipeline.extract_from_documents(docs, engine="catalyst"))
+    assert len(got) == len(corpus)
+    for doc_id, text in corpus:
+        exp = oracle.extract(doc_id, text or "")
+        row = got[doc_id]
+        assert [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in row["out_spans"]] == [
+            (s.kind, s.text, s.media_ref, s.offset) for s in exp.out_spans
+        ], doc_id
+        assert row["needs_ocr"] == exp.needs_ocr, doc_id
+        assert row["parse_failures"] == exp.parse_failures, doc_id
+        assert row["plain_text"] == exp.plain_text, doc_id
+        assert row["pages"] == exp.pages, doc_id
+        assert row["structure"] == {
+            "title": exp.title, "language": exp.language,
+            "paragraphs": exp.paragraphs, "sentences": exp.sentences,
+            "sections": exp.sections,
+        }, doc_id
+    # corpus sanity: above the span threshold, OCR and sections exercised
+    assert len(got["words3000"]["out_spans"]) > 256
+    assert any(r["needs_ocr"] for r in got.values())
+    assert got["words3000"]["structure"]["sections"]
+
+
+def test_unknown_engine_raises(docs_df):
+    with pytest.raises(ValueError, match="arow"):
+        pipeline.extract_from_documents(docs_df, engine="arow")

@@ -5,6 +5,7 @@ silently adds a shuffle or breaks column pruning fails CI:
 
 * column pruning reaches the parquet scan (ReadSchema carries only used cols)
 * the inline extraction path is shuffle-free (no Exchange)
+* the default extraction engine is one narrow mapInArrow stage
 * dimension joins broadcast (BroadcastHashJoin, no SortMergeJoin)
 * the fanout path shuffles exactly once (the doc_id gather)
 """
@@ -708,3 +709,15 @@ def test_vectorized_pq_bit_identical(spark):
     ]
     for fast, slow in cases:
         assert snap(fast) == snap(slow)
+
+
+def test_default_extraction_is_one_narrow_stage(spark):
+    """The default engine (with structure) is a single mapInArrow pass over
+    the scan: no giant-doc fan-out shuffle, no union, no second python
+    boundary."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(pipeline.extract_from_documents(docs))
+    assert "Exchange" not in plan, plan
+    assert "Union" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan

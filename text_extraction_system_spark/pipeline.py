@@ -9,7 +9,10 @@ Spark-first).
       -> segment_structure     (one Arrow UDF: paragraphs/sentences/
                                 sections/language/title)
 
-Only the giant-doc branch shuffles; the hot path is a single narrow stage.
+That is the Catalyst engine, where only the giant-doc fan-out shuffles.
+With structure, ``extract_from_documents`` defaults to the ``mapInArrow``
+engine instead: every stage above runs in one Python pass per batch, so
+the whole plan is a single narrow stage for documents of any length.
 """
 
 from __future__ import annotations
@@ -37,68 +40,20 @@ def _results_schema(with_structure: bool) -> T.StructType:
     return T.StructType(fields)
 
 
-def _extract_documents_arrow(
-    docs: DataFrame,
-    doc_id_col: str,
-    text_col: str,
-    with_structure: bool,
-) -> DataFrame:
-    """Arrow extraction kernel: one vectorized pass per batch running the
-    per-document reference semantics (``core.oracle`` — the same module
-    every correctness test pins the Catalyst path against) plus the
-    engine's own structure segmentation (``structure._structure_of``, the
-    function the structure pandas_udf calls). VALUE-IDENTICAL to the
-    Catalyst formulation by construction and pinned row-for-row by pytest.
-    Measured SLOWER than the expression pipeline (see extract_from_documents)
-    — kept as the alternative engine and the runnable reference shape, not
-    the default."""
-    import pandas as pd
-
-    out_schema = _results_schema(with_structure)
-    cols = [f.name for f in out_schema.fields]
-
-    def gen(batches):
-        from .core import oracle
-
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                ex = oracle.extract(str(doc_id), text or "")
-                out["doc_id"].append(ex.doc_id)
-                out["needs_ocr"].append(ex.needs_ocr)
-                out["parse_failures"].append(ex.parse_failures)
-                out["out_spans"].append([
-                    {"kind": s.kind, "text": s.text,
-                     "media_ref": s.media_ref, "offset": s.offset}
-                    for s in ex.out_spans
-                ])
-                out["plain_text"].append(ex.plain_text)
-                out["pages"].append(ex.pages)
-                if with_structure:
-                    out["structure"].append(structure._structure_of(ex.plain_text))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()},
-                columns=cols,
-            )
-
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema=out_schema)
-
-
 def _extract_documents_arrow_native(
     docs: DataFrame,
     doc_id_col: str,
     text_col: str,
     with_structure: bool,
 ) -> DataFrame:
-    """``mapInArrow`` extraction kernel (r6): the same per-document
-    ``core.oracle`` semantics as ``_extract_documents_arrow``, but the
-    nested output columns (out_spans, pages, structure) are built as
-    pyarrow arrays from flat child buffers + offset vectors instead of
-    pandas object Series of dicts — the pandas→Arrow conversion of nested
-    python objects was the measured majority of the old kernel's cost
-    (13.2 s vs catalyst 8.8 s on an 800k-doc corpus; this kernel: see
+    """``mapInArrow`` extraction kernel: one pass per batch running the
+    per-document reference semantics (``core.oracle``) plus the engine's
+    structure segmentation (``structure._structure_of``, the function the
+    structure pandas_udf calls). The nested output columns (out_spans,
+    pages, structure) are built as pyarrow arrays from flat child buffers +
+    offset vectors, not pandas object Series of dicts: converting nested
+    python objects through pandas cost a ``mapInPandas`` kernel of this
+    shape 13.2 s vs catalyst 8.8 s on an 800k-doc corpus (this kernel: see
     OPTIMIZATION_r06.md). Value-identical by construction: every field
     comes from the exact oracle/struct code the pytest fixtures pin."""
     import numpy as np
@@ -266,30 +221,47 @@ def extract_from_documents(
     paying one); WITH structure a python pass is unavoidable (the
     segmenter), so the ``mapInArrow`` kernel that does extraction AND
     structure in that same pass wins decisively (1.22 s vs 1.63 s at
-    sf1.0; 4.97 s vs 8.53 s on an 800k-doc corpus — the r5 "arrow is
-    slower" measurement was the old pandas-object kernel at 512-row
-    batches; ``_extract_documents_arrow_native`` builds the nested
-    columns from flat pyarrow buffers instead). Both engines are pinned
-    row-for-row equal (tests/test_integration.py).
+    sf1.0; 4.97 s vs 8.53 s on an 800k-doc corpus). Both engines are
+    pinned row-for-row equal (tests/test_integration.py,
+    tests/test_pipeline_vs_oracle.py).
 
-    Giant-doc routing happens HERE, on the RAW text length, not downstream
-    on ``size(spans)``: a filter over the derived-spans projection gets
-    collapsed/pushed by Catalyst so the span-construction HOF re-evaluates
-    once for the predicate and again for the output — per branch (measured:
-    the two routing filters more than doubled the restitch stage, 1.8 s ->
-    4.1 s on 320k docs). ``length(text)`` is a scan-cheap upper bound:
-    words <= (len+1)/2 and spans <= 2*ceil(words/8), so any doc that COULD
-    exceed ``fanout_threshold`` spans satisfies len > 8*threshold - 17.
-    Long-worded docs below the span threshold may still route to fanout —
-    harmless, all paths are result-identical (pytest-pinned).
+    ``fanout_threshold`` routes the catalyst engine only. The arrow
+    engine sends every document, whatever its length, through the kernel:
+    the fan-out gives a document no parallelism (its ``groupBy(doc_id)``
+    gathers all of one document's spans into one reduce task, just as the
+    kernel holds one document in one task) and would add a shuffle, a
+    second python boundary and a union. The kernel is also faster per
+    giant doc (local[4] on a 4-core host, median of 5 warm passes): 1.09 s
+    vs 1.51 s routed for a 200k-word doc, 2.96 s vs 4.82 s for an
+    800k-word one (119k spans), with equal rows.
+
+    Catalyst giant-doc routing happens HERE, on the RAW text length, not
+    downstream on ``size(spans)``: a filter over the derived-spans
+    projection gets collapsed/pushed by Catalyst so the span-construction
+    HOF re-evaluates once for the predicate and again for the output — per
+    branch (measured: the two routing filters more than doubled the
+    restitch stage, 1.8 s -> 4.1 s on 320k docs). ``length(text)`` is a
+    scan-cheap upper bound: words <= (len+1)/2 and spans <=
+    2*ceil(words/8), so any doc that COULD exceed ``fanout_threshold``
+    spans satisfies len > 8*threshold - 17. Long-worded docs below the
+    span threshold may still route to fanout — harmless, all paths are
+    result-identical (pytest-pinned).
 
     derive_spans assigns sequential offsets, so density is an invariant
     here — declared statically (dense=True) rather than re-discovered with
     a per-row pass (the round-2 assembly-family bench regression)."""
+    if engine not in ("auto", "arrow", "catalyst"):
+        raise ValueError(
+            f"engine must be 'auto', 'arrow' or 'catalyst', got {engine!r}"
+        )
     if engine == "auto":
         engine = "arrow" if with_structure else "catalyst"
-    route = fanout_threshold is not None and fanout_threshold > 0
-    if route:
+    if engine == "arrow":
+        return _extract_documents_arrow_native(
+            docs, doc_id_col, text_col, with_structure
+        )
+
+    if fanout_threshold is not None and fanout_threshold > 0:
         tlen = F.length(F.coalesce(F.col(text_col), F.lit("")))
         cutoff = 8 * fanout_threshold - 17
         # the non-space guard keeps degenerate all-space giants (zero spans)
@@ -297,43 +269,22 @@ def extract_from_documents(
         # empty-doc carry-through union — one fewer plan branch for the
         # downstream structure UDF to be pushed into
         has_word = F.col(text_col).rlike("[^ ]")
-        giant_pred = (tlen > cutoff) & has_word
-        small_docs = docs.where((tlen <= cutoff) | ~has_word)
-        giant_docs = docs.where(giant_pred)
-
-    if engine == "arrow":
-        if not route:
-            return _extract_documents_arrow_native(
-                docs, doc_id_col, text_col, with_structure
-            )
-        small_res = _extract_documents_arrow_native(
-            small_docs, doc_id_col, text_col, with_structure
-        )
-        giant = ds.derive_spans(giant_docs, doc_id_col=doc_id_col, text_col=text_col)
-        giant_res = layout.assemble(
-            restitch.process_spans_fanout(giant, may_have_empty=False), dense=True
-        )
-        if with_structure:
-            giant_res = structure.with_structure(giant_res)
-        return small_res.unionByName(giant_res)
-
-    if route:
-        small = ds.derive_spans(small_docs, doc_id_col=doc_id_col, text_col=text_col)
-        giant = ds.derive_spans(giant_docs, doc_id_col=doc_id_col, text_col=text_col)
+        small = ds.derive_spans(docs.where((tlen <= cutoff) | ~has_word),
+                                doc_id_col=doc_id_col, text_col=text_col)
+        giant = ds.derive_spans(docs.where((tlen > cutoff) & has_word),
+                                doc_id_col=doc_id_col, text_col=text_col)
         stitched = restitch.process_spans_inline(small).unionByName(
             restitch.process_spans_fanout(giant, may_have_empty=False)
         )
-        assembled = layout.assemble(stitched, dense=True)
-        if not with_structure:
-            return assembled
-        return structure.with_structure(assembled)
-    spans = ds.derive_spans(docs, doc_id_col=doc_id_col, text_col=text_col)
-    return extract_from_spans(
-        spans,
-        fanout_threshold=fanout_threshold,
-        with_structure=with_structure,
-        dense=True,
-    )
+    else:
+        stitched = restitch.process_spans(
+            ds.derive_spans(docs, doc_id_col=doc_id_col, text_col=text_col),
+            fanout_threshold=fanout_threshold,
+        )
+    assembled = layout.assemble(stitched, dense=True)
+    if not with_structure:
+        return assembled
+    return structure.with_structure(assembled)
 
 
 def extract_from_spans(
