@@ -44,17 +44,21 @@ def test_job_output_matches_oracle(spark, tmp_path):
 
 
 def test_arrow_engine_matches_catalyst_engine(spark):
-    """extract_from_documents(engine='arrow') == engine='catalyst'
-    row-for-row, every field including structure — the kernel runs
-    core.oracle + the structure segmenter, so equality here chains the
-    Catalyst path to the reference semantics end-to-end on real parquet."""
+    """The default (Arrow kernel) engine == the catalyst engine plus
+    structure.with_structure, row-for-row, every field including
+    structure — the kernel runs core.oracle + the structure segmenter, so
+    equality here chains the Catalyst path to the reference semantics
+    end-to-end on real parquet."""
     from text_extraction_system_spark import pipeline
+    from text_extraction_system_spark.operators import structure
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
     def snap(df):
         return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
 
-    a = snap(pipeline.extract_from_documents(docs, engine="arrow"))
-    b = snap(pipeline.extract_from_documents(docs, engine="catalyst"))
+    a = snap(pipeline.extract_from_documents(docs))
+    b = snap(structure.with_structure(
+        pipeline.extract_from_documents(docs, with_structure=False)
+    ))
     assert a == b and len(a) == 500

@@ -3,7 +3,9 @@ testdata never produces: NUL-bearing text (F5 scrub path), empty text,
 whitespace-only text. Every documents-only query must agree with its DuckDB
 twin on row count and values — these were real latent asymmetries found in
 round-2 review (pages-CTE scrub, zero-chunk boilerplate, zero-span covers,
-zero-token reading order)."""
+zero-token reading order). The same check runs on the sf0.001 corpus for the
+kernel-backed similarity/dedup/tfidf operators, whose only second
+implementation is the oracle."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
+from conftest import SF_DIR
 
 DOCS = pd.DataFrame(
     {
@@ -43,6 +46,20 @@ DOC_ONLY_QUERIES = [
 ]
 
 
+def _assert_parity(spark, con, data_dir: str, name: str) -> None:
+    """Query ``name`` over ``data_dir`` equals its DuckDB oracle on ``con``:
+    same row count, same values (compared as sorted strings)."""
+    q = entry.queries()[name](spark, data_dir)
+    cols = q.columns
+    sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)
+    odf = (
+        con.execute(entry.oracle_sql()[name]).df()[cols]
+        .sort_values(by=cols).reset_index(drop=True).astype(str)
+    )
+    assert len(sdf) == len(odf), f"{name}: {len(sdf)} vs {len(odf)} rows"
+    pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
+
+
 @pytest.fixture(scope="module")
 def edge_dir(spark):
     d = tempfile.mkdtemp()
@@ -61,15 +78,7 @@ def duck(edge_dir):
 
 @pytest.mark.parametrize("name", DOC_ONLY_QUERIES)
 def test_edge_corpus_parity(spark, edge_dir, duck, name):
-    q = entry.queries()[name](spark, edge_dir)
-    cols = q.columns
-    sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)
-    odf = (
-        duck.execute(entry.oracle_sql()[name]).df()[cols]
-        .sort_values(by=cols).reset_index(drop=True).astype(str)
-    )
-    assert len(sdf) == len(odf), f"{name}: {len(sdf)} vs {len(odf)} rows"
-    pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
+    _assert_parity(spark, duck, edge_dir, name)
 
 
 EMB_QUERIES = ["ann_topk", "ann_lsh_topk", "ann_ivf_topk", "emb_near_dup"]
@@ -107,15 +116,7 @@ def test_edge_embeddings_parity(spark, emb_dir, emb_duck, name):
     in both engines), exact duplicates (cosine-1 ties) and antipodes must not
     diverge the similarity queries — a zero embedding previously raised
     ANSI DIVIDE_BY_ZERO and killed the job."""
-    q = entry.queries()[name](spark, emb_dir)
-    cols = q.columns
-    sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)
-    odf = (
-        emb_duck.execute(entry.oracle_sql()[name]).df()[cols]
-        .sort_values(by=cols).reset_index(drop=True).astype(str)
-    )
-    assert len(sdf) == len(odf), f"{name}: {len(sdf)} vs {len(odf)} rows"
-    pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
+    _assert_parity(spark, emb_duck, emb_dir, name)
 
 
 EVENT_QUERIES = ["sessionize", "tumbling"]
@@ -159,12 +160,27 @@ def test_edge_events_parity(spark, ev_dir, ev_duck, name):
     """Timestamp ties (ordering falls to event_id), single-event users, and
     events exactly at the session-gap boundary must not diverge."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    q = entry.queries()[name](spark, ev_dir)
-    cols = q.columns
-    sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)
-    odf = (
-        ev_duck.execute(entry.oracle_sql()[name]).df()[cols]
-        .sort_values(by=cols).reset_index(drop=True).astype(str)
-    )
-    assert len(sdf) == len(odf), f"{name}: {len(sdf)} vs {len(odf)} rows"
-    pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
+    _assert_parity(spark, ev_duck, ev_dir, name)
+
+
+#: operators whose Arrow/numpy kernel is the only Spark implementation —
+#: the oracle is their independent second one. ``ann_ivf_trained`` replays
+#: every Lloyd cell assignment; ``media_near_dup`` is the 16-dim SRP case.
+KERNEL_QUERIES = [
+    "tfidf_keywords", "dup_windows", "near_dup_pairs", "incremental_dedup",
+    "ann_topk", "ann_ivf_topk", "ann_ivf_trained", "ann_pq_topk",
+    "ann_pq_rerank", "ann_ivf_pq", "emb_near_dup", "media_near_dup",
+]
+
+
+@pytest.fixture(scope="module")
+def sf_duck():
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    return con
+
+
+@pytest.mark.parametrize("name", KERNEL_QUERIES)
+def test_sf_kernel_parity(spark, sf_duck, name):
+    _assert_parity(spark, sf_duck, SF_DIR, name)

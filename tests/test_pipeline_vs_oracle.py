@@ -11,6 +11,7 @@ import pytest
 
 from text_extraction_system_spark import pipeline
 from text_extraction_system_spark.core import oracle
+from text_extraction_system_spark.operators import structure
 
 
 @pytest.fixture(scope="module")
@@ -153,7 +154,9 @@ def test_long_docs_default_engine_matches_oracle_and_catalyst(spark):
         return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
 
     got = snap(pipeline.extract_from_documents(docs))
-    assert got == snap(pipeline.extract_from_documents(docs, engine="catalyst"))
+    assert got == snap(structure.with_structure(
+        pipeline.extract_from_documents(docs, with_structure=False)
+    ))
     assert len(got) == len(corpus)
     for doc_id, text in corpus:
         exp = oracle.extract(doc_id, text or "")
@@ -175,8 +178,3 @@ def test_long_docs_default_engine_matches_oracle_and_catalyst(spark):
     assert len(got["words3000"]["out_spans"]) > 256
     assert any(r["needs_ocr"] for r in got.values())
     assert got["words3000"]["structure"]["sections"]
-
-
-def test_unknown_engine_raises(docs_df):
-    with pytest.raises(ValueError, match="arow"):
-        pipeline.extract_from_documents(docs_df, engine="arow")

@@ -179,82 +179,6 @@ def test_ivf_training_descends(spark):
     assert len(c1) == 8 and all(len(v) == 64 for v in c1)
 
 
-def test_vectorized_ivf_assignment_bit_identical(spark):
-    """Round-2 verdict item 4: the numpy mapInPandas assignment must choose
-    EXACTLY the same cell as the interpreted HOF expression for every row —
-    not within tolerance, identical (the accumulation replays the fold's
-    multiply/add order). Cell identity is what partitioning needs; a single
-    divergent row would send a vector to a different IVF partition."""
-    from pyspark.sql import functions as F
-
-    from text_extraction_system_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cells_lit = similarity._ivf_cells_lit(64, similarity.IVF_CENTROIDS)
-    hof = emb.select(
-        "vec_id",
-        similarity.ivf_cell_col(
-            similarity.ivf_dists_col(F.col("embedding"), cells_lit)
-        ).alias("cell"),
-    )
-    vec = similarity.assign_cells_vectorized(emb).select("vec_id", "cell")
-    diff = (
-        hof.alias("h")
-        .join(vec.alias("v"), "vec_id")
-        .where(F.col("h.cell") != F.col("v.cell"))
-        .count()
-    )
-    assert diff == 0
-    assert vec.count() == emb.count()
-
-
-def test_vectorized_topk_bit_identical(spark):
-    """r6: the numpy partial-top-k scorer must reproduce the HOF
-    broadcast-join formulation EXACTLY — same (query, cand, rank) rows,
-    same cosine bits — for both the brute-force and the IVF-probed shape
-    (the kernel replays the fold's multiply/add order and the probe-cell
-    tie-break)."""
-    from text_extraction_system_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for fn in (similarity.brute_force_topk, similarity.ivf_topk):
-        slow = {
-            (r["query_id"], r["rank"]): (r["cand_id"], r["cosine"])
-            for r in fn(emb, vectorized=False).collect()
-        }
-        fast = {
-            (r["query_id"], r["rank"]): (r["cand_id"], r["cosine"])
-            for r in fn(emb, vectorized=True).collect()
-        }
-        assert fast == slow, fn.__name__
-
-
-def test_vectorized_srp_signatures_bit_identical(spark):
-    """The numpy SRP signature twin must emit EXACTLY the HOF's bucket
-    strings for every (row, band) — identical sign bits from the replayed
-    fold — on both the 64-dim embeddings and the 16-dim media features."""
-    from pyspark.sql import functions as F
-
-    from text_extraction_system_spark.operators import multimodal, similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    cases = [
-        (emb, dict(id_col="vec_id", vec_col="embedding", dim=64)),
-        (
-            multimodal.extract_features(docs),
-            dict(id_col="media_ref", vec_col="feature", dim=multimodal.FEATURE_DIM),
-        ),
-    ]
-    for df, kw in cases:
-        hof = similarity.srp_banded_buckets(df, vectorized=False, **kw)
-        vec = similarity.srp_banded_buckets(df, vectorized=True, **kw)
-        n = hof.count()
-        assert vec.count() == n
-        joint = hof.join(vec, ["vid", "band", "bucket"]).count()
-        assert joint == n, f"{n - joint} divergent (row, band) signatures for {kw}"
-
-
 def test_contamination_report_semantics_and_plan(spark):
     """Decontamination: a train doc quoting an eval 3-gram is flagged with
     the exact hit count; disjoint docs are absent; the eval side broadcasts
@@ -383,6 +307,23 @@ def test_incremental_dedup_semantics(spark):
     assert all(d != "new2" for d, _ in got)
 
 
+def test_near_dup_pairs_custom_column_names(spark):
+    """The id/text column names are parameters all the way down: the
+    verify-stage shingle kernel must read the caller's id column, not a
+    hard-coded ``doc_id``."""
+    from text_extraction_system_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    renamed = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("body"))
+
+    def snap(df):
+        return {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in df.collect()}
+
+    want = snap(dedup.near_dup_pairs(docs))
+    assert want
+    assert snap(dedup.near_dup_pairs(renamed, "id", "body")) == want
+
+
 def test_pack_and_split_invariant_under_partitioning(spark):
     """Distributed-determinism property: physical layout (partition count,
     row order) must never change split labels or pack bins — the guarantee
@@ -409,21 +350,6 @@ def test_pack_and_split_invariant_under_partitioning(spark):
         for v in variants
     ]
     assert labels[0] == labels[1] == labels[2]
-
-
-def test_arrow_signature_rows_match_hof(spark):
-    """The Arrow signature kernel is VALUE-IDENTICAL to the Catalyst HOF
-    formulation — same distinct shingles, same md5-prefix hashes, same
-    affine perm-mins, same band md5s (int64 products stay < 2^62)."""
-    from text_extraction_system_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    key = lambda r: (r["doc_id"], r["band"])
-    a = {key(r): (tuple(r["sig"]), r["band_sig"])
-         for r in dedup.signature_band_rows_arrow(docs).collect()}
-    b = {key(r): (tuple(r["sig"]), r["band_sig"])
-         for r in dedup.signature_rows_hof(docs).collect()}
-    assert a == b and a
 
 
 def test_arrow_simhash_matches_hof(spark):
@@ -527,44 +453,6 @@ def test_repetition_chain_path_matches_counter_and_dataframe(spark):
     )
     assert snap(textstats.repetition_rows_arrow(small)) == snap(
         textstats.repetition_rows(small)
-    )
-
-
-def test_tfidf_vectorized_row_equal(spark):
-    """r6: the Arrow tf-Counter formulation of tfidf_keywords must emit
-    exactly the explode+groupBy form's rows on a real corpus slice."""
-    from text_extraction_system_spark.operators import textstats
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-
-    def snap(df):
-        return {(r["doc_id"], r["rank"]): (r["token"], r["tf"], r["df"], r["score"])
-                for r in df.collect()}
-
-    assert snap(textstats.tfidf_keywords(docs, vectorized=True)) == snap(
-        textstats.tfidf_keywords(docs, vectorized=False)
-    )
-
-
-def test_dup_windows_vectorized_row_equal(spark):
-    """r6: the Arrow Counter + window-count formulation of
-    dup_window_coverage must emit EXACTLY the expression form's rows
-    (same 60-bit md5 window hashes via py_tokens, same counts) on a real
-    corpus slice."""
-    from text_extraction_system_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-
-    def snap(df):
-        return {
-            r["doc_id"]: (r["n_windows"], r["dup_windows"],
-                          r["distinct_shared_windows"],
-                          f"{r['dup_window_frac']:.17g}")
-            for r in df.collect()
-        }
-
-    assert snap(dedup.dup_window_coverage(docs, vectorized=True)) == snap(
-        dedup.dup_window_coverage(docs, vectorized=False)
     )
 
 
@@ -684,31 +572,6 @@ def test_mixture_plan_semantics(spark):
     ).collect()}
     assert again["big"]["docs_sampled"] == b["docs_sampled"]
     assert again["big"]["tokens_sampled"] == b["tokens_sampled"]
-
-
-def test_vectorized_pq_bit_identical(spark):
-    """r6: the ADC partial-top-k kernel and the fused assign+encode must
-    reproduce the expression/join formulations exactly — same rows, same
-    adc/cosine bits — for plain PQ, reranked PQ, and IVF-PQ."""
-    from text_extraction_system_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    books = similarity.pq_train(emb)
-    cents = similarity.ivf_train(emb, iters=2)
-
-    def snap(df):
-        return {(r["query_id"], r["rank"]): tuple(r) for r in df.collect()}
-
-    cases = [
-        (similarity.pq_topk(emb, books, vectorized=True),
-         similarity.pq_topk(emb, books, vectorized=False)),
-        (similarity.pq_topk(emb, books, rerank=20, vectorized=True),
-         similarity.pq_topk(emb, books, rerank=20, vectorized=False)),
-        (similarity.ivf_pq_topk(emb, cents, books, vectorized=True),
-         similarity.ivf_pq_topk(emb, cents, books, vectorized=False)),
-    ]
-    for fast, slow in cases:
-        assert snap(fast) == snap(slow)
 
 
 def test_default_extraction_is_one_narrow_stage(spark):

@@ -1,11 +1,12 @@
 """Near-duplicate detection: shingling, MinHash signatures, LSH banding,
 candidate-pair generation, exact n-gram Jaccard verification.
 
-Scale shape (the reason this is LSH and not O(n^2)): signatures and bands are
-per-row Catalyst expressions (narrow); the only shuffle is the band-bucket
-self-join, whose buckets are tiny by construction (a band collision implies
-high estimated Jaccard). At 10^12 docs the bucket join is the classic
-dedup-at-scale plan; a skew guard caps pathological buckets.
+Scale shape (the reason this is LSH and not O(n^2)): signatures and bands
+come from one narrow Arrow pass per batch (``_signature_band_rows``); the
+only shuffle is the band-bucket self-join, whose buckets are tiny by
+construction (a band collision implies high estimated Jaccard). At 10^12
+docs the bucket join is the classic dedup-at-scale plan; a skew guard caps
+pathological buckets.
 
 MinHash family: h_p(s) = ((2p+1) * h(s) + p) mod MINHASH_MOD over the doc's
 distinct shingles, where h(s) is an md5-prefix integer — ONE md5 per shingle,
@@ -16,75 +17,22 @@ with md5. (A salted-md5-per-permutation formulation was 16x slower: 27s for
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..core import spec
-from . import exprutil
 
 #: buckets larger than this are dropped as degenerate (boilerplate shingles);
 #: a bucket of b docs yields b^2 pairs — this caps join blowup at scale
 MAX_BUCKET = 64
 
 
-def shingles_col(text: Column, k: int = spec.SHINGLE_K) -> Column:
-    """Distinct word k-shingles of a text column."""
-    words = F.filter(F.split(text, " "), lambda w: w != "")
-    n = F.size(words) - (k - 1)
-    idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, k), " "))
-    )
-
-
-def minhash_sig_col(shingles: Column, perms: int = spec.MINHASH_PERMS) -> Column:
-    """array<bigint> of length ``perms``: min affine-permuted shingle hash.
-
-    The shingle-hash array is let-bound so the md5 pass runs once, not once
-    per permutation."""
-    from . import textstats
-
-    def sig(hs: Column) -> Column:
-        def perm_min(p: Column) -> Column:
-            a = (p.cast("bigint") * 2 + 1) * spec.MINHASH_MULT % spec.MINHASH_MOD
-            return F.array_min(
-                F.transform(hs, lambda h: (h * a + p) % spec.MINHASH_MOD)
-            )
-
-        return F.transform(F.sequence(F.lit(0), F.lit(perms - 1)), perm_min)
-
-    hashes = F.transform(
-        shingles, lambda s: textstats.token_hash_col(s) % spec.MINHASH_MOD
-    )
-    return exprutil.let(hashes, sig)
-
-
-def band_sigs_col(sig: Column, bands: int = spec.LSH_BANDS,
-                  perms: int = spec.MINHASH_PERMS) -> Column:
-    """array<struct<band:int, band_sig:string>> — md5 of each band's rows."""
-    rows = perms // bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")
-                    ),
-                    ",",
-                )
-            ).alias("band_sig"),
-        ),
-    )
-
-
 def shingle_hash_set(text: str) -> "list[int]":
-    """Distinct word-SHINGLE_K-shingle hashes of one text — the python twin
-    of ``shingles_col`` + ``token_hash_col % MINHASH_MOD``, value-identical
-    by construction (same split-on-space/drop-empties tokenization, same
-    md5-prefix integer). Shared by the Arrow signature kernel and tests."""
+    """Distinct word-SHINGLE_K-shingle hashes of one text: split on single
+    spaces, drop empties, then ``token_hash_col % MINHASH_MOD`` of each
+    distinct shingle (the same md5-prefix integer the DuckDB oracle
+    computes). Shared by the Arrow signature kernel and tests."""
     import hashlib
 
     words = [w for w in (text or "").split(" ") if w]
@@ -101,39 +49,45 @@ def shingle_hash_set(text: str) -> "list[int]":
     ]
 
 
-def signature_band_rows_arrow(
+def _signature_band_rows(
     docs: DataFrame,
     doc_id_col: str = "doc_id",
     text_col: str = "text",
-    perms: int = spec.MINHASH_PERMS,
-    bands: int = spec.LSH_BANDS,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, sig, band, band_sig) exploded band rows via ONE Arrow pass —
-    VALUE-IDENTICAL to the HOF formulation (``minhash_sig_col`` +
-    ``band_sigs_col``; pinned by pytest): md5 is md5 in any engine, the
-    affine perm-min is exact int64 arithmetic (h, a_p < 2^31 so products
-    stay < 2^62), and min over a set is order-free. The HOF build cost
-    ~2.9 s at sf0.1 — almost all of it the per-shingle slice+join transform
-    in the interpreted evaluator; the python/numpy kernel does the same
-    work at C speed (~0.5 s), which every signature consumer
-    (near-dup, incremental dedup, the persisted state write) inherits."""
+    """(doc_id, sig, band, band_sig) exploded band rows via ONE Arrow pass:
+    ``sig`` is the MINHASH_PERMS-long array of min affine-permuted shingle
+    hashes, ``band_sig`` the md5 of each band's comma-joined rows. Exact by
+    construction, so the DuckDB oracle reproduces every value: md5 is md5
+    in any engine, the affine perm-min is exact int64 arithmetic (h, a_p <
+    2^31 so products stay < 2^62), and min over a set is order-free. Docs
+    with no shingle emit no rows. The same work as interpreted per-shingle
+    slice+join expressions cost ~2.9 s at sf0.1; the python/numpy kernel
+    does it at C speed (~0.5 s), which every signature consumer (near-dup,
+    incremental dedup, the persisted state write) inherits.
+
+    ``carry`` columns pass through the kernel untouched, repeated on each
+    of a doc's band rows (the streaming job's event-time column); batch
+    callers ship only the id and text."""
     import hashlib
 
     import numpy as np
     import pandas as pd
 
+    perms, bands = spec.MINHASH_PERMS, spec.LSH_BANDS
     A = np.array(
         [((2 * p + 1) * spec.MINHASH_MULT) % spec.MINHASH_MOD for p in range(perms)],
         dtype=np.int64,
     )
     P = np.arange(perms, dtype=np.int64)
     rows_per = perms // bands
+    cols = ["doc_id", "sig", "band", "band_sig"]
 
     def gen(batches):
-        cols = ["doc_id", "sig", "band", "band_sig"]
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+            pos: list[int] = []
+            for i, (doc_id, text) in enumerate(zip(pdf[doc_id_col], pdf[text_col])):
                 hs_list = shingle_hash_set(text)
                 if not hs_list:
                     continue
@@ -149,18 +103,27 @@ def signature_band_rows_arrow(
                     out["sig"].append(sig)
                     out["band"].append(b)
                     out["band_sig"].append(bs)
+                pos.extend([i] * bands)
             # object dtype everywhere: a batch with no surviving docs would
             # otherwise default to empty float64 columns, which Arrow cannot
             # convert to list<int64>/string targets
-            yield pd.DataFrame(
+            frame = pd.DataFrame(
                 {k: pd.Series(v, dtype=object) for k, v in out.items()},
                 columns=cols,
             )
+            for c in carry:
+                frame[c] = pdf[c].iloc[pos].to_numpy()
+            yield frame
 
+    fields = {f.name: f for f in docs.schema.fields}
+    schema = "doc_id string, sig array<bigint>, band int, band_sig string"
     return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
+        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col, *carry
     ).mapInPandas(
-        gen, schema="doc_id string, sig array<bigint>, band int, band_sig string"
+        gen,
+        schema=", ".join(
+            [schema] + [f"`{c}` {fields[c].dataType.simpleString()}" for c in carry]
+        ),
     )
 
 
@@ -197,45 +160,38 @@ def _shingle_hash_rows_arrow(docs: DataFrame, doc_id_col: str = "doc_id",
 
 
 def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
-                 text_col: str = "text", vectorized: bool = True) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """(doc_id, shingles) for docs with at least one shingle.
 
-    ``vectorized=True`` (r6): one Arrow pass builds the distinct-shingle
-    string arrays in python (same split-on-space/drop-empties words, same
-    k, emitted sorted — a deterministic order, which array_intersect/union
-    set sizes are insensitive to) instead of the interpreted per-shingle
-    slice+array_join HOF. Row-equal up to array order (pytest pins the
-    jaccard consumers bit-equal)."""
-    if vectorized:
-        import pandas as pd
+    One Arrow pass builds the distinct-shingle string arrays in python
+    (split on single spaces, drop empties, word k-shingles), emitted
+    sorted — a deterministic order, which array_intersect/union set sizes
+    are insensitive to."""
+    import pandas as pd
 
-        k = spec.SHINGLE_K
+    k = spec.SHINGLE_K
 
-        def gen(batches):
-            for pdf in batches:
-                ids: list = []
-                sh: list = []
-                for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                    words = [w for w in (text or "").split(" ") if w]
-                    if len(words) < k:
-                        continue
-                    ids.append(doc_id)
-                    sh.append(sorted({
-                        " ".join(words[i:i + k])
-                        for i in range(len(words) - k + 1)
-                    }))
-                yield pd.DataFrame({
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "shingles": pd.Series(sh, dtype=object),
-                }, columns=["doc_id", "shingles"])
+    def gen(batches):
+        for pdf in batches:
+            ids: list = []
+            sh: list = []
+            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+                words = [w for w in (text or "").split(" ") if w]
+                if len(words) < k:
+                    continue
+                ids.append(doc_id)
+                sh.append(sorted({
+                    " ".join(words[i:i + k])
+                    for i in range(len(words) - k + 1)
+                }))
+            yield pd.DataFrame({
+                "doc_id": pd.Series(ids, dtype=object),
+                "shingles": pd.Series(sh, dtype=object),
+            }, columns=["doc_id", "shingles"])
 
-        return docs.select(
-            F.col(doc_id_col).cast("string").alias("doc_id"), text_col
-        ).mapInPandas(gen, schema="doc_id string, shingles array<string>")
     return docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        shingles_col(F.col(text_col)).alias("shingles"),
-    ).where(F.size("shingles") > 0)
+        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
+    ).mapInPandas(gen, schema="doc_id string, shingles array<string>")
 
 
 def lsh_candidate_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -246,9 +202,8 @@ def lsh_candidate_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
     (band, band_sig) -> distinct. The join keys are hashes, so the shuffle is
     uniformly distributed by construction; MAX_BUCKET drops degenerate keys.
     """
-    # Arrow signature kernel (value-identical to the HOF twin); sig dropped
-    # before the window so the (band, band_sig) shuffle moves only keys
-    exploded = signature_band_rows_arrow(docs, doc_id_col, text_col).drop("sig")
+    # sig dropped before the window so the (band, band_sig) shuffle moves only keys
+    exploded = _signature_band_rows(docs, doc_id_col, text_col).drop("sig")
     # skew guard: drop buckets that would explode the pair join
     counted = exploded.withColumn(
         "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "band_sig"))
@@ -325,12 +280,11 @@ def contamination_report(
 
     Returns (doc_id, n_hits, n_shingles, contamination = n_hits/n_shingles).
     """
-    # Arrow shingle-hash kernel on BOTH sides (value-identical to the HOF
-    # shingle build — md5 is md5; see shingle_hash_set). The train side
-    # stays one narrow (doc_id, h, n_shingles) pass; note the kernel hashes
-    # mod MINHASH_MOD, and the md5-prefix space is FP_HEX_CHARS hex chars
-    # (7) = 28 bits < MINHASH_MOD, so the mod never fires and the values
-    # equal the raw token_hash_col the oracle computes.
+    # Arrow shingle-hash kernel on BOTH sides (see shingle_hash_set). The
+    # train side stays one narrow (doc_id, h, n_shingles) pass; note the
+    # kernel hashes mod MINHASH_MOD, and the md5-prefix space is
+    # FP_HEX_CHARS hex chars (7) = 28 bits < MINHASH_MOD, so the mod never
+    # fires and the values equal the raw token_hash_col the oracle computes.
     tr = _shingle_hash_rows_arrow(train, doc_id_col, text_col)
     ev = (
         _shingle_hash_rows_arrow(eval_docs, doc_id_col, text_col)
@@ -351,33 +305,13 @@ def contamination_report(
     )
 
 
-def signature_rows_hof(docs: DataFrame, doc_id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Pure-Catalyst formulation of the signature band rows — kept as the
-    value-twin the Arrow kernel is pinned against (tests/test_plans.py);
-    vectorized=False keeps this twin fully independent of python code."""
-    sigs = doc_shingles(docs, doc_id_col, text_col, vectorized=False).select(
-        "doc_id",
-        exprutil.let(
-            minhash_sig_col(F.col("shingles")),
-            lambda sig: F.struct(sig.alias("sig"), band_sigs_col(sig).alias("bands")),
-        ).alias("sb"),
-    )
-    return sigs.select(
-        "doc_id", F.col("sb.sig").alias("sig"), F.explode("sb.bands").alias("b")
-    ).select(
-        "doc_id", "sig",
-        F.col("b.band").alias("band"), F.col("b.band_sig").alias("band_sig"),
-    )
-
-
 def signature_rows(docs: DataFrame, doc_id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """(doc_id, sig, band, band_sig) — the dedup state of a corpus, as a
     plan (no materialization). Degenerate buckets are dropped (MAX_BUCKET),
     so batch joins against the rows are bounded. Signatures come from the
-    Arrow kernel (value-identical to the HOF twin, ~6x cheaper)."""
-    exploded = signature_band_rows_arrow(docs, doc_id_col, text_col)
+    Arrow kernel (``_signature_band_rows``)."""
+    exploded = _signature_band_rows(docs, doc_id_col, text_col)
     counted = exploded.withColumn(
         "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "band_sig"))
     )
@@ -486,7 +420,7 @@ DUP_WINDOW_TOKENS = 8
 def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
                              text_col: str) -> DataFrame:
     """(doc_id, win, occ) per-doc window-hash counts via one Arrow pass —
-    the shuffle-free twin of explode(ngram) -> 60-bit md5 ->
+    the shuffle-free form of explode(ngram) -> 60-bit md5 ->
     groupBy(doc_id, win).count(): grouping keyed by (doc, window) is
     per-document local, so each task produces its docs' distinct counts
     with a python Counter instead of shipping every window occurrence
@@ -494,7 +428,7 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
     Hashes are the exact ``token_hash_col(..., hex_chars=15)`` values
     (same md5 prefix, same tokenization via ``py_tokens``); docs with
     fewer than n tokens emit no rows, matching explode's inner-join
-    semantics. Pinned row-equal to the expression form by pytest."""
+    semantics. Pinned by the ``dup_windows`` oracle."""
     import hashlib
     from collections import Counter
 
@@ -537,8 +471,7 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
 
 def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
                         doc_id_col: str = "doc_id",
-                        text_col: str = "text",
-                        vectorized: bool = True) -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """Per-document cross-corpus duplication signal: the fraction of the
     doc's n-token windows that also occur in at least one OTHER document
     (plus the distinct shared-window count). Doc-level MinHash finds
@@ -548,64 +481,25 @@ def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
     character coverage: the ranking is the same and the aggregation needs
     no interval union).
 
-    Scale shape: one window explode, windows immediately collapsed to a
-    60-bit md5-prefix integer so every downstream shuffle carries
-    (doc_id, bigint) instead of a ~50-char string -> per-(doc, window)
-    counts [shuffle 1] -> per-window distinct-doc counts over the distinct
-    (doc, window) pairs [shuffle 2, shared-vocabulary-sized] -> hash join
-    back on window hash -> per-doc rollup [shuffle 3]. Nothing is
-    pairwise; an md5 collision would need ~2^30 distinct shared windows
-    per partition-of-interest (birthday bound) and is deterministic and
-    engine-identical anyway, so the oracle stays bit-exact. Docs shorter
-    than n tokens have no windows and emit no row.
-
-    ``vectorized=True`` (default, r6): stage 1 runs as the Arrow Counter
-    kernel (``_doc_window_counts_arrow`` — the per-(doc, window) grouping
-    is doc-local, so its corpus-wide exchange disappears), and the
-    per-window doc count comes from ``count(*) over (partition by win)``
-    instead of the aggregate + join-back — per_doc_win rows are distinct
-    per (doc, win), so the window count IS n_docs_with, and the plan
-    drops from 3 exchanges + a vocabulary-sized join build side to
-    exactly 2 skinny-row exchanges (win, then doc_id); the window count
-    also removes the join's broadcast-vs-SMJ cliff when the vocabulary
-    outgrows the broadcast threshold. Row-equal to the expression form
-    (pytest) and oracle-hash unchanged."""
-    from pyspark.sql.window import Window
-
-    from .textstats import ngram_col, token_hash_col
-
-    if vectorized:
-        per_doc_win = _doc_window_counts_arrow(docs, n, doc_id_col, text_col)
-        counted = per_doc_win.withColumn(
-            "n_docs_with", F.count(F.lit(1)).over(Window.partitionBy("win"))
-        )
-        return (
-            counted.groupBy("doc_id")
-            .agg(
-                F.sum("occ").cast("bigint").alias("n_windows"),
-                F.sum(F.when(F.col("n_docs_with") > 1, F.col("occ")).otherwise(0))
-                .cast("bigint").alias("dup_windows"),
-                F.sum(F.when(F.col("n_docs_with") > 1, 1).otherwise(0))
-                .cast("bigint").alias("distinct_shared_windows"),
-            )
-            .select(
-                "doc_id", "n_windows", "dup_windows", "distinct_shared_windows",
-                (F.col("dup_windows") / F.col("n_windows")).alias("dup_window_frac"),
-            )
-        )
-    wins = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.explode(ngram_col(F.col(text_col), n)).alias("win_s"),
-    ).select("doc_id", token_hash_col(F.col("win_s"), hex_chars=15).alias("win"))
-    per_doc_win = wins.groupBy("doc_id", "win").agg(
-        F.count(F.lit(1)).cast("bigint").alias("occ")
-    )
-    win_docs = per_doc_win.groupBy("win").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs_with")
+    Scale shape: per-(doc, window) counts come from the Arrow Counter
+    kernel (``_doc_window_counts_arrow`` — the grouping is doc-local, so
+    no exchange), with every window collapsed to a 60-bit md5-prefix
+    integer so downstream shuffles carry (doc_id, bigint) instead of a
+    ~50-char string. The per-window doc count is ``count(*) over
+    (partition by win)`` — per_doc_win rows are distinct per (doc, win),
+    so the window count IS n_docs_with — and the plan is exactly 2
+    skinny-row exchanges (win, then doc_id) with no vocabulary-sized join
+    build side. Nothing is pairwise; an md5 collision would need ~2^30
+    distinct shared windows per partition-of-interest (birthday bound) and
+    is deterministic and engine-identical anyway, so the oracle stays
+    bit-exact. Docs shorter than n tokens have no windows and emit no
+    row."""
+    per_doc_win = _doc_window_counts_arrow(docs, n, doc_id_col, text_col)
+    counted = per_doc_win.withColumn(
+        "n_docs_with", F.count(F.lit(1)).over(Window.partitionBy("win"))
     )
     return (
-        per_doc_win.join(win_docs, "win")
-        .groupBy("doc_id")
+        counted.groupBy("doc_id")
         .agg(
             F.sum("occ").cast("bigint").alias("n_windows"),
             F.sum(F.when(F.col("n_docs_with") > 1, F.col("occ")).otherwise(0))

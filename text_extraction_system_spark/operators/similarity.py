@@ -1,10 +1,12 @@
 """Similarity search over an embedding column (``array<float>``).
 
-* ``brute_force_topk`` — exact cosine top-k: broadcast the (small) query set
-  against the candidate corpus; the scan side stays partition-parallel with
-  no shuffle until the final per-query top-k (tiny). The dot product is a
-  JVM-side ``zip_with``/``aggregate`` fold in double precision — fully
-  deterministic and reproducible in SQL.
+* ``brute_force_topk`` — exact cosine top-k: the (small) query set rides
+  inside a numpy kernel that scores each task's rows and emits a per-task
+  partial top-k; the scan side stays partition-parallel with no shuffle
+  until the final per-query top-k (tiny). The dot product accumulates
+  dim-major in double precision — the same IEEE sequence as the
+  ``dot_col`` fold and the DuckDB oracle's, so scores are bit-reproducible
+  in SQL.
 * ``srp_lsh_topk`` — the scale path: sign-random-projection buckets from
   deterministic md5-derived hyperplanes; candidates restricted to the same
   bucket. At 10^12 vectors the bucket join replaces the broadcast scan.
@@ -62,12 +64,6 @@ def _py_norm(a) -> float:
     return math.sqrt(acc)
 
 
-def _null_rank_key(cosine):
-    """Sort sentinel reproducing (cosine DESC NULLS LAST, cand_id ASC): real
-    cosines live in [-1, 1], so -2.0 orders every NULL after every value."""
-    return -2.0 if cosine is None else cosine
-
-
 def _query_rows(embeddings: DataFrame, n_queries: int,
                 id_col: str, vec_col: str) -> list[tuple]:
     """The (tiny) query side as driver rows: n_queries x dim floats — the
@@ -100,7 +96,7 @@ def _scored_topk_partials(
     query, the k best under (cosine DESC NULLS LAST, cand_id ASC) — the
     final window's exact total order — so the union of partials is a
     superset of the global top-k and the window output is unchanged
-    (pinned by tests/test_plans.py equality vs the HOF formulation).
+    (pinned by the DuckDB oracle: ``ann_topk``, ``ann_ivf_topk``).
 
     ``cands`` must be (cand_id, cv) or (cand_id, cv, cell);
     ``probe_cells`` maps query_id -> cell ids the query probes (None = scan
@@ -197,38 +193,20 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
 
-    ``vectorized=True`` (default): the query vectors ride inside a numpy
-    ``mapInPandas`` kernel (n_queries x dim floats — the centroid-collect
-    class, never the corpus) that scores each task's rows in one vectorized
-    pass per batch and emits per-task partial top-k, so only
-    n_tasks x n_queries x k rows reach the ranking window — the interpreted
-    per-pair HOF cosine (N x n_queries evaluations, the measured 85% of
-    this query's runtime at sf1.0) leaves the plan. Scores are
-    bit-identical to ``cosine_col`` (see ``_scored_topk_partials``);
-    ``vectorized=False`` keeps the pure-expression broadcast-join
-    formulation, equality-pinned by tests/test_plans.py.
-    """
+    The query vectors ride inside a numpy ``mapInPandas`` kernel
+    (n_queries x dim floats — the centroid-collect class, never the
+    corpus) that scores each task's rows in one vectorized pass per batch
+    and emits per-task partial top-k, so only n_tasks x n_queries x k rows
+    reach the ranking window — no per-pair interpreted cosine (N x
+    n_queries evaluations, the measured 85% of this query's runtime at
+    sf1.0 when it ran as a broadcast join). Scores are bit-identical to
+    ``cosine_col`` (see ``_scored_topk_partials``)."""
     cands = embeddings.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    if vectorized:
-        queries = _query_rows(embeddings, n_queries, id_col, vec_col)
-        return _rank_topk(_scored_topk_partials(cands, queries, k), k)
-    qs = embeddings.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    scored = (
-        cands.join(F.broadcast(qs))
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            cosine_col(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, k)
+    queries = _query_rows(embeddings, n_queries, id_col, vec_col)
+    return _rank_topk(_scored_topk_partials(cands, queries, k), k)
 
 
 #: SRP LSH banding defaults: N_BANDS x PLANES_PER_BAND hyperplanes total.
@@ -267,47 +245,7 @@ def srp_plane_values(dim: int, n_planes: int) -> list[list[float]]:
     ]
 
 
-def srp_plane_col(dim: int, n_planes: int) -> Column:
-    """Plane matrix as a LITERAL nested array. The planes depend only on
-    (p, j), but an md5-expression formulation is interpreted per ROW by the
-    HOF evaluator — n_planes*dim md5 calls per input row (measured: 24x
-    slower for 32 planes x 64 dims at sf0.1). Constants belong in the plan."""
-    return F.array(
-        *[
-            F.array(*[F.lit(v) for v in plane]).cast("array<double>")
-            for plane in srp_plane_values(dim, n_planes)
-        ]
-    )
-
-
-def srp_bucket_col(vec: Column, planes: Column) -> Column:
-    """Sign-random-projection bucket id: bit p = sign(vec . plane_p)."""
-    signs = F.transform(
-        planes,
-        lambda pl: F.when(dot_col(vec, pl) >= 0, F.lit("1")).otherwise(F.lit("0")),
-    )
-    return F.array_join(signs, "")
-
-
-def srp_band_buckets_col(
-    vec: Column, n_bands: int = N_BANDS, planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-) -> Column:
-    """array<struct<band:int, bucket:string>>: per band, the sign bits of
-    that band's planes (global plane index band*planes_per_band + j)."""
-    planes = srp_plane_col(dim, n_bands * planes_per_band)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            srp_bucket_col(
-                vec, F.slice(planes, b * planes_per_band + 1, planes_per_band)
-            ).alias("bucket"),
-        ),
-    )
-
-
-def _srp_buckets_arr_vectorized(
+def _srp_band_rows(
     embeddings: DataFrame,
     n_bands: int,
     planes_per_band: int,
@@ -315,24 +253,27 @@ def _srp_buckets_arr_vectorized(
     id_col: str,
     vec_col: str,
     keep_vec: bool,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(vid[, vec], buckets array<string>) via one numpy Arrow pass —
-    BIT-IDENTICAL to ``srp_band_buckets_col``: the plane dots replay the
-    aggregate fold's multiply/add order dim-major (see
-    assign_cells_vectorized for the technique), and the sign of an identical
-    double is identical. The interpreted HOF form costs
-    n_bands*planes_per_band*dim mult-adds per row in the expression
-    evaluator — the same per-row CPU story as IVF assignment."""
+    """(vid[, vec], *carry, band, bucket) via one numpy Arrow pass: per
+    band, the sign bits of that band's planes (global plane index
+    band*planes_per_band + j), bit p = sign(vec . plane_p). The plane dots
+    accumulate dim-major in float64 — the ``dot_col`` fold's multiply/add
+    order (see assign_cells_vectorized for the technique), which the DuckDB
+    oracle replays, so every bucket string is bit-reproducible in SQL.
+    ``carry`` columns pass through the kernel untouched (the streaming job's
+    event-time column); batch callers ship only the id and vector."""
     import numpy as np
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     planes = srp_plane_values(dim, n_bands * planes_per_band)
 
-    in_fields = [f for f in embeddings.schema.fields if f.name in (id_col, vec_col)]
+    sel = [id_col, vec_col, *carry]
+    fields = {f.name: f for f in embeddings.schema.fields}
     out_schema = StructType(
-        list(in_fields) + [StructField("buckets", ArrayType(StringType()), False)]
+        [fields[c] for c in sel]
+        + [StructField("buckets", ArrayType(StringType()), False)]
     )
-    sel = [id_col, vec_col]
 
     def gen(batches):
         P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), exact
@@ -357,10 +298,12 @@ def _srp_buckets_arr_vectorized(
             ]
             yield out
 
-    res = embeddings.select(*sel).mapInPandas(gen, schema=out_schema)
-    if not keep_vec:
-        res = res.drop(vec_col)
-    return res
+    cols = [F.col(id_col).alias("vid")]
+    if keep_vec:
+        cols.append(F.col(vec_col).alias("vec"))
+    return embeddings.select(*sel).mapInPandas(gen, schema=out_schema).select(
+        *cols, *carry, F.posexplode("buckets").alias("band", "bucket")
+    )
 
 
 def srp_banded_buckets(
@@ -371,7 +314,6 @@ def srp_banded_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
-    vectorized: bool = True,
     materialize: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -381,36 +323,15 @@ def srp_banded_buckets(
     intra-batch bucket sizes say nothing about committed-side candidate
     volume).
 
-    The bucket signature is a narrow per-row expression; at 10^12 rows this
-    is the table you would materialize once and bucket-partition by
-    (band, bucket) — that durable form is ``state.write_srp_buckets``
-    (parquet partitioned by (band, bucket_prefix)), which passes
-    ``materialize=False`` to get the raw plan for its write.
-    ``vectorized=True`` (default) computes signatures with
-    the numpy Arrow twin — bit-identical to the HOF (pinned by
-    tests/test_plans.py), minus the interpreted-expression CPU."""
-    if vectorized:
-        arr = _srp_buckets_arr_vectorized(
-            embeddings, n_bands, planes_per_band, dim, id_col, vec_col, keep_vec
-        )
-        cols = [F.col(id_col).alias("vid")]
-        if keep_vec:
-            cols.append(F.col(vec_col).alias("vec"))
-        exploded = arr.select(
-            *cols, F.posexplode("buckets").alias("band", "bucket")
-        )
-    else:
-        cols = [F.col(id_col).alias("vid")]
-        if keep_vec:
-            cols.append(F.col(vec_col).alias("vec"))
-        exploded = embeddings.select(
-            *cols,
-            F.explode(
-                srp_band_buckets_col(F.col(vec_col), n_bands, planes_per_band, dim)
-            ).alias("bb"),
-        ).withColumns(
-            {"band": F.col("bb.band"), "bucket": F.col("bb.bucket")}
-        ).drop("bb")
+    The bucket signature is one narrow numpy pass (``_srp_band_rows``); at
+    10^12 rows this is the table you would materialize once and
+    bucket-partition by (band, bucket) — that durable form is
+    ``state.write_srp_buckets`` (parquet partitioned by (band,
+    bucket_prefix)), which passes ``materialize=False`` to get the raw plan
+    for its write."""
+    exploded = _srp_band_rows(
+        embeddings, n_bands, planes_per_band, dim, id_col, vec_col, keep_vec
+    )
     limit = MAX_BUCKET if max_bucket is None else max_bucket
     if limit:
         counted = exploded.withColumn(
@@ -713,24 +634,6 @@ def ivf_dists_col(vec: Column, cells: Column) -> Column:
     return F.transform(cells, lambda s: s["c2"] - 2.0 * dot_col(vec, s["cv"]))
 
 
-def ivf_cell_col(dists: Column) -> Column:
-    """0-based index of the nearest centroid (first on exact ties)."""
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
-def ivf_probe_cells_col(dists: Column, n_probe: int) -> Column:
-    """0-based indices of the n_probe nearest centroids (lexicographic
-    (dist, idx) sort: deterministic tie-break by index)."""
-    n = F.size(dists)
-    keyed = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.struct(F.element_at(dists, i + 1).alias("d"), i.cast("int").alias("i")),
-    )
-    return F.transform(
-        F.slice(F.array_sort(keyed), 1, n_probe), lambda s: s["i"]
-    )
-
-
 def assign_cells_vectorized(
     embeddings: DataFrame,
     n_centroids: int = IVF_CENTROIDS,
@@ -739,17 +642,18 @@ def assign_cells_vectorized(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Numpy twin of ``ivf_cell_col(ivf_dists_col(...))`` — the production
-    assignment path (round-2 verdict item 4: the interpreted 64x64 HOF
-    mult-add dominated CPU; at 10^9+ vectors it is THE per-row cost).
+    """Nearest-centroid assignment: argmin over ``ivf_dists_col``'s
+    |c|^2 - 2*(vec . c) proxies, first index on exact ties (round-2 verdict
+    item 4: the interpreted 64x64 mult-add dominated CPU; at 10^9+ vectors
+    it is THE per-row cost).
 
-    BIT-IDENTICAL to the HOF by construction, not by tolerance: the
-    accumulation runs dim-major (one vectorized multiply + add per
-    dimension, j ascending), which performs exactly the same IEEE-double
-    multiply-then-add sequence per (row, cell) as the ``aggregate`` fold —
-    no FMA, no numpy pairwise summation, same ``2.0*dot`` and ``c2 - .``
-    rounding order, same first-index argmin tie-break. Pinned by
-    tests/test_plans.py (exact per-row cell equality on the sf corpus).
+    BIT-REPRODUCIBLE by construction, not by tolerance: the accumulation
+    runs dim-major (one vectorized multiply + add per dimension, j
+    ascending), which performs exactly the same IEEE-double
+    multiply-then-add sequence per (row, cell) as the ``aggregate`` fold
+    and the DuckDB oracle's ``list_reduce`` — no FMA, no numpy pairwise
+    summation, same ``2.0*dot`` and ``c2 - .`` rounding order. Pinned by
+    the ``ann_ivf_trained`` oracle, which replays every Lloyd assignment.
 
     Returns (id_col, vec_col, cell) via one Arrow ``mapInPandas`` pass —
     narrow, no shuffle; partitionBy("cell") downstream is the 10^12-row
@@ -788,6 +692,19 @@ def assign_cells_vectorized(
     return embeddings.select(id_col, vec_col).mapInPandas(gen, schema=out_schema)
 
 
+def _probe_cells(queries: list[tuple], cents: list[list[float]],
+                 n_probe: int) -> dict:
+    """query_id -> its n_probe nearest cells, by the same c2 - 2*dot proxy
+    as ``ivf_dists_col`` (python-float replay of the fold) under a
+    lexicographic (dist, idx) sort — deterministic tie-break by index."""
+    c2 = [sum(v * v for v in cv) for cv in cents]  # _ivf_cells_lit's literal
+    out = {}
+    for qid, qv in queries:
+        dists = [c2[c] - 2.0 * _py_dot(qv, cents[c]) for c in range(len(cents))]
+        out[qid] = [i for _d, i in sorted(zip(dists, range(len(cents))))[:n_probe]]
+    return out
+
+
 def ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 20,
@@ -797,74 +714,35 @@ def ivf_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k via an inverted file: every vector is assigned to
     its nearest coarse centroid (one narrow per-row pass — at 10^12 rows this
     is the column you materialize and partition by); each query scans only
     its n_probe nearest cells. Probed cells are distinct, so no pair is
-    scored twice. Queries broadcast; the join hashes on the cell id.
+    scored twice.
 
     ``centroids`` serves the index from an explicit (e.g. ``ivf_train``-ed)
     quantizer instead of the default deterministic hash centroids — the real
     IVF deployment shape: train once, serve many. Trained centroids cut the
     probes needed at equal recall (pinned by tests/test_recall.py).
 
-    ``vectorized=True`` additionally scores candidates in the same numpy
-    kernel class as the assignment (``_scored_topk_partials``): the query
-    vectors and their python-replayed probe-cell sets (bit-identical to
-    ``ivf_probe_cells_col`` — same dist fold, same (dist, idx) tie-break)
-    ride inside the kernel, each task emits its partial top-k, and the
-    cell-keyed broadcast join + per-pair HOF cosine leave the plan."""
-    from .exprutil import let
-
-    cells_lit = _ivf_cells_lit(dim, n_centroids, centroids)
-    if vectorized:
-        # production assignment: numpy mapInPandas, bit-identical to the
-        # HOF (see assign_cells_vectorized) — keeps the oracle green while
-        # dropping the interpreted 64x64 expression from the hot path
-        base = assign_cells_vectorized(
-            embeddings, n_centroids=n_centroids, dim=dim,
-            id_col=id_col, vec_col=vec_col, centroids=centroids,
-        ).select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "cell"
-        )
-        cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
-        c2 = [sum(v * v for v in cv) for cv in cents]  # _ivf_cells_lit's literal
-        queries = _query_rows(embeddings, n_queries, id_col, vec_col)
-        probe_cells = {}
-        for qid, qv in queries:
-            dists = [c2[c] - 2.0 * _py_dot(qv, cents[c]) for c in range(len(cents))]
-            probe_cells[qid] = [i for _d, i in sorted(zip(dists, range(len(cents))))[:n_probe]]
-        return _rank_topk(
-            _scored_topk_partials(base, queries, k, probe_cells=probe_cells), k
-        )
-    base = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        ivf_cell_col(ivf_dists_col(F.col(vec_col), cells_lit)).alias("cell"),
+    Candidates are scored in the same numpy kernel class as the assignment
+    (``_scored_topk_partials``): the query vectors and their probe-cell
+    sets (``_probe_cells``) ride inside the kernel and each task emits its
+    partial top-k, so no cell-keyed join or per-pair cosine expression is
+    in the plan."""
+    cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
+    base = assign_cells_vectorized(
+        embeddings, dim=dim, id_col=id_col, vec_col=vec_col, centroids=cents,
+    ).select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "cell")
+    queries = _query_rows(embeddings, n_queries, id_col, vec_col)
+    return _rank_topk(
+        _scored_topk_partials(
+            base, queries, k, probe_cells=_probe_cells(queries, cents, n_probe)
+        ),
+        k,
     )
-    qs = embeddings.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            let(
-                ivf_dists_col(F.col(vec_col), cells_lit),
-                lambda d: ivf_probe_cells_col(d, n_probe),
-            )
-        ).alias("cell"),
-    )
-    scored = (
-        base.join(F.broadcast(qs), "cell")
-        .where(F.col("vid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vid").alias("cand_id"),
-            cosine_col(F.col("qv"), F.col("vec")).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, k)
 
 
 def ivf_train_step(
@@ -875,7 +753,7 @@ def ivf_train_step(
     id_col: str = "vec_id",
 ) -> list[list[float]]:
     """One distributed Lloyd iteration: assign every vector to its nearest
-    centroid (the vectorized production assignment path), then recompute
+    centroid (``assign_cells_vectorized``), then recompute
     each centroid as the mean of its members — the real IVF training path,
     entirely as DataFrame aggregations (posexplode to (cell, dim, value),
     one groupBy; no vectors ever reach the driver, only the k x dim means).
@@ -1079,7 +957,7 @@ def pq_assign_encode(
     the same vectors, and joining their outputs on vid paid two exchanges
     for rows that were born co-located. Both computations replay their
     originals bit-exactly (same dim-major folds, same literal c2 sums);
-    pinned row-equal to the join form by pytest."""
+    pinned by the ``ann_ivf_pq`` oracle."""
     import numpy as np
     import pandas as pd
 
@@ -1119,9 +997,10 @@ def pq_assign_encode(
 
 
 def _py_pq_table(qv: list[float], codebooks: list, sub: int) -> list[float]:
-    """Python twin of ``_pq_table_col``: per block b and centroid j,
-    c2 - 2*dot(q_b, c_j) with the literal c2 sum and the ascending fold —
-    identical IEEE sequence to the expression."""
+    """Flattened m*k ADC table for one query vector: per block b and
+    centroid j, c2 - 2*dot(q_b, c_j) with the literal c2 sum and the
+    ascending fold — the IEEE sequence of the numpy encode and the SQL
+    oracle."""
     tab = []
     for b, cb in enumerate(codebooks):
         qb = qv[b * sub:(b + 1) * sub]
@@ -1141,7 +1020,8 @@ def _adc_topk_partials(
     """Per-task partial top-k by ADC distance — the PQ sibling of
     ``_scored_topk_partials``: each query's flattened m x kcent table rides
     inside the kernel, candidates cost one numpy gather + add per block
-    (the same ascending-block fold as ``_adc_col``), and only each task's
+    (blocks folded in ascending order from 0.0 — the engine-portable
+    order the oracle replays), and only each task's
     k best (adc ASC, cand_id ASC) reach the ranking window. ``queries``
     is [(query_id, tab_list)]; ``cands`` is (cand_id, codes[, cell])."""
     import numpy as np
@@ -1175,7 +1055,7 @@ def _adc_topk_partials(
                 sid = ids[mask]
                 acc = np.zeros(len(sid))
                 t = tabs[qi]
-                for b in range(m):  # ascending blocks: _adc_col's fold order
+                for b in range(m):  # ascending blocks: the oracle's fold order
                     acc += t[b * kcent + sub_codes[:, b]]
                 take = np.lexsort((sid, acc))[: k]
                 kk = np.concatenate((best_key[qi], acc[take]))
@@ -1196,92 +1076,18 @@ def _adc_topk_partials(
     )
 
 
-def _pq_table_col(qv: Column, codebooks: list, sub: int) -> Column:
-    """Flattened m*k ADC table for one query vector: per block, the
-    c2 - 2*q_b.c proxy against that block's codebook (fold order matches
-    the numpy encode and the SQL twin)."""
-    from .exprutil import let
-
-    def block_table(cells: Column):
-        # a closure, NOT `lambda q, cells=cells`: pyspark sniffs lambda
-        # arity and a defaulted second parameter turns the binding into
-        # the (element, index) transform form — cells would silently
-        # become the index (see the identical note in layout._cumsum_col)
-        return lambda q: F.transform(
-            cells, lambda s: s["c2"] - 2.0 * dot_col(q, s["cv"])
-        )
-
-    parts = []
-    for b, cb in enumerate(codebooks):
-        cells = _ivf_cells_lit(sub, len(cb), cb)
-        parts.append(let(F.slice(qv, b * sub + 1, sub), block_table(cells)))
-    return F.concat(*parts)
-
-
-def _adc_col(m: int, kcent: int) -> Column:
-    """ADC sum from the bound `tab` and `codes` columns: fold blocks
-    ascending from 0.0 — the engine-portable order."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, b: acc + F.element_at(
-            F.col("tab"), b * kcent + F.element_at(F.col("codes"), b + 1) + 1
-        ),
-    )
-
-
-def pq_topk(
+def _adc_rank(
     embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    n_queries: int = 20,
-    k: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank: int | None = None,
-    vectorized: bool = True,
+    scored: DataFrame,
+    n_queries: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    rerank: int | None,
 ) -> DataFrame:
-    """Approximate top-k by asymmetric distance computation (ADC): each
-    query precomputes one m x k distance table against the codebooks
-    (c2 - 2*q_b.c — the same monotone L2 proxy as IVF), then every
-    candidate costs m TABLE LOOKUPS instead of a dim-length float scan —
-    the arithmetic that makes exhaustive scoring of a coarse cell feasible
-    when vectors live as codes. Queries broadcast with their flattened
-    tables; the ADC sum folds blocks in ascending order from 0.0 (the
-    engine-portable order); ties rank by candidate id.
-
-    ``vectorized=True`` (r6): the query tables ride inside a numpy kernel
-    (``_adc_topk_partials``) that emits per-task partial top-k — the
-    cross join and the interpreted per-pair ADC fold leave the plan;
-    bit-identical tables/sums (python twin of ``_pq_table_col``)."""
-    from .exprutil import let
-
-    m = len(codebooks)
-    kcent = len(codebooks[0])
-    sub = dim // m
-    codes = pq_encode(embeddings, codebooks, id_col=id_col, vec_col=vec_col)
-    if vectorized:
-        queries = [
-            (qid, _py_pq_table(qv, codebooks, sub))
-            for qid, qv in _query_rows(embeddings, n_queries, id_col, vec_col)
-        ]
-        scored = _adc_topk_partials(
-            codes.select(F.col("vid").alias("cand_id"), "codes"),
-            queries, rerank if rerank else k, m, kcent,
-        )
-    else:
-        qs = embeddings.where(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            _pq_table_col(F.col(vec_col), codebooks, sub).alias("tab"),
-        )
-        adc = _adc_col(m, kcent)
-        scored = (
-            codes.crossJoin(F.broadcast(qs))
-            .where(F.col("vid") != F.col("query_id"))
-            .select(
-                "query_id", F.col("vid").alias("cand_id"), adc.alias("adc_dist")
-            )
-        )
+    """Rank ADC partials into the top-k shortlist — or, with ``rerank``, the
+    top-``rerank`` shortlist re-scored by exact cosine against the float
+    vectors (the only step that touches them) and cut to k."""
     w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), F.col("cand_id"))
     shortlist = (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1301,12 +1107,40 @@ def pq_topk(
         .select("query_id", "cand_id",
                 cosine_col(F.col("qv"), F.col("cv")).alias("cosine"))
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
+    return _rank_topk(exact, k)
+
+
+def pq_topk(
+    embeddings: DataFrame,
+    codebooks: list[list[list[float]]],
+    n_queries: int = 20,
+    k: int = 5,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    rerank: int | None = None,
+) -> DataFrame:
+    """Approximate top-k by asymmetric distance computation (ADC): each
+    query precomputes one m x k distance table against the codebooks
+    (c2 - 2*q_b.c — the same monotone L2 proxy as IVF), then every
+    candidate costs m TABLE LOOKUPS instead of a dim-length float scan —
+    the arithmetic that makes exhaustive scoring of a coarse cell feasible
+    when vectors live as codes. The query tables ride inside a numpy
+    kernel (``_adc_topk_partials``) that emits per-task partial top-k, so
+    no cross join or per-pair ADC expression is in the plan; the ADC sum
+    folds blocks in ascending order from 0.0 (the engine-portable order);
+    ties rank by candidate id."""
+    sub = dim // len(codebooks)
+    codes = pq_encode(embeddings, codebooks, id_col=id_col, vec_col=vec_col)
+    queries = [
+        (qid, _py_pq_table(qv, codebooks, sub))
+        for qid, qv in _query_rows(embeddings, n_queries, id_col, vec_col)
+    ]
+    scored = _adc_topk_partials(
+        codes.select(F.col("vid").alias("cand_id"), "codes"),
+        queries, rerank if rerank else k, len(codebooks), len(codebooks[0]),
     )
+    return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)
 
 
 def ivf_pq_topk(
@@ -1320,7 +1154,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     rerank: int | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """IVF-PQ — the composed industry-standard ANN serving architecture:
     the trained IVF quantizer ROUTES (every vector materialized with its
@@ -1336,85 +1169,18 @@ def ivf_pq_topk(
     training, all block trainings, encoding, probe selection, and the
     ADC fold — the full composition is hash-checked end to end.
 
-    ``vectorized=True`` (r6): one fused kernel assigns cells AND encodes
-    codes (``pq_assign_encode`` — the separate assign/encode kernels were
-    joined on vid, two exchanges for born-co-located rows), and the ADC
-    scoring runs as per-task partial top-k with python-replayed probe
-    cells — the cell broadcast join and the interpreted fold leave the
-    plan."""
-    from .exprutil import let
-
-    m = len(codebooks)
-    kcent = len(codebooks[0])
-    sub = dim // m
-    if vectorized:
-        cands = pq_assign_encode(
-            embeddings, centroids, codebooks, dim=dim,
-            id_col=id_col, vec_col=vec_col,
-        ).select(F.col("vid").alias("cand_id"), "cell", "codes")
-        c2 = [sum(v * v for v in cv) for cv in centroids]
-        qrows = _query_rows(embeddings, n_queries, id_col, vec_col)
-        queries = [(qid, _py_pq_table(qv, codebooks, sub)) for qid, qv in qrows]
-        probe_cells = {}
-        for qid, qv in qrows:
-            dists = [c2[c] - 2.0 * _py_dot(qv, centroids[c])
-                     for c in range(len(centroids))]
-            probe_cells[qid] = [
-                i for _d, i in sorted(zip(dists, range(len(centroids))))[:n_probe]
-            ]
-        scored = _adc_topk_partials(
-            cands, queries, rerank if rerank else k, m, kcent,
-            probe_cells=probe_cells,
-        )
-    else:
-        base = assign_cells_vectorized(
-            embeddings, n_centroids=len(centroids), dim=dim,
-            id_col=id_col, vec_col=vec_col, centroids=centroids,
-        ).select(F.col(id_col).alias("vid"), "cell")
-        codes = pq_encode(embeddings, codebooks, id_col=id_col, vec_col=vec_col)
-        cands = base.join(codes, "vid")
-
-        cells_lit = _ivf_cells_lit(dim, len(centroids), centroids)
-        qs = embeddings.where(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            _pq_table_col(F.col(vec_col), codebooks, sub).alias("tab"),
-            F.explode(
-                let(
-                    ivf_dists_col(F.col(vec_col), cells_lit),
-                    lambda d: ivf_probe_cells_col(d, n_probe),
-                )
-            ).alias("cell"),
-        )
-        scored = (
-            cands.join(F.broadcast(qs), "cell")
-            .where(F.col("vid") != F.col("query_id"))
-            .select(
-                "query_id", F.col("vid").alias("cand_id"),
-                _adc_col(m, kcent).alias("adc_dist"),
-            )
-        )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), F.col("cand_id"))
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (rerank if rerank else k))
-        .select("query_id", "cand_id", "adc_dist", "rank")
+    One fused kernel assigns cells AND encodes codes
+    (``pq_assign_encode``), and the ADC scoring runs as per-task partial
+    top-k with the python-replayed probe cells (``_probe_cells``)."""
+    sub = dim // len(codebooks)
+    cands = pq_assign_encode(
+        embeddings, centroids, codebooks, dim=dim,
+        id_col=id_col, vec_col=vec_col,
+    ).select(F.col("vid").alias("cand_id"), "cell", "codes")
+    qrows = _query_rows(embeddings, n_queries, id_col, vec_col)
+    queries = [(qid, _py_pq_table(qv, codebooks, sub)) for qid, qv in qrows]
+    scored = _adc_topk_partials(
+        cands, queries, rerank if rerank else k, len(codebooks), len(codebooks[0]),
+        probe_cells=_probe_cells(qrows, centroids, n_probe),
     )
-    if not rerank:
-        return shortlist
-    vecs = embeddings.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    qvecs = embeddings.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    exact = (
-        F.broadcast(shortlist.select("query_id", "cand_id"))
-        .join(vecs, "cand_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select("query_id", "cand_id",
-                cosine_col(F.col("qv"), F.col("cv")).alias("cosine"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)

@@ -181,11 +181,6 @@ def ngram_col(text: Column, n: int) -> Column:
     return let(tokens_col(text), grams)
 
 
-def bigram_col(text: Column) -> Column:
-    """Adjacent word 2-grams of the normalized token stream."""
-    return ngram_col(text, 2)
-
-
 #: the full Gopher repetition battery (Rae et al. 2021, Table A1): top
 #: n-gram character share for these n ...
 TOP_NS = (2, 3, 4)
@@ -499,12 +494,12 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
 
 def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
     """(doc_id, token, tf) per-doc term frequencies via one Arrow pass —
-    the shuffle-free twin of explode(tokens_col) -> groupBy(doc_id, token)
+    the shuffle-free form of explode(tokens_col) -> groupBy(doc_id, token)
     (r6): the tf grouping is doc-local, so a python Counter per doc
     produces the distinct counts without shipping every token occurrence
-    through the first exchange. Same tokenization as ``tokens_col`` via
+    through an exchange. Same tokenization as ``tokens_col`` via
     ``py_tokens``; docs with zero tokens emit no rows (explode's
-    inner-join semantics). Pinned row-equal by pytest."""
+    inner-join semantics). Pinned by the ``tfidf_keywords`` oracle."""
     from collections import Counter
 
     import pandas as pd
@@ -534,12 +529,12 @@ def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
 
 
 def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
-                   text_col: str = "text", vectorized: bool = True):
+                   text_col: str = "text"):
     """Per-document top-k keywords by TF-IDF — the corpus-level two-pass
     curation operator (per-doc signals like quality/repetition need no
-    corpus state; this one does): one token explode feeds BOTH the per-doc
-    term frequencies and the corpus document frequencies, then a hash join
-    on token brings the IDF weight back to each (doc, token).
+    corpus state; this one does): one per-doc term-frequency table feeds
+    BOTH the per-doc tf and the corpus document frequencies, then a hash
+    join on token brings the IDF weight back to each (doc, token).
 
     Scoring is INTEGER-exact (oracle-hashable — see the float-exact
     recipe): idf_scaled = (1_000_000 * n_docs) div df (integer division,
@@ -548,41 +543,24 @@ def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
     anyway) and score = tf * idf_scaled, all BIGINT. Ties break by token
     string ascending.
 
-    Scale shape: explode -> (doc, token) count [shuffle 1] -> token df
-    aggregate [shuffle 2, vocabulary-sized] -> hash join on token (the
-    vocabulary at web scale is ~10^8 rows — NOT broadcastable; the join
-    hashes both sides on token) -> per-doc top-k window [shuffle 3 on
-    doc_id]. n_docs rides in as a 1-row broadcast cross join.
-
-    ``vectorized=True`` (default, r6): the tf stage runs as the Arrow
-    Counter kernel (``_doc_token_counts_arrow`` — per-doc grouping needs
-    no exchange), localCheckpointed (the repo's established
-    materialize-once pattern, see lsh_candidate_pairs) so the three
-    consumers (df, n_docs, the join probe) read the materialized blocks
-    instead of re-running the kernel per branch. The token-occurrence
-    explode and its corpus-wide first shuffle leave the plan; df/n_docs/
-    join/window are unchanged. Row-equal to the expression form
-    (pytest), oracle hashes unchanged."""
+    Scale shape: the tf stage is the Arrow Counter kernel
+    (``_doc_token_counts_arrow`` — per-doc grouping needs no exchange),
+    localCheckpointed (the repo's established materialize-once pattern,
+    see lsh_candidate_pairs) so the three consumers (df, n_docs, the join
+    probe) read the materialized blocks instead of re-running the kernel
+    per branch -> token df aggregate (a vocabulary-sized shuffle) -> hash
+    join on token (the vocabulary at web scale is ~10^8 rows — NOT
+    broadcastable; the join hashes both sides on token) -> per-doc top-k
+    window (a shuffle on doc_id). n_docs rides in as a 1-row broadcast
+    cross join."""
     from pyspark.sql.window import Window
 
-    if vectorized:
-        tf = _doc_token_counts_arrow(docs, doc_id_col, text_col).localCheckpoint(
-            eager=False
-        )
-    else:
-        toks = docs.select(
-            F.col(doc_id_col).cast("string").alias("doc_id"),
-            F.explode(tokens_col(F.col(text_col))).alias("token"),
-        )
-        tf = toks.groupBy("doc_id", "token").agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf")
-        )
-    # df and n_docs derive from tf, NOT from a second/third pass over the
-    # raw token explode: the (doc, token) rows are already distinct after
-    # the tf aggregate, so count(*) == count_distinct — and because all
-    # three branches share the identical tf subtree, Catalyst reuses ONE
-    # token-explode shuffle (ReusedExchange) instead of re-scanning and
-    # re-exploding the corpus per branch
+    tf = _doc_token_counts_arrow(docs, doc_id_col, text_col).localCheckpoint(
+        eager=False
+    )
+    # df and n_docs derive from tf, not from another pass over the text:
+    # the (doc, token) rows are distinct per doc, so count(*) ==
+    # count_distinct
     df = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     n_docs = tf.select("doc_id").distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")

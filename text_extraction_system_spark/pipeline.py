@@ -9,10 +9,11 @@ Spark-first).
       -> segment_structure     (one Arrow UDF: paragraphs/sentences/
                                 sections/language/title)
 
-That is the Catalyst engine, where only the giant-doc fan-out shuffles.
-With structure, ``extract_from_documents`` defaults to the ``mapInArrow``
-engine instead: every stage above runs in one Python pass per batch, so
-the whole plan is a single narrow stage for documents of any length.
+That is the Catalyst engine, where only the giant-doc fan-out shuffles;
+``extract_from_documents`` runs it without structure. With structure it
+runs the ``mapInArrow`` engine instead: every stage above runs in one
+Python pass per batch, so the whole plan is a single narrow stage for
+documents of any length.
 """
 
 from __future__ import annotations
@@ -26,25 +27,10 @@ from .operators import derive_spans as ds
 from .operators import layout, restitch, structure
 
 
-def _results_schema(with_structure: bool) -> T.StructType:
-    fields = [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("needs_ocr", T.BooleanType()),
-        T.StructField("parse_failures", T.ArrayType(T.StringType())),
-        T.StructField("out_spans", T.ArrayType(schemas.SPAN)),
-        T.StructField("plain_text", T.StringType()),
-        T.StructField("pages", T.ArrayType(schemas.PAGE)),
-    ]
-    if with_structure:
-        fields.append(T.StructField("structure", schemas.STRUCTURE))
-    return T.StructType(fields)
-
-
 def _extract_documents_arrow_native(
     docs: DataFrame,
     doc_id_col: str,
     text_col: str,
-    with_structure: bool,
 ) -> DataFrame:
     """``mapInArrow`` extraction kernel: one pass per batch running the
     per-document reference semantics (``core.oracle``) plus the engine's
@@ -74,7 +60,15 @@ def _extract_documents_arrow_native(
             return T.ArrayType(_nullable(dt.elementType), True)
         return dt
 
-    out_schema = _nullable(_results_schema(with_structure))
+    out_schema = _nullable(T.StructType([
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("needs_ocr", T.BooleanType()),
+        T.StructField("parse_failures", T.ArrayType(T.StringType())),
+        T.StructField("out_spans", T.ArrayType(schemas.SPAN)),
+        T.StructField("plain_text", T.StringType()),
+        T.StructField("pages", T.ArrayType(schemas.PAGE)),
+        T.StructField("structure", schemas.STRUCTURE),
+    ]))
     arrow_schema = to_arrow_schema(out_schema)
 
     def gen(batches):
@@ -118,21 +112,20 @@ def _extract_documents_arrow_native(
                     p_num.append(p["number"]); p_start.append(p["start"])
                     p_end.append(p["end"])
                 p_off[i + 1] = len(p_num)
-                if with_structure:
-                    st = structure._structure_of(ptext)
-                    st_title.append(st["title"]); st_lang.append(st["language"])
-                    for q in st["paragraphs"]:
-                        para_s.append(q["start"]); para_e.append(q["end"])
-                        para_l.append(q["language"])
-                    para_off[i + 1] = len(para_s)
-                    for q in st["sentences"]:
-                        sent_s.append(q["start"]); sent_e.append(q["end"])
-                        sent_l.append(q["language"])
-                    sent_off[i + 1] = len(sent_s)
-                    for q in st["sections"]:
-                        for k in sec_cols:
-                            sec_cols[k].append(q[k])
-                    sec_off[i + 1] = len(sec_cols["start"])
+                st = structure._structure_of(ptext)
+                st_title.append(st["title"]); st_lang.append(st["language"])
+                for q in st["paragraphs"]:
+                    para_s.append(q["start"]); para_e.append(q["end"])
+                    para_l.append(q["language"])
+                para_off[i + 1] = len(para_s)
+                for q in st["sentences"]:
+                    sent_s.append(q["start"]); sent_e.append(q["end"])
+                    sent_l.append(q["language"])
+                sent_off[i + 1] = len(sent_s)
+                for q in st["sections"]:
+                    for k in sec_cols:
+                        sec_cols[k].append(q[k])
+                sec_off[i + 1] = len(sec_cols["start"])
 
             def lst(offsets, child):
                 return pa.ListArray.from_arrays(pa.array(offsets), child)
@@ -158,6 +151,26 @@ def _extract_documents_arrow_native(
                  pa.array(np.zeros(n_pages_tot, dtype=np.int32))],
                 names=["number", "start", "end", "bbox", "rotation"],
             )
+
+            def text_spans(ss, ee, ll):
+                return pa.StructArray.from_arrays(
+                    [pa.array(ss, type=pa.int32()),
+                     pa.array(ee, type=pa.int32()),
+                     pa.array(ll, type=pa.string())],
+                    names=["start", "end", "language"],
+                )
+
+            sections_struct = pa.StructArray.from_arrays(
+                [pa.array(sec_cols["start"], type=pa.int32()),
+                 pa.array(sec_cols["end"], type=pa.int32()),
+                 pa.array(sec_cols["title"], type=pa.string()),
+                 pa.array(sec_cols["title_start"], type=pa.int32()),
+                 pa.array(sec_cols["title_end"], type=pa.int32()),
+                 pa.array(sec_cols["level"], type=pa.int32()),
+                 pa.array(sec_cols["abs_level"], type=pa.int32())],
+                names=["start", "end", "title", "title_start", "title_end",
+                       "level", "abs_level"],
+            )
             cols = [
                 pa.array(ids, type=pa.string()),
                 pa.array(needs),
@@ -165,28 +178,7 @@ def _extract_documents_arrow_native(
                 lst(s_off, spans_struct),
                 pa.array(pt, type=pa.string()),
                 lst(p_off, pages_struct),
-            ]
-            if with_structure:
-                def text_spans(ss, ee, ll):
-                    return pa.StructArray.from_arrays(
-                        [pa.array(ss, type=pa.int32()),
-                         pa.array(ee, type=pa.int32()),
-                         pa.array(ll, type=pa.string())],
-                        names=["start", "end", "language"],
-                    )
-
-                sections_struct = pa.StructArray.from_arrays(
-                    [pa.array(sec_cols["start"], type=pa.int32()),
-                     pa.array(sec_cols["end"], type=pa.int32()),
-                     pa.array(sec_cols["title"], type=pa.string()),
-                     pa.array(sec_cols["title_start"], type=pa.int32()),
-                     pa.array(sec_cols["title_end"], type=pa.int32()),
-                     pa.array(sec_cols["level"], type=pa.int32()),
-                     pa.array(sec_cols["abs_level"], type=pa.int32())],
-                    names=["start", "end", "title", "title_start", "title_end",
-                           "level", "abs_level"],
-                )
-                cols.append(pa.StructArray.from_arrays(
+                pa.StructArray.from_arrays(
                     [pa.array(st_title, type=pa.string()),
                      pa.array(st_lang, type=pa.string()),
                      lst(para_off, text_spans(para_s, para_e, para_l)),
@@ -194,7 +186,8 @@ def _extract_documents_arrow_native(
                      lst(sec_off, sections_struct)],
                     names=["title", "language", "paragraphs", "sentences",
                            "sections"],
-                ))
+                ),
+            ]
             yield pa.RecordBatch.from_arrays(
                 [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
                 schema=arrow_schema,
@@ -211,18 +204,18 @@ def extract_from_documents(
     text_col: str = "text",
     fanout_threshold: int | None = restitch.DEFAULT_FANOUT_THRESHOLD,
     with_structure: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """documents -> extraction results (one row per doc).
 
-    ``engine="auto"`` (default, r6) picks per the measured boundary
+    The engine follows from ``with_structure``, per the measured boundary
     economics: WITHOUT structure the pure-expression catalyst pipeline
     wins (0.76 s vs 0.99 s at sf1.0 — no python boundary at all beats
     paying one); WITH structure a python pass is unavoidable (the
     segmenter), so the ``mapInArrow`` kernel that does extraction AND
     structure in that same pass wins decisively (1.22 s vs 1.63 s at
-    sf1.0; 4.97 s vs 8.53 s on an 800k-doc corpus). Both engines are
-    pinned row-for-row equal (tests/test_integration.py,
+    sf1.0; 4.97 s vs 8.53 s on an 800k-doc corpus). The kernel is pinned
+    row-for-row equal to the catalyst engine plus
+    ``structure.with_structure`` (tests/test_integration.py,
     tests/test_pipeline_vs_oracle.py).
 
     ``fanout_threshold`` routes the catalyst engine only. The arrow
@@ -250,16 +243,8 @@ def extract_from_documents(
     derive_spans assigns sequential offsets, so density is an invariant
     here — declared statically (dense=True) rather than re-discovered with
     a per-row pass (the round-2 assembly-family bench regression)."""
-    if engine not in ("auto", "arrow", "catalyst"):
-        raise ValueError(
-            f"engine must be 'auto', 'arrow' or 'catalyst', got {engine!r}"
-        )
-    if engine == "auto":
-        engine = "arrow" if with_structure else "catalyst"
-    if engine == "arrow":
-        return _extract_documents_arrow_native(
-            docs, doc_id_col, text_col, with_structure
-        )
+    if with_structure:
+        return _extract_documents_arrow_native(docs, doc_id_col, text_col)
 
     if fanout_threshold is not None and fanout_threshold > 0:
         tlen = F.length(F.coalesce(F.col(text_col), F.lit("")))
@@ -281,10 +266,7 @@ def extract_from_documents(
             ds.derive_spans(docs, doc_id_col=doc_id_col, text_col=text_col),
             fanout_threshold=fanout_threshold,
         )
-    assembled = layout.assemble(stitched, dense=True)
-    if not with_structure:
-        return assembled
-    return structure.with_structure(assembled)
+    return layout.assemble(stitched, dense=True)
 
 
 def extract_from_spans(

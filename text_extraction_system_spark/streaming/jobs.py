@@ -226,8 +226,9 @@ def incremental_dedup_stream(
     text_col: str = "text",
 ) -> DataFrame:
     """Continuous-ingest twin of ``dedup.incremental_near_dup``: each
-    arriving doc is MinHash-signed (narrow per-row expressions — stream-
-    safe) and STREAM-STATIC joined against the committed corpus's persisted
+    arriving doc is MinHash-signed by the batch signature kernel (a
+    stateless Arrow map — stream-safe, carrying the event time through)
+    and STREAM-STATIC joined against the committed corpus's persisted
     signature table; matches verified by the sketch estimate. Pass
     ``state.read_signature_table(...)`` as ``committed_sigs`` for the
     production shape (durable partitioned table on disk — pytest runs the
@@ -239,24 +240,12 @@ def incremental_dedup_stream(
     by (ingest rate x horizon). The static side is the MAX_BUCKET-guarded
     signature_table, so a micro-batch can never join into a degenerate
     bucket. Emits (doc_id, dup_of, est_jaccard, ingest_ts)."""
-    from ..operators import dedup, exprutil
+    from ..operators import dedup
 
-    sigs = docs_stream.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.col(ts_col).cast("timestamp").alias(ts_col),
-        exprutil.let(
-            dedup.minhash_sig_col(dedup.shingles_col(F.col(text_col))),
-            lambda sig: F.struct(
-                sig.alias("sig"), dedup.band_sigs_col(sig).alias("bands")
-            ),
-        ).alias("sb"),
-    ).select(
-        "doc_id", ts_col, F.col("sb.sig").alias("sig_new"),
-        F.explode("sb.bands").alias("b"),
-    ).select(
-        "doc_id", ts_col, "sig_new",
-        F.col("b.band").alias("band"), F.col("b.band_sig").alias("band_sig"),
-    )
+    sigs = dedup._signature_band_rows(
+        docs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
+        doc_id_col, text_col, carry=(ts_col,),
+    ).withColumnRenamed("sig", "sig_new")
     old = committed_sigs.select(
         F.col("doc_id").alias("dup_of"),
         F.col("sig").alias("sig_old"),
@@ -296,8 +285,9 @@ def incremental_ann_stream(
     dim: int = 64,
 ) -> DataFrame:
     """Continuous-ingest twin of ``similarity.incremental_ann_topk``: each
-    arriving vector is SRP-bucketed (narrow per-row expressions — stream-
-    safe) with multi-probe key expansion, STREAM-STATIC joined against the
+    arriving vector is SRP-bucketed by the batch bucket kernel (a stateless
+    Arrow map — stream-safe, carrying the event time through) with
+    multi-probe key expansion, STREAM-STATIC joined against the
     committed corpus's persisted bucket table (pass
     ``state.read_srp_buckets(...)``; when the table carries the
     ``bucket_prefix`` partition column the probe keys include it, keeping
@@ -318,23 +308,17 @@ def incremental_ann_stream(
     ppb = similarity.PLANES_PER_BAND
     radius = similarity.MULTIPROBE_RADIUS if multiprobe is None else multiprobe
 
-    base = vecs_stream.select(
-        F.col(id_col).cast("bigint").alias("query_id"),
-        F.col(ts_col).cast("timestamp").alias(ts_col),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            similarity.srp_band_buckets_col(F.col(vec_col), n_bands, ppb, dim)
-        ).alias("bb"),
-    ).select(
-        "query_id", ts_col, "qv",
-        F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket0"),
+    base = similarity._srp_band_rows(
+        vecs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
+        n_bands, ppb, dim, id_col, vec_col, keep_vec=True, carry=(ts_col,),
     )
     masks = similarity._probe_masks(ppb, radius, probe_budget)
     probes = base.select(
-        "query_id", ts_col, "qv", "band",
+        F.col("vid").cast("bigint").alias("query_id"), ts_col,
+        F.col("vec").alias("qv"), "band",
         F.explode(
             F.array(
-                *[similarity._flip_bits_col(F.col("bucket0"), m, ppb) for m in masks]
+                *[similarity._flip_bits_col(F.col("bucket"), m, ppb) for m in masks]
             )
         ).alias("bucket"),
     )

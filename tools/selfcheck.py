@@ -19,7 +19,7 @@ sys.path.insert(0, "/root/repo/tools")
 from check_oracle import TABLES, value_hash  # noqa: E402
 
 
-def run_sf(sf_dir: str, cpus: int = 32) -> dict:
+def run_sf(sf_dir: str) -> dict:
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -28,7 +28,12 @@ def run_sf(sf_dir: str, cpus: int = 32) -> dict:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus)
+    # get_spark's default master (local[$SPARK_GRAFT_CPUS]); one shuffle
+    # partition per core
+    spark = get_spark()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     qs = entrymod.queries()
     oq = entrymod.oracle_sql()
     out: dict[str, dict] = {}
