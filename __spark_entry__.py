@@ -154,7 +154,7 @@ def _q_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2/A8: paragraph segmentation offsets + per-paragraph language
-    (mapInPandas row-per-paragraph; shares rule code with the oracle)."""
+    (arrowmap.map_rows row-per-paragraph; shares rule code with the oracle)."""
     res = pipeline.extract_from_documents(_docs(spark, sf_dir), with_structure=False)
     return structure_op.paragraph_rows(res)
 
@@ -665,7 +665,7 @@ def _q_media_rotate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I1-I5 analog: binary media payloads -> typed metadata via Arrow
-    mapInPandas (deterministic fake decode; real binary plumbing)."""
+    arrowmap.map_rows (deterministic fake decode; real binary plumbing)."""
     return multimodal.decode_media(_docs(spark, sf_dir))
 
 
@@ -2323,7 +2323,7 @@ FROM snapped
 """
     )
 
-    # rotate_media twin: the payload is the md5-hex synthetic
+    # rotate_media_inline twin: the payload is the md5-hex synthetic
     # (media_payload_col), the fallback byte rotation shifts by
     # quarter-turns of the snapped angle, and the fingerprint is md5 over
     # the LOWERCASE HEX of the rotated bytes — a 2k-char rotation of the

@@ -359,27 +359,3 @@ def test_orientation_probe_and_osd_composition():
     got_no = rotation.detect_rotation("r", b"x", mod_for(np.rot90(page(), -1)),
                                       method="dilated_rows", with_osd=False)
     assert abs(got_no) <= 45.0
-
-
-def test_rotate_media_inline_matches_join_form(spark):
-    """r6: the fused single-pass rotate (angle computed inline from
-    media_ref + text share) must emit exactly the rotation_rows ->
-    broadcast-join form's rows."""
-    from pyspark.sql import functions as F
-
-    from text_extraction_system_spark.operators import multimodal, rotation
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    def snap(df):
-        return {
-            (r["doc_id"], r["media_ref"]): (r["applied_angle"], bytes(r["payload"]))
-            for r in df.collect()
-        }
-
-    ang = rotation.rotation_rows(docs).where(F.col("should_correct")).select(
-        "doc_id", "media_ref", "detected_angle"
-    )
-    assert snap(multimodal.rotate_media_inline(docs)) == snap(
-        multimodal.rotate_media(docs, ang)
-    )

@@ -6,12 +6,14 @@ silently adds a shuffle or breaks column pruning fails CI:
 * column pruning reaches the parquet scan (ReadSchema carries only used cols)
 * the inline extraction path is shuffle-free (no Exchange)
 * the default extraction engine is one narrow mapInArrow stage
+* every per-row Python kernel crosses the boundary as mapInArrow (arrowmap)
 * dimension joins broadcast (BroadcastHashJoin, no SortMergeJoin)
 * the fanout path shuffles exactly once (the doc_id gather)
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from text_extraction_system_spark import pipeline
@@ -352,108 +354,31 @@ def test_pack_and_split_invariant_under_partitioning(spark):
     assert labels[0] == labels[1] == labels[2]
 
 
-def test_arrow_simhash_matches_hof(spark):
-    """The Arrow simhash kernel equals the Catalyst vote fold value-for-
-    value (same tokens, same md5 token hashes, same bit votes)."""
-    from pyspark.sql import functions as F
+def test_repetition_chain_path_matches_oracle(spark, tmp_path):
+    """The giant-doc numpy rolling-key path and the Counter path both
+    match the ``repetition`` DuckDB oracle: one doc above
+    NP_CHAIN_MIN_TOKENS and one below, each with engineered line and
+    n-gram repeats."""
+    import duckdb
 
-    from text_extraction_system_spark.operators import textstats
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = {r["doc_id"]: r["simhash"]
-         for r in textstats.simhash_rows(docs).collect()}
-    b = {r["doc_id"]: r["simhash"]
-         for r in docs.select(
-             F.col("doc_id").cast("string").alias("doc_id"),
-             textstats.simhash_col(F.col("text")).alias("simhash"),
-         ).collect()}
-    assert a == b and a
-
-
-def test_arrow_readorder_synthesis_matches_hof(spark):
-    """The Arrow word-box synthesis equals the Catalyst one value-for-value
-    (tokens, md5 column counts, layout coords, md5-keyed scramble order)."""
-    from text_extraction_system_spark.operators import readorder_op
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    def snap(df):
-        return {
-            r["doc_id"]: (tuple(r["words"]), tuple(r["xs"]), tuple(r["ys"]), tuple(r["ws"]))
-            for r in df.collect()
-        }
-    a = snap(readorder_op.synth_word_box_arrays_arrow(docs))
-    b = snap(readorder_op.synth_word_box_arrays(docs))
-    assert a == b and a
-
-
-def test_arrow_repetition_matches_dataframe_form(spark):
-    """The shuffle-free repetition kernel equals the explode/groupBy
-    DataFrame form value-for-value."""
-    from text_extraction_system_spark import pipeline
-    from text_extraction_system_spark.operators import textstats
-
-    res = pipeline.extract_from_documents(
-        spark.read.parquet(f"{SF}/documents.parquet"), with_structure=False
-    )
-    frac_cols = (
-        [f"top_{n}gram_char_frac" for n in textstats.TOP_NS[1:]]
-        + [f"dup_{n}gram_char_frac" for n in textstats.DUP_NS]
-    )
-
-    def snap(df):
-        def fmt(v):
-            return None if v is None else f"{v:.17g}"
-
-        return {r["doc_id"]: (r["n_lines"], fmt(r["dup_line_frac"]),
-                              fmt(r["dup_line_char_frac"]), r["top_gram"],
-                              fmt(r["top_gram_char_frac"]),
-                              *[fmt(r[c]) for c in frac_cols])
-                for r in df.collect()}
-    a = snap(textstats.repetition_rows_arrow(res))
-    b = snap(textstats.repetition_rows(res))
-    assert a == b and a
-    # the full Gopher battery is populated: long docs carry every column,
-    # and at least one short doc exercises the NULL (no such n-gram) path
-    assert any(all(x is not None for x in v[5:]) for v in a.values())
-
-
-def test_repetition_chain_path_matches_counter_and_dataframe(spark):
-    """The giant-doc numpy rolling-key path produces the same Gopher
-    fractions as the Counter path and the exploded DataFrame form: one doc
-    above NP_CHAIN_MIN_TOKENS with engineered line and n-gram repeats runs
-    through all three."""
-    from pyspark.sql import functions as F
+    from test_oracle_edge_corpus import _assert_parity
 
     from text_extraction_system_spark.operators import textstats
 
     words = [f"w{i % 97}" for i in range(5000)] + ["alpha", "beta"] * 40
-    text = "line one\nline one\n" + " ".join(words)
-    big = spark.createDataFrame([("giant", text)], "doc_id string, plain_text string")
-
-    frac_cols = (
-        [f"top_{n}gram_char_frac" for n in textstats.TOP_NS[1:]]
-        + [f"dup_{n}gram_char_frac" for n in textstats.DUP_NS]
+    small_words = words[:2000] + ["alpha", "beta"] * 40
+    assert len(small_words) < textstats.NP_CHAIN_MIN_TOKENS < len(words)
+    spark.createDataFrame(
+        [(1, "line one\nline one\n" + " ".join(words)),
+         (2, "line one\nline one\n" + " ".join(small_words))],
+        "doc_id long, text string",
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path}/documents.parquet/*.parquet'"
     )
-
-    def snap(df):
-        r = df.collect()[0]
-        return (r["n_lines"], f"{r['dup_line_frac']:.17g}", r["top_gram"],
-                f"{r['top_gram_char_frac']:.17g}",
-                *[f"{r[c]:.17g}" for c in frac_cols])
-
-    arrow = snap(textstats.repetition_rows_arrow(big))       # chain path
-    frame = snap(textstats.repetition_rows(big))             # exploded form
-    assert arrow == frame
-
-    # the Counter path on the same shape of doc, below the switch threshold
-    small_words = words[: 2000]
-    text_small = "line one\nline one\n" + " ".join(small_words + ["alpha", "beta"] * 40)
-    small = spark.createDataFrame(
-        [("small", text_small)], "doc_id string, plain_text string"
-    )
-    assert snap(textstats.repetition_rows_arrow(small)) == snap(
-        textstats.repetition_rows(small)
-    )
+    _assert_parity(spark, con, str(tmp_path), "repetition")
 
 
 def test_tfidf_and_dup_windows_semantics(spark):
@@ -584,3 +509,76 @@ def test_default_extraction_is_one_narrow_stage(spark):
     assert "Union" not in plan, plan
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan, plan
+
+
+def _row_kernel_operators():
+    from text_extraction_system_spark.operators import (
+        coords, dedup, multimodal, readorder_op, rotation, serialize,
+        structure, tables_op, textstats, toc,
+    )
+
+    def res(docs):  # assembled results from the Catalyst engine: no Python
+        return pipeline.extract_from_documents(docs, with_structure=False)
+
+    return {
+        "extract": pipeline.extract_from_documents,
+        "paragraph_rows": lambda d: structure.paragraph_rows(res(d)),
+        "sentence_rows": lambda d: structure.sentence_rows(res(d)),
+        "section_rows": lambda d: structure.section_rows(res(d)),
+        "toc_section_rows": lambda d: toc.toc_section_rows(res(d)),
+        "simhash_rows": textstats.simhash_rows,
+        "repetition_rows_arrow": lambda d: textstats.repetition_rows_arrow(res(d)),
+        "token_counts": lambda d: textstats._doc_token_counts_arrow(d, "doc_id", "text"),
+        "signature_rows": dedup.signature_rows,
+        "doc_shingles": dedup.doc_shingles,
+        "contamination_report": lambda d: dedup.contamination_report(d, d),
+        "dup_window_coverage": dedup.dup_window_coverage,
+        "decode_media": multimodal.decode_media,
+        "extract_features": multimodal.extract_features,
+        "resize_media": multimodal.resize_media,
+        "sample_frames": multimodal.sample_frames,
+        "rotate_media_inline": multimodal.rotate_media_inline,
+        "detected_rotation_rows": rotation.detected_rotation_rows,
+        "detect_tables": tables_op.detect_tables,
+        "synth_word_box_arrays_arrow": readorder_op.synth_word_box_arrays_arrow,
+        "to_msgpack_column": lambda d: serialize.to_msgpack_column(
+            pipeline.extract_from_documents(d)),
+        "to_protobuf_column": lambda d: serialize.to_protobuf_column(
+            pipeline.extract_from_documents(d)),
+        "with_char_boxes": lambda d: coords.with_char_boxes(res(d)),
+        "to_char_bboxes_proto_column": lambda d: serialize.to_char_bboxes_proto_column(
+            coords.with_char_boxes(res(d))),
+    }
+
+
+
+@pytest.mark.parametrize("name", sorted(_row_kernel_operators()))
+def test_row_kernels_cross_python_through_map_in_arrow(spark, name):
+    """Every per-row Python kernel crosses the boundary through
+    ``arrowmap`` (``mapInArrow``), never a hand-rolled ``mapInPandas``."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(_row_kernel_operators()[name](docs))
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
+
+
+def test_with_char_boxes_keeps_every_row_in_one_pass(spark):
+    """One output row per input row, including duplicate and NULL doc ids,
+    with one box per plain-text char, from a plan with no join and no
+    shuffle."""
+    from text_extraction_system_spark.operators import coords
+
+    docs = spark.createDataFrame(
+        [("a", "first doc with some words " * 2),
+         ("a", "a different doc sharing the id"),
+         (None, "the doc without an id"),
+         ("b", "last one")],
+        "doc_id string, text string",
+    )
+    boxed = coords.with_char_boxes(pipeline.extract_from_documents(docs))
+    rows = boxed.collect()
+    assert len(rows) == 4
+    assert sorted(r["doc_id"] or "" for r in rows) == ["", "a", "a", "b"]
+    assert all(len(r["char_bboxes"]) == len(r["plain_text"]) for r in rows)
+    plan = _plan(boxed)
+    assert "Join" not in plan and "Exchange" not in plan, plan

@@ -76,18 +76,13 @@ def test_synth_ref_one_table_plus_noise():
 def test_six_tables_archetype(spark):
     """Reference integration golden: a document with 6 table-bearing media
     spans yields exactly 6 tables (test_basic_api.py:68-146 analog)."""
-    doc = ("tables_0", " ".join(f"w{i}" for i in range(8)))
-    df = spark.createDataFrame([doc], "doc_id string, text string")
-    # force 6 media spans by synthesizing the doc directly
-    from text_extraction_system_spark import schemas
+    from text_extraction_system_spark.core import oracle
 
-    spans = [("text", "intro words here", "", 0)] + [
-        ("media", "", f"media://tables_0/{k}", k + 1) for k in range(6)
-    ]
-    sdf = spark.createDataFrame([("tables_0", spans)], schemas.SPANS_INPUT)
-    media = sdf.selectExpr("doc_id", "explode(spans) as s").where(
-        "s.kind = 'media'"
-    ).selectExpr("doc_id", "s.media_ref as media_ref")
-    rows = media.mapInPandas(tables_op._batches, tables_op.TABLE_ROWS_SCHEMA).collect()
+    # 29 eight-word text spans: this doc id derives exactly 6 media spans
+    doc = ("tables_0", " ".join(f"w{i}" for i in range(29 * 8)))
+    refs = {s.media_ref for s in oracle.derive_spans(*doc) if s.kind == "media"}
+    assert len(refs) == 6
+    df = spark.createDataFrame([doc], "doc_id string, text string")
+    rows = tables_op.detect_tables(df).collect()
     assert len(rows) == 6
-    assert {r["media_ref"] for r in rows} == {f"media://tables_0/{k}" for k in range(6)}
+    assert {r["media_ref"] for r in rows} == refs

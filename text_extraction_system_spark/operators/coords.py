@@ -20,7 +20,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
+from .. import arrowmap
 from ..core import charboxes
 
 CHAR_STATS_SCHEMA = (
@@ -57,6 +59,7 @@ def char_coord_stats(assembled: DataFrame) -> DataFrame:
             })
             yield out[cols]
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
         gen, schema=CHAR_STATS_SCHEMA
     )
@@ -102,6 +105,7 @@ def text_to_coords(assembled: DataFrame) -> DataFrame:
                 "h": np.full(len(starts), int(charboxes.CHAR_H), dtype=np.int64),
             })[cols]
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
         gen, schema=TEXT_COORDS_SCHEMA
     )
@@ -144,25 +148,23 @@ def coords_to_text(assembled: DataFrame) -> DataFrame:
                              zip(docs[best], ls, le)],
             })[cols]
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
         gen, schema=COORDS_TEXT_SCHEMA
     )
 
 
 def with_char_boxes(assembled: DataFrame) -> DataFrame:
-    """Append the full char-bbox array column (float32 rows of [x,y,w,h])."""
+    """Append the full char-bbox array column (float32 rows of [x,y,w,h]),
+    one box per char of ``plain_text``, in one narrow pass."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _, bb = _batch(pdf)
-            pdf = pdf.copy()
-            pdf["char_bboxes"] = [
-                bb.boxes[s:e].tolist()
-                for s, e in zip(bb.doc_off[:-1], bb.doc_off[1:])
-            ]
-            yield pdf[["doc_id", "char_bboxes"]]
+    def boxes(texts, pages):
+        bb = charboxes.BatchBoxes(
+            [t or "" for t in texts], [_bounds(p or []) for p in pages]
+        )
+        return [bb.boxes[s:e].tolist() for s, e in zip(bb.doc_off[:-1], bb.doc_off[1:])]
 
-    boxed = assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema="doc_id string, char_bboxes array<array<float>>"
+    return arrowmap.append_column(
+        assembled, "char_bboxes", T.ArrayType(T.ArrayType(T.FloatType())),
+        boxes, "plain_text", "pages",
     )
-    return assembled.join(boxed, "doc_id")

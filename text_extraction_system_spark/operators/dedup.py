@@ -19,8 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .. import arrowmap
 from ..core import spec
 
 #: buckets larger than this are dropped as degenerate (boilerplate shingles);
@@ -72,7 +74,6 @@ def _signature_band_rows(
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     perms, bands = spec.MINHASH_PERMS, spec.LSH_BANDS
     A = np.array(
@@ -81,49 +82,31 @@ def _signature_band_rows(
     )
     P = np.arange(perms, dtype=np.int64)
     rows_per = perms // bands
-    cols = ["doc_id", "sig", "band", "band_sig"]
 
-    def gen(batches):
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            pos: list[int] = []
-            for i, (doc_id, text) in enumerate(zip(pdf[doc_id_col], pdf[text_col])):
-                hs_list = shingle_hash_set(text)
-                if not hs_list:
-                    continue
-                hs = np.asarray(hs_list, dtype=np.int64)
-                sig = ((hs[None, :] * A[:, None] + P[:, None]) % spec.MINHASH_MOD
-                       ).min(axis=1).tolist()
-                for b in range(bands):
-                    bs = hashlib.md5(
-                        ",".join(str(x) for x in sig[b * rows_per:(b + 1) * rows_per])
-                        .encode()
-                    ).hexdigest()
-                    out["doc_id"].append(doc_id)
-                    out["sig"].append(sig)
-                    out["band"].append(b)
-                    out["band_sig"].append(bs)
-                pos.extend([i] * bands)
-            # object dtype everywhere: a batch with no surviving docs would
-            # otherwise default to empty float64 columns, which Arrow cannot
-            # convert to list<int64>/string targets
-            frame = pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()},
-                columns=cols,
-            )
-            for c in carry:
-                frame[c] = pdf[c].iloc[pos].to_numpy()
-            yield frame
+    def rows(doc_id, text, *carried):
+        hs_list = shingle_hash_set(text)
+        if not hs_list:
+            return
+        hs = np.asarray(hs_list, dtype=np.int64)
+        sig = ((hs[None, :] * A[:, None] + P[:, None]) % spec.MINHASH_MOD
+               ).min(axis=1).tolist()
+        for b in range(bands):
+            bs = hashlib.md5(
+                ",".join(str(x) for x in sig[b * rows_per:(b + 1) * rows_per])
+                .encode()
+            ).hexdigest()
+            yield (doc_id, sig, b, bs, *carried)
 
     fields = {f.name: f for f in docs.schema.fields}
-    schema = "doc_id string, sig array<bigint>, band int, band_sig string"
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col, *carry
-    ).mapInPandas(
-        gen,
-        schema=", ".join(
-            [schema] + [f"`{c}` {fields[c].dataType.simpleString()}" for c in carry]
+    schema = T.StructType.fromDDL(
+        "doc_id string, sig array<bigint>, band int, band_sig string"
+    )
+    return arrowmap.map_rows(
+        docs.select(
+            F.col(doc_id_col).cast("string").alias(doc_id_col), text_col, *carry
         ),
+        rows,
+        T.StructType(schema.fields + [fields[c] for c in carry]),
     )
 
 
@@ -131,32 +114,16 @@ def _shingle_hash_rows_arrow(docs: DataFrame, doc_id_col: str = "doc_id",
                              text_col: str = "text") -> DataFrame:
     """(doc_id, h, n_shingles) exploded distinct-shingle hash rows via one
     Arrow pass (the decontamination shape)."""
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            hs: list = []
-            ns: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                l = shingle_hash_set(text)
-                if not l:
-                    continue
-                ids.extend([doc_id] * len(l))
-                hs.extend(l)
-                ns.extend([len(l)] * len(l))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "h": pd.Series(hs, dtype="int64"),
-                    "n_shingles": pd.Series(ns, dtype="int32"),
-                },
-                columns=["doc_id", "h", "n_shingles"],
-            )
+    def rows(doc_id, text):
+        hs = shingle_hash_set(text)
+        for h in hs:
+            yield doc_id, h, len(hs)
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, h bigint, n_shingles int")
+    return arrowmap.map_rows(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        rows, "doc_id string, h bigint, n_shingles int",
+    )
 
 
 def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -167,31 +134,19 @@ def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
     (split on single spaces, drop empties, word k-shingles), emitted
     sorted — a deterministic order, which array_intersect/union set sizes
     are insensitive to."""
-    import pandas as pd
-
     k = spec.SHINGLE_K
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            sh: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                words = [w for w in (text or "").split(" ") if w]
-                if len(words) < k:
-                    continue
-                ids.append(doc_id)
-                sh.append(sorted({
-                    " ".join(words[i:i + k])
-                    for i in range(len(words) - k + 1)
-                }))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype=object),
-                "shingles": pd.Series(sh, dtype=object),
-            }, columns=["doc_id", "shingles"])
+    def rows(doc_id, text):
+        words = [w for w in (text or "").split(" ") if w]
+        if len(words) >= k:
+            yield doc_id, sorted({
+                " ".join(words[i:i + k]) for i in range(len(words) - k + 1)
+            })
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, shingles array<string>")
+    return arrowmap.map_rows(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        rows, "doc_id string, shingles array<string>",
+    )
 
 
 def lsh_candidate_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -432,41 +387,21 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
     import hashlib
     from collections import Counter
 
-    import pandas as pd
-
     from .textstats import py_tokens
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            ws: list = []
-            occ: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                toks = py_tokens(text)
-                m = len(toks) - n + 1
-                if m <= 0:
-                    continue
-                cnt = Counter(
-                    int(hashlib.md5(
-                        " ".join(toks[i:i + n]).encode()
-                    ).hexdigest()[:15], 16)
-                    for i in range(m)
-                )
-                ids.extend([doc_id] * len(cnt))
-                ws.extend(cnt.keys())
-                occ.extend(cnt.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "win": pd.Series(ws, dtype="int64"),
-                    "occ": pd.Series(occ, dtype="int64"),
-                },
-                columns=["doc_id", "win", "occ"],
-            )
+    def rows(doc_id, text):
+        toks = py_tokens(text)
+        cnt = Counter(
+            int(hashlib.md5(" ".join(toks[i:i + n]).encode()).hexdigest()[:15], 16)
+            for i in range(len(toks) - n + 1)
+        )
+        for win, occ in cnt.items():
+            yield doc_id, win, occ
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, win bigint, occ bigint")
+    return arrowmap.map_rows(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        rows, "doc_id string, win bigint, occ bigint",
+    )
 
 
 def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,

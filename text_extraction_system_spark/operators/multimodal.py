@@ -6,20 +6,20 @@ DETERMINISTIC FAKE: the payload is a repetition of md5(media_ref) digest
 bytes, and "decoding" parses width/height/format out of the leading digest
 bytes. What is REAL and under test is the Spark-side plumbing: binary column
 synthesis in Catalyst expressions, Arrow transfer of binary batches through
-``mapInPandas``, schema and batch shape.
+``arrowmap.map_rows``, schema and batch shape.
 
-Real-deployment note: swap ``decode_media_batches`` internals for PIL/ffmpeg
-calls; signatures, schema, and partitioning stay identical.
+Real-deployment note: swap the ``_decode_row`` body for PIL/ffmpeg calls;
+signatures, schema, and partitioning stay identical.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import arrowmap
 from . import derive_spans as ds
 
 FORMATS = ("jpeg", "png", "tiff", "webp")
@@ -48,29 +48,20 @@ def media_table(docs: DataFrame) -> DataFrame:
     return media.withColumn("payload", media_payload_col(F.col("media_ref")))
 
 
-def decode_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _decode_row(doc_id, ref, payload):
     """DETERMINISTIC FAKE decode: parses metadata from payload bytes.
 
     A real decoder (PIL.Image.open / av.open) would replace the body; the
     Arrow binary-batch plumbing is what this exercises.
     """
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "media_ref", "n_bytes", "width", "height", "format")}
-        for doc_id, ref, payload in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-            b = bytes(payload)
-            head = b[:16]
-            out["doc_id"].append(doc_id)
-            out["media_ref"].append(ref)
-            out["n_bytes"].append(len(b))
-            out["width"].append(64 * (1 + (head[1] >> 4)))
-            out["height"].append(64 * (1 + (head[1] & 15)))
-            out["format"].append(FORMATS[(head[2] >> 4) % 4])
-        yield pd.DataFrame(out, columns=list(out.keys()))
+    head = payload[:16]
+    yield (doc_id, ref, len(payload), 64 * (1 + (head[1] >> 4)),
+           64 * (1 + (head[1] & 15)), FORMATS[(head[2] >> 4) % 4])
 
 
 def decode_media(docs: DataFrame) -> DataFrame:
     """Binary payloads -> typed media metadata via Arrow batches."""
-    return media_table(docs).mapInPandas(decode_media_batches, schema=DECODED_SCHEMA)
+    return arrowmap.map_rows(media_table(docs), _decode_row, DECODED_SCHEMA)
 
 
 FEATURE_DIM = 16
@@ -86,18 +77,24 @@ def extract_features(docs: DataFrame) -> DataFrame:
     array<double> out."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                b = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(b >> 4, minlength=FEATURE_DIM).astype(np.float64)
-                feats.append((hist / max(len(b), 1)).tolist())
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["feature"] = feats
-            yield out
+    def rows(doc_id, ref, payload):
+        b = np.frombuffer(payload, dtype=np.uint8)
+        hist = np.bincount(b >> 4, minlength=FEATURE_DIM).astype(np.float64)
+        yield doc_id, ref, (hist / max(len(b), 1)).tolist()
 
-    return media_table(docs).mapInPandas(gen, schema=FEATURES_SCHEMA)
+    return arrowmap.map_rows(media_table(docs), rows, FEATURES_SCHEMA)
+
+
+@functools.cache
+def _pil_image():
+    """``PIL.Image`` when importable, else None — looked up once per
+    Python worker, not once per row."""
+    try:
+        from PIL import Image  # pragma: no cover
+
+        return Image
+    except ImportError:
+        return None
 
 
 RESIZED_SCHEMA = (
@@ -136,22 +133,10 @@ def resize_media(docs: DataFrame, target: int = 64) -> DataFrame:
     byte-downsample fake runs. PIL's mere presence never changes a query
     from working to failing (round-2 verdict item 3)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            payloads = [
-                _resize_payload(bytes(p), target, image_mod) for p in pdf["payload"]
-            ]
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["width"] = target
-            out["height"] = target
-            out["payload"] = payloads
-            yield out
+    def rows(doc_id, ref, payload):
+        yield doc_id, ref, target, target, _resize_payload(payload, target, _pil_image())
 
-    return media_table(docs).mapInPandas(gen, schema=RESIZED_SCHEMA)
+    return arrowmap.map_rows(media_table(docs), rows, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = (
@@ -168,23 +153,11 @@ def sample_frames(docs: DataFrame, every: int = 2) -> DataFrame:
     shape a real decoder produces). Swap the slicing for av/ffmpeg frame
     iteration when the libs exist; schema and partitioning stay identical."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "media_ref", "frame_idx", "frame"]
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                b = bytes(payload)
-                n_frames = len(b) // FRAME_BYTES
-                for i in range(0, n_frames, every):
-                    out["doc_id"].append(doc_id)
-                    out["media_ref"].append(ref)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(b[i * FRAME_BYTES:(i + 1) * FRAME_BYTES])
-            yield pd.DataFrame(out, columns=cols)
+    def rows(doc_id, ref, payload):
+        for i in range(0, len(payload) // FRAME_BYTES, every):
+            yield doc_id, ref, i, payload[i * FRAME_BYTES:(i + 1) * FRAME_BYTES]
 
-    return media_table(docs).mapInPandas(gen, schema=FRAMES_SCHEMA)
+    return arrowmap.map_rows(media_table(docs), rows, FRAMES_SCHEMA)
 
 
 ROTATED_SCHEMA = (
@@ -222,16 +195,17 @@ def _rotate_payload(b: bytes, angle: float, image_mod=None) -> bytes:
 
 
 def rotate_media_inline(docs: DataFrame) -> DataFrame:
-    """Fused twin of
-    ``rotate_media(docs, rotation_rows(docs).where(should_correct))`` (r6,
-    guide §2.4/§3.3): the angle is a pure function of the media_ref and
-    the doc's text share, and BOTH join sides derived from the same span
-    table — so the broadcast join re-derived the corpus a second time and
-    paid a 100k+-row broadcast build for values computable inline. One
-    derivation now computes covers + media explode + payload + angle in a
-    single narrow pass; rows pinned equal to the join form by pytest.
-    Media without a correcting angle keep applied_angle 0 exactly like the
-    join's left-null coalesce."""
+    """Apply rotation correction to media payloads (reference I5: rotate the
+    page image by the detected angle before OCR). The angle is
+    ``rotation.rotation_rows``' guarded decision, computed inline: it is a
+    pure function of the media_ref and the doc's text share, so one
+    derivation computes covers + media explode + payload + angle in a
+    single narrow pass (a broadcast join of ``rotation_rows`` onto the
+    media table derived the corpus twice and built a 100k+-row broadcast).
+    Media without a correcting angle keep applied_angle 0. The pixel
+    kernel runs PIL when importable AND the payload decodes; otherwise the
+    deterministic quarter-turn byte rotation runs — same fence as
+    resize_media. Pinned by the ``media_rotate`` oracle."""
     from . import ocr, rotation
 
     spans = ds.derive_spans(docs)
@@ -264,59 +238,7 @@ def rotate_media_inline(docs: DataFrame) -> DataFrame:
         media_payload_col(F.col("media_ref")).alias("payload"),
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref", "applied_angle"]].copy()
-            out["payload"] = [
-                _rotate_payload(bytes(p), float(a), image_mod)
-                for p, a in zip(pdf["payload"], pdf["applied_angle"])
-            ]
-            yield out
+    def rows(doc_id, ref, angle, payload):
+        yield doc_id, ref, angle, _rotate_payload(payload, angle, _pil_image())
 
-    return with_angle.mapInPandas(gen, schema=ROTATED_SCHEMA)
-
-
-def rotate_media(docs: DataFrame, angles: DataFrame | None = None) -> DataFrame:
-    """Apply rotation correction to media payloads (reference I5: rotate the
-    page image by the detected angle before OCR). ``angles`` is an optional
-    (doc_id, media_ref, detected_angle) frame — e.g. the output of
-    ``rotation.rotation_rows`` filtered to should_correct — joined onto the
-    media table (broadcast: one small row per media span needing
-    correction); media without an angle row pass through with angle 0.
-    The pixel kernel runs PIL when importable AND the payload decodes;
-    otherwise the deterministic quarter-turn byte rotation runs — same
-    fence as resize_media."""
-    media = media_table(docs)
-    if angles is not None:
-        a = angles.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            "media_ref",
-            F.col("detected_angle").cast("double").alias("detected_angle"),
-        )
-        media = media.join(F.broadcast(a), ["doc_id", "media_ref"], "left")
-    else:
-        media = media.withColumn("detected_angle", F.lit(None).cast("double"))
-    media = media.withColumn(
-        "applied_angle", F.coalesce(F.col("detected_angle"), F.lit(0.0))
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref", "applied_angle"]].copy()
-            out["payload"] = [
-                _rotate_payload(bytes(p), float(a), image_mod)
-                for p, a in zip(pdf["payload"], pdf["applied_angle"])
-            ]
-            yield out
-
-    return media.select(
-        "doc_id", "media_ref", "applied_angle", "payload"
-    ).mapInPandas(gen, schema=ROTATED_SCHEMA)
+    return arrowmap.map_rows(with_angle, rows, ROTATED_SCHEMA)

@@ -10,9 +10,11 @@ md5-keyed order, so the only way to reproduce the original token sequence is
 to actually reconstruct the columns geometrically. The oracle is therefore
 brutal and simple: reconstructed text must equal the token stream.
 
-Scale shape: the layout synthesis is pure Catalyst; the reconstruction is
-one hash shuffle grouping a page's words plus an Arrow-batched UDF around
-core.readorder (numpy x-projection cut). No driver-side state.
+Scale shape: the query synthesizes per-doc box arrays in one
+``arrowmap.map_rows`` pass and reconstructs them with an Arrow-batched UDF
+around core.readorder (numpy x-projection cut) — no shuffle. The exploded
+word-box TABLE form (Catalyst synthesis) goes through one hash shuffle
+grouping a page's words first. No driver-side state.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import arrowmap
 from ..core import readorder
 from . import textstats
 from .exprutil import let
@@ -37,7 +40,7 @@ _OUT = "doc_id string, reconstructed string, n_columns int"
 
 def _synth_box_structs(docs: DataFrame) -> DataFrame:
     """(doc_id, boxes array<struct<shuf,word,x,y,w,h>>) in md5-scrambled
-    order — the un-exploded synthesis shared by both reconstruction paths.
+    order — the Catalyst synthesis behind the exploded word-box table.
 
     Layout: line(i) = i//4; columns split the line range evenly
     (lines_per_col = ceil(total_lines/n_cols)); per-doc column pitch =
@@ -149,26 +152,6 @@ def reconstruct_from_box_arrays(arrs: DataFrame, key: str = "doc_id") -> DataFra
     return res.select(key, "r.reconstructed", "r.n_columns")
 
 
-def synth_word_box_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, words, xs, ys, ws) — the synthesized scrambled boxes kept in
-    per-doc arrays (no explode), for the shuffle-free reconstruction path."""
-    from .exprutil import let as _let
-
-    boxed = _synth_box_structs(docs)
-    return boxed.select(
-        "doc_id",
-        _let(
-            F.col("boxes"),
-            lambda bs: F.struct(
-                F.transform(bs, lambda b: b["word"]).alias("words"),
-                F.transform(bs, lambda b: b["x"]).alias("xs"),
-                F.transform(bs, lambda b: b["y"]).alias("ys"),
-                F.transform(bs, lambda b: b["w"]).alias("ws"),
-            ),
-        ).alias("c"),
-    ).select("doc_id", "c.words", "c.xs", "c.ys", "c.ws")
-
-
 def reading_order_query(spark, sf_dir: str) -> DataFrame:
     # single row-group input: spread the scan or every downstream kernel
     # runs in one task (see partitioning.spread_unsplittable)
@@ -185,59 +168,47 @@ def reading_order_query(spark, sf_dir: str) -> DataFrame:
 
 
 def synth_word_box_arrays_arrow(docs: DataFrame) -> DataFrame:
-    """(doc_id, words, xs, ys, ws) via one Arrow pass — VALUE-IDENTICAL to
-    ``synth_word_box_arrays`` (pinned by pytest): same tokenization
-    (textstats.py_tokens), same md5 column count and shuffle keys, same
-    integer layout arithmetic (exact as doubles), same scramble order
-    (sorted by the md5 hex key — bytewise lexicographic in both engines).
-    The Catalyst synthesis pays an interpreted slice+fold and an md5 per
-    TOKEN; here it is C-speed python (~2 s -> ~0.6 s at sf0.1)."""
+    """(doc_id, words, xs, ys, ws) — the synthesized scrambled boxes kept
+    in per-doc arrays (no explode), for the shuffle-free reconstruction
+    path. Same layout as ``_synth_box_structs``: same tokenization
+    (textstats.py_tokens), md5 column count and shuffle keys, integer
+    layout arithmetic (exact as doubles) and scramble order (sorted by the
+    md5 hex key). The Catalyst synthesis pays an interpreted slice+fold
+    and an md5 per TOKEN; here it is C-speed python (~2 s -> ~0.6 s at
+    sf0.1). Pinned by the ``reading_order`` oracle."""
     import hashlib
 
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "words": [], "xs": [], "ys": [], "ws": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = textstats.py_tokens(text)
-                h0 = hashlib.md5(f"cols:{doc_id}".encode()).hexdigest()[0]
-                n_cols = 1 + _HEX.index(h0) % 3
-                n = len(toks)
-                total_lines = -(-n // WORDS_PER_LINE)
-                lines_per_col = -(-total_lines // n_cols) if total_lines else 1
-                max_len = max((len(t) for t in toks), default=0)
-                pitch = (WORDS_PER_LINE * CHAR_W) * (max_len + 1) + 40
-                rows = []
+    def rows(doc_id, text):
+        toks = textstats.py_tokens(text)
+        h0 = hashlib.md5(f"cols:{doc_id}".encode()).hexdigest()[0]
+        n_cols = 1 + _HEX.index(h0) % 3
+        n = len(toks)
+        total_lines = -(-n // WORDS_PER_LINE)
+        lines_per_col = -(-total_lines // n_cols) if total_lines else 1
+        max_len = max((len(t) for t in toks), default=0)
+        pitch = (WORDS_PER_LINE * CHAR_W) * (max_len + 1) + 40
+        boxes = []
+        x_in_line = 0
+        for i, word in enumerate(toks):
+            line, k = divmod(i, WORDS_PER_LINE)
+            if k == 0:
                 x_in_line = 0
-                for i, word in enumerate(toks):
-                    line, k = divmod(i, WORDS_PER_LINE)
-                    if k == 0:
-                        x_in_line = 0
-                    col = line // lines_per_col
-                    shuf = hashlib.md5(f"{doc_id}:{i}".encode()).hexdigest()
-                    rows.append((
-                        shuf, word,
-                        float(col * pitch + x_in_line),
-                        float((line % lines_per_col) * LINE_H),
-                        float(CHAR_W * len(word)),
-                    ))
-                    x_in_line += CHAR_W * (len(word) + 1)
-                rows.sort()  # scramble: md5-hex key order, as array_sort
-                out["doc_id"].append(doc_id)
-                out["words"].append([r[1] for r in rows])
-                out["xs"].append([r[2] for r in rows])
-                out["ys"].append([r[3] for r in rows])
-                out["ws"].append([r[4] for r in rows])
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()},
-                columns=["doc_id", "words", "xs", "ys", "ws"],
-            )
+            col = line // lines_per_col
+            shuf = hashlib.md5(f"{doc_id}:{i}".encode()).hexdigest()
+            boxes.append((
+                shuf, word,
+                float(col * pitch + x_in_line),
+                float((line % lines_per_col) * LINE_H),
+                float(CHAR_W * len(word)),
+            ))
+            x_in_line += CHAR_W * (len(word) + 1)
+        boxes.sort()  # scramble: md5-hex key order, as array_sort
+        _, words, xs, ys, ws = zip(*boxes) if boxes else ((),) * 5
+        yield doc_id, words, xs, ys, ws
 
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInPandas(
-        gen,
-        schema="doc_id string, words array<string>, xs array<double>, "
-               "ys array<double>, ws array<double>",
+    return arrowmap.map_rows(
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        rows,
+        "doc_id string, words array<string>, xs array<double>, "
+        "ys array<double>, ws array<double>",
     )

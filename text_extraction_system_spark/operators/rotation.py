@@ -390,27 +390,15 @@ def detected_rotation_rows(docs: DataFrame) -> DataFrame:
     binary batches into ``detect_rotation``. On synthetic payloads this
     equals ``raw_angle_col`` exactly (pinned by pytest); with PIL and real
     images the pixel estimate takes over, plumbing unchanged."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    from .. import arrowmap
     from . import multimodal
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["raw_angle"] = [
-                detect_rotation(ref, bytes(p), image_mod)
-                for ref, p in zip(pdf["media_ref"], pdf["payload"])
-            ]
-            yield out
+    def rows(doc_id, ref, payload):
+        yield doc_id, ref, detect_rotation(ref, payload, multimodal._pil_image())
 
-    return multimodal.media_table(docs).mapInPandas(
-        gen, schema="doc_id string, media_ref string, raw_angle double"
+    return arrowmap.map_rows(
+        multimodal.media_table(docs), rows,
+        "doc_id string, media_ref string, raw_angle double",
     )
 
 

@@ -6,7 +6,7 @@ the struct column stays native in the table; serialization is an OPTIONAL
 projection —
 
 * json      — ``F.to_json`` (JVM-side, codegen; the default)
-* msgpack   — Arrow-batched ``mapInPandas`` calling ``msgpack.packb`` when
+* msgpack   — ``arrowmap.append_column`` calling ``msgpack.packb`` when
   the wheel is installed, else the vendored spec-subset packer
   (``core.minipack`` — byte-identical for the DTO types), so the binary
   path always runs in CI
@@ -20,10 +20,11 @@ projection —
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .. import arrowmap
 
 try:  # optional dependency; the vendored packer is the fallback
     import msgpack  # type: ignore
@@ -45,26 +46,11 @@ def to_json_column(results: DataFrame, struct_col: str = "structure") -> DataFra
 
 def to_msgpack_column(results: DataFrame, struct_col: str = "structure") -> DataFrame:
     """Append ``<struct_col>_msgpack`` (binary) via Arrow batches."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    out_cols = [f.name for f in results.schema.fields] + [f"{struct_col}_msgpack"]
-    # build a NEW StructType: StructType.add mutates in place, which would
-    # corrupt the input DataFrame's cached schema
-    schema = StructType(
-        list(results.schema.fields)
-        + [StructField(f"{struct_col}_msgpack", BinaryType())]
+    return arrowmap.append_column(
+        results, f"{struct_col}_msgpack", T.BinaryType(),
+        lambda structs: [_packb(v, use_single_float=True) for v in structs],
+        struct_col,
     )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            pdf[f"{struct_col}_msgpack"] = [
-                _packb(v, use_single_float=True) for v in pdf[struct_col]
-            ]
-            yield pdf[out_cols]
-
-    return results.mapInPandas(gen, schema=schema)
 
 
 def to_protobuf_column(results: DataFrame, struct_col: str = "structure",
@@ -72,38 +58,31 @@ def to_protobuf_column(results: DataFrame, struct_col: str = "structure",
                        toc_col: str | None = "table_of_contents") -> DataFrame:
     """Append ``<struct_col>_proto`` (binary): the reference's ``Pages``
     contract message (contract_pages.proto) via Arrow batches and the
-    vendored proto2 encoder. Same mapInPandas shape as the msgpack sink.
-    When a ``toc_col`` array column is present (e.g. the toc operator's rows
-    collected per doc), its items are emitted as ``table_of_contents``
-    (field 7) alongside the structure's own segments."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
+    vendored proto2 encoder. Same ``arrowmap.append_column`` shape as the
+    msgpack sink. When a ``toc_col`` array column is present (e.g. the toc
+    operator's rows collected per doc), its items are emitted as
+    ``table_of_contents`` (field 7) alongside the structure's own
+    segments."""
     from ..core import miniproto
 
-    out_name = f"{struct_col}_proto"
-    out_cols = [f.name for f in results.schema.fields] + [out_name]
-    schema = StructType(
-        list(results.schema.fields) + [StructField(out_name, BinaryType())]
-    )
     has_pages = pages_col is not None and pages_col in results.columns
     has_toc = toc_col is not None and toc_col in results.columns
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            pages_iter = pdf[pages_col] if has_pages else [()] * len(pdf)
-            toc_iter = pdf[toc_col] if has_toc else [None] * len(pdf)
-            blobs = []
-            for s, p, t in zip(pdf[struct_col], pages_iter, toc_iter):
-                if t is not None and len(t):
-                    s = dict(s)
-                    s["table_of_contents"] = t
-                blobs.append(miniproto.encode_pages(s, p if p is not None else ()))
-            pdf[out_name] = blobs
-            yield pdf[out_cols]
+    def encode(structs, *extra):
+        extra = list(extra)
+        pages = extra.pop(0) if has_pages else [()] * len(structs)
+        tocs = extra.pop(0) if has_toc else [None] * len(structs)
+        blobs = []
+        for s, p, t in zip(structs, pages, tocs):
+            if t:
+                s = {**s, "table_of_contents": t}
+            blobs.append(miniproto.encode_pages(s, p if p is not None else ()))
+        return blobs
 
-    return results.mapInPandas(gen, schema=schema)
+    return arrowmap.append_column(
+        results, f"{struct_col}_proto", T.BinaryType(), encode, struct_col,
+        *([pages_col] if has_pages else []), *([toc_col] if has_toc else []),
+    )
 
 
 def to_char_bboxes_proto_column(results: DataFrame,
@@ -112,24 +91,10 @@ def to_char_bboxes_proto_column(results: DataFrame,
     leg (``contract_char_bboxes.proto`` CharBboxes, encoded at
     ``tasks.py:490-508``) from the ``coords.with_char_boxes`` array column.
     The reference DTO always serializes with ``__initialised__=True``."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
     from ..core import miniproto
 
-    out_name = f"{bboxes_col}_proto"
-    out_cols = [f.name for f in results.schema.fields] + [out_name]
-    schema = StructType(
-        list(results.schema.fields) + [StructField(out_name, BinaryType())]
+    return arrowmap.append_column(
+        results, f"{bboxes_col}_proto", T.BinaryType(),
+        lambda boxes: [miniproto.encode_char_bboxes(b, initialised=True) for b in boxes],
+        bboxes_col,
     )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            pdf[out_name] = [
-                miniproto.encode_char_bboxes(b, initialised=True)
-                for b in pdf[bboxes_col]
-            ]
-            yield pdf[out_cols]
-
-    return results.mapInPandas(gen, schema=schema)

@@ -175,6 +175,7 @@ def _scored_topk_partials(
                 out["cosine"].append(best_cos[qi][t])
         yield pd.DataFrame(out, columns=["query_id", "cand_id", "cosine"])
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return cands.mapInPandas(gen, schema=out_schema)
 
 
@@ -301,6 +302,7 @@ def _srp_band_rows(
     cols = [F.col(id_col).alias("vid")]
     if keep_vec:
         cols.append(F.col(vec_col).alias("vec"))
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return embeddings.select(*sel).mapInPandas(gen, schema=out_schema).select(
         *cols, *carry, F.posexplode("buckets").alias("band", "bucket")
     )
@@ -689,6 +691,7 @@ def assign_cells_vectorized(
             out["cell"] = np.argmin(d, axis=1).astype(np.int32)
             yield out
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return embeddings.select(id_col, vec_col).mapInPandas(gen, schema=out_schema)
 
 
@@ -939,6 +942,7 @@ def pq_encode(
             out["codes"] = [list(map(int, row)) for row in codes]
             yield out
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return embeddings.select(id_col, vec_col).mapInPandas(
         gen, schema="vid bigint, codes array<int>"
     )
@@ -991,6 +995,7 @@ def pq_assign_encode(
             out["codes"] = [list(map(int, row)) for row in codes]
             yield out
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return embeddings.select(id_col, vec_col).mapInPandas(
         gen, schema="vid bigint, cell int, codes array<int>"
     )
@@ -1071,6 +1076,7 @@ def _adc_topk_partials(
                 out["adc_dist"].append(float(best_key[qi][t_]))
         yield pd.DataFrame(out, columns=["query_id", "cand_id", "adc_dist"])
 
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return cands.mapInPandas(
         gen, schema="query_id bigint, cand_id bigint, adc_dist double"
     )

@@ -1,12 +1,14 @@
-"""``segment_structure`` — the one Arrow-vectorized UDF of the core pipeline.
+"""Structure segmentation: paragraphs, sentences, sections, language, title.
 
-Everything upstream (derive, OCR decide, OCR stub, re-stitch, page assembly)
-is Catalyst expressions; paragraph/sentence offset segmentation, language
-scoring, title and section detection need regex + offset arithmetic, which is
-where the reference leaned on lexnlp (``data_extract.py:149-186``). Here it
-is ONE ``pandas_udf`` over the assembled plain-text column: one Arrow batch
-in, one struct column out, no per-row Python in the Spark plan
-(BASELINE.json input_hint).
+Paragraph/sentence offset segmentation, language scoring, title and section
+detection need regex + offset arithmetic, which is where the reference
+leaned on lexnlp (``data_extract.py:149-186``). ``_structure_of`` is the
+per-document function; the default extraction kernel
+(``pipeline._extract_documents_arrow_native``) calls it in its own pass.
+``segment_structure`` wraps it as one ``pandas_udf`` over an assembled
+plain-text column (one Arrow batch in, one struct column out) for the
+Catalyst engine's results, and the ``*_rows`` operators emit exploded
+paragraph/sentence/section rows through ``arrowmap.map_rows``.
 
 The segmentation rules themselves live in ``core.textseg`` / ``core.langid``
 so the oracle and the UDF share literally the same code.
@@ -19,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .. import schemas
+from .. import arrowmap, schemas
 from ..core import langid, textseg
 
 
@@ -78,85 +80,50 @@ def with_structure(
     return assembled.withColumn("structure", udf(F.col(text_col)))
 
 
-_PARAGRAPH_ROWS_SCHEMA = (
-    "doc_id string, par_start long, par_end long, language string"
-)
-
-
 def paragraph_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-paragraph segmentation via ``mapInPandas``.
+    """Row-per-paragraph segmentation: (doc_id, par_start, par_end,
+    language). A generator (``explode``) cannot host a pandas-UDF result in
+    its input expression tree, so queries that need exploded structure run
+    this row kernel instead."""
 
-    A generator (``explode``) cannot host a pandas-UDF result in its input
-    expression tree, so queries that need exploded structure use this plan
-    node instead: one Arrow batch in, paragraph rows out — still zero
-    per-row Python.
-    """
+    def rows(doc_id, text):
+        t = text or ""
+        lang = langid.LangIndex(t).lang
+        for s, e in textseg.paragraph_spans(t):
+            yield doc_id, s, e, lang(s, e)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "par_start": [], "par_end": [], "language": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                t = text if text is not None else ""
-                lang = langid.LangIndex(t).lang
-                for s, e in textseg.paragraph_spans(t):
-                    out["doc_id"].append(doc_id)
-                    out["par_start"].append(s)
-                    out["par_end"].append(e)
-                    out["language"].append(lang(s, e))
-            yield pd.DataFrame(out, columns=list(out.keys()))
-
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen, schema=_PARAGRAPH_ROWS_SCHEMA
+    return arrowmap.map_rows(
+        assembled.select("doc_id", text_col), rows,
+        "doc_id string, par_start long, par_end long, language string",
     )
-
-
-_SENTENCE_ROWS_SCHEMA = (
-    "doc_id string, sent_start long, sent_end long, language string"
-)
 
 
 def sentence_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-sentence segmentation (W1) via ``mapInPandas``."""
+    """Row-per-sentence segmentation (W1): (doc_id, sent_start, sent_end,
+    language)."""
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "sent_start": [], "sent_end": [], "language": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                t = text if text is not None else ""
-                lang = langid.LangIndex(t).lang
-                for s, e in textseg.sentence_spans(t):
-                    out["doc_id"].append(doc_id)
-                    out["sent_start"].append(s)
-                    out["sent_end"].append(e)
-                    out["language"].append(lang(s, e))
-            yield pd.DataFrame(out, columns=list(out.keys()))
+    def rows(doc_id, text):
+        t = text or ""
+        lang = langid.LangIndex(t).lang
+        for s, e in textseg.sentence_spans(t):
+            yield doc_id, s, e, lang(s, e)
 
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen, schema=_SENTENCE_ROWS_SCHEMA
+    return arrowmap.map_rows(
+        assembled.select("doc_id", text_col), rows,
+        "doc_id string, sent_start long, sent_end long, language string",
     )
 
 
-_SECTION_ROWS_SCHEMA = (
-    "doc_id string, start long, end long, title string, "
-    "title_start long, title_end long, level long"
-)
-
-
 def section_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-section heading detection (W3/J8) via ``mapInPandas``."""
+    """Row-per-section heading detection (W3/J8)."""
 
-    def gen(batches):
-        cols = ["doc_id", "start", "end", "title", "title_start", "title_end", "level"]
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                t = text if text is not None else ""
-                for sec in textseg.detect_sections(t):
-                    out["doc_id"].append(doc_id)
-                    for k in cols[1:]:
-                        out[k].append(sec[k])
-            yield pd.DataFrame(out, columns=cols)
+    def rows(doc_id, text):
+        for sec in textseg.detect_sections(text or ""):
+            yield (doc_id, sec["start"], sec["end"], sec["title"],
+                   sec["title_start"], sec["title_end"], sec["level"])
 
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen, schema=_SECTION_ROWS_SCHEMA
+    return arrowmap.map_rows(
+        assembled.select("doc_id", text_col), rows,
+        "doc_id string, start long, end long, title string, "
+        "title_start long, title_end long, level long",
     )

@@ -1,5 +1,5 @@
 """``detect_tables`` operator (SURVEY.md I8-I10) — table regions from media
-spans via Arrow-batched ``mapInPandas``.
+spans via one ``arrowmap.map_rows`` pass.
 
 The pixel stage (contours from a rendered page — ``table_detection.py:311+``)
 is stubbed: cell boxes are derived deterministically from md5(media_ref), the
@@ -11,13 +11,12 @@ the real logic, shared with pytest goldens through ``core.tables``.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import arrowmap
 from ..core import tables as T
 from . import derive_spans as ds
 
@@ -83,22 +82,6 @@ def detect_tables_for_ref(doc_id: str, media_ref: str) -> list[dict]:
     return out
 
 
-def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [
-        "doc_id", "media_ref", "table_idx", "left", "top", "width", "height",
-        "n_rows", "n_cols", "n_cells", "data",
-    ]
-    for pdf in it:
-        # columnar accumulation: building a DataFrame from a list of dicts
-        # re-dispatches per cell; per-column lists stay O(rows) appends
-        out: dict[str, list] = {k: [] for k in cols}
-        for doc_id, ref in zip(pdf["doc_id"], pdf["media_ref"]):
-            for t in detect_tables_for_ref(doc_id, ref):
-                for k in cols:
-                    out[k].append(t[k])
-        yield pd.DataFrame(out, columns=cols)
-
-
 def detect_tables(docs: DataFrame) -> DataFrame:
     """One row per detected table over all media spans of the corpus.
 
@@ -114,4 +97,6 @@ def detect_tables(docs: DataFrame) -> DataFrame:
         F.explode(F.filter(F.col("spans"), lambda s: s["kind"] == "media")).alias("s"),
     ).select("doc_id", F.col("s.media_ref").alias("media_ref"))
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    return media.repartition(parallelism).mapInPandas(_batches, schema=TABLE_ROWS_SCHEMA)
+    return arrowmap.map_rows(
+        media.repartition(parallelism), detect_tables_for_ref, TABLE_ROWS_SCHEMA
+    )

@@ -1,6 +1,8 @@
 """Text-analytics operators — token stats, quality scoring, language ID,
-document fingerprinting, simhash. All pure Catalyst expressions (JVM-side,
-whole-stage codegen); every one has a DuckDB-SQL twin in ``__spark_entry__``.
+document fingerprinting, simhash, repetition, TF-IDF. Column expressions
+are pure Catalyst (JVM-side, whole-stage codegen); the per-document Python
+kernels (simhash, repetition, term counts) run through ``arrowmap.map_rows``.
+Every operator has a DuckDB-SQL twin in ``__spark_entry__``.
 
 These are the training-data-pipeline operators layered on top of the
 reference's extraction capabilities (task brief: dedup / quality / lang-ID /
@@ -14,10 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import arrowmap
 from ..core import spec
-
-_HEX = "0123456789abcdef"
-
 
 def tokens_col(text: Column) -> Column:
     """Whitespace tokens, lowercased, \\s+ squashed first (lang.py:10,23)."""
@@ -129,58 +129,6 @@ def fingerprint_col(text: Column) -> Column:
     )
 
 
-def simhash_col(text: Column, bits: int = 32) -> Column:
-    """SimHash over token hashes (8 hex chars -> 32-bit token hash): for each
-    bit, vote +1/-1 per token; bit set iff vote > 0."""
-    toks = tokens_col(text)
-    hashes = F.transform(toks, lambda t: token_hash_col(t, hex_chars=8))
-    # single pass over the token hashes: fold a 32-long vote vector
-    # (one md5 per token total; a per-bit formulation would recompute the
-    # token hashes `bits` times — measured 12x slower). Bit b is extracted
-    # as h % 2^(b+1) >= 2^b against LITERAL power arrays — the previous
-    # floor(h / pow(2.0, b)) % 2 paid a double pow + floor per bit per token
-    # in the interpreted HOF evaluator (this fold was 1.8s of the 3.1s query)
-    powers = F.array(*[F.lit(1 << b).cast("bigint") for b in range(bits)])
-    twopow = F.array(*[F.lit(1 << (b + 1)).cast("bigint") for b in range(bits)])
-
-    def bit_votes(h: Column) -> Column:
-        return F.zip_with(
-            powers,
-            twopow,
-            lambda p, q: F.when(h % q >= p, F.lit(1)).otherwise(F.lit(-1)).cast("bigint"),
-        )
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("bigint"), bits),
-        lambda acc, h: F.zip_with(acc, bit_votes(h), lambda a, v: a + v),
-    )
-    # reference `votes` exactly ONCE: higher-order functions run interpreted
-    # (no codegen, no common-subexpression elimination), so indexing the fold
-    # result per bit would re-run the whole fold per bit
-    contrib = F.zip_with(
-        votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("bigint"))
-    )
-    return F.aggregate(contrib, F.lit(0).cast("bigint"), lambda a, x: a + x)
-
-
-def ngram_col(text: Column, n: int) -> Column:
-    """Adjacent word n-grams (space-joined) of the normalized token stream;
-    empty array below n tokens."""
-    from .exprutil import let
-
-    def grams(ws: Column) -> Column:
-        return F.when(
-            F.size(ws) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(ws) - n),
-                lambda i: F.concat_ws(" ", F.slice(ws, i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return let(tokens_col(text), grams)
-
-
 #: the full Gopher repetition battery (Rae et al. 2021, Table A1): top
 #: n-gram character share for these n ...
 TOP_NS = (2, 3, 4)
@@ -190,104 +138,6 @@ TOP_NS = (2, 3, 4)
 #: no-double-count character coverage needs positional interval merging,
 #: which buys little discrimination for meaningfully more state.
 DUP_NS = (5, 6, 7, 8, 9, 10)
-
-
-def repetition_rows(assembled, text_col: str = "plain_text"):
-    """Gopher-style repetition quality signals over the EXTRACTED text (the
-    post-extraction filter every LLM data pipeline runs — Rae et al. 2021
-    'repetition' heuristics): fraction of duplicate lines (count and
-    char-weighted), the character share of the most frequent word n-gram
-    for n in TOP_NS, and the duplicate-n-gram character share for n in
-    DUP_NS. Line identity uses the engine's own '\\n' paragraph separators
-    ('\\f' page marks stripped first); in this text model lines ARE the
-    paragraphs (single-\\n separators), so Gopher's line/paragraph pairs
-    collapse to one family. Docs too short for a given n carry NULL for
-    that column (they have no n-grams to judge).
-
-    Scale shape: explode -> two-level hash aggregations (doc_id, key) ->
-    per-doc rollup per family, plus one per-doc top-1 window per TOP_NS
-    size — no per-doc state wider than its own lines/grams, shuffles keyed
-    by (doc_id, line/gram) hash. Ties on a top gram break to the
-    lexicographically smallest gram (deterministic, SQL-portable). This
-    exploded form is the semantic REFERENCE; the served kernel is the
-    shuffle-free Arrow twin (repetition_rows_arrow), pinned value-identical."""
-    from pyspark.sql.window import Window
-
-    lines_arr = F.filter(
-        F.split(F.translate(F.col(text_col), "\f", ""), "\n"),
-        lambda x: x != "",
-    )
-    lines = assembled.select("doc_id", F.explode(lines_arr).alias("line"))
-    per_line = lines.groupBy("doc_id", "line").agg(F.count(F.lit(1)).alias("cnt"))
-    line_stats = per_line.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_lines"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.sum(F.col("cnt") * F.length("line")).cast("bigint").alias("line_chars"),
-        F.sum(
-            F.when(F.col("cnt") > 1, F.col("cnt") * F.length("line")).otherwise(0)
-        ).cast("bigint").alias("dup_chars"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("cnt").desc(), F.col("gram"))
-
-    def per_gram_for(n: int):
-        grams = assembled.select(
-            "doc_id", F.explode(ngram_col(F.col(text_col), n)).alias("gram")
-        )
-        return grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
-
-    per_gram = per_gram_for(2)
-    top = (
-        per_gram.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", F.col("gram").alias("top_gram"), F.col("cnt").alias("top_cnt"))
-    )
-    gram_tot = per_gram.groupBy("doc_id").agg(
-        F.sum(F.col("cnt") * F.length("gram")).cast("bigint").alias("gram_chars")
-    )
-    out = (
-        line_stats.join(top, "doc_id").join(gram_tot, "doc_id")
-        .select(
-            "doc_id",
-            "n_lines",
-            ((F.col("n_lines") - F.col("n_distinct")) / F.col("n_lines"))
-            .alias("dup_line_frac"),
-            (F.col("dup_chars") / F.col("line_chars")).alias("dup_line_char_frac"),
-            "top_gram",
-            (F.col("top_cnt") * F.length("top_gram") / F.col("gram_chars"))
-            .alias("top_gram_char_frac"),
-        )
-    )
-    for n in TOP_NS[1:]:
-        pg = per_gram_for(n)
-        topn = (
-            pg.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "doc_id", F.col("gram").alias("tg"), F.col("cnt").alias("tc")
-            )
-        )
-        totn = pg.groupBy("doc_id").agg(
-            F.sum(F.col("cnt") * F.length("gram")).cast("bigint").alias("gc")
-        )
-        frac = topn.join(totn, "doc_id").select(
-            "doc_id",
-            (F.col("tc") * F.length("tg") / F.col("gc"))
-            .alias(f"top_{n}gram_char_frac"),
-        )
-        out = out.join(frac, "doc_id", "left")
-    for n in DUP_NS:
-        pg = per_gram_for(n)
-        dupn = pg.groupBy("doc_id").agg(
-            (
-                F.sum(
-                    F.when(F.col("cnt") > 1, F.col("cnt") * F.length("gram"))
-                    .otherwise(0)
-                ).cast("bigint")
-                / F.sum(F.col("cnt") * F.length("gram")).cast("bigint")
-            ).alias(f"dup_{n}gram_char_frac")
-        )
-        out = out.join(dupn, "doc_id", "left")
-    return out
 
 
 def py_tokens(text: str) -> list:
@@ -302,193 +152,169 @@ def py_tokens(text: str) -> list:
 
 def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
                  bits: int = 32):
-    """(doc_id, simhash) via one Arrow pass — VALUE-IDENTICAL to the
-    ``simhash_col`` fold (pinned by pytest): same token stream, same
-    8-hex-char md5 token hashes, same +1/-1 bit votes with bit set iff
-    vote > 0, all exact integer arithmetic. The interpreted fold costs
-    32 zip_with lambda evaluations per token; the numpy kernel does the
-    same votes in one (tokens x bits) pass (~1.5 s -> ~0.4 s at sf0.1)."""
+    """(doc_id, simhash) per doc: for each bit, every token votes +1/-1 by
+    that bit of its 8-hex-char md5 hash; the bit is set iff the vote is
+    > 0. Exact integer arithmetic over the ``tokens_col`` token stream, so
+    the DuckDB ``simhash`` oracle reproduces every value. A Catalyst vote
+    fold costs 32 interpreted zip_with lambdas per token; numpy does the
+    votes in one (tokens x bits) pass (~1.5 s -> ~0.4 s at sf0.1)."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811 (local, for select)
 
-    def gen(batches):
-        shifts = np.arange(bits, dtype=np.uint64)
-        for pdf in batches:
-            ids: list = []
-            vals: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                toks = py_tokens(text)
-                if toks:
-                    H = np.fromiter(
-                        (int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-                         for t in toks),
-                        dtype=np.uint64, count=len(toks),
-                    )
-                    ones = ((H[:, None] >> shifts[None, :]) & 1).sum(axis=0)
-                    votes = 2 * ones.astype(np.int64) - len(toks)
-                    sim = int(((votes > 0).astype(np.uint64) << shifts).sum())
-                else:
-                    sim = 0  # the fold over zero hashes leaves every vote 0
-                ids.append(doc_id)
-                vals.append(sim)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype=object),
-                "simhash": pd.Series(vals, dtype="int64"),
-            })
+    shifts = np.arange(bits, dtype=np.uint64)
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, simhash bigint")
+    def rows(doc_id, text):
+        toks = py_tokens(text)
+        if not toks:
+            yield doc_id, 0  # zero tokens leave every vote 0
+            return
+        H = np.fromiter(
+            (int(hashlib.md5(t.encode()).hexdigest()[:8], 16) for t in toks),
+            dtype=np.uint64, count=len(toks),
+        )
+        ones = ((H[:, None] >> shifts[None, :]) & 1).sum(axis=0)
+        votes = 2 * ones.astype(np.int64) - len(toks)
+        yield doc_id, int(((votes > 0).astype(np.uint64) << shifts).sum())
+
+    return arrowmap.map_rows(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        rows, "doc_id string, simhash bigint",
+    )
+
+
+#: tokens above which the numpy rolling-key chain beats python Counters in
+#: ``repetition_rows_arrow`` (measured: per-call numpy overhead dominates
+#: below ~this size — the sf corpora average ~57 tokens/doc and Counters
+#: are ~2.5x faster there; a 100k-token giant doc inverts it)
+NP_CHAIN_MIN_TOKENS = 4096
 
 
 def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
-    """Shuffle-free Arrow twin of ``repetition_rows`` (value-identical,
-    pinned by pytest): per-doc line/n-gram counting is bounded by the doc's
-    own size, so python Counters per doc beat exploding every line and
-    n-gram into corpus-wide shuffles — at 10^12 docs the exploded groupBy
-    shape moves ~tokens-many rows through the cluster once PER GRAM SIZE
-    (nine times for the full Gopher battery) for counts each task could
-    produce locally. N-grams are counted WITHOUT building a string per
-    occurrence — token-tuple Counters for ordinary docs, a numpy rolling
-    dense-key chain for giant ones (NP_CHAIN_MIN_TOKENS switch; both paths
-    pinned equal) — and only top-count candidates are joined to strings
-    for the lexicographic tie-break. Ties break to the lexicographically
-    smallest gram, as in the DataFrame form; docs too short for a gram
-    size carry None for that column."""
+    """Gopher-style repetition quality signals over the EXTRACTED text (the
+    post-extraction filter every LLM data pipeline runs — Rae et al. 2021
+    'repetition' heuristics): fraction of duplicate lines (count and
+    char-weighted), the character share of the most frequent word n-gram
+    for n in TOP_NS, and the duplicate-n-gram character share for n in
+    DUP_NS. Line identity uses the engine's own '\\n' paragraph separators
+    ('\\f' page marks stripped first); in this text model lines ARE the
+    paragraphs, so Gopher's line/paragraph pairs collapse to one family.
+    Docs with no line or fewer than 2 tokens emit no row; docs too short
+    for a gram size carry None for that column. Ties on a top gram break
+    to the lexicographically smallest gram. Pinned by the ``repetition``
+    oracle (generated per-n SQL CTEs).
+
+    Shuffle-free: per-doc line/n-gram counting is bounded by the doc's own
+    size, so python Counters per doc beat exploding every line and n-gram
+    into corpus-wide shuffles — at 10^12 docs the exploded groupBy shape
+    moves ~tokens-many rows through the cluster once PER GRAM SIZE (nine
+    times for the full battery) for counts each task could produce
+    locally. N-grams are counted WITHOUT building a string per occurrence
+    — token-tuple Counters for ordinary docs, a numpy rolling dense-key
+    chain for giant ones (NP_CHAIN_MIN_TOKENS switch) — and only
+    top-count candidates are joined to strings for the tie-break."""
     from collections import Counter
 
-    import pandas as pd
+    import numpy as np
 
     frac_cols = (
         [f"top_{n}gram_char_frac" for n in TOP_NS[1:]]
         + [f"dup_{n}gram_char_frac" for n in DUP_NS]
     )
-    cols = ["doc_id", "n_lines", "dup_line_frac", "dup_line_char_frac",
-            "top_gram", "top_gram_char_frac"] + frac_cols
 
-    #: tokens above which the numpy rolling-key chain beats python Counters
-    #: (measured: per-call numpy overhead dominates below ~this size — the
-    #: sf corpora average ~57 tokens/doc and Counters are ~2.5x faster
-    #: there; a 100k-token giant doc inverts it)
-    NP_CHAIN_MIN_TOKENS = 4096
-
-    def gen(batches):
-        import numpy as np
-
-        def fracs_counter(toks, csum, max_n):
-            """Per-n gram fractions via python tuple Counters — the fast
-            shape for ordinary documents (tiny constant factors; windows
-            materialize as tuples via one C-level zip per size)."""
-            tops, dups = {}, {}
-            top_gram2 = None
-            m1 = len(toks)
-            for n in range(2, max_n + 1):
-                m = m1 - n + 1
-                if m <= 0:
-                    break
-                cnt = Counter(zip(*(toks[i:m + i] for i in range(n))))
-                tot = int(csum[n:m + n].sum() - csum[:m].sum()) + (n - 1) * m
-                if n in TOP_NS:
-                    mx = max(cnt.values())
-                    top = min(
-                        " ".join(t) for t, c in cnt.items() if c == mx
-                    )
-                    tops[n] = mx * len(top) / tot
-                    if n == 2:
-                        top_gram2 = top
-                if n in DUP_NS:
-                    dup = sum(
-                        c * (sum(map(len, t)) + n - 1)
-                        for t, c in cnt.items() if c > 1
-                    )
-                    dups[n] = dup / tot
-            return top_gram2, tops, dups
-
-        def fracs_chain(toks, ids, n_vocab, csum, max_n):
-            """Same fractions via an incremental dense rolling encoding:
-            level n's gram keys are (level n-1 dense key, next token id)
-            pairs packed into one int64 and re-densified by a 1-D
-            np.unique — one C-speed sort per gram size, no per-window
-            python objects. Keys stay < m * n_vocab, far inside int64 for
-            any in-memory document; this is the giant-doc shape."""
-            tops, dups = {}, {}
-            top_gram2 = None
-            prev = ids.astype(np.int64)
-            for n in range(2, max_n + 1):
-                m = len(ids) - n + 1
-                if m <= 0:
-                    break
-                comb = prev[:m] * np.int64(n_vocab) + ids[n - 1:]
-                _u, first, inverse, counts = np.unique(
-                    comb, return_index=True, return_inverse=True,
-                    return_counts=True,
+    def fracs_counter(toks, csum, max_n):
+        """Per-n gram fractions via python tuple Counters — the fast shape
+        for ordinary documents (tiny constant factors; windows materialize
+        as tuples via one C-level zip per size)."""
+        tops, dups = {}, {}
+        top_gram2 = None
+        m1 = len(toks)
+        for n in range(2, max_n + 1):
+            m = m1 - n + 1
+            if m <= 0:
+                break
+            cnt = Counter(zip(*(toks[i:m + i] for i in range(n))))
+            tot = int(csum[n:m + n].sum() - csum[:m].sum()) + (n - 1) * m
+            if n in TOP_NS:
+                mx = max(cnt.values())
+                top = min(" ".join(t) for t, c in cnt.items() if c == mx)
+                tops[n] = mx * len(top) / tot
+                if n == 2:
+                    top_gram2 = top
+            if n in DUP_NS:
+                dup = sum(
+                    c * (sum(map(len, t)) + n - 1)
+                    for t, c in cnt.items() if c > 1
                 )
-                occ_lens = csum[n:m + n] - csum[:m] + (n - 1)
-                tot = int(occ_lens.sum())
-                if n in TOP_NS:
-                    mx = int(counts.max())
-                    top = min(
-                        " ".join(toks[p:p + n]) for p in first[counts == mx]
-                    )
-                    tops[n] = mx * len(top) / tot
-                    if n == 2:
-                        top_gram2 = top
-                if n in DUP_NS:
-                    d = counts > 1
-                    lens_u = occ_lens[first]
-                    dups[n] = int((counts[d] * lens_u[d]).sum()) / tot
-                prev = inverse
-            return top_gram2, tops, dups
+                dups[n] = dup / tot
+        return top_gram2, tops, dups
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                lines = [x for x in (text or "").replace("\f", "").split("\n") if x]
-                toks = py_tokens(text)
-                if not lines or len(toks) < 2:
-                    continue  # inner-join semantics of the DataFrame form
-                csum = np.concatenate((
-                    [0], np.cumsum([len(t) for t in toks], dtype=np.int64)
-                ))
-                lc = Counter(lines)
-                n_lines = len(lines)
-                line_chars = sum(len(l) for l in lines)
-                dup_chars = sum(c * len(l) for l, c in lc.items() if c > 1)
-                out["doc_id"].append(doc_id)
-                out["n_lines"].append(n_lines)
-                out["dup_line_frac"].append((n_lines - len(lc)) / n_lines)
-                out["dup_line_char_frac"].append(dup_chars / line_chars)
-                if len(toks) >= NP_CHAIN_MIN_TOKENS:
-                    vocab, ids = np.unique(np.array(toks), return_inverse=True)
-                    top_gram, tops, dups = fracs_chain(
-                        toks, ids, len(vocab), csum, max(DUP_NS)
-                    )
-                else:
-                    top_gram, tops, dups = fracs_counter(toks, csum, max(DUP_NS))
-                out["top_gram"].append(top_gram)
-                out["top_gram_char_frac"].append(tops[2])
-                for n in TOP_NS[1:]:
-                    out[f"top_{n}gram_char_frac"].append(tops.get(n))
-                for n in DUP_NS:
-                    out[f"dup_{n}gram_char_frac"].append(dups.get(n))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=(object if k in ("doc_id", "top_gram")
-                                        or k in frac_cols
-                                        else "int64" if k == "n_lines"
-                                        else "float64"))
-                 for k, v in out.items()},
-                columns=cols,
+    def fracs_chain(toks, ids, n_vocab, csum, max_n):
+        """Same fractions via an incremental dense rolling encoding: level
+        n's gram keys are (level n-1 dense key, next token id) pairs packed
+        into one int64 and re-densified by a 1-D np.unique — one C-speed
+        sort per gram size, no per-window python objects. Keys stay < m *
+        n_vocab, far inside int64 for any in-memory document; this is the
+        giant-doc shape."""
+        tops, dups = {}, {}
+        top_gram2 = None
+        prev = ids.astype(np.int64)
+        for n in range(2, max_n + 1):
+            m = len(ids) - n + 1
+            if m <= 0:
+                break
+            comb = prev[:m] * np.int64(n_vocab) + ids[n - 1:]
+            _u, first, inverse, counts = np.unique(
+                comb, return_index=True, return_inverse=True,
+                return_counts=True,
             )
+            occ_lens = csum[n:m + n] - csum[:m] + (n - 1)
+            tot = int(occ_lens.sum())
+            if n in TOP_NS:
+                mx = int(counts.max())
+                top = min(" ".join(toks[p:p + n]) for p in first[counts == mx])
+                tops[n] = mx * len(top) / tot
+                if n == 2:
+                    top_gram2 = top
+            if n in DUP_NS:
+                d = counts > 1
+                lens_u = occ_lens[first]
+                dups[n] = int((counts[d] * lens_u[d]).sum()) / tot
+            prev = inverse
+        return top_gram2, tops, dups
 
-    frac_schema = ", ".join(f"{c} double" for c in frac_cols)
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen,
-        schema="doc_id string, n_lines bigint, dup_line_frac double, "
-               "dup_line_char_frac double, top_gram string, "
-               "top_gram_char_frac double, " + frac_schema,
+    def rows(doc_id, text):
+        lines = [x for x in (text or "").replace("\f", "").split("\n") if x]
+        toks = py_tokens(text)
+        if not lines or len(toks) < 2:
+            return
+        csum = np.concatenate((
+            [0], np.cumsum([len(t) for t in toks], dtype=np.int64)
+        ))
+        lc = Counter(lines)
+        n_lines = len(lines)
+        line_chars = sum(len(l) for l in lines)
+        dup_chars = sum(c * len(l) for l, c in lc.items() if c > 1)
+        if len(toks) >= NP_CHAIN_MIN_TOKENS:
+            vocab, ids = np.unique(np.array(toks), return_inverse=True)
+            top_gram, tops, dups = fracs_chain(
+                toks, ids, len(vocab), csum, max(DUP_NS)
+            )
+        else:
+            top_gram, tops, dups = fracs_counter(toks, csum, max(DUP_NS))
+        yield (
+            doc_id, n_lines, (n_lines - len(lc)) / n_lines,
+            dup_chars / line_chars, top_gram, tops[2],
+            *[tops.get(n) for n in TOP_NS[1:]],
+            *[dups.get(n) for n in DUP_NS],
+        )
+
+    return arrowmap.map_rows(
+        assembled.select("doc_id", text_col), rows,
+        "doc_id string, n_lines bigint, dup_line_frac double, "
+        "dup_line_char_frac double, top_gram string, "
+        "top_gram_char_frac double, "
+        + ", ".join(f"{c} double" for c in frac_cols),
     )
 
 
@@ -502,30 +328,14 @@ def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
     inner-join semantics). Pinned by the ``tfidf_keywords`` oracle."""
     from collections import Counter
 
-    import pandas as pd
+    def rows(doc_id, text):
+        for tok, tf in Counter(py_tokens(text)).items():
+            yield doc_id, tok, tf
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            toks: list = []
-            tfs: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                cnt = Counter(py_tokens(text))
-                ids.extend([doc_id] * len(cnt))
-                toks.extend(cnt.keys())
-                tfs.extend(cnt.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "token": pd.Series(toks, dtype=object),
-                    "tf": pd.Series(tfs, dtype="int64"),
-                },
-                columns=["doc_id", "token", "tf"],
-            )
-
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, token string, tf bigint")
+    return arrowmap.map_rows(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        rows, "doc_id string, token string, tf bigint",
+    )
 
 
 def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",

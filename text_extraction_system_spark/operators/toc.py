@@ -11,7 +11,7 @@ outline exists") anchor one entry per page through the char-coordinate map
 (``core.charboxes`` + ``core.geometry.anchor_toc_sections``); the rest fall
 back to ``textseg.detect_sections`` over the extracted plain text.
 
-Scale shape: one Arrow ``mapInPandas`` over the assembled results — no
+Scale shape: one ``arrowmap.map_rows`` pass over the assembled results — no
 shuffle, no driver-side state; the char-box array is built per doc inside
 the batch and discarded.
 """
@@ -20,9 +20,9 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from .. import arrowmap
 from ..core import charboxes, geometry, textseg
 
 _SCHEMA = "doc_id string, start long, end long, title string, level long, source string"
@@ -70,23 +70,13 @@ def sections_for_doc(text: str, pages: list[dict], toc: list[dict]) -> list[dict
 def toc_section_rows(res: DataFrame) -> DataFrame:
     """(doc_id, plain_text, pages) results -> one row per section."""
 
-    def gen(batches):
-        cols = ["doc_id", "start", "end", "title", "level", "source"]
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text, pages in zip(
-                pdf["doc_id"], pdf["plain_text"], pdf["pages"]
-            ):
-                t = text if text is not None else ""
-                pg = list(pages) if pages is not None else []
-                toc = synth_toc(pg) if (has_toc(doc_id) and pg) else []
-                for s in sections_for_doc(t, pg, toc):
-                    out["doc_id"].append(doc_id)
-                    out["start"].append(int(s["start"]))
-                    out["end"].append(int(s["end"]))
-                    out["title"].append(s["title"])
-                    out["level"].append(int(s["level"]))
-                    out["source"].append(s["source"])
-            yield pd.DataFrame(out, columns=cols)
+    def rows(doc_id, text, pages):
+        pg = pages or []
+        toc = synth_toc(pg) if (has_toc(doc_id) and pg) else []
+        for s in sections_for_doc(text or "", pg, toc):
+            yield (doc_id, int(s["start"]), int(s["end"]), s["title"],
+                   int(s["level"]), s["source"])
 
-    return res.select("doc_id", "plain_text", "pages").mapInPandas(gen, schema=_SCHEMA)
+    return arrowmap.map_rows(
+        res.select("doc_id", "plain_text", "pages"), rows, _SCHEMA
+    )
