@@ -1459,7 +1459,7 @@ sv AS (
 SELECT s.source, s.n_input, s.n_lang, s.n_quality, s.n_tokens_ok,
        coalesce(v.n_deduped, 0) AS n_deduped,
        coalesce(v.tokens_kept, 0) AS tokens_kept
-FROM stages s LEFT JOIN sv v ON s.source = v.source
+FROM stages s LEFT JOIN sv v ON s.source IS NOT DISTINCT FROM v.source
 """
 
     sql["fingerprint"] = f"""

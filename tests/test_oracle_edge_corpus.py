@@ -185,3 +185,98 @@ def sf_duck():
 @pytest.mark.parametrize("name", KERNEL_QUERIES)
 def test_sf_kernel_parity(spark, sf_duck, name):
     _assert_parity(spark, sf_duck, SF_DIR, name)
+
+
+#: the queries built on the one-pass curate operators (funnel, near-dup,
+#: decontamination, TF-IDF) plus ``dup_clusters``, which consumes near-dup
+CURATE_QUERIES = [
+    "curation_funnel", "near_dup_pairs", "dup_clusters", "decontaminate",
+    "tfidf_keywords",
+]
+
+_NEAR = " ".join(f"tok{i}" for i in range(30))
+_EN = (
+    "the quick brown fox jumps over the lazy dog and then it runs to the "
+    "river in the morning of a long summer day that was warm for everyone"
+)
+
+
+def _curate_rows() -> list[tuple]:
+    """A bucket hotter than MAX_BUCKET (identical docs 1..71), a planted
+    near-dup pair (97, 98; Jaccard 27/29), NULL, whitespace-only and
+    two-word texts, and two copies of one English text where the smaller
+    doc_id (300) fails the language gate, and one kept doc with a NULL
+    source. Doc ids 97 and 194 fall in the decontamination eval split."""
+    from text_extraction_system_spark.operators import dedup
+
+    hot = "this boilerplate line is repeated verbatim in every document of the hot bucket"
+    rows = [(i, hot, "en", "hot") for i in range(1, dedup.MAX_BUCKET + 8)]
+    return rows + [
+        (97, _NEAR, "en", "near"),
+        (98, _NEAR.replace("tok29", "tokX"), "en", "near"),
+        (194, "two words", "en", "short"),
+        (195, None, "en", "short"),
+        (196, " \t\n ", "en", "short"),
+        (300, _EN, "de", "lang"),
+        (301, _EN, "en", "lang"),
+        (302, _EN + " again", "en", None),
+    ]
+
+
+def _corpus(spark, rows: list[tuple]) -> tuple[str, duckdb.DuckDBPyConnection]:
+    d = tempfile.mkdtemp()
+    spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string"
+    ).write.parquet(f"{d}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'"
+    )
+    return d, con
+
+
+@pytest.fixture(scope="module")
+def curate_corpus(spark):
+    return _corpus(spark, _curate_rows())
+
+
+@pytest.mark.parametrize("name", CURATE_QUERIES)
+def test_curate_edge_parity(spark, curate_corpus, name):
+    _assert_parity(spark, curate_corpus[1], curate_corpus[0], name)
+
+
+def test_curate_edge_corpus_reaches_each_case(spark, curate_corpus):
+    """The corpus exercises what it is built for: the hot bucket yields no
+    pair while the planted one is verified, only the kept copy of the
+    language-gated text survives dedup, the NULL source keeps its survivor,
+    the eval doc with shingles contaminates its near copy, and TF-IDF's
+    n_docs skips the NULL and whitespace-only docs."""
+    d = curate_corpus[0]
+    q = entry.queries()
+    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"]
+             for r in q["near_dup_pairs"](spark, d).collect()}
+    assert pairs[("97", "98")] == 27 / 29
+    assert not any(int(a) < 97 for a, _ in pairs)  # the hot bucket pairs nothing
+    funnel = {r["source"]: r for r in q["curation_funnel"](spark, d).collect()}
+    assert (funnel["lang"]["n_lang"], funnel["lang"]["n_deduped"]) == (1, 1)
+    assert funnel["lang"]["tokens_kept"] == 29
+    assert funnel[None]["n_deduped"] == 1
+    decon = [tuple(r) for r in q["decontaminate"](spark, d).collect()]
+    assert decon == [("98", 27, 28, 27 / 28)]
+    tfidf = q["tfidf_keywords"](spark, d).collect()
+    assert {r["doc_id"] for r in tfidf} >= {"97", "194", "300"}
+    assert not {r["doc_id"] for r in tfidf} & {"195", "196"}
+    # "tokx" occurs in one doc: score = tf * (1e6 * n_docs div 1), n_docs
+    # counting every doc with a token (71 + 2 + 1 + 3 = 77)
+    assert {r["score"] for r in tfidf if r["token"] == "tokx"} == {77_000_000}
+
+
+def test_decontaminate_eval_without_shingles(spark):
+    """An eval split whose docs have no 3-shingle (empty, NULL, two words)
+    contaminates nothing: zero rows, as in the oracle."""
+    d, con = _corpus(spark, [
+        (1, _NEAR, "en", "s"), (2, _EN, "en", "s"),
+        (97, "", "en", "s"), (194, None, "en", "s"), (291, "a b", "en", "s"),
+    ])
+    _assert_parity(spark, con, d, "decontaminate")
+    assert entry.queries()["decontaminate"](spark, d).count() == 0

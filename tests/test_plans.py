@@ -183,9 +183,9 @@ def test_ivf_training_descends(spark):
 
 def test_contamination_report_semantics_and_plan(spark):
     """Decontamination: a train doc quoting an eval 3-gram is flagged with
-    the exact hit count; disjoint docs are absent; the eval side broadcasts
-    (the benchmark is small by nature — no shuffle of the train corpus
-    against it)."""
+    the exact hit count; disjoint docs are absent; the train side is one
+    Python pass with no join and no shuffle (the benchmark is small by
+    nature, so its shingle set is built on the driver)."""
     from pyspark.sql import Row
 
     from text_extraction_system_spark.operators import dedup
@@ -201,7 +201,9 @@ def test_contamination_report_semantics_and_plan(spark):
         [Row(doc_id="e1", text="alpha beta gamma delta")]
     )
     rep = dedup.contamination_report(train, eval_docs)
-    assert "BroadcastHashJoin" in rep._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(rep)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
     rows = {r["doc_id"]: r for r in rep.collect()}
     # eval shingles: {alpha beta gamma, beta gamma delta}
     # t1 (3 shingles) hits both; t3 (4 shingles) hits only the first; t2 none
@@ -209,6 +211,40 @@ def test_contamination_report_semantics_and_plan(spark):
     assert rows["t1"]["n_hits"] == 2 and rows["t1"]["n_shingles"] == 3
     assert rows["t3"]["n_hits"] == 1 and rows["t3"]["n_shingles"] == 4
     assert abs(rows["t1"]["contamination"] - 2 / 3) < 1e-12
+
+
+def test_funnel_evaluates_the_signal_pass_once(spark):
+    """The funnel's stage counts and its dedup window read one signal
+    pass: the plan has exactly one tokenize-and-signal Generate."""
+    from text_extraction_system_spark.operators import curation
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(curation.funnel(docs))
+    assert plan.count("Generate ") == 1, plan
+    assert "Join" not in plan, plan
+
+
+@pytest.mark.parametrize("name", ["near_dup_pairs", "tfidf_keywords"])
+def test_curate_operators_do_not_checkpoint(spark, name):
+    """near_dup_pairs and tfidf_keywords run as one plan: no
+    localCheckpoint, whose RDD scan would show as ExistingRDD/LogicalRDD."""
+    from text_extraction_system_spark.operators import dedup, textstats
+
+    op = {"near_dup_pairs": dedup.near_dup_pairs,
+          "tfidf_keywords": textstats.tfidf_keywords}[name]
+    plan = _plan(op(spark.read.parquet(f"{SF}/documents.parquet")))
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+
+
+def test_near_dup_pairs_verifies_candidates_only(spark):
+    """Shingle sets are built only for candidate pairs, inside the verify
+    kernel: no plan node carries (let alone broadcasts) a shingle-array
+    column for all docs."""
+    from text_extraction_system_spark.operators import dedup
+
+    plan = _plan(dedup.near_dup_pairs(spark.read.parquet(f"{SF}/documents.parquet")))
+    assert "shingles" not in plan, plan
+    assert plan.count("MapInArrow") == 2, plan  # signatures, then verify
 
 
 def test_split_assignment_stable_and_distributed(spark):
@@ -530,7 +566,7 @@ def _row_kernel_operators():
         "repetition_rows_arrow": lambda d: textstats.repetition_rows_arrow(res(d)),
         "token_counts": lambda d: textstats._doc_token_counts_arrow(d, "doc_id", "text"),
         "signature_rows": dedup.signature_rows,
-        "doc_shingles": dedup.doc_shingles,
+        "near_dup_pairs": dedup.near_dup_pairs,
         "contamination_report": lambda d: dedup.contamination_report(d, d),
         "dup_window_coverage": dedup.dup_window_coverage,
         "decode_media": multimodal.decode_media,

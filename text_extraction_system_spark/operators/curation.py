@@ -2,12 +2,13 @@
 exist for: language gate -> quality gate -> token budget -> exact dedup ->
 per-source accounting. One narrow pass computes every per-doc signal
 (Catalyst expressions shared with the lang_id / quality / token_count /
-exact_dedup operators), then two small aggregates produce the funnel report.
+exact_dedup operators), and one aggregate produces the funnel report.
 
-Scale shape: signals are per-row expressions over the scan (no shuffle);
-the only shuffles are the content-hash canonicalization (hash keys, uniform)
-and the per-source rollup (tiny). Conditional aggregation gives every funnel
-stage's count in the same pass — no per-stage jobs.
+Scale shape: signals are per-row expressions over the scan (no shuffle),
+evaluated once; the only shuffles are the content-hash canonicalization
+window (hash keys, uniform) and the per-source rollup (tiny). Conditional
+aggregation gives every funnel stage's count in that one rollup — no
+per-stage jobs and no join.
 """
 
 from __future__ import annotations
@@ -105,52 +106,33 @@ def funnel(
     max_tokens: int = MAX_TOKENS,
 ) -> DataFrame:
     """Per-source funnel report: docs entering, surviving each gate in
-    sequence, surviving exact dedup, and the token budget kept."""
-    s = doc_signals(docs)
-    g = gates(lang, min_quality, min_tokens, max_tokens)
-    flagged = s.select(
-        "*",
-        g["lang_ok"].alias("lang_ok"),
-        g["q_ok"].alias("q_ok"),
-        g["tok_ok"].alias("tok_ok"),
-    )
-    kept = flagged.where("lang_ok AND q_ok AND tok_ok")
-    # one-pass exact dedup: min-doc_id row per content_hash via a window —
-    # the groupBy + self-join form evaluated the signal pass once per join
-    # branch (see the identical change in the release-manifest query)
+    sequence, surviving exact dedup, and the token budget kept.
+
+    One signal pass feeds one rollup. Exact dedup keeps the min-doc_id row
+    per content_hash among the rows that pass every gate: ``row_number()
+    over (partition by content_hash, kept order by doc_id)``, so only kept
+    rows compete for "first". Conditional counts and one conditional sum
+    then build all six report columns in a single ``groupBy(source)``."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
-    surv = (
-        kept.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    g = gates(lang, min_quality, min_tokens, max_tokens)
+    lang_ok = g["lang_ok"]
+    q_ok = lang_ok & g["q_ok"]
+    flagged = doc_signals(docs).select(
+        "source", "doc_id", "content_hash", "n_tokens",
+        lang_ok.alias("lang_ok"), q_ok.alias("q_ok"),
+        (q_ok & g["tok_ok"]).alias("kept"),
     )
-
-    stages = flagged.groupBy("source").agg(
+    first = Window.partitionBy("content_hash", "kept").orderBy("doc_id")
+    rolled = flagged.withColumn(
+        "survived", F.col("kept") & (F.row_number().over(first) == 1)
+    )
+    return rolled.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_input"),
-        F.sum(F.when(F.col("lang_ok"), 1).otherwise(0)).alias("n_lang"),
-        F.sum(F.when(F.col("lang_ok") & F.col("q_ok"), 1).otherwise(0)).alias(
-            "n_quality"
-        ),
-        F.sum(
-            F.when(F.col("lang_ok") & F.col("q_ok") & F.col("tok_ok"), 1).otherwise(0)
-        ).alias("n_tokens_ok"),
-    )
-    survived = surv.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_deduped"),
-        F.sum("n_tokens").alias("tokens_kept"),
-    )
-    return (
-        stages.join(survived, "source", "left")
-        .na.fill({"n_deduped": 0, "tokens_kept": 0})
-        .select(
-            "source",
-            "n_input",
-            "n_lang",
-            "n_quality",
-            "n_tokens_ok",
-            "n_deduped",
-            "tokens_kept",
-        )
+        F.count_if("lang_ok").alias("n_lang"),
+        F.count_if("q_ok").alias("n_quality"),
+        F.count_if("kept").alias("n_tokens_ok"),
+        F.count_if("survived").alias("n_deduped"),
+        F.sum(F.when(F.col("survived"), F.col("n_tokens")).otherwise(0))
+        .alias("tokens_kept"),
     )

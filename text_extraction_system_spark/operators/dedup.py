@@ -2,11 +2,14 @@
 candidate-pair generation, exact n-gram Jaccard verification.
 
 Scale shape (the reason this is LSH and not O(n^2)): signatures and bands
-come from one narrow Arrow pass per batch (``_signature_band_rows``); the
-only shuffle is the band-bucket self-join, whose buckets are tiny by
-construction (a band collision implies high estimated Jaccard). At 10^12
-docs the bucket join is the classic dedup-at-scale plan; a skew guard caps
-pathological buckets.
+come from one narrow Arrow pass per batch (``_signature_band_rows``). The
+corpus-sized shuffle is the band-bucket grouping, whose buckets are tiny by
+construction (a band collision implies high estimated Jaccard); a skew
+guard drops pathological buckets before any bucket becomes a list. Past
+it, near-dup only moves candidate pairs: their distinct, and the joins
+that bring their two texts to the verify kernel. No operator here
+materializes an intermediate table except ``signature_table`` and the
+label rounds of ``connected_components``.
 
 MinHash family: h_p(s) = ((2p+1) * h(s) + p) mod MINHASH_MOD over the doc's
 distinct shingles, where h(s) is an md5-prefix integer — ONE md5 per shingle,
@@ -30,24 +33,25 @@ from ..core import spec
 MAX_BUCKET = 64
 
 
+def _shingles(text: str) -> "set[str]":
+    """Distinct word-SHINGLE_K-shingles of one text: split on single
+    spaces, drop empties, join each run of SHINGLE_K words with a space.
+    Empty when the text has fewer than SHINGLE_K words."""
+    words = [w for w in (text or "").split(" ") if w]
+    k = spec.SHINGLE_K
+    return {" ".join(words[i:i + k]) for i in range(len(words) - k + 1)}
+
+
 def shingle_hash_set(text: str) -> "list[int]":
-    """Distinct word-SHINGLE_K-shingle hashes of one text: split on single
-    spaces, drop empties, then ``token_hash_col % MINHASH_MOD`` of each
-    distinct shingle (the same md5-prefix integer the DuckDB oracle
-    computes). Shared by the Arrow signature kernel and tests."""
+    """``token_hash_col % MINHASH_MOD`` of each of the text's distinct
+    shingles (the same md5-prefix integer the DuckDB oracle computes).
+    Shared by the signature and decontamination kernels and tests."""
     import hashlib
 
-    words = [w for w in (text or "").split(" ") if w]
-    if len(words) < spec.SHINGLE_K:
-        return []
-    sh = {
-        " ".join(words[i:i + spec.SHINGLE_K])
-        for i in range(len(words) - spec.SHINGLE_K + 1)
-    }
     return [
         int(hashlib.md5(s.encode()).hexdigest()[:spec.FP_HEX_CHARS], 16)
         % spec.MINHASH_MOD
-        for s in sh
+        for s in _shingles(text)
     ]
 
 
@@ -110,106 +114,43 @@ def _signature_band_rows(
     )
 
 
-def _shingle_hash_rows_arrow(docs: DataFrame, doc_id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
-    """(doc_id, h, n_shingles) exploded distinct-shingle hash rows via one
-    Arrow pass (the decontamination shape)."""
-
-    def rows(doc_id, text):
-        hs = shingle_hash_set(text)
-        for h in hs:
-            yield doc_id, h, len(hs)
-
-    return arrowmap.map_rows(
-        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
-        rows, "doc_id string, h bigint, n_shingles int",
-    )
-
-
-def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """(doc_id, shingles) for docs with at least one shingle.
-
-    One Arrow pass builds the distinct-shingle string arrays in python
-    (split on single spaces, drop empties, word k-shingles), emitted
-    sorted — a deterministic order, which array_intersect/union set sizes
-    are insensitive to."""
-    k = spec.SHINGLE_K
-
-    def rows(doc_id, text):
-        words = [w for w in (text or "").split(" ") if w]
-        if len(words) >= k:
-            yield doc_id, sorted({
-                " ".join(words[i:i + k]) for i in range(len(words) - k + 1)
-            })
-
-    return arrowmap.map_rows(
-        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
-        rows, "doc_id string, shingles array<string>",
-    )
-
-
-def lsh_candidate_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    """Distinct (doc_a < doc_b) candidate pairs sharing at least one LSH band.
-
-    Plan: narrow sig/band computation -> explode bands -> self-join on
-    (band, band_sig) -> distinct. The join keys are hashes, so the shuffle is
-    uniformly distributed by construction; MAX_BUCKET drops degenerate keys.
-    """
-    # sig dropped before the window so the (band, band_sig) shuffle moves only keys
-    exploded = _signature_band_rows(docs, doc_id_col, text_col).drop("sig")
-    # skew guard: drop buckets that would explode the pair join
-    counted = exploded.withColumn(
-        "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "band_sig"))
-    ).where(F.col("bucket_n") <= MAX_BUCKET)
-    # the self-join would otherwise re-execute the whole signature plan for
-    # each branch. localCheckpoint rather than persist: cached-plan entries
-    # live in the CacheManager until an explicit unpersist (they leak across
-    # repeated invocations — bench/driver loops), while checkpoint blocks
-    # are reference-tracked and freed when the DataFrame is garbage-
-    # collected. eager=False so merely CONSTRUCTING the DataFrame
-    # (explain(), plan tests, bench warm-up wiring) runs no jobs.
-    # TRADE-OFF (not strictly better than persist): localCheckpoint
-    # truncates lineage and its blocks are unreplicated — on a CLUSTER an
-    # executor loss (or dynamic-allocation decommission) makes the job
-    # unrecoverable instead of recomputable. Right for the single-JVM
-    # local/bench path; at cluster scale materialize signatures to a real
-    # table partitioned by (band, band_sig) instead — durable, resumable,
-    # and the join co-locates on the partition key.
-    counted = counted.localCheckpoint(eager=False)
-    a = counted.select("band", "band_sig", F.col("doc_id").alias("doc_a"))
-    b = counted.select("band", "band_sig", F.col("doc_id").alias("doc_b"))
-    return (
-        a.join(b, ["band", "band_sig"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
 def near_dup_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
-    """LSH candidates verified with exact Jaccard over distinct shingles.
+    """Distinct (doc_a < doc_b) pairs sharing at least one LSH band,
+    verified with exact Jaccard over their distinct shingles.
 
-    The verify joins are candidate-pair-sized (tiny vs the corpus); shingle
-    sets ride along via two hash joins on doc_id.
-    """
-    pairs = lsh_candidate_pairs(docs, doc_id_col, text_col)
-    sh = doc_shingles(docs, doc_id_col, text_col).localCheckpoint(eager=False)
-    return (
-        pairs.join(sh.withColumnRenamed("doc_id", "doc_a")
-                     .withColumnRenamed("shingles", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b")
-                .withColumnRenamed("shingles", "sh_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
+    Plan: ``signature_rows`` (band rows behind the skew guard ``count(*)
+    over (band, band_sig) <= MAX_BUCKET``) -> ``collect_list`` of each
+    bucket's ids on the same keys (the window's shuffle serves both; the
+    guard runs first, so a hot bucket never becomes a list) -> the
+    in-bucket pairs -> distinct. Only the candidates are verified: each
+    pair is joined to its two docs' texts and one Arrow kernel computes
+    ``|A & B| / |A | B|`` over ``_shingles``, an integer ratio in IEEE
+    double, as the oracle does. Nothing is materialized, and no shingle
+    set is built for a doc that is in no pair."""
+    buckets = (
+        signature_rows(docs, doc_id_col, text_col)
+        .groupBy("band", "band_sig")
+        .agg(F.collect_list("doc_id").alias("ids"))
+    )
+    pairs = (
+        buckets.select(F.explode("ids").alias("doc_a"), "ids")
+        .select("doc_a", F.explode("ids").alias("doc_b"))
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .distinct()
+    )
+    texts = docs.select(F.col(doc_id_col).cast("string"), F.col(text_col))
+    cand = pairs.join(texts.toDF("doc_a", "text_a"), "doc_a").join(
+        texts.toDF("doc_b", "text_b"), "doc_b"
+    )
+
+    def jaccard(doc_a, doc_b, text_a, text_b):
+        sa, sb = _shingles(text_a), _shingles(text_b)
+        yield doc_a, doc_b, len(sa & sb) / len(sa | sb)
+
+    return arrowmap.map_rows(
+        cand.select("doc_a", "doc_b", "text_a", "text_b"), jaccard,
+        "doc_a string, doc_b string, jaccard double",
     )
 
 
@@ -224,39 +165,35 @@ def contamination_report(
     an evaluation set (the n-gram collision check every LLM training
     pipeline runs before a data release).
 
-    Plan shape at 10^12 train docs: the eval side is a BENCHMARK — tiny by
-    nature — so its distinct shingle hashes broadcast; the train side is one
-    narrow explode (doc_id, shingle_hash) with no shuffle until the per-doc
-    hit aggregation, which hashes on doc_id. Only contaminated docs
-    (n_hits >= min_hits) are emitted, so the output is a small report, not a
-    second corpus. Shingle identity = the same FP_HEX_CHARS md5-prefix hash
-    the dedup family uses (deterministic, engine-agnostic; 28-bit space —
-    collisions negligible and identical in any engine).
+    Plan shape at 10^12 train docs: the eval side is a BENCHMARK — small by
+    contract — so its texts are collected and their distinct shingle hashes
+    become one driver-side frozenset (this runs one job when the DataFrame
+    is built). The train side is then a single narrow Arrow pass: a doc's
+    hit count is doc-local, so the kernel counts its shingles found in the
+    set, with no join and no shuffle. Only contaminated docs (n_hits >=
+    max(min_hits, 1)) are emitted, so the output is a small report, not a
+    second corpus, with one row per such train row (callers pass unique
+    doc ids). Shingle identity = the same FP_HEX_CHARS md5-prefix hash the
+    dedup family uses (deterministic, engine-agnostic; 28-bit space <
+    MINHASH_MOD, so ``shingle_hash_set``'s mod never fires and the values
+    equal the raw token_hash_col the oracle computes).
 
     Returns (doc_id, n_hits, n_shingles, contamination = n_hits/n_shingles).
     """
-    # Arrow shingle-hash kernel on BOTH sides (see shingle_hash_set). The
-    # train side stays one narrow (doc_id, h, n_shingles) pass; note the
-    # kernel hashes mod MINHASH_MOD, and the md5-prefix space is
-    # FP_HEX_CHARS hex chars (7) = 28 bits < MINHASH_MOD, so the mod never
-    # fires and the values equal the raw token_hash_col the oracle computes.
-    tr = _shingle_hash_rows_arrow(train, doc_id_col, text_col)
-    ev = (
-        _shingle_hash_rows_arrow(eval_docs, doc_id_col, text_col)
-        .select("h")
-        .distinct()
+    ev = frozenset(
+        h for (text,) in eval_docs.select(text_col).collect()
+        for h in shingle_hash_set(text)
     )
-    return (
-        tr.join(F.broadcast(ev), "h")
-        .groupBy("doc_id", "n_shingles")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        .where(F.col("n_hits") >= min_hits)
-        .select(
-            "doc_id",
-            "n_hits",
-            F.col("n_shingles").cast("long").alias("n_shingles"),
-            (F.col("n_hits") / F.col("n_shingles")).cast("double").alias("contamination"),
-        )
+
+    def rows(doc_id, text):
+        hs = shingle_hash_set(text)
+        n_hits = sum(h in ev for h in hs)
+        if n_hits and n_hits >= min_hits:
+            yield doc_id, n_hits, len(hs), n_hits / len(hs)
+
+    return arrowmap.map_rows(
+        train.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        rows, "doc_id string, n_hits bigint, n_shingles bigint, contamination double",
     )
 
 
@@ -280,8 +217,15 @@ def signature_table(docs: DataFrame, doc_id_col: str = "doc_id",
     This is the single-JVM convenience path — the DURABLE form is
     ``state.write_signature_table`` (parquet partitioned by
     (band, sig_prefix), read back with partition pruning), which survives
-    executor loss and is resumable across jobs; see the localCheckpoint
-    trade-off note in lsh_candidate_pairs."""
+    executor loss and is resumable across jobs.
+
+    localCheckpoint rather than persist: cached-plan entries live in the
+    CacheManager until an explicit unpersist (they leak across repeated
+    invocations), while checkpoint blocks are reference-tracked and freed
+    when the DataFrame is garbage-collected; eager=False so building the
+    DataFrame runs no job. The trade-off: the blocks are unreplicated and
+    the lineage is truncated, so on a cluster an executor loss makes the
+    job unrecoverable instead of recomputable."""
     return signature_rows(docs, doc_id_col, text_col).localCheckpoint(eager=False)
 
 

@@ -343,12 +343,12 @@ def srp_banded_buckets(
     else:
         kept = exploded
     # consumers self-join this table: materialize lazily (first action) so
-    # the signature + window plan runs once, not once per join branch —
-    # same shape as dedup.lsh_candidate_pairs. localCheckpoint blocks are
-    # unreplicated and lineage-truncated: fine single-JVM, but an executor
-    # loss on a cluster is unrecoverable — at cluster scale write the bucket
-    # table out partitioned by (band, bucket) instead (durable, co-located
-    # join); see dedup.lsh_candidate_pairs for the full trade-off note.
+    # the signature + window plan runs once, not once per join branch.
+    # localCheckpoint blocks are unreplicated and lineage-truncated: fine
+    # single-JVM, but an executor loss on a cluster is unrecoverable — at
+    # cluster scale write the bucket table out partitioned by (band, bucket)
+    # instead (durable, co-located join); see dedup.signature_table for the
+    # full trade-off note.
     return kept.localCheckpoint(eager=False) if materialize else kept
 
 
@@ -361,7 +361,7 @@ def srp_candidate_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs colliding in at least one band —
-    the union of per-band bucket self-joins, exactly dedup's LSH shape."""
+    the union of per-band bucket self-joins."""
     bb = srp_banded_buckets(embeddings, n_bands, planes_per_band, dim, id_col, vec_col)
     a = bb.select("band", "bucket", F.col("vid").alias("id_a"))
     b = bb.select("band", "bucket", F.col("vid").alias("id_b"))

@@ -343,8 +343,7 @@ def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
     """Per-document top-k keywords by TF-IDF — the corpus-level two-pass
     curation operator (per-doc signals like quality/repetition need no
     corpus state; this one does): one per-doc term-frequency table feeds
-    BOTH the per-doc tf and the corpus document frequencies, then a hash
-    join on token brings the IDF weight back to each (doc, token).
+    BOTH the per-doc tf and the corpus document frequencies.
 
     Scoring is INTEGER-exact (oracle-hashable — see the float-exact
     recipe): idf_scaled = (1_000_000 * n_docs) div df (integer division,
@@ -355,28 +354,20 @@ def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
 
     Scale shape: the tf stage is the Arrow Counter kernel
     (``_doc_token_counts_arrow`` — per-doc grouping needs no exchange),
-    localCheckpointed (the repo's established materialize-once pattern,
-    see lsh_candidate_pairs) so the three consumers (df, n_docs, the join
-    probe) read the materialized blocks instead of re-running the kernel
-    per branch -> token df aggregate (a vocabulary-sized shuffle) -> hash
-    join on token (the vocabulary at web scale is ~10^8 rows — NOT
-    broadcastable; the join hashes both sides on token) -> per-doc top-k
-    window (a shuffle on doc_id). n_docs rides in as a 1-row broadcast
-    cross join."""
+    read once: its (doc, token) rows are distinct per doc, so ``df`` is
+    ``count(*) over (partition by token)`` on them (one vocabulary-keyed
+    shuffle of the tf rows), then the per-doc top-k window (a shuffle on
+    doc_id). ``n_docs`` is counted from the scan as the oracle
+    defines it — distinct doc ids with at least one ``tokens_col`` token —
+    and rides in as a 1-row broadcast cross join; it needs no Python."""
     from pyspark.sql.window import Window
 
-    tf = _doc_token_counts_arrow(docs, doc_id_col, text_col).localCheckpoint(
-        eager=False
-    )
-    # df and n_docs derive from tf, not from another pass over the text:
-    # the (doc, token) rows are distinct per doc, so count(*) ==
-    # count_distinct
-    df = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    n_docs = tf.select("doc_id").distinct().agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
+    tf = _doc_token_counts_arrow(docs, doc_id_col, text_col)
+    n_docs = docs.where(token_count_col(F.col(text_col)) > 0).agg(
+        F.count_distinct(F.col(doc_id_col).cast("string")).alias("n_docs")
     )
     weighted = (
-        tf.join(df, "token")
+        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("token")))
         .crossJoin(F.broadcast(n_docs))
         .select(
             "doc_id",

@@ -13,9 +13,8 @@ import json
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
+# importing check_oracle (this script's directory is on sys.path) puts this
+# checkout first on the driver's and the workers' path
 from check_oracle import TABLES, value_hash  # noqa: E402
 
 
