@@ -490,7 +490,7 @@ def _q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed Lloyd steps), persisted per corpus (train once / serve
     many — across sessions; state.write_ivf_centroids). Training is
     bit-deterministic (left-fold Lloyd means in ascending-id order, see
-    similarity.ivf_train_step), so the DuckDB oracle replays the ENTIRE
+    similarity._lloyd), so the DuckDB oracle replays the ENTIRE
     training — seed + 5 unrolled Lloyd iterations — plus serving, and the
     driver hash-checks the result like any other query. Neighbor QUALITY
     is additionally pinned by tests/test_recall.py (occupancy spread + the
@@ -1185,8 +1185,10 @@ FROM r GROUP BY source
 """
 
     # mixture-plan twin: integer weights from the source-name hash, target
-    # tokens and rates by BIGINT floor division, membership by the same
-    # 2^32 hash compare as split assignment.
+    # tokens by BIGINT floor division, rates by HUGEINT floor division
+    # (target * 2^32 overflows BIGINT from target = 2^31 on; capped
+    # sources never divide), membership by the same 2^32 hash compare as
+    # split assignment.
     sql["mixture_plan"] = f"""
 WITH c AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
@@ -1209,8 +1211,9 @@ planned AS (
   FROM wt CROSS JOIN ws
 ),
 rated AS (
-  SELECT *, least(CAST(4294967296 AS BIGINT),
-                  (target_tokens * 4294967296) // tokens_avail) AS rate_32
+  SELECT *, CASE WHEN target_tokens >= tokens_avail THEN CAST(4294967296 AS BIGINT)
+                 ELSE CAST((CAST(target_tokens AS HUGEINT) * 4294967296) // tokens_avail AS BIGINT)
+            END AS rate_32
   FROM planned
 ),
 samp AS (
@@ -1970,10 +1973,10 @@ SELECT query_id, cand_id, cosine, rank FROM ranked WHERE rank <= 5
     # IVF_CENTROIDS vectors by id) + ivf_train's 5 Lloyd iterations unrolled
     # as CTE layers. Every float op mirrors the engine's order exactly:
     # distances are c2 - 2.0*(left-fold dot, dim ascending) — the same
-    # IEEE-double sequence as assign_cells_vectorized's dim-major numpy
-    # accumulation — and the per-(cell,dim) mean is a left-fold sum in
-    # ascending-vid order divided by the member count, matching
-    # similarity.ivf_train_step's sort_array+aggregate fold. Serving reuses
+    # IEEE-double sequence as similarity._fold_dots' dim-major numpy
+    # accumulation in the _nearest_cells kernel — and the per-(cell,dim)
+    # mean is a left-fold sum in ascending-vid order divided by the member
+    # count, matching similarity._lloyd's sort_array+aggregate fold. Serving reuses
     # the ann_ivf_topk machinery over the trained centroids.
     def _sqfold(v: str) -> str:
         return (f"list_reduce(list_prepend(0.0, list_transform({v}, x -> x * x)), "

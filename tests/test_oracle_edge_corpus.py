@@ -187,6 +187,20 @@ def test_sf_kernel_parity(spark, sf_duck, name):
     _assert_parity(spark, sf_duck, SF_DIR, name)
 
 
+@pytest.mark.parametrize("budget", [1 << 31, 1 << 40])
+def test_mixture_plan_large_budget(spark, edge_dir, duck, monkeypatch, budget):
+    """Token budgets at and past 2^31 on a one-source corpus (so the target
+    is the whole budget): target * 2^32 no longer overflows 64 bits in
+    either engine, the rate follows the integer formula exactly, and the
+    engine equals its oracle."""
+    monkeypatch.setattr(entry, "MIXTURE_BUDGET", budget)
+    rows = entry.queries()["mixture_plan"](spark, edge_dir).collect()
+    assert [r["target_tokens"] for r in rows] == [budget]
+    for r in rows:
+        assert r["rate_32"] == min(1 << 32, budget * (1 << 32) // r["tokens_avail"])
+    _assert_parity(spark, duck, edge_dir, "mixture_plan")
+
+
 #: the queries built on the one-pass curate operators (funnel, near-dup,
 #: decontamination, TF-IDF) plus ``dup_clusters``, which consumes near-dup
 CURATE_QUERIES = [

@@ -3,13 +3,27 @@
 * ``brute_force_topk`` — exact cosine top-k: the (small) query set rides
   inside a numpy kernel that scores each task's rows and emits a per-task
   partial top-k; the scan side stays partition-parallel with no shuffle
-  until the final per-query top-k (tiny). The dot product accumulates
-  dim-major in double precision — the same IEEE sequence as the
-  ``dot_col`` fold and the DuckDB oracle's, so scores are bit-reproducible
-  in SQL.
+  until the final per-query top-k (tiny).
 * ``srp_lsh_topk`` — the scale path: sign-random-projection buckets from
   deterministic md5-derived hyperplanes; candidates restricted to the same
   bucket. At 10^12 vectors the bucket join replaces the broadcast scan.
+* ``ivf_topk`` / ``pq_topk`` / ``ivf_pq_topk`` — quantized ANN: an IVF
+  coarse quantizer routes queries to cells, PQ codebooks score candidates
+  from per-block codes by table lookup (ADC).
+
+One quantizer core serves IVF and PQ: an IVF quantizer is a PQ codebook
+with one full-width block. ``_nearest_cells`` is the one numpy kernel that
+assigns every vector its nearest centroid per block (IVF cell, PQ codes, or
+both in one pass), and ``_lloyd`` is the one k-means trainer: one seed read
+for every block, then per iteration one kernel pass, one
+``groupBy(cell, dim)`` left-fold mean and one collect — the job count does
+not grow with the block count.
+
+Every dot product — cosine scores, SRP plane signs, L2 proxies — goes
+through ``_fold_dots``: dim-major accumulation in double precision, the
+same IEEE sequence as the ``dot_col`` fold and the DuckDB oracle's
+``list_reduce``, so scores, buckets, cells, codes and trained centroids are
+bit-reproducible in SQL.
 """
 
 from __future__ import annotations
@@ -46,22 +60,37 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.try_divide(dot_col(a, b), norm_col(a) * norm_col(b))
 
 
-def _py_dot(a, b) -> float:
-    """Python-float twin of ``dot_col``: same ascending-j sequential fold,
-    same IEEE-double rounding sequence."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += x * y
+def _fold_dots(X, M):
+    """Dot products over the last axis of ``X`` and ``M`` (leading axes
+    broadcast: ``_fold_dots(X[:, None, :], C)`` is the (n, k) matrix of
+    row-centroid dots, ``_fold_dots(X, X)`` the squared row norms).
+
+    The ONE accumulation order of this module: dim-major in float64, one
+    vectorized multiply then add per component, j ascending from 0.0 —
+    exactly the ``aggregate`` fold of ``dot_col`` and the DuckDB oracle's
+    ``list_reduce`` (no FMA, no numpy pairwise summation), so every caller
+    is bit-reproducible in SQL."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(X.shape[:-1], M.shape[:-1]))
+    for j in range(X.shape[-1]):
+        acc += X[..., j] * M[..., j]
     return acc
 
 
-def _py_norm(a) -> float:
-    import math
+def _matrix(vectors):
+    """(n, dim) float64 matrix of a batch's vector column (float32 ->
+    double is exact)."""
+    import numpy as np
 
-    acc = 0.0
-    for x in a:
-        acc += x * x
-    return math.sqrt(acc)
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _proxy_dists(X, C):
+    """(n, k) L2 proxies |c|^2 - 2*(x . c) — argmin-equivalent to true L2
+    (the |x|^2 term is constant per row); both terms are ``_fold_dots``
+    folds, in the order the oracle replays."""
+    return _fold_dots(C, C)[None, :] - 2.0 * _fold_dots(X[:, None, :], C)
 
 
 def _query_rows(embeddings: DataFrame, n_queries: int,
@@ -89,9 +118,8 @@ def _scored_topk_partials(
     the final ranking window sees n_tasks x n_queries x k rows instead of
     the full score matrix.
 
-    BIT-IDENTICAL scores to ``cosine_col``: the dot/norm accumulations run
-    dim-major in float64 (one vectorized multiply+add per dimension, j
-    ascending) — exactly the ``aggregate`` fold's IEEE sequence per row —
+    BIT-IDENTICAL scores to ``cosine_col``: the dot/norm accumulations are
+    ``_fold_dots`` folds — the ``aggregate`` fold's IEEE sequence per row —
     and zero-norm pairs yield NULL like try_divide. Partial top-k keeps, per
     query, the k best under (cosine DESC NULLS LAST, cand_id ASC) — the
     final window's exact total order — so the union of partials is a
@@ -113,35 +141,27 @@ def _scored_topk_partials(
     ])
     has_cell = "cell" in in_fields
     qids = [q[0] for q in queries]
-    qvs = [np.asarray(q[1], dtype=np.float64) for q in queries]
-    qns = np.asarray([_py_norm(q[1]) for q in queries])
+    m = len(qids)
+    Q = _matrix([q[1] for q in queries]) if m else None
+    qns = np.sqrt(_fold_dots(Q, Q)) if m else None
     probes = (
         [np.asarray(sorted(probe_cells[qid]), dtype=np.int64) for qid in qids]
         if probe_cells is not None else None
     )
-    m = len(qids)
 
     def gen(batches):
         # per query: parallel lists of (order_key, cand_id, cosine), <= k each
         best_key = [np.empty(0)] * m
         best_id = [np.empty(0, dtype=object)] * m
         best_cos = [[] for _ in range(m)]
-        dim = qvs[0].shape[0] if m else 0
-        Q = np.stack(qvs) if m else np.zeros((0, dim))
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or not m:
                 continue
             ids = pdf["cand_id"].to_numpy()
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
+            X = _matrix(pdf["cv"])
             cells = pdf["cell"].to_numpy() if has_cell else None
-            # candidate norms + all dots, dim-major (the fold's add order)
-            nacc = np.zeros(len(X))
-            dacc = np.zeros((len(X), m))
-            for j in range(dim):
-                xj = X[:, j]
-                nacc += xj * xj
-                dacc += xj[:, None] * Q[None, :, j]
-            cn = np.sqrt(nacc)
+            cn = np.sqrt(_fold_dots(X, X))
+            dacc = _fold_dots(X[:, None, :], Q)
             for qi in range(m):
                 mask = ids != qids[qi]
                 if cells is not None and probes is not None:
@@ -259,9 +279,8 @@ def _srp_band_rows(
     """(vid[, vec], *carry, band, bucket) via one numpy Arrow pass: per
     band, the sign bits of that band's planes (global plane index
     band*planes_per_band + j), bit p = sign(vec . plane_p). The plane dots
-    accumulate dim-major in float64 — the ``dot_col`` fold's multiply/add
-    order (see assign_cells_vectorized for the technique), which the DuckDB
-    oracle replays, so every bucket string is bit-reproducible in SQL.
+    are ``_fold_dots`` folds, which the DuckDB oracle replays, so every
+    bucket string is bit-reproducible in SQL.
     ``carry`` columns pass through the kernel untouched (the streaming job's
     event-time column); batch callers ship only the id and vector."""
     import numpy as np
@@ -280,14 +299,8 @@ def _srp_band_rows(
         P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), exact
         for pdf in batches:
             if len(pdf) == 0:
-                out = pdf[sel].copy()
-                out["buckets"] = []
-                yield out
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            acc = np.zeros((X.shape[0], P.shape[0]))
-            for j in range(P.shape[1]):  # dim-major: the fold's add order
-                acc += X[:, j : j + 1] * P[None, :, j]
+            acc = _fold_dots(_matrix(pdf[vec_col])[:, None, :], P)
             bits = np.where(acc >= 0, "1", "0")  # (n, n_planes) of '0'/'1'
             out = pdf[sel].copy()
             out["buckets"] = [
@@ -442,6 +455,24 @@ def _flip_bits_col(bucket: Column, positions: tuple[int, ...], n_bits: int) -> C
     return F.concat(*parts)
 
 
+def _probe_keys(bb: DataFrame, planes_per_band: int, multiprobe: int,
+                probe_budget: int | None) -> DataFrame:
+    """(query_id, band, bucket, qv): each row of a ``keep_vec`` bucket
+    table expanded to its multi-probe keys per band, nearest-first
+    (``_probe_masks``)."""
+    masks = _probe_masks(planes_per_band, multiprobe, probe_budget)
+    return bb.select(
+        F.col("vid").alias("query_id"),
+        "band",
+        F.explode(
+            F.array(
+                *[_flip_bits_col(F.col("bucket"), m, planes_per_band) for m in masks]
+            )
+        ).alias("bucket"),
+        F.col("vec").alias("qv"),
+    )
+
+
 def srp_lsh_topk(
     embeddings: DataFrame,
     n_queries: int = 20,
@@ -473,17 +504,8 @@ def srp_lsh_topk(
     bb = srp_banded_buckets(
         embeddings, n_bands, planes_per_band, dim, id_col, vec_col, keep_vec=True
     )
-    masks = _probe_masks(planes_per_band, multiprobe, probe_budget)
-    qs = bb.where(F.col("vid") < n_queries).select(
-        F.col("vid").alias("query_id"),
-        "band",
-        F.explode(
-            F.array(
-                *[_flip_bits_col(F.col("bucket"), m, planes_per_band) for m in masks]
-            )
-        ).alias("bucket"),
-        F.col("vec").alias("qv"),
-    )
+    qs = _probe_keys(bb.where(F.col("vid") < n_queries), planes_per_band,
+                     multiprobe, probe_budget)
     cands = bb.select(
         F.col("vid").alias("cand_id"), "band", "bucket", F.col("vec").alias("cv")
     )
@@ -494,12 +516,7 @@ def srp_lsh_topk(
         .groupBy("query_id", "cand_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def incremental_ann_topk(
@@ -544,17 +561,7 @@ def incremental_ann_topk(
         new_vecs, n_bands, planes_per_band, dim, id_col, vec_col,
         keep_vec=True, materialize=False, max_bucket=0,
     )
-    masks = _probe_masks(planes_per_band, multiprobe, probe_budget)
-    qs = batch.select(
-        F.col("vid").alias("query_id"),
-        "band",
-        F.explode(
-            F.array(
-                *[_flip_bits_col(F.col("bucket"), m, planes_per_band) for m in masks]
-            )
-        ).alias("bucket"),
-        F.col("vec").alias("qv"),
-    )
+    qs = _probe_keys(batch, planes_per_band, multiprobe, probe_budget)
     keys = ["band", "bucket"]
     if "bucket_prefix" in committed_buckets.columns:
         from . import state
@@ -576,26 +583,28 @@ def incremental_ann_topk(
     scored = cside.join(vecs, "cand_id").select(
         "query_id", "cand_id", cosine_col(F.col("qv"), F.col("cv")).alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the coarse-quantizer scale path
+# Quantized ANN: IVF (coarse cells) and PQ (per-block codes) on one core
 # ---------------------------------------------------------------------------
 
-#: coarse quantizer size / probe count. Real IVF trains centroids with
-#: k-means; here they are deterministic hash-derived vectors (the sandbox
-#: convention — the partitioning/plan shape is the logic under test, and the
-#: oracle can rebuild identical centroids). 64 cells probing 8 scans ~12.5%
-#: of the corpus per query; at 10^9+ vectors raise IVF_CENTROIDS toward
-#: sqrt(n) and keep n_probe fixed.
+#: coarse quantizer size / probe count. The default centroids are
+#: deterministic hash-derived vectors (the oracle rebuilds them exactly);
+#: ``ivf_train`` gives the k-means-trained quantizer. 64 cells probing 8
+#: scans ~12.5% of the corpus per query; at 10^9+ vectors raise
+#: IVF_CENTROIDS toward sqrt(n) and keep n_probe fixed.
 IVF_CENTROIDS = 64
 IVF_PROBE = 8
+
+#: PQ geometry: m sub-blocks of dim/m components, k centroids per block.
+#: 8 blocks x 16 centroids = 8 4-bit codes per vector — a 64-dim float32
+#: embedding (256 B) compresses to 4 B of codes, the 64x reduction that
+#: makes a 10^12-vector serving tier fit in memory; IVF routes queries to
+#: cells, PQ scores the cell members from codes (the standard pairing).
+PQ_BLOCKS = 8
+PQ_CENTROIDS = 16
 
 
 def ivf_centroid_values(dim: int = 64, n_centroids: int = IVF_CENTROIDS) -> list[list[float]]:
@@ -612,28 +621,53 @@ def ivf_centroid_values(dim: int = 64, n_centroids: int = IVF_CENTROIDS) -> list
     ]
 
 
-def _ivf_cells_lit(dim: int, n_centroids: int,
-                   centroids: list[list[float]] | None = None) -> Column:
-    """Literal array<struct<c2: double, cv: array<double>>> of centroids with
-    precomputed squared norms (exact: the default hash centroids are
-    half-integers; trained centroids use the same python-float sum so every
-    consumer sees one rounding order)."""
-    cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
-    return F.array(
-        *[
-            F.struct(
-                F.lit(sum(v * v for v in cv)).alias("c2"),
-                F.array(*[F.lit(v) for v in cv]).cast("array<double>").alias("cv"),
-            )
-            for cv in cents
-        ]
+def _blocks(codebooks: list[list[list[float]]]) -> list[tuple]:
+    """(first component, codebook) per block of consecutive equal-width
+    blocks: ``_blocks([centroids])`` is an IVF quantizer,
+    ``_blocks(codebooks)`` a PQ one."""
+    return [(b * len(cb[0]), cb) for b, cb in enumerate(codebooks)]
+
+
+def _nearest_cells(
+    df: DataFrame, blocks: list[tuple], vec_col: str, keep: list[str]
+) -> DataFrame:
+    """``keep`` columns plus ``cells array<int>``: per (lo, codebook) block,
+    the index of the codebook centroid nearest to vec[lo : lo + width] —
+    argmin of ``_proxy_dists``, first index on exact ties. The one
+    assignment kernel: IVF cells, PQ codes and the fused IVF-PQ
+    cell+codes are all this pass with different blocks, and every Lloyd
+    step of ``_lloyd`` runs it, so training, serving and the DuckDB oracle
+    (``ann_ivf_trained``, ``ann_pq_*``, ``ann_ivf_pq``) agree bit for bit.
+
+    One narrow Arrow pass, no shuffle; partitionBy on the cell column
+    downstream is the 10^12-row materialization strategy."""
+    import numpy as np
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+    fields = {f.name: f for f in df.schema.fields}
+    out_schema = StructType(
+        [fields[c] for c in keep]
+        + [StructField("cells", ArrayType(IntegerType(), False), False)]
     )
+    books = [(lo, np.asarray(cb, dtype=np.float64)) for lo, cb in blocks]
 
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = _matrix(pdf[vec_col])
+            cells = np.stack([
+                np.argmin(_proxy_dists(X[:, lo:lo + C.shape[1]], C), axis=1)
+                for lo, C in books
+            ], axis=1)
+            out = pdf[keep].copy()
+            out["cells"] = cells.tolist()
+            yield out
 
-def ivf_dists_col(vec: Column, cells: Column) -> Column:
-    """array<double> of L2-distance proxies |c|^2 - 2*(vec . c) per centroid
-    (argmin-equivalent to true L2; the |vec|^2 term is constant per row)."""
-    return F.transform(cells, lambda s: s["c2"] - 2.0 * dot_col(vec, s["cv"]))
+    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
+    return df.select(*dict.fromkeys([*keep, vec_col])).mapInPandas(
+        gen, schema=out_schema
+    )
 
 
 def assign_cells_vectorized(
@@ -644,68 +678,149 @@ def assign_cells_vectorized(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment: argmin over ``ivf_dists_col``'s
-    |c|^2 - 2*(vec . c) proxies, first index on exact ties (round-2 verdict
-    item 4: the interpreted 64x64 mult-add dominated CPU; at 10^9+ vectors
-    it is THE per-row cost).
-
-    BIT-REPRODUCIBLE by construction, not by tolerance: the accumulation
-    runs dim-major (one vectorized multiply + add per dimension, j
-    ascending), which performs exactly the same IEEE-double
-    multiply-then-add sequence per (row, cell) as the ``aggregate`` fold
-    and the DuckDB oracle's ``list_reduce`` — no FMA, no numpy pairwise
-    summation, same ``2.0*dot`` and ``c2 - .`` rounding order. Pinned by
-    the ``ann_ivf_trained`` oracle, which replays every Lloyd assignment.
-
-    Returns (id_col, vec_col, cell) via one Arrow ``mapInPandas`` pass —
-    narrow, no shuffle; partitionBy("cell") downstream is the 10^12-row
-    materialization strategy."""
-    import numpy as np
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    """(id_col, vec_col, cell): each vector's nearest IVF centroid (the
+    default hash centroids, or explicit e.g. ``ivf_train``-ed ones) — the
+    one-block case of ``_nearest_cells``."""
     cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
-    # mirror the literal plan constant: python-float sequential sum (exact
-    # for half-integer components, and identical rounding regardless)
-    c2_list = [sum(v * v for v in cv) for cv in cents]
+    return _nearest_cells(
+        embeddings, _blocks([cents]), vec_col, [id_col, vec_col]
+    ).select(id_col, vec_col, F.col("cells")[0].alias("cell"))
 
-    out_schema = StructType(
-        [f for f in embeddings.schema.fields if f.name in (id_col, vec_col)]
-        + [StructField("cell", IntegerType(), False)]
-    )
 
-    def gen(batches):
-        C = np.asarray(cents, dtype=np.float64)  # (k, dim), exact
-        c2 = np.asarray(c2_list, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(cell=np.array([], dtype=np.int32))
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )  # float32 -> double is exact
-            acc = np.zeros((X.shape[0], C.shape[0]))
-            for j in range(C.shape[1]):  # dim-major: the fold's add order
-                acc += X[:, j : j + 1] * C[None, :, j]
-            d = c2[None, :] - 2.0 * acc
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = np.argmin(d, axis=1).astype(np.int32)
-            yield out
+def _lloyd(
+    embeddings: DataFrame,
+    m: int,
+    k: int,
+    iters: int,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[list[float]]]:
+    """k-means over each of ``m`` dim/m-component blocks at once; returns
+    codebooks[m][k][dim/m].
 
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return embeddings.select(id_col, vec_col).mapInPandas(gen, schema=out_schema)
+    Forgy init: the first k vectors by id, read once (a top-k read at any
+    scale) and sliced per block; a corpus of fewer than k vectors pads
+    every block with hash centroids (``ivf_centroid_values(dim/m, k)``).
+    Each of the ``iters`` Lloyd steps is one ``_nearest_cells`` pass, one
+    posexplode to (vid, dim, x) keyed by the vector's cell in its block,
+    one ``groupBy(cell, dim)`` mean and one collect of the m*k*(dim/m)
+    means — 1 + iters actions however many blocks train, and no vector
+    reaches the driver. Empty cells keep their previous centroid (the
+    standard k-means convention); at 10^12 rows you train on a uniform
+    sample (a ``.sample()`` on the way in).
+
+    The per-(cell, dim) mean is a DETERMINISTIC left-fold sum in
+    ascending-id order divided by the member count — not ``F.avg``, whose
+    partial-aggregate order varies with partitioning and would move
+    trained centroids in the last ulp between runs. The DuckDB oracle
+    unrolls these exact folds
+    (``list_reduce(list_prepend(0.0, list(x ORDER BY vid)), +)``). The
+    fold holds each cell's member values as one sorted array per (cell,
+    dim) group — bounded by training-sample occupancy."""
+    sub = dim // m
+    seeds = [
+        [float(x) for x in r[vec_col]]
+        for r in embeddings.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
+    ]
+    pad = ivf_centroid_values(sub, k)[len(seeds):]
+    books = [
+        [v[b * sub:(b + 1) * sub] for v in seeds] + [list(p) for p in pad]
+        for b in range(m)
+    ]
+    for _ in range(iters):
+        means = (
+            _nearest_cells(embeddings, _blocks(books), vec_col, [id_col, vec_col])
+            .select(
+                F.col(id_col).alias("vid"), "cells",
+                F.posexplode(F.col(vec_col)).alias("dim", "x"),
+            )
+            .groupBy(F.expr(f"cells[dim div {sub}]").alias("cell"), "dim")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.struct(F.col("vid"), F.col("x").cast("double").alias("x")))
+                ).alias("xs")
+            )
+            .select(
+                "cell", "dim",
+                (
+                    F.aggregate(F.col("xs"), F.lit(0.0), lambda a, s: a + s["x"])
+                    / F.size(F.col("xs"))
+                ).alias("m"),
+            )
+            .collect()  # m*k*sub tiny rows
+        )
+        for r in means:
+            books[r["dim"] // sub][r["cell"]][r["dim"] % sub] = float(r["m"])
+    return books
+
+
+def ivf_train(
+    embeddings: DataFrame,
+    n_centroids: int = IVF_CENTROIDS,
+    iters: int = 5,
+    dim: int = 64,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> list[list[float]]:
+    """The trained IVF quantizer: ``_lloyd`` with one full-width block.
+    Pass it to ``ivf_topk(centroids=...)`` — train once, serve many.
+
+    Seeding from DATA matters: the deterministic hash centroids sit far from
+    any real embedding cloud, so assignment degenerates to argmin |c|^2 —
+    on the test corpora every vector lands in ONE cell, and hash-centroid
+    IVF prunes nothing (its recall is vacuous). The hash variant remains
+    the bit-exact ORACLE twin (plan shape under test); the trained path is
+    the one with a real recall/scan trade-off (tests/test_recall.py pins
+    occupancy spread and the recall-vs-probes curve)."""
+    return _lloyd(embeddings, 1, n_centroids, iters, dim, id_col, vec_col)[0]
+
+
+def pq_train(
+    embeddings: DataFrame,
+    m: int = PQ_BLOCKS,
+    k: int = PQ_CENTROIDS,
+    iters: int = 3,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[list[float]]]:
+    """The m per-block PQ codebooks, codebooks[m][k][dim/m]: all blocks
+    train together in ``_lloyd`` (same seed, folds and job count as one
+    IVF training), so trained PQ is bit-reproducible and the DuckDB
+    oracle replays all m trainings."""
+    return _lloyd(embeddings, m, k, iters, dim, id_col, vec_col)
 
 
 def _probe_cells(queries: list[tuple], cents: list[list[float]],
                  n_probe: int) -> dict:
-    """query_id -> its n_probe nearest cells, by the same c2 - 2*dot proxy
-    as ``ivf_dists_col`` (python-float replay of the fold) under a
-    lexicographic (dist, idx) sort — deterministic tie-break by index."""
-    c2 = [sum(v * v for v in cv) for cv in cents]  # _ivf_cells_lit's literal
-    out = {}
-    for qid, qv in queries:
-        dists = [c2[c] - 2.0 * _py_dot(qv, cents[c]) for c in range(len(cents))]
-        out[qid] = [i for _d, i in sorted(zip(dists, range(len(cents))))[:n_probe]]
-    return out
+    """query_id -> its n_probe nearest cells by the kernel's
+    ``_proxy_dists``, ties broken by cell index."""
+    import numpy as np
+
+    if not queries:
+        return {}
+    d = _proxy_dists(_matrix([qv for _, qv in queries]), np.asarray(cents))
+    return {
+        qid: np.argsort(row, kind="stable")[:n_probe].tolist()
+        for (qid, _), row in zip(queries, d)
+    }
+
+
+def _pq_tables(queries: list[tuple], codebooks: list) -> list[tuple]:
+    """[(query_id, flattened m*k ADC table)]: per block b and centroid j,
+    the ``_proxy_dists`` of the query's block-b slice — the kernel's
+    encoding order, so a code's table entry is its encoding distance."""
+    import numpy as np
+
+    if not queries:
+        return []
+    Q = _matrix([qv for _, qv in queries])
+    tabs = np.concatenate([
+        _proxy_dists(Q[:, lo:lo + len(cb[0])], np.asarray(cb))
+        for lo, cb in _blocks(codebooks)
+    ], axis=1)
+    return [(qid, tab) for (qid, _), tab in zip(queries, tabs)]
 
 
 def ivf_topk(
@@ -746,272 +861,6 @@ def ivf_topk(
         ),
         k,
     )
-
-
-def ivf_train_step(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """One distributed Lloyd iteration: assign every vector to its nearest
-    centroid (``assign_cells_vectorized``), then recompute
-    each centroid as the mean of its members — the real IVF training path,
-    entirely as DataFrame aggregations (posexplode to (cell, dim, value),
-    one groupBy; no vectors ever reach the driver, only the k x dim means).
-
-    Returns the updated centroid list (empty cells keep their previous
-    centroid, the standard k-means convention). The per-(cell, dim) mean is
-    a DETERMINISTIC left-fold sum in ascending-id order divided by the
-    member count — not ``F.avg``, whose partial-aggregate order varies with
-    partitioning, making trained centroids differ in the last ulp between
-    runs. The fold makes training bit-reproducible AND bit-checkable against
-    an external SQL twin (the driver oracle unrolls these exact folds in
-    DuckDB: ``list_reduce(list_prepend(0.0, list(x ORDER BY vid)), +)``).
-    Cost: the fold materializes each cell's member values as one sorted
-    array per (cell, dim) group — bounded by training-sample occupancy; at
-    10^12 rows you train on a sample anyway (see ``ivf_train``), where this
-    is noise next to the assignment pass."""
-    assigned = assign_cells_vectorized(
-        embeddings, n_centroids=len(centroids), dim=dim,
-        id_col=id_col, vec_col=vec_col, centroids=centroids,
-    ).select(
-        F.col(id_col).alias("vid"), "cell",
-        F.posexplode(F.col(vec_col)).alias("dim", "x"),
-    )
-    means = (
-        assigned.groupBy("cell", "dim")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("vid"), F.col("x").cast("double").alias("x")))
-            ).alias("xs")
-        )
-        .select(
-            "cell", "dim",
-            (
-                F.aggregate(F.col("xs"), F.lit(0.0), lambda a, s: a + s["x"])
-                / F.size(F.col("xs"))
-            ).alias("m"),
-        )
-        .collect()  # k*dim tiny rows
-    )
-    out = [list(cv) for cv in centroids]
-    by_cell: dict[int, dict[int, float]] = {}
-    for r in means:
-        by_cell.setdefault(r["cell"], {})[r["dim"]] = float(r["m"])
-    for cell, dims in by_cell.items():
-        out[cell] = [dims.get(j, out[cell][j]) for j in range(dim)]
-    return out
-
-
-def ivf_train(
-    embeddings: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    iters: int = 5,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """k-means training end-to-end: Forgy init (the first n_centroids data
-    vectors by id — deterministic, and a top-k read at any scale) seeds
-    ``iters`` distributed Lloyd steps. Returns the trained quantizer to pass
-    to ``ivf_topk(centroids=...)`` — the train-once/serve-many deployment
-    shape. Each step is one narrow assignment pass + one k x dim aggregate;
-    at 10^12 rows you would train on a uniform sample instead (standard IVF
-    practice), which is a ``.sample()`` on the way in.
-
-    Seeding from DATA matters: the deterministic hash centroids sit far from
-    any real embedding cloud, so assignment degenerates to argmin |c|^2 —
-    on the test corpora every vector lands in ONE cell, and hash-centroid
-    IVF prunes nothing (its recall is vacuous). The hash variant remains
-    the bit-exact ORACLE twin (plan shape under test); the trained path is
-    the one with a real recall/scan trade-off (tests/test_recall.py pins
-    occupancy spread and the recall-vs-probes curve)."""
-    seed_rows = (
-        embeddings.select(id_col, vec_col).orderBy(id_col)
-        .limit(n_centroids).collect()
-    )
-    cents = [[float(x) for x in r[vec_col]] for r in seed_rows]
-    if len(cents) < n_centroids:  # tiny corpus: pad with hash centroids
-        cents += ivf_centroid_values(dim, n_centroids)[len(cents):]
-    for _ in range(iters):
-        cents = ivf_train_step(embeddings, cents, dim=dim,
-                               vec_col=vec_col, id_col=id_col)
-    return cents
-
-
-def ivf_inertia(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> float:
-    """Mean distance proxy (|c|^2 - 2 x.c) to the assigned centroid — a
-    monotone stand-in for k-means inertia, enough to verify descent."""
-    cells_lit = _ivf_cells_lit(len(centroids[0]), len(centroids), centroids)
-    return (
-        embeddings.select(
-            F.array_min(ivf_dists_col(F.col(vec_col), cells_lit)).alias("d")
-        )
-        .agg(F.avg("d"))
-        .collect()[0][0]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — the compression half of ANN at scale
-# ---------------------------------------------------------------------------
-
-#: PQ geometry: m sub-blocks of dim/m components, k centroids per block.
-#: 8 blocks x 16 centroids = 8 4-bit codes per vector — a 64-dim float32
-#: embedding (256 B) compresses to 4 B of codes, the 64x reduction that
-#: makes a 10^12-vector serving tier fit in memory; IVF routes queries to
-#: cells, PQ scores the cell members from codes (the standard pairing).
-PQ_BLOCKS = 8
-PQ_CENTROIDS = 16
-
-
-def pq_train(
-    embeddings: DataFrame,
-    m: int = PQ_BLOCKS,
-    k: int = PQ_CENTROIDS,
-    iters: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Train the m per-block codebooks — each is k-means over the block's
-    dim/m-component slices, run through the SAME deterministic Lloyd
-    machinery as the IVF quantizer (``ivf_train``: Forgy seed from the
-    first k vectors by id, left-fold means), so trained PQ is
-    bit-reproducible and the DuckDB oracle can replay all m trainings.
-    Returns codebooks[m][k][dim/m]."""
-    sub = dim // m
-    books = []
-    for b in range(m):
-        blk = embeddings.select(
-            F.col(id_col).alias(id_col),
-            F.slice(F.col(vec_col), b * sub + 1, sub).alias(vec_col),
-        )
-        books.append(
-            ivf_train(blk, n_centroids=k, iters=iters, dim=sub,
-                      vec_col=vec_col, id_col=id_col)
-        )
-    return books
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vid, codes array<int>): per block, the index of the nearest
-    codebook centroid — the narrow per-row pass whose OUTPUT is what a
-    10^12-row deployment materializes (the float vectors leave the serving
-    tier). One numpy Arrow pass; per-block distances replay the
-    c2 - 2*(dim-major fold) order of ``assign_cells_vectorized``, so the
-    SQL twin's argmin picks identical codes."""
-    import numpy as np
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-
-    def gen(batches):
-        import pandas as pd
-
-        C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]   # (k, sub)
-        c2 = [np.asarray([sum(v * v for v in cv) for cv in cb]) for cb in codebooks]
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({
-                    "vid": pd.Series([], dtype=object),
-                    "codes": pd.Series([], dtype=object),
-                })
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            codes = np.empty((X.shape[0], m), dtype=np.int32)
-            for b in range(m):
-                Xb = X[:, b * sub:(b + 1) * sub]
-                acc = np.zeros((X.shape[0], C[b].shape[0]))
-                for j in range(sub):  # dim-major: the fold's add order
-                    acc += Xb[:, j:j + 1] * C[b][None, :, j]
-                codes[:, b] = np.argmin(c2[b][None, :] - 2.0 * acc, axis=1)
-            out = pdf[[id_col]].copy()
-            out.columns = ["vid"]
-            out["codes"] = [list(map(int, row)) for row in codes]
-            yield out
-
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        gen, schema="vid bigint, codes array<int>"
-    )
-
-
-def pq_assign_encode(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vid, cell, codes) in ONE Arrow pass — the fusion of
-    ``assign_cells_vectorized`` + ``pq_encode`` (r6): the two kernels read
-    the same vectors, and joining their outputs on vid paid two exchanges
-    for rows that were born co-located. Both computations replay their
-    originals bit-exactly (same dim-major folds, same literal c2 sums);
-    pinned by the ``ann_ivf_pq`` oracle."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(codebooks)
-    sub = dim // m
-    c2_cells = [sum(v * v for v in cv) for cv in centroids]
-
-    def gen(batches):
-        CC = np.asarray(centroids, dtype=np.float64)
-        cc2 = np.asarray(c2_cells)
-        C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-        c2 = [np.asarray([sum(v * v for v in cv) for cv in cb]) for cb in codebooks]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            acc = np.zeros((X.shape[0], CC.shape[0]))
-            for j in range(dim):
-                acc += X[:, j:j + 1] * CC[None, :, j]
-            cells = np.argmin(cc2[None, :] - 2.0 * acc, axis=1).astype(np.int32)
-            codes = np.empty((X.shape[0], m), dtype=np.int32)
-            for b in range(m):
-                Xb = X[:, b * sub:(b + 1) * sub]
-                a = np.zeros((X.shape[0], C[b].shape[0]))
-                for j in range(sub):
-                    a += Xb[:, j:j + 1] * C[b][None, :, j]
-                codes[:, b] = np.argmin(c2[b][None, :] - 2.0 * a, axis=1)
-            out = pdf[[id_col]].copy()
-            out.columns = ["vid"]
-            out["cell"] = cells
-            out["codes"] = [list(map(int, row)) for row in codes]
-            yield out
-
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        gen, schema="vid bigint, cell int, codes array<int>"
-    )
-
-
-def _py_pq_table(qv: list[float], codebooks: list, sub: int) -> list[float]:
-    """Flattened m*k ADC table for one query vector: per block b and
-    centroid j, c2 - 2*dot(q_b, c_j) with the literal c2 sum and the
-    ascending fold — the IEEE sequence of the numpy encode and the SQL
-    oracle."""
-    tab = []
-    for b, cb in enumerate(codebooks):
-        qb = qv[b * sub:(b + 1) * sub]
-        for cv in cb:
-            tab.append(sum(v * v for v in cv) - 2.0 * _py_dot(qb, cv))
-    return tab
 
 
 def _adc_topk_partials(
@@ -1136,15 +985,14 @@ def pq_topk(
     no cross join or per-pair ADC expression is in the plan; the ADC sum
     folds blocks in ascending order from 0.0 (the engine-portable order);
     ties rank by candidate id."""
-    sub = dim // len(codebooks)
-    codes = pq_encode(embeddings, codebooks, id_col=id_col, vec_col=vec_col)
-    queries = [
-        (qid, _py_pq_table(qv, codebooks, sub))
-        for qid, qv in _query_rows(embeddings, n_queries, id_col, vec_col)
-    ]
+    cands = _nearest_cells(
+        embeddings, _blocks(codebooks), vec_col, [id_col]
+    ).select(F.col(id_col).alias("cand_id"), F.col("cells").alias("codes"))
+    queries = _pq_tables(
+        _query_rows(embeddings, n_queries, id_col, vec_col), codebooks
+    )
     scored = _adc_topk_partials(
-        codes.select(F.col("vid").alias("cand_id"), "codes"),
-        queries, rerank if rerank else k, len(codebooks), len(codebooks[0]),
+        cands, queries, rerank if rerank else k, len(codebooks), len(codebooks[0]),
     )
     return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)
 
@@ -1175,18 +1023,21 @@ def ivf_pq_topk(
     training, all block trainings, encoding, probe selection, and the
     ADC fold — the full composition is hash-checked end to end.
 
-    One fused kernel assigns cells AND encodes codes
-    (``pq_assign_encode``), and the ADC scoring runs as per-task partial
-    top-k with the python-replayed probe cells (``_probe_cells``)."""
-    sub = dim // len(codebooks)
-    cands = pq_assign_encode(
-        embeddings, centroids, codebooks, dim=dim,
-        id_col=id_col, vec_col=vec_col,
-    ).select(F.col("vid").alias("cand_id"), "cell", "codes")
+    One ``_nearest_cells`` pass assigns the cell AND encodes the codes
+    (the IVF block followed by the PQ blocks), and the ADC scoring runs as
+    per-task partial top-k with the driver-replayed probe cells
+    (``_probe_cells``)."""
+    cands = _nearest_cells(
+        embeddings, _blocks([centroids]) + _blocks(codebooks), vec_col, [id_col]
+    ).select(
+        F.col(id_col).alias("cand_id"),
+        F.col("cells")[0].alias("cell"),
+        F.slice(F.col("cells"), 2, len(codebooks)).alias("codes"),
+    )
     qrows = _query_rows(embeddings, n_queries, id_col, vec_col)
-    queries = [(qid, _py_pq_table(qv, codebooks, sub)) for qid, qv in qrows]
     scored = _adc_topk_partials(
-        cands, queries, rerank if rerank else k, len(codebooks), len(codebooks[0]),
+        cands, _pq_tables(qrows, codebooks), rerank if rerank else k,
+        len(codebooks), len(codebooks[0]),
         probe_cells=_probe_cells(qrows, centroids, n_probe),
     )
     return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)

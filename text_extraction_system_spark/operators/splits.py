@@ -153,7 +153,8 @@ def mixture_plan(
     sample. All arithmetic is integer-exact (oracle-hashable):
 
       target_s      = (token_budget * w_s) div sum(w)   (integer division)
-      rate_32(s)    = min(2^32, (target_s * 2^32) div tokens_s)
+      rate_32(s)    = min(2^32, (target_s * 2^32) div tokens_s)   (exact
+                      at any budget; 2^32 when tokens_s = 0)
       doc sampled  <=> split_hash(mix_seed, doc_id) < rate_32(source)
 
     Oversubscribed sources cap at rate 1 (every doc kept — the plan shows
@@ -201,10 +202,13 @@ def mixture_plan(
         .alias("target_tokens"),
     ).select(
         "*",
-        F.least(
-            F.lit(1 << 32).cast("bigint"),
-            F.expr("(target_tokens * 4294967296) div tokens_avail"),
-        ).alias("rate_32"),
+        # target * 2^32 overflows bigint from target = 2^31 on, so the
+        # product is decimal(38,0); a capped source (incl. 0 tokens) never
+        # divides, and the uncapped quotient is < 2^32
+        F.when(F.col("target_tokens") >= F.col("tokens_avail"), F.lit(1 << 32))
+        .otherwise(F.expr(
+            "(CAST(target_tokens AS DECIMAL(38,0)) * 4294967296) div tokens_avail"
+        )).alias("rate_32"),
     )
     sampled = (
         counts.join(F.broadcast(planned.select("source", "rate_32")), "source")

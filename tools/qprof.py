@@ -8,6 +8,8 @@ optional explain("formatted") capture.
     python tools/qprof.py --sf /root/testdata/sf0.1 --all-explains plans/r06 _before
 
 Prints one JSON line: {"queries": {name: [t1, t2, ...]}, "sf": ...}.
+Runs on ``get_spark``'s default master (``local[$SPARK_GRAFT_CPUS]``) with
+one shuffle partition per core, like ``tools/selfcheck.py``.
 """
 
 from __future__ import annotations
@@ -18,7 +20,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# importing check_oracle (this script's directory is on sys.path) puts this
+# checkout first on the driver's and the workers' path
+import check_oracle  # noqa: E402,F401
 
 
 def main() -> None:
@@ -30,19 +34,19 @@ def main() -> None:
     ap.add_argument("--suffix", default="")
     ap.add_argument("--all-explains", nargs=2, metavar=("DIR", "SUFFIX"),
                     default=None, help="dump explain for every headline query, no timing")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
     from text_extraction_system_spark.session import get_spark
 
     spark = get_spark(
-        master=f"local[{args.cpus}]",
-        shuffle_partitions=max(args.cpus, 16),
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(1 << 20),
             "spark.sql.files.openCostInBytes": "0",
         },
+    )
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     qs = entrymod.queries()
 
