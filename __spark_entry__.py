@@ -691,8 +691,9 @@ def _q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4: title detection — first paragraph if <= 80 chars, else ''."""
     res = pipeline.extract_from_documents(_docs(spark, sf_dir), with_structure=False)
-    first = F.filter(F.col("out_spans"), lambda s: s["text"] != "")
-    cand = F.when(F.size(first) > 0, F.element_at(first, 1)["text"]).otherwise("")
+    # the first paragraph of the (NUL-scrubbed) plain text, not the first
+    # span's raw text: a span may hold a NUL or a '\n' of its own
+    cand = F.regexp_extract(F.col("plain_text"), "[^\\n\\f]+", 0)
     return res.select(
         "doc_id",
         F.when((F.length(cand) > 0) & (F.length(cand) <= 80), cand)
@@ -2805,19 +2806,22 @@ FROM par
 """
     )
 
+    # title = first paragraph of the assembled plain text (first maximal
+    # run without '\n'/'\f') when at most 80 chars: taken from the scrubbed
+    # page texts, so a NUL or a '\n' inside the first span cannot leak in
     sql["titles"] = (
-        _SQL_OUTSPANS_CTE
+        _SQL_PAGES_CTE
         + """
 , firsts AS (
-  SELECT doc_id, text,
-         row_number() OVER (PARTITION BY doc_id ORDER BY span_offset) AS rn
-  FROM outspans WHERE text != ''
+  SELECT doc_id,
+         regexp_extract(string_agg(ptext, '' ORDER BY page_number), '[^\\n\\f]+') AS text
+  FROM pagebounds GROUP BY doc_id
 )
 SELECT d.doc_id,
        CASE WHEN length(coalesce(f.text, '')) BETWEEN 1 AND 80
             THEN f.text ELSE '' END AS title
 FROM (SELECT CAST(doc_id AS VARCHAR) AS doc_id FROM documents) d
-LEFT JOIN firsts f ON d.doc_id = f.doc_id AND f.rn = 1
+LEFT JOIN firsts f ON d.doc_id = f.doc_id
 """
     )
 

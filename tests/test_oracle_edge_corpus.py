@@ -5,7 +5,8 @@ twin on row count and values — these were real latent asymmetries found in
 round-2 review (pages-CTE scrub, zero-chunk boilerplate, zero-span covers,
 zero-token reading order). The same check runs on the sf0.001 corpus for the
 kernel-backed similarity/dedup/tfidf operators, whose only second
-implementation is the oracle."""
+implementation is the oracle, and on both corpora for the default
+extraction kernel's structure column."""
 
 from __future__ import annotations
 
@@ -14,9 +15,11 @@ import tempfile
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 from conftest import SF_DIR
+from text_extraction_system_spark import pipeline
 
 DOCS = pd.DataFrame(
     {
@@ -49,7 +52,11 @@ DOC_ONLY_QUERIES = [
 def _assert_parity(spark, con, data_dir: str, name: str) -> None:
     """Query ``name`` over ``data_dir`` equals its DuckDB oracle on ``con``:
     same row count, same values (compared as sorted strings)."""
-    q = entry.queries()[name](spark, data_dir)
+    _assert_equals_oracle(entry.queries()[name](spark, data_dir), con, name)
+
+
+def _assert_equals_oracle(q, con, name: str) -> None:
+    """DataFrame ``q`` equals the DuckDB oracle of query ``name`` on ``con``."""
     cols = q.columns
     sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)
     odf = (
@@ -185,6 +192,31 @@ def sf_duck():
 @pytest.mark.parametrize("name", KERNEL_QUERIES)
 def test_sf_kernel_parity(spark, sf_duck, name):
     _assert_parity(spark, sf_duck, SF_DIR, name)
+
+
+def _kernel_structure(spark, data_dir: str, name: str):
+    """The default engine's ``structure`` column (the ``mapInArrow`` kernel)
+    shaped into the columns of query ``name``."""
+    res = pipeline.extract_from_documents(spark.read.parquet(f"{data_dir}/documents.parquet"))
+    if name == "titles":
+        return res.select("doc_id", F.col("structure.title").alias("title"))
+    pre = {"paragraphs": "par", "sentences": "sent"}[name]
+    return res.select("doc_id", F.explode(f"structure.{name}").alias("s")).select(
+        "doc_id",
+        F.col("s.start").cast("long").alias(f"{pre}_start"),
+        F.col("s.end").cast("long").alias(f"{pre}_end"),
+        F.col("s.language").alias("language"),
+    )
+
+
+@pytest.mark.parametrize("corpus", ["edge", "sf"])
+@pytest.mark.parametrize("name", ["paragraphs", "sentences", "titles"])
+def test_kernel_structure_parity(spark, edge_dir, duck, sf_duck, corpus, name):
+    """The declared segmentation queries run the Catalyst engine, so their
+    DuckDB checks never see the default engine's segmenter. Explode its
+    ``structure`` column and hold it to the same oracles."""
+    data_dir, con = (edge_dir, duck) if corpus == "edge" else (SF_DIR, sf_duck)
+    _assert_equals_oracle(_kernel_structure(spark, data_dir, name), con, name)
 
 
 @pytest.mark.parametrize("budget", [1 << 31, 1 << 40])

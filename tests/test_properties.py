@@ -4,6 +4,8 @@ no property tests; these pin the invariants the golden examples can't)."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,7 +15,7 @@ WORDS = st.lists(
     st.text(alphabet="abcdefgh", min_size=1, max_size=6), min_size=0, max_size=60
 )
 TEXTS = st.text(
-    alphabet="abc def.! \n\f", min_size=0, max_size=300
+    alphabet="abc def.!? \n\f", min_size=0, max_size=300
 )
 
 
@@ -41,7 +43,7 @@ def test_paragraph_spans_invariants(text):
 @given(TEXTS)
 def test_sentence_spans_partition_paragraphs(text):
     paras = textseg.paragraph_spans(text)
-    sents = textseg.sentence_spans(text)
+    sents = textseg.sentence_spans(text, paras)
     by_para = []
     for ps, pe in paras:
         inside = [(s, e) for s, e in sents if ps <= s and e <= pe]
@@ -51,6 +53,66 @@ def test_sentence_spans_partition_paragraphs(text):
             assert e1 == s2
         by_para.extend(inside)
     assert by_para == sents
+
+
+def _per_paragraph_sentences(text: str) -> list[tuple[int, int]]:
+    """The sentence rule applied paragraph by paragraph: split each
+    paragraph's own slice after every spec boundary (a lookbehind match),
+    dropping empty pieces."""
+    boundary = re.compile(spec.SENTENCE_BOUNDARY_REGEX)
+    out = []
+    for ps, pe in textseg.paragraph_spans(text):
+        cuts = [ps] + [ps + m.end() for m in boundary.finditer(text[ps:pe])] + [pe]
+        out.extend((s, e) for s, e in zip(cuts, cuts[1:]) if e > s)
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(TEXTS, st.text(alphabet=".!? \n\fa\t", max_size=80)))
+def test_sentence_sweep_equals_per_paragraph_split(text):
+    """One boundary scan over the whole text, merged into the paragraphs,
+    equals splitting every paragraph on its own."""
+    assert textseg.sentence_spans(text, textseg.paragraph_spans(text)) == (
+        _per_paragraph_sentences(text)
+    )
+
+
+def _sections_reference(text: str) -> list[dict]:
+    """The section rule written out: try the heading pattern on every
+    paragraph, then end each section at the first later heading of the same
+    or a higher level."""
+    heads = []
+    for ps, pe in textseg.paragraph_spans(text):
+        m = textseg._HEADING_RE.match(text[ps:pe])
+        if m:
+            level = m.group(1).count(".") + 1
+            heads.append({"start": ps, "end": len(text), "title": m.group(2),
+                          "title_start": ps + m.start(2), "title_end": ps + m.end(2),
+                          "level": level, "abs_level": level})
+    for i, h in enumerate(heads):
+        h["end"] = next((g["start"] for g in heads[i + 1:] if g["level"] <= h["level"]),
+                        len(text))
+    return heads
+
+
+HEADING_TEXTS = st.lists(
+    st.sampled_from(
+        ["1. Intro", "2.1 Sub", "3 Top", "10.2.3 Deep", "2.1.", "\u0663 Arabic",
+         "\u00b2 sup", "1.x y", "7", "words", " ", "\t", "\n", "\f"]
+    ),
+    max_size=30,
+).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(HEADING_TEXTS)
+def test_sections_equal_reference(text):
+    """Sections from the shared paragraph list (headings tried only on
+    digit-led paragraphs, ends assigned in one stack sweep) equal the
+    rule applied paragraph by paragraph."""
+    assert textseg.detect_sections(text, textseg.paragraph_spans(text)) == (
+        _sections_reference(text)
+    )
 
 
 @settings(max_examples=100, deadline=None)
@@ -93,23 +155,25 @@ def test_oracle_pipeline_invariants(text, doc_suffix):
 LANGY_TEXTS = st.lists(
     st.sampled_from(
         ["the", "und", "los", "les", "der", "que", "abc", "x.", "y!", "一", "中",
-         " ", "\n", "\f", ". "]
+         " ", "\n", "\f", ". ", "The", "DER", "İ", "\t", "\u00a0", "x. \n"]
     ),
     min_size=0,
     max_size=60,
 ).map("".join)
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=400, deadline=None)
 @given(LANGY_TEXTS)
 def test_lang_index_equals_per_slice_detection(text):
-    """LangIndex (tokenize once, score by offsets) must agree with
-    detect_language on every paragraph/sentence slice and the whole doc."""
+    """LangIndex (one stopword scan, score by offsets) must agree with
+    detect_language on every paragraph/sentence slice and the whole doc.
+    'İ' lowers to two chars, so texts holding it take the per-slice
+    fallback."""
     idx = langid.LangIndex(text)
     assert idx.lang(0, None) == langid.detect_language(text)
     for s, e in textseg.paragraph_spans(text):
         assert idx.lang(s, e) == langid.detect_language(text[s:e]), (s, e)
-    for s, e in textseg.sentence_spans(text):
+    for s, e in textseg.sentence_spans(text, textseg.paragraph_spans(text)):
         assert idx.lang(s, e) == langid.detect_language(text[s:e]), (s, e)
 
 

@@ -13,17 +13,23 @@ from __future__ import annotations
 
 import bisect
 import re
+from itertools import accumulate
 
 from . import spec
 
-#: token -> languages whose stopword list contains it (built once; the UDF
-#: calls this per sentence/paragraph/doc, so per-token work must be one
-#: dict lookup, not len(LANGS) set membership tests)
+#: token -> languages whose stopword list contains it (built once, so
+#: per-token work in ``detect_language`` is one dict lookup, not len(LANGS)
+#: set membership tests)
 _TOKEN_LANGS: dict[str, tuple[str, ...]] = {}
 for _lang in spec.LANG_PRIORITY:
     for _w in spec.LANG_STOPWORDS[_lang]:
         _TOKEN_LANGS[_w] = _TOKEN_LANGS.get(_w, ()) + (_lang,)
 
+
+#: token -> one 0/1 hit per language, in ``spec.LANG_PRIORITY`` order
+_TOKEN_HITS = {
+    w: tuple(int(lg in langs) for lg in spec.LANG_PRIORITY) for w, langs in _TOKEN_LANGS.items()
+}
 
 _CJK_RE = re.compile(spec.CJK_REGEX)
 
@@ -47,25 +53,37 @@ def detect_language(text: str) -> str:
     return best_lang
 
 
-_TOKEN_RE = re.compile(r"\S+")
+#: a whole stopword token of lowered text prefixed with one space: the
+#: leading ``\s`` and the trailing ``(?!\S)`` are the token edges that
+#: ``str.split`` would cut at (both use ``str.isspace``); longest words
+#: first, so a stopword that prefixes another ('de'/'der') rarely backtracks
+_STOP_RE = re.compile(
+    r"\s(%s)(?!\S)" % "|".join(sorted(map(re.escape, _TOKEN_LANGS), key=len, reverse=True))
+)
 
 
 class LangIndex:
-    """Tokenize-once language scorer for many subspans of one document.
+    """Scan-once language scorer for many subspans of one document.
 
     ``LangIndex(text).lang(s, e) == detect_language(text[s:e])`` for every
     span whose boundaries do not cut a ``\\S+`` token — which paragraph and
     sentence spans never do (paragraphs split on the ``\\n``/``\\f``
-    separators, sentences immediately after ``'. '``). The structure UDF
-    scores the doc + every paragraph + every sentence, so scoring from one
-    token-offset index replaces ~3 full tokenizations plus a slice+lower
-    allocation per segment.
+    separators, sentences immediately after ``'. '``). The structure step
+    scores the doc + every paragraph + every sentence from one index.
+
+    The index is one ``_STOP_RE`` scan over the lowered text: it visits only
+    whole stopword tokens (about 3% of the tokens of a typical corpus), never
+    the others. For each hit it keeps the token's offsets and, per
+    language, a running hit count, so ``lang(s, e)`` is two bisects (the
+    first hit starting at or after ``s``, the last ending at or before
+    ``e``) and one difference per language; a range without hits returns
+    the default language at once.
 
     Falls back to per-slice detection when ``lower()`` changes the string
     length (rare Unicode case folds would misalign offsets).
     """
 
-    __slots__ = ("text", "_fallback", "_starts", "_ends", "_langs", "_cjk")
+    __slots__ = ("text", "_fallback", "_starts", "_ends", "_cums", "_cjk")
 
     def __init__(self, text: str) -> None:
         self.text = text
@@ -73,38 +91,41 @@ class LangIndex:
         self._fallback = len(lowered) != len(text)
         if self._fallback:
             return
-        self._cjk = [m.start() for m in _CJK_RE.finditer(text)]
+        # an ASCII text has no CJK char; skipping the scan saves about a
+        # fifth of the index build on an ASCII corpus
+        self._cjk = [] if text.isascii() else [m.start() for m in _CJK_RE.finditer(text)]
         starts: list[int] = []
         ends: list[int] = []
-        langs: list[tuple[str, ...]] = []
-        for m in _TOKEN_RE.finditer(lowered):
-            ls = _TOKEN_LANGS.get(m.group())
-            if ls:
-                starts.append(m.start())
-                ends.append(m.end())
-                langs.append(ls)
-        self._starts, self._ends, self._langs = starts, ends, langs
+        hits: list[tuple[int, ...]] = []
+        # offsets into " " + lowered: the match starts on the pad/space
+        # before the token, i.e. at the token's offset in ``text``
+        for m in _STOP_RE.finditer(" " + lowered):
+            starts.append(m.start())
+            ends.append(m.end() - 1)
+            hits.append(_TOKEN_HITS[m.group(1)])
+        self._starts, self._ends = starts, ends
+        # per language (priority order): hits among the first k stopwords
+        self._cums = [list(accumulate(col, initial=0)) for col in zip(*hits)]
 
     def lang(self, start: int = 0, end: int | None = None) -> str:
         if end is None:
             end = len(self.text)
         if self._fallback:
             return detect_language(self.text[start:end])
-        i = bisect.bisect_left(self._cjk, start)
-        if i < len(self._cjk) and self._cjk[i] < end:
-            return "zh"
-        hits = dict.fromkeys(spec.LANG_PRIORITY, 0)
+        cjk = self._cjk
+        if cjk:
+            i = bisect.bisect_left(cjk, start)
+            if i < len(cjk) and cjk[i] < end:
+                return "zh"
         i = bisect.bisect_left(self._starts, start)
-        n = len(self._starts)
-        while i < n and self._starts[i] < end:
-            if self._ends[i] <= end:
-                for lg in self._langs[i]:
-                    hits[lg] += 1
-            i += 1
+        j = bisect.bisect_right(self._ends, end)
+        if j <= i:
+            return spec.DEFAULT_LANG
         best_lang = spec.DEFAULT_LANG
         best_hits = 0
-        for lg in spec.LANG_PRIORITY:
-            if hits[lg] > best_hits:
-                best_hits = hits[lg]
+        for lg, cum in zip(spec.LANG_PRIORITY, self._cums):
+            hits = cum[j] - cum[i]
+            if hits > best_hits:
+                best_hits = hits
                 best_lang = lg
         return best_lang

@@ -19,17 +19,19 @@ _HEX = "0123456789abcdef"
 
 
 def media_hash(media_ref: str) -> str:
+    """md5 hex digest of ``media_ref``; ``ocr_text`` and ``media_area`` read
+    it, so a caller hashes each ref once."""
     return hashlib.md5(media_ref.encode("utf-8")).hexdigest()
 
 
-def ocr_text(media_ref: str) -> str:
+def ocr_text(digest: str) -> str:
     """Recognized text for a media span: OCR_WORDS vocab words picked by the
-    first hex chars of md5(media_ref)."""
-    h = media_hash(media_ref)
-    return " ".join(spec.OCR_VOCAB[_HEX.index(c)] for c in h[: spec.OCR_WORDS])
+    first hex chars of its ``media_hash``."""
+    return " ".join(spec.OCR_VOCAB[_HEX.index(c)] for c in digest[: spec.OCR_WORDS])
 
 
-def media_area(media_ref: str) -> int:
-    """Synthetic pixel-area of a media span, used by the OCR-decision
-    classifier (reference: calc_covers, pdf/pdf.py:261-273)."""
-    return (1 + _HEX.index(media_hash(media_ref)[0])) * spec.MEDIA_AREA_UNIT
+def media_area(digest: str) -> int:
+    """Synthetic pixel-area of a media span from its ``media_hash``, used by
+    the OCR-decision classifier (reference: calc_covers,
+    pdf/pdf.py:261-273)."""
+    return (1 + _HEX.index(digest[0])) * spec.MEDIA_AREA_UNIT

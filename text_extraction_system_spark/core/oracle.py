@@ -6,6 +6,12 @@ decision, the re-stitched output spans, the assembled plain text and the
 structure record. pytest compares the distributed pipeline against this
 module (FIXTURES.md section 2 ``expected_extraction``).
 
+The default extraction kernel (``pipeline._extract_documents_arrow_native``)
+runs ``derive_spans``, ``process_spans`` and ``assemble`` per document;
+``extract_spans`` scores each paragraph/sentence slice on its own
+(``langid.detect_language``), the reference the kernel's one-scan
+``langid.LangIndex`` is checked against.
+
 Reference lifecycle being mirrored: ``process_document`` -> ``process_pdf``
 page fan-out -> OCR -> ``merge_pdf_pages`` re-stitch ->
 ``extract_text_and_structure`` (SURVEY.md section 3.1).
@@ -15,12 +21,16 @@ from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from . import langid, ocr_stub, spec, textseg
 
 
-@dataclass
-class Span:
+class Span(NamedTuple):
+    """One span, in ``schemas.SPAN`` field order. Immutable, so a span that
+    passes through a step unchanged is shared, not copied, and pyarrow
+    takes it as the struct tuple it already is."""
+
     kind: str
     text: str
     media_ref: str
@@ -55,41 +65,40 @@ def derive_spans(doc_id: str, text: str) -> list[Span]:
     n_text = (len(words) + spec.SPAN_WORDS - 1) // spec.SPAN_WORDS
     for i in range(n_text):
         chunk = " ".join(words[i * spec.SPAN_WORDS: (i + 1) * spec.SPAN_WORDS])
-        spans.append(Span("text", chunk, "", 0))
+        spans.append(Span("text", chunk, "", len(spans)))
         h = hashlib.md5(f"{doc_id}:{i}".encode("utf-8")).hexdigest()
         if h[0] in spec.MEDIA_HEX:
             ref = spec.MEDIA_REF_FMT.format(doc_id=doc_id, span_idx=i)
-            spans.append(Span("media", "", ref, 0))
-    for off, s in enumerate(spans):
-        s.offset = off
+            spans.append(Span("media", "", ref, len(spans)))
     return spans
 
 
-def needs_ocr(spans: list[Span]) -> bool:
-    """OCR-decision classifier (reference page_requires_ocr, pdf/pdf.py:31-33):
-    text_cover < OCR_RATIO * media_cover, with synthetic media areas."""
+def process_spans(spans: list[Span]) -> tuple[bool, list[Span], list[str]]:
+    """OCR decision, then re-stitch: ``(needs_ocr, out_spans, failures)``.
+
+    The decision is the reference page_requires_ocr (pdf/pdf.py:31-33):
+    text_cover < OCR_RATIO * media_cover, with synthetic media areas. Media
+    spans gain OCR text iff the doc needs OCR and the ref is decodable
+    (media:// scheme); undecodable refs become failure codes, never
+    exceptions. (kind, media_ref, order) are preserved exactly — the
+    north-rule invariant (reference merge order: tasks.py:394-429,
+    pdf/pdf.py:327-367).
+
+    Each media ref is hashed once, for both its area and its OCR text; a
+    span that gains no OCR text is passed through, not copied."""
+    media = [(i, s, ocr_stub.media_hash(s.media_ref))
+             for i, s in enumerate(spans) if s.kind == "media"]
     text_cover = sum(len(s.text) for s in spans if s.kind == "text")
-    media_cover = sum(ocr_stub.media_area(s.media_ref) for s in spans if s.kind == "media")
-    return text_cover < spec.OCR_RATIO * media_cover
-
-
-def restitch(spans: list[Span], ocr: bool) -> tuple[list[Span], list[str]]:
-    """Output span sequence: media spans gain OCR text iff the doc needs OCR
-    and the ref is decodable (media:// scheme); undecodable refs become
-    failure codes, never exceptions. (kind, media_ref, order) are preserved
-    exactly — the north-rule invariant (reference merge order:
-    tasks.py:394-429, pdf/pdf.py:327-367)."""
-    out = []
+    media_cover = sum(ocr_stub.media_area(h) for _, _, h in media)
+    ocr = text_cover < spec.OCR_RATIO * media_cover
+    out = list(spans)
     failures: list[str] = []
-    for s in spans:
-        if s.kind == "media" and not s.media_ref.startswith("media://"):
+    for i, s, h in media:
+        if not s.media_ref.startswith("media://"):
             failures.append(f"bad_media_ref:{s.offset}")
-            out.append(Span(s.kind, s.text, s.media_ref, s.offset))
-        elif s.kind == "media" and ocr:
-            out.append(Span("media", ocr_stub.ocr_text(s.media_ref), s.media_ref, s.offset))
-        else:
-            out.append(Span(s.kind, s.text, s.media_ref, s.offset))
-    return out, failures
+        elif ocr:
+            out[i] = s._replace(text=ocr_stub.ocr_text(h))
+    return ocr, out, failures
 
 
 def assemble(out_spans: list[Span]) -> tuple[str, list[dict]]:
@@ -137,16 +146,16 @@ def extract(doc_id: str, text: str) -> Extraction:
 def extract_spans(doc_id: str, in_spans: list[Span]) -> Extraction:
     """Oracle pipeline over an already-materialized span sequence (used for
     the archetype corpus where spans are authored directly)."""
-    ocr = needs_ocr(in_spans)
-    out_spans, failures = restitch(in_spans, ocr)
+    ocr, out_spans, failures = process_spans(in_spans)
     plain_text, pages = assemble(out_spans)
+    paras = textseg.paragraph_spans(plain_text)
     paragraphs = [
         {"start": s, "end": e, "language": langid.detect_language(plain_text[s:e])}
-        for s, e in textseg.paragraph_spans(plain_text)
+        for s, e in paras
     ]
     sentences = [
         {"start": s, "end": e, "language": langid.detect_language(plain_text[s:e])}
-        for s, e in textseg.sentence_spans(plain_text)
+        for s, e in textseg.sentence_spans(plain_text, paras)
     ]
     return Extraction(
         doc_id=doc_id,
@@ -154,11 +163,11 @@ def extract_spans(doc_id: str, in_spans: list[Span]) -> Extraction:
         in_spans=in_spans,
         out_spans=out_spans,
         plain_text=plain_text,
-        title=textseg.detect_title(plain_text),
+        title=textseg.detect_title(plain_text, paras),
         language=langid.detect_language(plain_text),
         parse_failures=failures,
         pages=pages,
         paragraphs=paragraphs,
         sentences=sentences,
-        sections=textseg.detect_sections(plain_text),
+        sections=textseg.detect_sections(plain_text, paras),
     )

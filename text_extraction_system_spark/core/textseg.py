@@ -10,21 +10,28 @@ fixtures — SURVEY.md section 7.4):
 * title            — first of lexnlp ``get_titles`` (``data_extract.py:183-186``)
 * sections         — heading heuristic replacing
   ``get_document_sections_with_titles`` (``data_extract.py:169-181``)
-* section end assignment — sort by start; a section ends at the next section
-  of same-or-higher level (``data_extract.py:245-257``)
+* section end assignment — a section ends at the next section of
+  same-or-higher level (``data_extract.py:245-257``)
 
 All functions work on char offsets into the assembled plain text and return
 ``(start, end)`` half-open spans, matching the reference DTO conventions
-(``dto.py:117-141``).
+(``dto.py:117-141``). A document's paragraphs are scanned once
+(``paragraph_spans``); the sentence, title and section steps take that
+list instead of re-scanning the text.
 """
 
 from __future__ import annotations
 
 import re
 
-from . import spec
 
-_SENT_RE = re.compile(spec.SENTENCE_BOUNDARY_REGEX)
+#: a sentence boundary is the end of a match: ``spec.SENTENCE_BOUNDARY_REGEX``
+#: (a space after ``[.!?]``, by lookbehind) with the punctuation matched
+#: instead. Two matches never overlap (a space is not ``[.!?]``), so the
+#: ends are the same; a pattern that opens on a char class lets ``re`` skip
+#: to candidate chars instead of trying the lookbehind at every position
+#: (0.13 s -> 0.05 s over an 8,000-doc, 4.5M-char corpus)
+_SENT_RE = re.compile(r"[.!?] ")
 #: maximal runs not containing '\n' or '\f' — C-speed scan; a per-character
 #: python loop here costs ~10s per 100M chars and dominates the UDF stage
 _PARA_RE = re.compile(r"[^\n\f]+")
@@ -35,54 +42,68 @@ _HEADING_RE = re.compile(r"^(\d+(?:\.\d+)*)\.?\s+(\S.*)$")
 
 def paragraph_spans(text: str) -> list[tuple[int, int]]:
     """Half-open char spans of paragraphs: maximal runs not containing
-    '\\n' or '\\f'. Separator chars belong to no paragraph."""
+    '\\n' or '\\f'. Separator chars belong to no paragraph. Computed once
+    per document; the sentence, title and section steps take the result."""
     return [m.span() for m in _PARA_RE.finditer(text)]
 
 
-def sentence_spans_in(text: str, start: int, end: int) -> list[tuple[int, int]]:
-    """Sentence spans inside one paragraph span of ``text``."""
-    seg = text[start:end]
-    bounds = [m.end() for m in _SENT_RE.finditer(seg)]
-    starts = [0] + bounds
-    ends = bounds + [len(seg)]
-    return [(start + s, start + e) for s, e in zip(starts, ends) if e > s]
+def sentence_spans(text: str, paras: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """Sentence spans of ``text`` given its ``paragraph_spans``: each
+    paragraph cut after every ``_SENT_RE`` boundary inside it.
 
-
-def sentence_spans(text: str) -> list[tuple[int, int]]:
+    One ``_SENT_RE`` scan over the whole text, merged into the paragraphs
+    in one sweep. That equals splitting each paragraph on its own: a
+    boundary is ``[.!?]`` followed by a space, and neither is a separator,
+    so every whole-text boundary lies inside one paragraph and none is
+    lost or gained at a paragraph edge."""
+    bounds = [m.end() for m in _SENT_RE.finditer(text)]
+    if not bounds:
+        return list(paras)
     out: list[tuple[int, int]] = []
-    for ps, pe in paragraph_spans(text):
-        out.extend(sentence_spans_in(text, ps, pe))
+    i, n = 0, len(bounds)
+    for ps, pe in paras:
+        s = ps
+        while i < n and bounds[i] <= pe:
+            out.append((s, bounds[i]))
+            s = bounds[i]
+            i += 1
+        if pe > s:
+            out.append((s, pe))
     return out
 
 
-def detect_title(text: str) -> str:
-    """First paragraph if it is short (<= 80 chars) and not a heading number,
-    else ''. Mirrors 'first title candidate' semantics of get_titles."""
-    paras = paragraph_spans(text)
+def detect_title(text: str, paras: list[tuple[int, int]]) -> str:
+    """First paragraph if it is at most 80 chars, else ''. Mirrors 'first
+    title candidate' semantics of get_titles."""
     if not paras:
         return ""
     s, e = paras[0]
-    cand = text[s:e]
-    if 0 < len(cand) <= 80:
-        return cand
-    return ""
+    return text[s:e] if e - s <= 80 else ""
 
 
-def detect_sections(text: str) -> list[dict]:
-    """Heading-heuristic sections over the assembled plain text.
+def detect_sections(text: str, paras: list[tuple[int, int]]) -> list[dict]:
+    """Heading-heuristic sections over the assembled plain text, given its
+    ``paragraph_spans``.
 
     A paragraph matching ``_HEADING_RE`` opens a section whose level is the
-    numbering depth ('2.1' -> level 2). Section body starts at the heading
-    start; it ends at the next heading with level <= its own, else at
-    len(text) (reference end-assignment: data_extract.py:245-257).
+    numbering depth ('2.1' -> level 2). Only paragraphs whose first char is
+    a digit are tried (``str.isdigit`` holds for every char ``\\d``
+    matches). Section body starts at the heading start; it ends at the next
+    heading with level <= its own, else at len(text) (reference
+    end-assignment: data_extract.py:245-257), found with one stack sweep.
     """
     heads: list[dict] = []
-    for ps, pe in paragraph_spans(text):
+    open_: list[dict] = []
+    for ps, pe in paras:
+        if not text[ps].isdigit():
+            continue
         m = _HEADING_RE.match(text[ps:pe])
         if not m:
             continue
         level = m.group(1).count(".") + 1
-        heads.append({
+        while open_ and open_[-1]["level"] >= level:
+            open_.pop()["end"] = ps
+        h = {
             "start": ps,
             "end": len(text),
             "title": m.group(2),
@@ -90,11 +111,7 @@ def detect_sections(text: str) -> list[dict]:
             "title_end": ps + m.end(2),
             "level": level,
             "abs_level": level,
-        })
-    heads.sort(key=lambda h: h["start"])
-    for i, h in enumerate(heads):
-        for j in range(i + 1, len(heads)):
-            if heads[j]["level"] <= h["level"]:
-                h["end"] = heads[j]["start"]
-                break
+        }
+        heads.append(h)
+        open_.append(h)
     return heads

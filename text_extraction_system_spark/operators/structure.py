@@ -11,7 +11,10 @@ Catalyst engine's results, and the ``*_rows`` operators emit exploded
 paragraph/sentence/section rows through ``arrowmap.map_rows``.
 
 The segmentation rules themselves live in ``core.textseg`` / ``core.langid``
-so the oracle and the UDF share literally the same code.
+so the oracle and the UDF share literally the same code, and they are the
+only segmenter: ``_structure_of`` scans a document's paragraphs once and
+hands that list to the sentence, title and section steps, and scores every
+segment's language from one stopword index of the document.
 """
 
 from __future__ import annotations
@@ -30,30 +33,28 @@ def _structure_of(text: str, force_language: str | None = None) -> dict:
     override: every segment reports the forced language
     (two_langs fixture semantics, test_data_extract.py:44-57).
 
-    Language scoring tokenizes the doc once (langid.LangIndex) and scores
-    each paragraph/sentence from token offsets — equivalent to per-slice
-    detection (segment boundaries never cut tokens) without re-tokenizing
-    the text ~3x and allocating a lowered slice per segment."""
+    One paragraph scan per document: ``textseg.paragraph_spans`` runs once
+    and the sentence, title and section steps take its list (sentences come
+    from one boundary scan merged into it). Language scoring indexes the
+    doc's stopword hits once (``langid.LangIndex``) and scores each
+    paragraph/sentence from that index — equivalent to per-slice detection,
+    since segment boundaries never cut tokens."""
     if force_language:
         def lang(_s: int, _e: int | None = None) -> str:
             return force_language
     else:
         lang = langid.LangIndex(text).lang
 
-    paragraphs = [
-        {"start": s, "end": e, "language": lang(s, e)}
-        for s, e in textseg.paragraph_spans(text)
-    ]
-    sentences = [
-        {"start": s, "end": e, "language": lang(s, e)}
-        for s, e in textseg.sentence_spans(text)
-    ]
+    paras = textseg.paragraph_spans(text)
     return {
-        "title": textseg.detect_title(text),
+        "title": textseg.detect_title(text, paras),
         "language": lang(0, None),
-        "paragraphs": paragraphs,
-        "sentences": sentences,
-        "sections": textseg.detect_sections(text),
+        "paragraphs": [{"start": s, "end": e, "language": lang(s, e)} for s, e in paras],
+        "sentences": [
+            {"start": s, "end": e, "language": lang(s, e)}
+            for s, e in textseg.sentence_spans(text, paras)
+        ],
+        "sections": textseg.detect_sections(text, paras),
     }
 
 
@@ -105,7 +106,7 @@ def sentence_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFra
     def rows(doc_id, text):
         t = text or ""
         lang = langid.LangIndex(t).lang
-        for s, e in textseg.sentence_spans(t):
+        for s, e in textseg.sentence_spans(t, textseg.paragraph_spans(t)):
             yield doc_id, s, e, lang(s, e)
 
     return arrowmap.map_rows(
@@ -118,7 +119,8 @@ def section_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFram
     """Row-per-section heading detection (W3/J8)."""
 
     def rows(doc_id, text):
-        for sec in textseg.detect_sections(text or ""):
+        t = text or ""
+        for sec in textseg.detect_sections(t, textseg.paragraph_spans(t)):
             yield (doc_id, sec["start"], sec["end"], sec["title"],
                    sec["title_start"], sec["title_end"], sec["level"])
 

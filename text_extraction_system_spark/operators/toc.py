@@ -63,7 +63,7 @@ def sections_for_doc(text: str, pages: list[dict], toc: list[dict]) -> list[dict
             "level": s["level"],
             "source": "heading",
         }
-        for s in textseg.detect_sections(text)
+        for s in textseg.detect_sections(text, textseg.paragraph_spans(text))
     ]
 
 

@@ -13,7 +13,11 @@ That is the Catalyst engine, where only the giant-doc fan-out shuffles;
 ``extract_from_documents`` runs it without structure. With structure it
 runs the ``mapInArrow`` engine instead: every stage above runs in one
 Python pass per batch, so the whole plan is a single narrow stage for
-documents of any length.
+documents of any length. In that pass each document is scanned once per
+step: its media refs are hashed once (``core.oracle.process_spans``), its
+paragraphs are found once and shared by the sentence, title and section
+steps, and its stopwords are indexed once for every language score
+(``structure._structure_of``).
 """
 
 from __future__ import annotations
@@ -33,24 +37,21 @@ def _extract_documents_arrow_native(
     text_col: str,
 ) -> DataFrame:
     """``mapInArrow`` extraction kernel: one pass per batch running the
-    per-document reference semantics (``core.oracle``) plus the engine's
-    structure segmentation (``structure._structure_of``, the function the
-    structure pandas_udf calls). Value-identical by construction: every
+    per-document reference semantics (``core.oracle``: derive spans, decide
+    OCR and re-stitch with one hash per media ref, assemble) plus the
+    engine's structure segmentation (``structure._structure_of``, the
+    function the structure pandas_udf calls: one paragraph scan and one
+    stopword index per document). Value-identical by construction: every
     field comes from the exact oracle/struct code the pytest fixtures pin.
     ``arrowmap.map_rows`` builds the nested columns (out_spans, pages,
-    structure) straight into Arrow, never through pandas objects."""
+    structure) straight into Arrow, never through pandas objects; the
+    ``oracle.Span`` tuples go in as the span structs they already are."""
     from .core import oracle
 
     def row(doc_id, text):
-        spans = oracle.derive_spans(doc_id, text or "")
-        do_ocr = oracle.needs_ocr(spans)
-        out, fails = oracle.restitch(spans, do_ocr)
+        do_ocr, out, fails = oracle.process_spans(oracle.derive_spans(doc_id, text or ""))
         ptext, pages = oracle.assemble(out)
-        yield (
-            doc_id, do_ocr, fails,
-            [(s.kind, s.text, s.media_ref, s.offset) for s in out],
-            ptext, pages, structure._structure_of(ptext),
-        )
+        yield doc_id, do_ocr, fails, out, ptext, pages, structure._structure_of(ptext)
 
     return arrowmap.map_rows(
         docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
@@ -93,9 +94,10 @@ def extract_from_documents(
     gathers all of one document's spans into one reduce task, just as the
     kernel holds one document in one task) and would add a shuffle, a
     second python boundary and a union. The kernel is also faster per
-    giant doc (local[4] on a 4-core host, median of 5 warm passes): 1.09 s
-    vs 1.51 s routed for a 200k-word doc, 2.96 s vs 4.82 s for an
-    800k-word one (119k spans), with equal rows.
+    giant doc (local[4] on a 4-core / 15 GiB host, 7g heap, median of 5
+    warm passes): 0.72 s for a 200k-word doc and 1.94 s for an 800k-word
+    one (119k spans), where the routed catalyst engine took 1.51 s and
+    4.82 s when last measured, with equal rows.
 
     Catalyst giant-doc routing happens HERE, on the RAW text length, not
     downstream on ``size(spans)``: a filter over the derived-spans

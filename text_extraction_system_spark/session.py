@@ -20,6 +20,36 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #: batch stops at 32 MB regardless of row width).
 DEFAULT_MAX_RECORDS_PER_BATCH = 8192
 DEFAULT_MAX_BYTES_PER_BATCH = 32 << 20
+#: local mode: one JVM hosts all task threads — size the heap for the
+#: thread count or GC serializes the interpreted-HOF allocation storm.
+#: 64g (was 24g): a 47-query session accumulates plans/codegen/broadcasts,
+#: and at 24g the LAST-built queries ran 3-5x their isolated cost from GC
+#: pressure on a 32-core / 125 GiB host (curation_funnel 5.0 s in-sweep vs
+#: 1.05 s isolated; 64g sweep: 1.14 s — guide §5). So 64g is the cap, not
+#: the default: a heap larger than the host's RAM gets the process killed
+#: instead of collected.
+MAX_DRIVER_MEM_GB = 64
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half
+    the host's ``MemTotal`` in whole GiB (at least 1g) capped at
+    ``MAX_DRIVER_MEM_GB``, else the cap when ``meminfo`` cannot be read.
+    The other half is left to the Python workers (one per task thread) and
+    the page cache. Heap is a max, not a reservation; cluster deployments
+    size executors separately anyway."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_gib = int(line.split()[1]) >> 21  # kB -> GiB, halved
+                    return f"{max(1, min(MAX_DRIVER_MEM_GB, half_gib))}g"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{MAX_DRIVER_MEM_GB}g"
 
 
 def get_spark(
@@ -57,15 +87,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        # local mode: one JVM hosts all task threads — size the heap for the
-        # thread count or GC serializes the interpreted-HOF allocation storm.
-        # 64g (was 24g): a 47-query session accumulates plans/codegen/
-        # broadcasts, and at 24g the LAST-built queries ran 3-5x their
-        # isolated cost from GC pressure (curation_funnel 5.0 s in-sweep vs
-        # 1.05 s isolated; 64g sweep: 1.14 s — guide §5). Heap is a max,
-        # not a reservation; env-overridable for smaller hosts, and cluster
-        # deployments size executors separately anyway.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
