@@ -152,11 +152,23 @@ def _q_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _structure_rows(res: DataFrame, field: str, prefix: str) -> DataFrame:
+    """One row per element of the kernel's ``structure.<field>`` array:
+    (doc_id, <prefix>_start, <prefix>_end, language)."""
+    return res.select("doc_id", F.explode(f"structure.{field}").alias("s")).select(
+        "doc_id",
+        F.col("s.start").cast("bigint").alias(f"{prefix}_start"),
+        F.col("s.end").cast("bigint").alias(f"{prefix}_end"),
+        F.col("s.language").alias("language"),
+    )
+
+
 def _q_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2/A8: paragraph segmentation offsets + per-paragraph language
-    (arrowmap.map_rows row-per-paragraph; shares rule code with the oracle)."""
-    res = pipeline.extract_from_documents(_docs(spark, sf_dir), with_structure=False)
-    return structure_op.paragraph_rows(res)
+    """W2/A8: paragraph segmentation offsets + per-paragraph language, the
+    extraction kernel's structure column exploded (shares rule code with
+    the oracle)."""
+    res = pipeline.extract_from_documents(_docs(spark, sf_dir))
+    return _structure_rows(res, "paragraphs", "par")
 
 
 def _q_dup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,9 +264,10 @@ def _q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: row-per-sentence segmentation over assembled plain text."""
-    res = pipeline.extract_from_documents(_docs(spark, sf_dir), with_structure=False)
-    return structure_op.sentence_rows(res)
+    """W1: row-per-sentence segmentation over assembled plain text, the
+    extraction kernel's structure column exploded."""
+    res = pipeline.extract_from_documents(_docs(spark, sf_dir))
+    return _structure_rows(res, "sentences", "sent")
 
 
 def _q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1022,7 +1035,8 @@ outspans AS (
 """
 )
 
-#: page assembly over output spans (mirrors operators/layout.py)
+#: page assembly over output spans (mirrors core/oracle.assemble, which the
+#: extraction kernel runs)
 _SQL_PAGES_CTE = (
     _SQL_OUTSPANS_CTE
     + f""",

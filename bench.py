@@ -264,8 +264,6 @@ def main() -> None:
     # archetype measured AT measurement time (the pytest linearity guard's
     # bench twin). Wall time should stay O(spans); a quadratic regression
     # shows up here as minutes, not seconds.
-    from text_extraction_system_spark.operators import layout, restitch
-
     n_spans = 100_000
     giant = spark.range(1).select(
         F.lit("giantperf").alias("doc_id"),
@@ -279,7 +277,7 @@ def main() -> None:
             ),
         ).alias("spans"),
     )
-    gres = layout.assemble(restitch.process_spans(giant, fanout_threshold=None))
+    gres = pl.extract_from_spans(giant, with_structure=False)
     gres.write.format("noop").mode("overwrite").save()  # warm
 
     def _giant_run() -> float:

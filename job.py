@@ -5,7 +5,7 @@ Usage:
   spark-submit --py-files dist/pyfiles.zip job.py \
       --input  /path/to/spans_or_documents_parquet \
       --output /path/to/output_base \
-      [--input-kind spans|documents] [--run-id RUN] [--fanout-threshold N]
+      [--input-kind spans|documents] [--run-id RUN] [--num-partitions N]
 
 Reads the input table, runs the extraction pipeline with checkpoint/resume
 semantics (only docs absent from output/results are processed), writes
@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--input-kind", choices=["spans", "documents"], default="spans")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--fanout-threshold", type=int, default=256)
     ap.add_argument("--num-partitions", type=int, default=0)
     args = ap.parse_args()
 
@@ -45,7 +44,6 @@ def main() -> None:
         df,
         args.output,
         run_id=args.run_id,
-        fanout_threshold=args.fanout_threshold,
         num_partitions=args.num_partitions,
     )
     print(summary)

@@ -1,19 +1,19 @@
 """Archetype corpus (FIXTURES.md section 3) through the full pipeline vs the
-oracle — including OCR-decision polarity, failure capture, empty docs, and
-the giant-skew doc through the fanout path."""
+oracle — including OCR-decision polarity, failure capture, empty docs, the
+giant-skew doc, and spans that break the span contract."""
 
 from __future__ import annotations
 
 import pytest
 
 from text_extraction_system_spark import pipeline, synth
-from text_extraction_system_spark.core import oracle
+from text_extraction_system_spark.core import oracle, spec
 
 
 @pytest.fixture(scope="module")
 def archetype_results(spark):
     df = synth.corpus_df(spark)
-    res = pipeline.extract_from_spans(df, fanout_threshold=256)
+    res = pipeline.extract_from_spans(df)
     return {r["doc_id"]: r.asDict(recursive=True) for r in res.collect()}
 
 
@@ -99,7 +99,7 @@ def test_empty_doc(archetype_results):
 
 
 def test_giant_skew_fanout(archetype_results, archetype_oracle):
-    """2000-span doc exceeds the fanout threshold -> explode/gather path."""
+    """A 2000-span doc runs through the same kernel pass as every other."""
     got = archetype_results["giant_0"]
     exp = archetype_oracle["giant_0"]
     assert len(got["out_spans"]) == 2000
@@ -107,16 +107,15 @@ def test_giant_skew_fanout(archetype_results, archetype_oracle):
 
 
 def test_giant_doc_assembly_is_linear(spark):
-    """10^5-span doc assembles in bounded time — pins the F.slice page
-    assembly (layout.page_texts_col). The previous per-page filter was
-    O(n_pages x n_spans): ~2.5e9 comparisons for this doc (minutes); the
-    slice-based assembly is O(n_spans) and finishes in seconds."""
+    """A 10^5-span doc extracts in bounded time: the kernel's decode
+    (``arrowmap``), re-stitch and page assembly (``core.oracle.assemble``)
+    are O(n_spans). A per-page scan over all spans would be ~2.5e9
+    comparisons for this doc (minutes); the kernel takes seconds."""
     import time
 
     from pyspark.sql import functions as F
 
     from text_extraction_system_spark.core import spec
-    from text_extraction_system_spark.operators import layout, restitch
 
     n = 100_000
     df = spark.range(1).select(
@@ -132,7 +131,7 @@ def test_giant_doc_assembly_is_linear(spark):
         ).alias("spans"),
     )
     t0 = time.monotonic()
-    row = layout.assemble(restitch.process_spans(df, fanout_threshold=None)).collect()[0]
+    row = pipeline.extract_from_spans(df, with_structure=False).collect()[0]
     elapsed = time.monotonic() - t0
     assert len(row["pages"]) == n // spec.PAGE_SPANS
     assert row["pages"][-1]["end"] == len(row["plain_text"])
@@ -140,10 +139,10 @@ def test_giant_doc_assembly_is_linear(spark):
 
 
 def test_fanout_keeps_empty_docs(spark):
-    """Forced-fanout path must not drop zero-span docs (explode eliminates
-    the row unless they are carried through explicitly)."""
+    """Zero-span docs keep their row: the kernel emits one row per input
+    row, which a span-level explode would not."""
     df = synth.corpus_df(spark)
-    res = pipeline.extract_from_spans(df, fanout_threshold=0)
+    res = pipeline.extract_from_spans(df, with_structure=False)
     rows = {r["doc_id"]: r for r in res.collect()}
     assert rows["empty_0"]["out_spans"] == []
     assert rows["empty_0"]["plain_text"] == ""
@@ -187,7 +186,7 @@ def test_null_char_scrub(spark):
         Row(kind="text", text="\x00", media_ref="", offset=1),
     ]
     df = spark.createDataFrame([Row(doc_id="nul_0", spans=spans)])
-    res = pipeline.extract_from_spans(df, fanout_threshold=None).collect()[0]
+    res = pipeline.extract_from_spans(df).collect()[0]
     exp = oracle.extract_spans(
         "nul_0",
         [oracle.Span("text", "abc\x00def", "", 0), oracle.Span("text", "\x00", "", 1)],
@@ -197,37 +196,67 @@ def test_null_char_scrub(spark):
     assert res["pages"][0]["end"] == len(res["plain_text"])
 
 
-def test_language_override(spark):
+def test_language_override(archetype_oracle):
     """Reference two_langs semantics: forcing the doc language makes every
     segment report it (test_data_extract.py:44-57)."""
-    from text_extraction_system_spark.operators import structure as structure_op
-    from text_extraction_system_spark.operators import layout, restitch
+    from text_extraction_system_spark.operators.structure import _structure_of
 
-    df = synth.corpus_df(spark).where("doc_id = 'twolangs_0'")
-    assembled = layout.assemble(restitch.process_spans(df))
-    res = structure_op.with_structure(assembled, force_language="de").collect()[0]
-    st = res["structure"]
+    st = _structure_of(archetype_oracle["twolangs_0"].plain_text, "de")
     assert st["language"] == "de"
+    assert st["paragraphs"] and st["sentences"]
     assert all(p["language"] == "de" for p in st["paragraphs"])
     assert all(s["language"] == "de" for s in st["sentences"])
 
 
-def test_cumsum_capacity_guard(spark):
-    """Over-capacity inputs raise instead of silently corrupting prefix
-    sums: the Hillis-Steele unroll covers 2^n_passes elements and not one
-    more (layout._cumsum_col guard)."""
-    import pytest
-    from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException, PythonException
+def _malformed_spans():
+    """Span sequences that break the span contract (core.spec), each with
+    the failure code its doc must get."""
+    S = oracle.Span
+    big = spec.MAX_SPAN_OFFSET
+    return {
+        "unordered": ([S("text", "a\n\f", "", 9), S("text", "b", "", 0)], "bad_offset:1"),
+        "repeated": ([S("text", "a", "", 3), S("text", "b", "", 3)], "bad_offset:1"),
+        "negative": ([S("text", "a", "", -1)], "bad_offset:0"),
+        "huge": ([S("text", "a", "", 2_000_000_000)], "bad_offset:0"),
+        "at_bound": ([S("text", "a", "", 0), S("text", "b", "", big)], "bad_offset:1"),
+        "null_spans": (None, "null_spans"),
+        "null_span": ([S("text", "a", "", 0), None], "null_span:1"),
+        "null_text": ([S("text", None, "", 0)], "null_span:0"),
+        "null_media_ref": ([S("media", "", None, 0)], "null_span:0"),
+        "null_offset": ([S("text", "a", "", 0), S("text", "b", "", None)], "null_span:1"),
+    }
 
-    from text_extraction_system_spark.operators import layout
 
-    def scan(n, passes):
-        arr = F.sequence(F.lit(1), F.lit(n))
-        return spark.range(1).select(
-            layout._cumsum_col(arr, n_passes=passes).alias("s")
-        ).collect()[0]["s"]
+@pytest.mark.parametrize("case", sorted(_malformed_spans()))
+def test_malformed_spans_become_failure_codes(spark, case):
+    """A doc whose spans break the contract gets one row with its failure
+    code and empty outputs, in the oracle and in the kernel alike, and the
+    well-formed doc beside it in the same batch is unaffected."""
+    from pyspark.sql import types as T
 
-    assert scan(8, 3) == [sum(range(1, k + 1)) for k in range(1, 9)]
-    with pytest.raises(Exception, match="capacity exceeded"):
-        scan(9, 3)
+    from text_extraction_system_spark import schemas
+
+    spans, code = _malformed_spans()[case]
+    exp = oracle.extract_spans(case, spans)
+    assert (exp.needs_ocr, exp.parse_failures, exp.out_spans, exp.plain_text, exp.pages) == (
+        False, [code], [], "", [])
+
+    nullable = T.StructType([
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("spans", T.ArrayType(T.StructType(
+            [T.StructField(f.name, f.dataType) for f in schemas.SPAN.fields]))),
+    ])
+    good = [oracle.Span("text", "fine", "", 0)]
+    df = spark.createDataFrame(
+        [(case, None if spans is None else [None if s is None else tuple(s) for s in spans]),
+         ("good", [tuple(s) for s in good])],
+        nullable,
+    )
+    rows = {r["doc_id"]: r.asDict(recursive=True) for r in pipeline.extract_from_spans(df).collect()}
+    assert len(rows) == 2
+    got = rows[case]
+    assert (got["needs_ocr"], got["parse_failures"], got["out_spans"], got["plain_text"],
+            got["pages"]) == (False, [code], [], "", [])
+    assert got["structure"]["paragraphs"] == []
+    ok = oracle.extract_spans("good", good)
+    assert rows["good"]["parse_failures"] == [] and rows["good"]["plain_text"] == ok.plain_text

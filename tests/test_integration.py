@@ -41,24 +41,3 @@ def test_job_output_matches_oracle(spark, tmp_path):
         assert got["plain_text"] == exp.plain_text, doc_id
         assert got["parse_failures"] == exp.parse_failures, doc_id
         assert got["needs_ocr"] == exp.needs_ocr, doc_id
-
-
-def test_arrow_engine_matches_catalyst_engine(spark):
-    """The default (Arrow kernel) engine == the catalyst engine plus
-    structure.with_structure, row-for-row, every field including
-    structure — the kernel runs core.oracle + the structure segmenter, so
-    equality here chains the Catalyst path to the reference semantics
-    end-to-end on real parquet."""
-    from text_extraction_system_spark import pipeline
-    from text_extraction_system_spark.operators import structure
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    def snap(df):
-        return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
-
-    a = snap(pipeline.extract_from_documents(docs))
-    b = snap(structure.with_structure(
-        pipeline.extract_from_documents(docs, with_structure=False)
-    ))
-    assert a == b and len(a) == 500

@@ -195,26 +195,21 @@ def test_sf_kernel_parity(spark, sf_duck, name):
 
 
 def _kernel_structure(spark, data_dir: str, name: str):
-    """The default engine's ``structure`` column (the ``mapInArrow`` kernel)
-    shaped into the columns of query ``name``."""
+    """The kernel's ``structure`` column shaped into the columns of query
+    ``name``."""
     res = pipeline.extract_from_documents(spark.read.parquet(f"{data_dir}/documents.parquet"))
     if name == "titles":
         return res.select("doc_id", F.col("structure.title").alias("title"))
-    pre = {"paragraphs": "par", "sentences": "sent"}[name]
-    return res.select("doc_id", F.explode(f"structure.{name}").alias("s")).select(
-        "doc_id",
-        F.col("s.start").cast("long").alias(f"{pre}_start"),
-        F.col("s.end").cast("long").alias(f"{pre}_end"),
-        F.col("s.language").alias("language"),
-    )
+    return entry._structure_rows(res, name, {"paragraphs": "par", "sentences": "sent"}[name])
 
 
 @pytest.mark.parametrize("corpus", ["edge", "sf"])
 @pytest.mark.parametrize("name", ["paragraphs", "sentences", "titles"])
 def test_kernel_structure_parity(spark, edge_dir, duck, sf_duck, corpus, name):
-    """The declared segmentation queries run the Catalyst engine, so their
-    DuckDB checks never see the default engine's segmenter. Explode its
-    ``structure`` column and hold it to the same oracles."""
+    """The kernel's ``structure`` column against the DuckDB segmentation
+    oracles, on the unspread scan: ``paragraphs`` and ``sentences`` are
+    this explode, and ``titles`` (the first paragraph of the plain text)
+    must agree with the kernel's ``structure.title``."""
     data_dir, con = (edge_dir, duck) if corpus == "edge" else (SF_DIR, sf_duck)
     _assert_equals_oracle(_kernel_structure(spark, data_dir, name), con, name)
 

@@ -215,9 +215,6 @@ def test_protobuf_sink_roundtrip_shape(spark):
     from text_extraction_system_spark.operators import serialize
 
     res = pipeline.extract_from_spans(synth.corpus_df(spark).limit(6))
-    from text_extraction_system_spark.operators import structure as structure_op
-
-    res = structure_op.with_structure(res)
     out = serialize.to_protobuf_column(res).select("doc_id", "structure", "structure_proto").collect()
     assert out
     for r in out:
@@ -234,11 +231,9 @@ def test_protobuf_sink_emits_toc(spark):
     from pyspark.sql import functions as F
 
     from text_extraction_system_spark import pipeline, synth
-    from text_extraction_system_spark.operators import serialize, structure as structure_op, toc
+    from text_extraction_system_spark.operators import serialize, toc
 
-    res = structure_op.with_structure(
-        pipeline.extract_from_spans(synth.corpus_df(spark))
-    )
+    res = pipeline.extract_from_spans(synth.corpus_df(spark))
     toc_rows = toc.toc_section_rows(res).groupBy("doc_id").agg(
         F.collect_list(F.struct(F.col("title"), F.col("level"))).alias("table_of_contents")
     )

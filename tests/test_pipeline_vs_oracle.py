@@ -11,7 +11,6 @@ import pytest
 
 from text_extraction_system_spark import pipeline
 from text_extraction_system_spark.core import oracle
-from text_extraction_system_spark.operators import structure
 
 
 @pytest.fixture(scope="module")
@@ -74,10 +73,10 @@ def test_span_texts_contain_no_separator_chars(spark, docs_df):
     from pyspark.sql import functions as F
 
     from text_extraction_system_spark.operators import derive_spans as ds
-    from text_extraction_system_spark.operators import restitch
 
-    out = restitch.process_spans(ds.derive_spans(docs_df))
-    bad = out.select(
+    derived = ds.derive_spans(docs_df).select(F.col("spans").alias("out_spans"))
+    out = pipeline.extract_from_documents(docs_df, with_structure=False)
+    bad = derived.unionByName(out.select("out_spans")).select(
         F.exists(
             "out_spans",
             lambda s: s["text"].contains("\n")
@@ -88,33 +87,13 @@ def test_span_texts_contain_no_separator_chars(spark, docs_df):
     assert bad.count() == 0
 
 
-def test_inline_equals_fanout(spark, docs_df, oracle_results):
-    """Both physical strategies must produce identical logical results
-    (reference J1-J3 chord == our shuffle gather)."""
-    res = pipeline.extract_from_documents(
-        docs_df.limit(50), fanout_threshold=0, with_structure=False
-    )
-    rows = res.collect()
-    # fanout must not silently drop docs (e.g. zero-span docs eliminated
-    # by explode): every input doc comes back.
-    assert len(rows) == docs_df.limit(50).count()
-    for r in rows:
-        exp = oracle_results[r["doc_id"]]
-        got_spans = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["out_spans"]]
-        exp_spans = [(s.kind, s.text, s.media_ref, s.offset) for s in exp.out_spans]
-        assert got_spans == exp_spans
-        assert r["plain_text"] == exp.plain_text
-
-
 def _long_doc_corpus() -> list[tuple[str, str | None]]:
-    """Docs around the catalyst engine's giant-doc cutoff (8*256-17 chars):
-    the sf corpora top out near 600 chars, so nothing else on the default
-    path sees a document that length."""
+    """Docs around 8*256-17 chars, the shortest text that can derive more
+    than 256 spans: the sf corpora top out near 600 chars, so nothing else
+    on the default path sees a document that length."""
     import random
 
-    from text_extraction_system_spark.operators import restitch
-
-    cutoff = 8 * restitch.DEFAULT_FANOUT_THRESHOLD - 17
+    cutoff = 8 * 256 - 17
     rng = random.Random(7)
     vocab = ["a", "to", "of", "the", "and", "der", "und", "le", "et", "data",
              "model", "Spark.", "text,", "page"]
@@ -143,10 +122,10 @@ def _long_doc_corpus() -> list[tuple[str, str | None]]:
     ]
 
 
-def test_long_docs_default_engine_matches_oracle_and_catalyst(spark):
-    """The default engine sends every doc, giant or not, through one kernel
-    pass; it must equal the oracle on every field (structure included) and
-    the catalyst engine, which fans the long docs out, row for row."""
+def test_long_docs_match_oracle_with_and_without_structure(spark):
+    """Every doc, giant or not, runs through one kernel pass; it must equal
+    the oracle on every field (structure included), and the kernel without
+    structure must give the same rows minus the structure column."""
     corpus = _long_doc_corpus()
     docs = spark.createDataFrame(corpus, "doc_id string, text string")
 
@@ -154,9 +133,8 @@ def test_long_docs_default_engine_matches_oracle_and_catalyst(spark):
         return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
 
     got = snap(pipeline.extract_from_documents(docs))
-    assert got == snap(structure.with_structure(
-        pipeline.extract_from_documents(docs, with_structure=False)
-    ))
+    assert {d: {k: v for k, v in r.items() if k != "structure"} for d, r in got.items()} == snap(
+        pipeline.extract_from_documents(docs, with_structure=False))
     assert len(got) == len(corpus)
     for doc_id, text in corpus:
         exp = oracle.extract(doc_id, text or "")

@@ -4,11 +4,11 @@ These pin the properties that make the engine scale, so a refactor that
 silently adds a shuffle or breaks column pruning fails CI:
 
 * column pruning reaches the parquet scan (ReadSchema carries only used cols)
-* the inline extraction path is shuffle-free (no Exchange)
-* the default extraction engine is one narrow mapInArrow stage
+* extraction from spans is shuffle-free (no Exchange)
+* every extraction entry point is one narrow mapInArrow stage, and every
+  declared extraction query one kernel pass
 * every per-row Python kernel crosses the boundary as mapInArrow (arrowmap)
 * dimension joins broadcast (BroadcastHashJoin, no SortMergeJoin)
-* the fanout path shuffles exactly once (the doc_id gather)
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from text_extraction_system_spark import pipeline
 from text_extraction_system_spark.operators import derive_spans as ds
-from text_extraction_system_spark.operators import restitch
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,20 +39,9 @@ def test_column_pruning_reaches_scan(spark):
 def test_inline_path_is_shuffle_free(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     spans = ds.derive_spans(docs)
-    assembled = pipeline.extract_from_spans(
-        spans, fanout_threshold=None, with_structure=False
-    )
+    assembled = pipeline.extract_from_spans(spans, with_structure=False)
     plan = _plan(assembled)
     assert "Exchange" not in plan, plan
-
-
-def test_fanout_path_shuffles_once(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    spans = ds.derive_spans(docs)
-    fanned = restitch.process_spans_fanout(spans)
-    plan = _plan(fanned)
-    # exactly one exchange: the groupBy(doc_id) gather
-    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_dimension_joins_broadcast(spark):
@@ -605,16 +593,40 @@ def test_mixture_plan_semantics(spark):
     assert again["big"]["tokens_sampled"] == b["tokens_sampled"]
 
 
-def test_default_extraction_is_one_narrow_stage(spark):
-    """The default engine (with structure) is a single mapInArrow pass over
-    the scan: no giant-doc fan-out shuffle, no union, no second python
-    boundary."""
+_EXTRACTIONS = {
+    "documents": pipeline.extract_from_documents,
+    "documents_no_structure": lambda d: pipeline.extract_from_documents(
+        d, with_structure=False),
+    "spans": lambda d: pipeline.extract_from_spans(ds.derive_spans(d)),
+    "spans_no_structure": lambda d: pipeline.extract_from_spans(
+        ds.derive_spans(d), with_structure=False),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_EXTRACTIONS))
+def test_default_extraction_is_one_narrow_stage(spark, entry):
+    """Extraction, from documents or spans, with or without structure, is a
+    single mapInArrow pass over the scan: no giant-doc fan-out shuffle, no
+    union, no second python boundary."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(pipeline.extract_from_documents(docs))
+    plan = _plan(_EXTRACTIONS[entry](docs))
     assert "Exchange" not in plan, plan
     assert "Union" not in plan, plan
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan, plan
+
+
+@pytest.mark.parametrize("name", ["extract_restitch", "plain_text", "pages",
+                                  "paragraphs", "sentences", "titles"])
+def test_extraction_queries_are_one_kernel_pass(spark, name):
+    """Each declared extraction query runs the one kernel pass: one
+    mapInArrow, no pandas UDF, and no shuffle but ``_docs``' spread."""
+    import __spark_entry__ as e
+
+    plan = _plan(e.queries()[name](spark, SF))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "Union" not in plan, plan
+    assert plan.count("Exchange") == _plan(e._docs(spark, SF)).count("Exchange"), plan
 
 
 def _row_kernel_operators():
@@ -623,13 +635,17 @@ def _row_kernel_operators():
         structure, tables_op, textstats, toc,
     )
 
-    def res(docs):  # assembled results from the Catalyst engine: no Python
+    import __spark_entry__ as e
+
+    def res(docs):  # extraction results without structure
         return pipeline.extract_from_documents(docs, with_structure=False)
 
     return {
         "extract": pipeline.extract_from_documents,
-        "paragraph_rows": lambda d: structure.paragraph_rows(res(d)),
-        "sentence_rows": lambda d: structure.sentence_rows(res(d)),
+        "paragraph_rows": lambda d: e._structure_rows(
+            pipeline.extract_from_documents(d), "paragraphs", "par"),
+        "sentence_rows": lambda d: e._structure_rows(
+            pipeline.extract_from_documents(d), "sentences", "sent"),
         "section_rows": lambda d: structure.section_rows(res(d)),
         "toc_section_rows": lambda d: toc.toc_section_rows(res(d)),
         "simhash_rows": textstats.simhash_rows,

@@ -205,3 +205,49 @@ def test_angle_normalization_ranges(a):
     assert -90.0 <= n90 <= 90.0  # sign-folding keeps |a|<=45 except at +/-90 folds
     s = angles.snap_rotation(a)
     assert s == 0.0 or abs(s - 90.0 * round(s / 90.0)) <= 10.0
+
+
+SPAN_ROWS = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(
+            st.one_of(
+                st.none(),
+                st.fixed_dictionaries({
+                    "kind": st.sampled_from(["text", "media"]),
+                    "text": st.one_of(st.none(), st.text(max_size=5)),
+                    "media_ref": st.text(max_size=3),
+                    "offset": st.integers(-(2**31), 2**31 - 1),
+                    "bbox": st.lists(st.floats(width=32, allow_nan=False), max_size=3),
+                    "ok": st.booleans(),
+                }),
+            ),
+            max_size=6,
+        ),
+    ),
+    max_size=8,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(SPAN_ROWS, st.integers(0, 8), st.integers(0, 8))
+def test_arrow_decode_equals_to_pylist(rows, lo, n):
+    """``arrowmap._pylist`` is ``to_pylist`` value for value and type for
+    type, with and without nulls at every level, on sliced arrays too."""
+    import pyarrow as pa
+
+    from text_extraction_system_spark.arrowmap import _pylist
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32()),
+                      ("bbox", pa.list_(pa.float32())), ("ok", pa.bool_())])
+    arr = pa.array(rows, type=pa.list_(span)).slice(lo, n)
+
+    def typed(v):
+        if isinstance(v, list):
+            return [typed(x) for x in v]
+        if isinstance(v, dict):
+            return {k: typed(x) for k, x in v.items()}
+        return (type(v), v)
+
+    assert typed(_pylist(arr)) == typed(arr.to_pylist())

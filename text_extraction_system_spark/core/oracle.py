@@ -6,11 +6,11 @@ decision, the re-stitched output spans, the assembled plain text and the
 structure record. pytest compares the distributed pipeline against this
 module (FIXTURES.md section 2 ``expected_extraction``).
 
-The default extraction kernel (``pipeline._extract_documents_arrow_native``)
-runs ``derive_spans``, ``process_spans`` and ``assemble`` per document;
-``extract_spans`` scores each paragraph/sentence slice on its own
-(``langid.detect_language``), the reference the kernel's one-scan
-``langid.LangIndex`` is checked against.
+The extraction kernel (``pipeline._extract``) runs ``derive_spans`` (for
+documents) and ``stitch`` (the span contract check, ``process_spans`` and
+``assemble``) per document; ``extract_spans`` scores each paragraph/sentence
+slice on its own (``langid.detect_language``), the reference the kernel's
+one-scan ``langid.LangIndex`` is checked against.
 
 Reference lifecycle being mirrored: ``process_document`` -> ``process_pdf``
 page fan-out -> OCR -> ``merge_pdf_pages`` re-stitch ->
@@ -101,6 +101,33 @@ def process_spans(spans: list[Span]) -> tuple[bool, list[Span], list[str]]:
     return ocr, out, failures
 
 
+def span_failure(spans: list[Span | None] | None) -> str | None:
+    """The failure code of a span sequence that breaks the span contract
+    (``spec.MAX_SPAN_OFFSET``), or None when it holds."""
+    if spans is None:
+        return "null_spans"
+    prev = -1
+    for i, s in enumerate(spans):
+        if s is None or None in s:
+            return f"null_span:{i}"
+        if not prev < s.offset < spec.MAX_SPAN_OFFSET:
+            return f"bad_offset:{i}"
+        prev = s.offset
+    return None
+
+
+def stitch(spans: list[Span | None] | None) -> tuple[bool, list[str], list[Span], str, list[dict]]:
+    """One doc's spans -> ``(needs_ocr, parse_failures, out_spans,
+    plain_text, pages)``: the span contract check, ``process_spans`` and
+    ``assemble``. A doc that breaks the contract gets its failure code and
+    empty outputs (spec section "Span contract")."""
+    bad = span_failure(spans)
+    if bad:
+        return False, [bad], [], "", []
+    ocr, out, failures = process_spans(spans)
+    return (ocr, failures, out, *assemble(out))
+
+
 def assemble(out_spans: list[Span]) -> tuple[str, list[dict]]:
     """Plain text + page table.
 
@@ -143,11 +170,10 @@ def extract(doc_id: str, text: str) -> Extraction:
     return extract_spans(doc_id, in_spans)
 
 
-def extract_spans(doc_id: str, in_spans: list[Span]) -> Extraction:
+def extract_spans(doc_id: str, in_spans: list[Span | None] | None) -> Extraction:
     """Oracle pipeline over an already-materialized span sequence (used for
     the archetype corpus where spans are authored directly)."""
-    ocr, out_spans, failures = process_spans(in_spans)
-    plain_text, pages = assemble(out_spans)
+    ocr, failures, out_spans, plain_text, pages = stitch(in_spans)
     paras = textseg.paragraph_spans(plain_text)
     paragraphs = [
         {"start": s, "end": e, "language": langid.detect_language(plain_text[s:e])}

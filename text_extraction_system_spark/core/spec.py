@@ -40,6 +40,26 @@ MEDIA_HEX = ("0", "1", "2")
 MEDIA_REF_FMT = "media://{doc_id}/{span_idx}"
 
 # ---------------------------------------------------------------------------
+# Span contract (a spans-table row: BASELINE.json input_hint)
+# ---------------------------------------------------------------------------
+#
+# A doc's span sequence is well-formed iff the array is not NULL, no span and
+# no span field is NULL, and offsets strictly increase from >= 0 and stay
+# below MAX_SPAN_OFFSET (gaps are allowed: they are empty pages). A doc that
+# breaks the contract is not extracted, never dropped and never an error: it
+# yields its one result row with needs_ocr false, no output spans, empty
+# plain text, no pages and the single failure code of its first violation:
+#   'null_spans'          the spans array is NULL
+#   'null_span:<i>'       array element i, or one of its fields, is NULL
+#   'bad_offset:<i>'      element i's offset is negative, not above the
+#                         previous one, or >= MAX_SPAN_OFFSET
+
+#: exclusive offset bound: at most 2^18 pages per document (about 8M words
+#: of derived text), so one stray offset cannot make a worker build billions
+#: of empty pages
+MAX_SPAN_OFFSET = 1 << 20
+
+# ---------------------------------------------------------------------------
 # OCR-decision classifier (reference: page_requires_ocr, pdf/pdf.py:31-33)
 # ---------------------------------------------------------------------------
 

@@ -1,12 +1,11 @@
-"""OCR-decision classifier + deterministic OCR stub — pure built-ins.
+"""OCR-decision cover columns — pure built-ins.
 
-* ``needs_ocr_col``: the reference predicate ``text_cover < 0.3*image_cover``
-  (``pdf/pdf.py:31-33`` ``page_requires_ocr``; areas per ``calc_covers``
-  ``pdf/pdf.py:261-273``) expressed as an array aggregate over the span
-  sequence — JVM-side, codegen'd, zero Python.
-* ``ocr_text_col``: sandbox tesseract replacement (``ocr/ocr.py:80-131``
-  analog): md5(media_ref) hex chars -> vocabulary words. Matches
-  ``core.ocr_stub.ocr_text`` byte-for-byte.
+``needs_ocr_col``: the reference predicate ``text_cover < 0.3*image_cover``
+(``pdf/pdf.py:31-33`` ``page_requires_ocr``; areas per ``calc_covers``
+``pdf/pdf.py:261-273``) expressed as an array aggregate over the span
+sequence — JVM-side, codegen'd, zero Python. The ``ocr_route`` queries,
+multimodal, rotation and tables read these covers; extraction decides OCR
+per document in its kernel (``core.oracle.process_spans``).
 """
 
 from __future__ import annotations
@@ -49,57 +48,3 @@ def media_cover_col(spans: Column) -> Column:
 def needs_ocr_col(spans: Column) -> Column:
     """Doc-level OCR routing decision (SURVEY.md F2)."""
     return text_cover_col(spans) < F.lit(spec.OCR_RATIO) * media_cover_col(spans)
-
-
-def ocr_text_col(media_ref: Column) -> Column:
-    """Deterministic recognized text for one media_ref. The md5 is let-bound:
-    referenced inside the per-word lambda it would otherwise be recomputed
-    OCR_WORDS times per span (interpreted HOFs have no CSE)."""
-    from .exprutil import let
-
-    vocab = F.array(*[F.lit(w) for w in spec.OCR_VOCAB])
-    return let(
-        F.md5(media_ref),
-        lambda h: F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(1), F.lit(spec.OCR_WORDS)),
-                lambda j: F.element_at(vocab, _hexpos(F.substring(h, j, 1))),
-            ),
-        ),
-    )
-
-
-def valid_media_col(media_ref: Column) -> Column:
-    """Parse-validity gate: only the media:// scheme is decodable. Invalid
-    refs become failure-code lineage rows, never exceptions (reference
-    captures crashy-parser output as request failure, not worker death —
-    processes.py:47-61, pdf/pdf.py:59-67)."""
-    return media_ref.startswith("media://")
-
-
-def apply_ocr_to_span(s: Column, do_ocr: Column) -> Column:
-    """One span struct -> output span struct: media spans gain OCR text iff
-    the doc-level decision fired and the ref is decodable;
-    (kind, media_ref, offset) preserved."""
-    return F.struct(
-        s["kind"].alias("kind"),
-        F.when(
-            (s["kind"] == "media") & do_ocr & valid_media_col(s["media_ref"]),
-            ocr_text_col(s["media_ref"]),
-        )
-        .otherwise(s["text"])
-        .alias("text"),
-        s["media_ref"].alias("media_ref"),
-        s["offset"].alias("offset"),
-    )
-
-
-def parse_failures_col(spans: Column) -> Column:
-    """array<string> of per-span failure codes for undecodable media refs."""
-    bad = F.filter(
-        spans, lambda s: (s["kind"] == "media") & ~valid_media_col(s["media_ref"])
-    )
-    return F.transform(
-        bad, lambda s: F.concat(F.lit("bad_media_ref:"), s["offset"].cast("string"))
-    )

@@ -7,10 +7,12 @@ The skew strategy has three layers, matching the north rule:
    is uniform because the key is a hash; the salt decorrelates consecutive
    runs. (A global cost-sort would balance better but requires a
    single-partition sort — not viable at 10^12 docs.)
-2. **Span-level fan-out for the heavy tail** (``restitch.process_spans``):
-   docs whose span count exceeds the threshold are exploded so no single
-   task owns a giant doc; this is what actually bounds the straggler, since
-   hashing cannot split one key.
+2. **One task per document, however long** (``pipeline._extract``): the
+   extraction kernel processes a giant doc in the task that holds it. A
+   span-level fan-out cannot split it either (its ``groupBy(doc_id)``
+   gathers the doc's spans into one reduce task) and costs a shuffle, so
+   the engine has none; the straggler is bounded by the kernel's linear
+   per-document work (``bench.py``'s giant-doc row, 10^5 spans).
 3. **Arrow batch bounding** (``spark.sql.execution.arrow.maxRecordsPerBatch``
    in ``session.py``): one giant doc cannot blow a Python worker's memory.
 

@@ -3,15 +3,14 @@
 Paragraph/sentence offset segmentation, language scoring, title and section
 detection need regex + offset arithmetic, which is where the reference
 leaned on lexnlp (``data_extract.py:149-186``). ``_structure_of`` is the
-per-document function; the default extraction kernel
-(``pipeline._extract_documents_arrow_native``) calls it in its own pass.
-``segment_structure`` wraps it as one ``pandas_udf`` over an assembled
-plain-text column (one Arrow batch in, one struct column out) for the
-Catalyst engine's results, and the ``*_rows`` operators emit exploded
-paragraph/sentence/section rows through ``arrowmap.map_rows``.
+per-document function; the extraction kernel (``pipeline._extract``) calls
+it in its own pass, and queries that need one row per paragraph or
+sentence explode the kernel's ``structure`` column. ``section_rows`` emits
+heading-detected section rows for any text column through
+``arrowmap.map_rows``.
 
 The segmentation rules themselves live in ``core.textseg`` / ``core.langid``
-so the oracle and the UDF share literally the same code, and they are the
+so the oracle and the kernel share literally the same code, and they are the
 only segmenter: ``_structure_of`` scans a document's paragraphs once and
 hands that list to the sentence, title and section steps, and scores every
 segment's language from one stopword index of the document.
@@ -19,10 +18,7 @@ segment's language from one stopword index of the document.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .. import arrowmap, schemas
 from ..core import langid, textseg
@@ -58,61 +54,14 @@ def _structure_of(text: str, force_language: str | None = None) -> dict:
     }
 
 
-def make_segment_structure(force_language: str | None = None):
-    @pandas_udf(schemas.STRUCTURE)
-    def segment_structure(texts: pd.Series) -> pd.DataFrame:
-        rows = [
-            _structure_of(t if t is not None else "", force_language) for t in texts
-        ]
-        return pd.DataFrame(rows)
-
-    return segment_structure
-
-
-segment_structure = make_segment_structure()
-
-
-def with_structure(
-    assembled: DataFrame,
-    text_col: str = "plain_text",
-    force_language: str | None = None,
-) -> DataFrame:
-    udf = segment_structure if force_language is None else make_segment_structure(force_language)
-    return assembled.withColumn("structure", udf(F.col(text_col)))
-
-
-def paragraph_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-paragraph segmentation: (doc_id, par_start, par_end,
-    language). A generator (``explode``) cannot host a pandas-UDF result in
-    its input expression tree, so queries that need exploded structure run
-    this row kernel instead."""
-
-    def rows(doc_id, text):
-        t = text or ""
-        lang = langid.LangIndex(t).lang
-        for s, e in textseg.paragraph_spans(t):
-            yield doc_id, s, e, lang(s, e)
-
-    return arrowmap.map_rows(
-        assembled.select("doc_id", text_col), rows,
-        "doc_id string, par_start long, par_end long, language string",
-    )
-
-
-def sentence_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-sentence segmentation (W1): (doc_id, sent_start, sent_end,
-    language)."""
-
-    def rows(doc_id, text):
-        t = text or ""
-        lang = langid.LangIndex(t).lang
-        for s, e in textseg.sentence_spans(t, textseg.paragraph_spans(t)):
-            yield doc_id, s, e, lang(s, e)
-
-    return arrowmap.map_rows(
-        assembled.select("doc_id", text_col), rows,
-        "doc_id string, sent_start long, sent_end long, language string",
-    )
+def with_structure(assembled: DataFrame) -> DataFrame:
+    """``assembled`` plus its ``structure`` column, from ``_structure_of``
+    over ``plain_text``. Exists only for the benchmark's traced long-doc cut
+    (perfbench/workloads.py), which still calls it; extraction segments
+    structure inside the kernel. Deleted with ROADMAP item 0."""
+    return arrowmap.append_column(
+        assembled, "structure", schemas.STRUCTURE,
+        lambda texts: [_structure_of(t or "") for t in texts], "plain_text")
 
 
 def section_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:

@@ -72,13 +72,13 @@ def get_spark(
         # InferFiltersFromGenerate rewrites explode(expr) into
         # Filter(size(expr)>0 AND isnotnull(expr)) + explode(expr): for a
         # computed array column the pushed filter RE-EVALUATES the entire
-        # expression per row (twice, once per conjunct) below the Generate —
-        # for the derive->ocr->restitch span chain that tripled every
-        # exploding query (extract_restitch 12.9 s -> 2.8 s at sf1.0, plan
-        # shrank from 3 inlined copies of the chain to 1). Every explode in
-        # this engine is over a computed/Arrow-produced array, where the
-        # inferred filter only costs; none scans a stored array column where
-        # it could prune I/O.
+        # expression per row below the Generate. The explodes over the
+        # derive_spans HOF array pay for it: with the rule on, spans_derive
+        # took 1.05 s vs 0.50 s and ocr_route_pages 0.52 s vs 0.26 s (sf0.1,
+        # local[4] on a 4-core host, min of 3 warm noop writes per setting,
+        # alternated); the other 57 declared queries, extraction included
+        # (its explodes read the kernel's output), moved within noise. No
+        # explode here scans a stored array column the filter could prune.
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import schemas
-from ..operators import layout, restitch
+from .. import pipeline, schemas
 
 
 def read_spans_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -27,10 +26,9 @@ def read_spans_stream(spark: SparkSession, input_dir: str) -> DataFrame:
 
 
 def extraction_stream(spans_stream: DataFrame) -> DataFrame:
-    """The batch extraction transforms bound to a stream. Only the inline
-    (shuffle-free) strategy is used — a stateless map, safe for streams."""
-    stitched = restitch.process_spans_inline(spans_stream)
-    return layout.assemble(stitched)
+    """The batch extraction kernel bound to a stream (no structure): one
+    stateless ``mapInArrow`` map, safe for streams."""
+    return pipeline.extract_from_spans(spans_stream, with_structure=False)
 
 
 def run_extraction_stream(

@@ -2,7 +2,9 @@
 declared query against its DuckDB oracle twin at one or more scale
 factors and write a compact JSON record (name -> rows/cols/hash/runtimes)
 so reviewers can audit all-59-query correctness without a judge-length
-Spark re-run.
+Spark re-run. Each query records its output's ``value_hash``, so two
+records (say, of a change and of its parent) show whether any query's
+output changed, even where the query and its oracle changed together.
 
     python tools/selfcheck.py SELFCHECK.json /root/testdata/sf0.01 /root/testdata/sf0.1
 """
@@ -42,8 +44,9 @@ def run_sf(sf_dir: str) -> dict:
         srows = [tuple(r) for r in sdf.collect()]
         scols = list(sdf.columns)
         t_spark = round(time.time() - t0, 1)
+        shash = value_hash(scols, srows)
         if name not in oq:
-            out[name] = {"rows": len(srows), "oracle": False}
+            out[name] = {"rows": len(srows), "oracle": False, "value_hash": shash}
             continue
         t0 = time.time()
         res = con.execute(oq[name])
@@ -54,7 +57,8 @@ def run_sf(sf_dir: str) -> dict:
             "rows": len(srows),
             "oracle_rows": len(drows),
             "cols_match": sorted(scols) == sorted(dcols),
-            "hash_match": value_hash(scols, srows) == value_hash(dcols, drows),
+            "hash_match": shash == value_hash(dcols, drows),
+            "value_hash": shash,
             "spark_sec": t_spark,
             "duck_sec": t_duck,
         }
