@@ -656,17 +656,12 @@ def _q_media_rotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I5: rotation CORRECTION applied to media payloads — the detect ->
     should_correct -> rotate composition (reference rotates the page image
     by the detected angle before OCR, rotation_detection.py:50-53). Angles
-    come from rotation_rows' guarded decisions (broadcast join onto the
-    media table); the pixel kernel is PIL-fenced with the deterministic
-    quarter-turn byte rotation as fallback. Output fingerprints the
-    rotated payload (lowercase hex md5) so the oracle can replay the byte
-    transform without blob-md5 support."""
-    docs = _docs(spark, sf_dir)
-    # fused form: the correction angle is computable in the media pass
-    # itself (see multimodal.rotate_media_inline) — the previous
-    # rotation_rows -> broadcast-join shape derived the corpus twice and
-    # built a 100k+-row broadcast for inline-derivable values
-    rot = multimodal.rotate_media_inline(docs)
+    are rotation_rows' guarded decisions, selected in the media pass; the
+    pixel kernel is PIL-fenced with the deterministic quarter-turn byte
+    rotation as fallback. Output fingerprints the rotated payload
+    (lowercase hex md5) so the oracle can replay the byte transform without
+    blob-md5 support."""
+    rot = multimodal.rotate_media_inline(_docs(spark, sf_dir))
     return rot.select(
         "doc_id",
         "media_ref",
@@ -826,8 +821,8 @@ def _q_sections_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_deskew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2-A4/W7: full deskew composition (glyph-angle histogram -> cluster ->
     weighted 10%-trimmed mean -> half-up snap, with reading-direction trend
-    fallback) over a deterministic synthetic glyph table; grouped Arrow
-    applyInPandas around core.deskew.detect_page_rotation.
+    fallback) over deterministic synthetic per-doc glyph arrays; one
+    mapInArrow pass runs core.deskew.detect_page_rotation per doc.
     Reference: PDFToTextWithCoordinates.java:372-451, rotation_detection.py:165-230."""
     return deskew_op.deskew_query(spark, sf_dir)
 

@@ -204,3 +204,33 @@ def test_results_commit_is_atomic_per_run(spark, base_dir):
     res = spark.read.parquet(f"{base_dir}/results")
     assert res.count() == n_total
     assert res.select("doc_id").distinct().count() == n_total
+
+
+def test_resume_over_documents_table(spark, docs_df, tmp_path, base_dir):
+    """A documents table (no ``spans`` column) goes straight to the
+    extraction kernel: integer doc ids resume against the committed string
+    ids, and the committed table equals ``extract_from_documents`` row for
+    row — so a NULL text is an empty document, not a failure."""
+    from pyspark.sql import functions as F
+
+    from text_extraction_system_spark import pipeline
+
+    path = str(tmp_path / "docs")
+    docs_df.limit(40).unionByName(
+        spark.createDataFrame([(10**9, None), (10**9 + 1, "")], "doc_id long, text string"),
+        allowMissingColumns=True,
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert dict(docs.dtypes)["doc_id"] == "bigint"
+
+    r1 = lineage.run_extraction(spark, docs.where(F.col("doc_id") % 2 == 0), base_dir,
+                                run_id="docs1")
+    r2 = lineage.run_extraction(spark, docs, base_dir, run_id="docs2")
+    assert r1["docs_processed"] + r2["docs_processed"] == 42
+    assert r2["docs_skipped"] == r1["docs_processed"] > 0
+
+    got = spark.read.parquet(f"{base_dir}/results").drop("run_id")
+    want = pipeline.extract_from_documents(docs, with_structure=False)
+    assert sorted(got.select(want.columns).collect()) == sorted(want.collect())
+    null_doc = got.where(F.col("doc_id") == str(10**9)).collect()[0]
+    assert null_doc["parse_failures"] == [] and null_doc["plain_text"] == ""

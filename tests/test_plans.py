@@ -395,7 +395,7 @@ def test_incremental_dedup_semantics(spark):
             Row(doc_id="new2", text="unrelated content about spark plans and shuffles today"),
         ]
     )
-    sigs = dedup.signature_table(committed_docs)
+    sigs = dedup.signature_rows(committed_docs)
     assert set(sigs.columns) == {"doc_id", "sig", "band", "band_sig"}
     rows = dedup.incremental_near_dup(new_docs, sigs).collect()
     got = {(r["doc_id"], r["dup_of"]): r["est_jaccard"] for r in rows}
@@ -617,10 +617,12 @@ def test_default_extraction_is_one_narrow_stage(spark, entry):
 
 
 @pytest.mark.parametrize("name", ["extract_restitch", "plain_text", "pages",
-                                  "paragraphs", "sentences", "titles"])
+                                  "paragraphs", "sentences", "titles",
+                                  "reading_order", "deskew"])
 def test_extraction_queries_are_one_kernel_pass(spark, name):
-    """Each declared extraction query runs the one kernel pass: one
-    mapInArrow, no pandas UDF, and no shuffle but ``_docs``' spread."""
+    """Each declared extraction query, and each layout query, runs one
+    kernel pass: one mapInArrow, no pandas UDF, and no shuffle but
+    ``_docs``' spread."""
     import __spark_entry__ as e
 
     plan = _plan(e.queries()[name](spark, SF))
@@ -631,8 +633,8 @@ def test_extraction_queries_are_one_kernel_pass(spark, name):
 
 def _row_kernel_operators():
     from text_extraction_system_spark.operators import (
-        coords, dedup, multimodal, readorder_op, rotation, serialize,
-        structure, tables_op, textstats, toc,
+        coords, dedup, deskew_op, multimodal, readorder_op, rotation,
+        serialize, structure, tables_op, textstats, toc,
     )
 
     import __spark_entry__ as e
@@ -662,7 +664,9 @@ def _row_kernel_operators():
         "rotate_media_inline": multimodal.rotate_media_inline,
         "detected_rotation_rows": rotation.detected_rotation_rows,
         "detect_tables": tables_op.detect_tables,
-        "synth_word_box_arrays_arrow": readorder_op.synth_word_box_arrays_arrow,
+        "reading_order_rows": readorder_op.reading_order_rows,
+        "deskew_rows": lambda d: deskew_op.deskew_rows(deskew_op.synth_glyph_arrays(
+            d.select(F.col("doc_id").cast("string").alias("doc_id")))),
         "to_msgpack_column": lambda d: serialize.to_msgpack_column(
             pipeline.extract_from_documents(d)),
         "to_protobuf_column": lambda d: serialize.to_protobuf_column(
@@ -677,11 +681,12 @@ def _row_kernel_operators():
 @pytest.mark.parametrize("name", sorted(_row_kernel_operators()))
 def test_row_kernels_cross_python_through_map_in_arrow(spark, name):
     """Every per-row Python kernel crosses the boundary through
-    ``arrowmap`` (``mapInArrow``), never a hand-rolled ``mapInPandas``."""
+    ``arrowmap`` (``mapInArrow``), never a hand-rolled ``mapInPandas`` or a
+    scalar ``pandas_udf`` (``ArrowEvalPython``)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(_row_kernel_operators()[name](docs))
     assert "MapInArrow" in plan, plan
-    assert "MapInPandas" not in plan, plan
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
 
 
 def test_with_char_boxes_keeps_every_row_in_one_pass(spark):

@@ -44,17 +44,16 @@ def test_empty_page():
 
 
 def test_operator_recovers_scrambled_tokens(spark):
-    """End-to-end: scrambled synthetic word boxes -> exact token sequence
-    (the oracle's contract, checked here against the raw tokens directly)."""
+    """End-to-end: the operator's scrambled synthetic word boxes -> exact
+    token sequence (the oracle's contract, checked here against the raw
+    tokens directly)."""
     from text_extraction_system_spark.operators import readorder_op, textstats
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     got = {
         r["doc_id"]: (r["reconstructed"], r["n_columns"])
-        for r in readorder_op.reconstruct_reading_order(
-            readorder_op.synth_word_boxes(docs)
-        ).collect()
+        for r in readorder_op.reading_order_rows(docs).collect()
     }
     exp = {
         r["doc_id"]: r["t"]

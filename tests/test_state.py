@@ -1,6 +1,6 @@
 """Durable dedup/ANN state tables (operators/state.py): partition layout,
-pruning, cross-process durability — the cluster-scale properties the
-localCheckpoint stand-ins cannot provide (reference analog: the persisted
+pruning, cross-process durability — the cluster-scale properties in-memory
+state cannot provide (reference analog: the persisted
 task registry + recovery, task_health/task_health.py:15-139)."""
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ def test_incremental_dedup_from_persisted_table(spark, tmp_path):
     )
     assert "dynamicpruning" in _plan(persisted).lower()
 
-    mem = dedup.incremental_near_dup(new, dedup.signature_table(committed_docs))
+    mem = dedup.incremental_near_dup(new, dedup.signature_rows(committed_docs))
     got = {(r["doc_id"], r["dup_of"], f"{r['est_jaccard']:.9g}")
            for r in persisted.collect()}
     want = {(r["doc_id"], r["dup_of"], f"{r['est_jaccard']:.9g}")
@@ -84,8 +84,7 @@ spark.stop()
 def test_durable_across_process_kill_restart(spark, tmp_path):
     """The table written by one process (then killed) is joined by a FRESH
     process — no shared JVM, no checkpoint blocks, no lineage — and yields
-    pairs identical to the in-process computation. This is exactly what the
-    localCheckpoint stand-in cannot survive."""
+    pairs identical to the in-process computation."""
     base = str(tmp_path / "state")
     out = str(tmp_path / "pairs")
     for script, args in ((_WRITE_SCRIPT, [base]), (_JOIN_SCRIPT, [base, out])):
@@ -100,7 +99,7 @@ def test_durable_across_process_kill_restart(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     mem = dedup.incremental_near_dup(
         docs.where(F.col("doc_id") % 3 != 0),
-        dedup.signature_table(docs.where(F.col("doc_id") % 3 == 0)),
+        dedup.signature_rows(docs.where(F.col("doc_id") % 3 == 0)),
     )
     want = {(r["doc_id"], r["dup_of"], f"{r['est_jaccard']:.9g}")
             for r in mem.collect()}

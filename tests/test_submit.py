@@ -38,7 +38,6 @@ def test_spark_submit_pyfiles_job(spark, tmp_path):
             os.path.join(repo, "job.py"),
             "--input", docs_in,
             "--output", out_dir,
-            "--input-kind", "documents",
             "--run-id", "submit_test",
         ],
         cwd=str(tmp_path),  # NOT the repo: import must resolve via --py-files

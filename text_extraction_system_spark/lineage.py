@@ -148,13 +148,19 @@ def upsert_results(
 
 def run_extraction(
     spark: SparkSession,
-    spans_df: DataFrame,
+    input_df: DataFrame,
     base_dir: str,
     run_id: str | None = None,
     fanout_threshold: int | None = None,
     num_partitions: int | None = None,
 ) -> dict:
     """Process only not-yet-committed docs; append results + lineage rows.
+
+    ``input_df`` is a spans table (it has a ``spans`` column: processed by
+    ``pipeline.extract_from_spans``) or a documents table (``doc_id``,
+    ``text``: processed by ``pipeline.extract_from_documents``, which
+    derives each document's spans in the kernel, so a NULL text is an empty
+    document, as there). Without structure either way.
 
     Returns {"run_id", "snapshot_id", "docs_processed", "docs_skipped"}.
     Re-running after a kill processes exactly the missing docs; re-running
@@ -164,7 +170,10 @@ def run_extraction(
     passes it (deleted with ROADMAP item 0).
     """
     run_id = run_id or f"run_{int(time.time() * 1000):x}"
-    snap = snapshot_id(spans_df)
+    snap = snapshot_id(input_df)
+    is_spans = "spans" in input_df.columns
+    if not is_spans:  # results key on the string doc_id the kernel emits
+        input_df = input_df.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
 
     # clear scratch dirs stranded by crashed runs: a staging dir that still
     # exists was by definition never renamed into results/ (uncommitted)
@@ -175,14 +184,14 @@ def run_extraction(
         _shutil.rmtree(stale, ignore_errors=True)
 
     committed = committed_doc_ids(spark, base_dir)
-    todo = spans_df
+    todo = input_df
     total = None
     if committed is not None:
         # one metadata-cheap count of the input; docs_skipped is derived
         # later as total - processed (processed comes from the lineage rows),
         # avoiding a second full anti-join pass just for the counter
-        total = spans_df.count()
-        todo = spans_df.join(committed, "doc_id", "left_anti")
+        total = input_df.count()
+        todo = input_df.join(committed, "doc_id", "left_anti")
 
     if num_partitions and num_partitions > 0:
         # applied AFTER the resume anti-join: the join's doc_id shuffle would
@@ -192,9 +201,8 @@ def run_extraction(
 
         todo = partitioning.cost_salted_repartition(todo, num_partitions)
 
-    results = pipeline.extract_from_spans(todo, with_structure=False).withColumn(
-        "run_id", F.lit(run_id)
-    )
+    extract = pipeline.extract_from_spans if is_spans else pipeline.extract_from_documents
+    results = extract(todo, with_structure=False).withColumn("run_id", F.lit(run_id))
 
     # in-job lineage: stamp the processing job's partition id, persist, and
     # account from the exact partitions that get committed — no read-back of

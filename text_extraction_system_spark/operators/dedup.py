@@ -8,8 +8,9 @@ construction (a band collision implies high estimated Jaccard); a skew
 guard drops pathological buckets before any bucket becomes a list. Past
 it, near-dup only moves candidate pairs: their distinct, and the joins
 that bring their two texts to the verify kernel. No operator here
-materializes an intermediate table except ``signature_table`` and the
-label rounds of ``connected_components``.
+materializes an intermediate table except the label rounds of
+``connected_components``; the committed corpus's signatures persist as
+``state.write_signature_table``.
 
 MinHash family: h_p(s) = ((2p+1) * h(s) + p) mod MINHASH_MOD over the doc's
 distinct shingles, where h(s) is an md5-prefix integer — ONE md5 per shingle,
@@ -210,25 +211,6 @@ def signature_rows(docs: DataFrame, doc_id_col: str = "doc_id",
     return counted.where(F.col("bucket_n") <= MAX_BUCKET).drop("bucket_n")
 
 
-def signature_table(docs: DataFrame, doc_id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """In-memory signature state: ``signature_rows`` lazily materialized so
-    repeated consumers (batch joins, bench reruns) pay the minhash plan once.
-    This is the single-JVM convenience path — the DURABLE form is
-    ``state.write_signature_table`` (parquet partitioned by
-    (band, sig_prefix), read back with partition pruning), which survives
-    executor loss and is resumable across jobs.
-
-    localCheckpoint rather than persist: cached-plan entries live in the
-    CacheManager until an explicit unpersist (they leak across repeated
-    invocations), while checkpoint blocks are reference-tracked and freed
-    when the DataFrame is garbage-collected; eager=False so building the
-    DataFrame runs no job. The trade-off: the blocks are unreplicated and
-    the lineage is truncated, so on a cluster an executor loss makes the
-    job unrecoverable instead of recomputable."""
-    return signature_rows(docs, doc_id_col, text_col).localCheckpoint(eager=False)
-
-
 def incremental_near_dup(
     new_docs: DataFrame,
     committed_sigs: DataFrame,
@@ -239,7 +221,7 @@ def incremental_near_dup(
 ) -> DataFrame:
     """Cross-batch near-dup: which NEW docs duplicate an already-committed
     doc. The production shape of dedup at scale — a batch is signed (narrow,
-    batch-sized) and joined against the committed signature_table; the
+    batch-sized) and joined against the committed signature rows; the
     committed corpus is never re-shingled, and within-batch pairs are the
     separate near_dup_pairs concern.
 
@@ -254,9 +236,6 @@ def incremental_near_dup(
     drives dynamic partition pruning, so a small batch touches only the
     committed partitions holding its candidate buckets instead of scanning
     the whole 10^12-doc signature table."""
-    # signature_rows, not signature_table: the batch is consumed exactly once
-    # (this join), so a checkpoint buys nothing — and its LogicalRDD boundary
-    # would hide the batch's selective filters from the DPP planner
     batch = signature_rows(new_docs, doc_id_col, text_col).select(
         F.col("doc_id").alias("new_id"),
         F.col("sig").alias("sig_new"),

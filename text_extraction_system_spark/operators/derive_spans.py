@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 
 from ..core import spec
 
-_HEX = "0123456789abcdef"
-
 
 def _media_marker(doc_id: Column, i: Column) -> Column:
     """True iff a media span follows text span i (spec.MEDIA_HEX)."""

@@ -9,11 +9,9 @@ in ``core.deskew`` / ``core.angles`` (golden-tested); this module gives it a
 distributed operator + a deterministic synthetic glyph corpus so the whole
 composition is DuckDB-oracle-checkable by the driver.
 
-Scale shape: glyphs of one page must meet in one task, so the operator is a
-single hash shuffle on the page key followed by an Arrow-batched
-``applyInPandas`` (numpy inside). At 100 TB the input would already be
-bucketed/partitioned by doc, making the exchange a no-op; there is no
-driver-side collection and group state is O(bins-per-page).
+Scale shape: a page's glyphs live in per-doc arrays, so the operator is one
+narrow ``arrowmap.map_rows`` pass (numpy inside) — no shuffle, no
+driver-side collection, and per-row state is O(glyphs-per-page).
 
 Cross-engine float discipline (the oracle must match the numpy result
 bit-for-bit): glyph angles are integers, per-page member weight totals are
@@ -30,10 +28,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import arrowmap
 from ..core import deskew
 
 _HEX = "0123456789abcdef"
@@ -47,84 +45,24 @@ def _hp(h: Column, i: int) -> Column:
     return F.instr(F.lit(_HEX), F.substring(h, i, 1))
 
 
-def synth_glyphs(docs: DataFrame) -> DataFrame:
-    """Deterministic per-doc glyph-angle / reading-trend table derived from
-    md5(doc_id) — the sandbox stand-in for the text-matrix angles a PDF
-    parser would emit (one row per glyph / per consecutive-glyph shift).
+def synth_glyph_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, angles, dxs, dys): a deterministic per-doc glyph-angle /
+    reading-trend sample derived from md5(doc_id) — the sandbox stand-in for
+    the text-matrix angles a PDF parser would emit, kept in per-doc arrays
+    (one element per glyph / per consecutive-glyph shift). Catalyst
+    expressions, replayed step by step by the ``deskew`` DuckDB oracle.
 
     Per doc (hp(i) = hex value 1..16 of md5 char i):
 
-    * trend doc (hp1 <= 2): no glyphs; TREND_SHIFTS (dx, dy) rows whose signs
-      come from md5 chars, axis chosen by (hp2-1)%4 (right/left/down/up).
-    * glyph doc: base rotation ((hp2-1)%4)*90, integer skew hp3-8 in [-7, 8];
-      five histogram bins at base+skew+d, d in -2..2 with counts
+    * trend doc (hp1 <= 2): no glyphs; TREND_SHIFTS (dx, dy) shifts whose
+      signs come from md5 chars, axis chosen by (hp2-1)%4
+      (right/left/down/up).
+    * glyph doc: base rotation ((hp2-1)%4)*90, integer skew hp3-8 in
+      [-7, 8]; five histogram bins at base+skew+d, d in -2..2 with counts
       1+(hp(4..7)-1)%8 and a balancing last bin so the total is 32 or 64
       (power of two — keeps weight shares dyadic-exact, see module doc);
       plus a decoy cluster 20 degrees away with 0-3 glyphs.
     """
-    h = F.md5("doc_id")
-    is_trend = _hp(h, 1) <= 2
-    base = ((_hp(h, 2) - 1) % 4) * 90
-    skew = _hp(h, 3) - 8
-    c4 = [(1 + (_hp(h, k) - 1) % 8) for k in (4, 5, 6, 7)]
-    tot = 32 * (1 + (_hp(h, 9) - 1) % 2)
-    c_last = tot - (c4[0] + c4[1] + c4[2] + c4[3])
-    decoy = (_hp(h, 8) - 1) % 4
-
-    def rep(cnt: Column, val: Column) -> Column:
-        # sequence(1, 0) would be a DESCENDING 2-element sequence — guard
-        return F.when(
-            cnt > 0,
-            F.transform(F.sequence(F.lit(1), cnt), lambda _: val.cast("int")),
-        ).otherwise(F.array().cast("array<int>"))
-
-    counts = dict(zip((-2, -1, 0, 1), c4))
-    counts[2] = c_last
-    angles_arr = F.concat(
-        *[rep(counts[d], base + skew + d) for d in (-2, -1, 0, 1, 2)],
-        rep(decoy, base + skew + 20),
-    )
-    angles_arr = F.when(is_trend, F.array().cast("array<int>")).otherwise(angles_arr)
-
-    dmode = (_hp(h, 2) - 1) % 4
-    shifts = F.when(
-        is_trend,
-        F.transform(
-            F.sequence(F.lit(1), F.lit(TREND_SHIFTS)),
-            lambda i: F.struct(
-                F.when(dmode == 0, _hv(h, i)).when(dmode == 1, -_hv(h, i))
-                .otherwise(F.lit(0)).cast("int").alias("dx"),
-                F.when(dmode == 2, _hv(h, i)).when(dmode == 3, -_hv(h, i))
-                .otherwise(F.lit(0)).cast("int").alias("dy"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<dx:int,dy:int>>"))
-
-    glyph_rows = docs.select(
-        "doc_id", F.explode(angles_arr).alias("angle")
-    ).select(
-        "doc_id",
-        "angle",
-        F.lit(None).cast("int").alias("dx"),
-        F.lit(None).cast("int").alias("dy"),
-    )
-    shift_rows = docs.select("doc_id", F.explode(shifts).alias("s")).select(
-        "doc_id",
-        F.lit(None).cast("int").alias("angle"),
-        F.col("s.dx").alias("dx"),
-        F.col("s.dy").alias("dy"),
-    )
-    return glyph_rows.unionByName(shift_rows)
-
-
-def synth_glyph_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, angles, dxs, dys) — the SAME synthetic glyph/shift content
-    as ``synth_glyphs`` kept in per-doc arrays: the exploded form's
-    groupBy(doc_id)+collect_list only reassembled what the synthesis had
-    just exploded, paying a 3M-row shuffle to undo its own Generate (r6;
-    guide §2.4 "remove shuffles outright"). Equivalent to collect_list on
-    the exploded rows up to element order, which ``detect_page_rotation``
-    is insensitive to (histogram + counts); pinned row-equal by pytest."""
     from .exprutil import let
 
     h = F.md5("doc_id")
@@ -137,6 +75,7 @@ def synth_glyph_arrays(docs: DataFrame) -> DataFrame:
     decoy = (_hp(h, 8) - 1) % 4
 
     def rep(cnt: Column, val: Column) -> Column:
+        # sequence(1, 0) would be a DESCENDING 2-element sequence — guard
         return F.when(
             cnt > 0,
             F.transform(F.sequence(F.lit(1), cnt), lambda _: val.cast("int")),
@@ -182,55 +121,31 @@ def _hv(h: Column, i: Column) -> Column:
     return F.instr(F.lit(_HEX), F.substring(h, (i * 7) % 32 + 1, 1)) - 8
 
 
-def _detect_batch(angles: pd.Series, dxs: pd.Series, dys: pd.Series) -> pd.DataFrame:
-    out = {"rotation": [], "skew_milli": [], "n_clusters": [], "top_count": []}
-    for ang, dx, dy in zip(angles, dxs, dys):
+def deskew_rows(arrs: DataFrame) -> DataFrame:
+    """(doc_id, angles, dxs, dys) per-doc glyph arrays (``synth_glyph_arrays``)
+    -> one deskew decision per doc: (rotation multiple of 90, residual skew
+    in milli-degrees half-up, n_clusters, dominant cluster glyph count).
+    One ``arrowmap.map_rows`` pass runs ``core.deskew.detect_page_rotation``
+    on each doc's arrays where they sit: no explode, no gather."""
+
+    def rows(doc_id, angles, dxs, dys):
         r = deskew.detect_page_rotation(
-            np.asarray(ang, dtype=np.float64),
-            np.asarray(dx, dtype=np.float64),
-            np.asarray(dy, dtype=np.float64),
+            np.asarray(angles, dtype=np.float64),
+            np.asarray(dxs, dtype=np.float64),
+            np.asarray(dys, dtype=np.float64),
         )
-        out["rotation"].append(int(r["rotation"]))
-        out["skew_milli"].append(int(math.floor(r["skew"] * 1000.0 + 0.5)))
-        out["n_clusters"].append(len(r["clusters"]))
-        out["top_count"].append(int(r["clusters"][0][1]) if r["clusters"] else 0)
-    return pd.DataFrame(out)
+        yield (
+            doc_id,
+            int(r["rotation"]),
+            int(math.floor(r["skew"] * 1000.0 + 0.5)),
+            len(r["clusters"]),
+            int(r["clusters"][0][1]) if r["clusters"] else 0,
+        )
 
-
-def deskew_pages(glyphs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """(key, angle, dx, dy) glyph rows -> one deskew decision per key:
-    (rotation multiple of 90, residual skew in milli-degrees half-up,
-    n_clusters, dominant cluster glyph count).
-
-    One hash shuffle gathers a page's glyphs into arrays (collect_list drops
-    the null filler of the other row shape), then a single Arrow-batched
-    scalar pandas UDF scores thousands of pages per Python call — far cheaper
-    than per-group applyInPandas, which pays a Python call + tiny DataFrame
-    per page. detect_page_rotation is order-insensitive (histogram + counts),
-    so collect_list's nondeterministic order is safe."""
-    # created per call: pandas_udf parses its DDL schema against the active
-    # session, which does not exist at module import time
-    detect_udf = F.pandas_udf(
-        _detect_batch, "struct<rotation:int,skew_milli:long,n_clusters:int,top_count:int>"
+    return arrowmap.map_rows(
+        arrs.select("doc_id", "angles", "dxs", "dys"), rows,
+        "doc_id string, rotation int, skew_milli bigint, n_clusters int, top_count int",
     )
-    agg = glyphs.groupBy(key).agg(
-        F.collect_list("angle").alias("angles"),
-        F.collect_list("dx").alias("dxs"),
-        F.collect_list("dy").alias("dys"),
-    )
-    res = agg.select(key, detect_udf("angles", "dxs", "dys").alias("r"))
-    return res.select(key, "r.rotation", "r.skew_milli", "r.n_clusters", "r.top_count")
-
-
-def deskew_from_arrays(arrs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Shuffle-free twin of ``deskew_pages`` for per-doc glyph ARRAYS
-    ((key, angles, dxs, dys) — e.g. ``synth_glyph_arrays``): the decision
-    UDF consumes the arrays where they sit; no explode, no gather."""
-    detect_udf = F.pandas_udf(
-        _detect_batch, "struct<rotation:int,skew_milli:long,n_clusters:int,top_count:int>"
-    )
-    res = arrs.select(key, detect_udf("angles", "dxs", "dys").alias("r"))
-    return res.select(key, "r.rotation", "r.skew_milli", "r.n_clusters", "r.top_count")
 
 
 def deskew_query(spark, sf_dir: str) -> DataFrame:
@@ -241,4 +156,4 @@ def deskew_query(spark, sf_dir: str) -> DataFrame:
     docs = spread_unsplittable(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id"
     ).select(F.col("doc_id").cast("string").alias("doc_id"))
-    return deskew_from_arrays(synth_glyph_arrays(docs))
+    return deskew_rows(synth_glyph_arrays(docs))

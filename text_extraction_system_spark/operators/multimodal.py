@@ -197,44 +197,19 @@ def _rotate_payload(b: bytes, angle: float, image_mod=None) -> bytes:
 def rotate_media_inline(docs: DataFrame) -> DataFrame:
     """Apply rotation correction to media payloads (reference I5: rotate the
     page image by the detected angle before OCR). The angle is
-    ``rotation.rotation_rows``' guarded decision, computed inline: it is a
-    pure function of the media_ref and the doc's text share, so one
-    derivation computes covers + media explode + payload + angle in a
-    single narrow pass (a broadcast join of ``rotation_rows`` onto the
-    media table derived the corpus twice and built a 100k+-row broadcast).
-    Media without a correcting angle keep applied_angle 0. The pixel
-    kernel runs PIL when importable AND the payload decodes; otherwise the
-    deterministic quarter-turn byte rotation runs — same fence as
-    resize_media. Pinned by the ``media_rotate`` oracle."""
-    from . import ocr, rotation
+    ``rotation.rotation_rows``' guarded decision, selected in the same
+    narrow pass that builds the payload: ``detected_angle`` where
+    ``should_correct``, else 0. The pixel kernel runs PIL when importable
+    AND the payload decodes; otherwise the deterministic quarter-turn byte
+    rotation runs — same fence as resize_media. Pinned by the
+    ``media_rotate`` oracle."""
+    from . import rotation
 
-    spans = ds.derive_spans(docs)
-    text_share = F.col("text_cover") / F.greatest(
-        F.col("text_cover") + F.col("media_cover"), F.lit(1).cast("bigint")
-    )
-    per_doc = spans.select(
-        "doc_id",
-        "spans",
-        ocr.text_cover_col(F.col("spans")).alias("text_cover"),
-        ocr.media_cover_col(F.col("spans")).alias("media_cover"),
-    )
-    media = per_doc.select(
-        "doc_id",
-        text_share.alias("text_share"),
-        F.explode(F.filter(F.col("spans"), lambda s: s["kind"] == "media")).alias("s"),
-    ).select(
-        "doc_id",
-        F.col("s.media_ref").alias("media_ref"),
-        "text_share",
-    )
-    snapped = rotation.snap_rotation_col(rotation.raw_angle_col(F.col("media_ref")))
-    should = (F.abs(snapped) > 0.0) & (
-        F.col("text_share") < rotation.TEXT_DOMINANCE_GUARD
-    )
-    with_angle = media.select(
+    with_angle = rotation.rotation_rows(docs).select(
         "doc_id",
         "media_ref",
-        F.when(should, snapped).otherwise(F.lit(0.0)).alias("applied_angle"),
+        F.when(F.col("should_correct"), F.col("detected_angle"))
+        .otherwise(F.lit(0.0)).alias("applied_angle"),
         media_payload_col(F.col("media_ref")).alias("payload"),
     )
 

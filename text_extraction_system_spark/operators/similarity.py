@@ -32,8 +32,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_HEX = "0123456789abcdef"
-
 
 def dot_col(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product (deterministic order)."""
@@ -357,11 +355,12 @@ def srp_banded_buckets(
         kept = exploded
     # consumers self-join this table: materialize lazily (first action) so
     # the signature + window plan runs once, not once per join branch.
-    # localCheckpoint blocks are unreplicated and lineage-truncated: fine
-    # single-JVM, but an executor loss on a cluster is unrecoverable — at
-    # cluster scale write the bucket table out partitioned by (band, bucket)
-    # instead (durable, co-located join); see dedup.signature_table for the
-    # full trade-off note.
+    # localCheckpoint rather than persist: checkpoint blocks are freed when
+    # the DataFrame is garbage-collected, while cached plans stay in the
+    # CacheManager until an explicit unpersist. The blocks are unreplicated
+    # and lineage-truncated: fine single-JVM, but an executor loss on a
+    # cluster is unrecoverable — at cluster scale write the bucket table out
+    # partitioned by (band, bucket) instead (``state.write_srp_buckets``).
     return kept.localCheckpoint(eager=False) if materialize else kept
 
 

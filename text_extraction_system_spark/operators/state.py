@@ -1,12 +1,12 @@
-"""Durable dedup/ANN state tables — the cluster-scale write-out that the
-``localCheckpoint`` stand-ins in ``dedup``/``similarity`` document.
+"""Durable dedup/ANN state tables: the committed corpus's MinHash
+signatures and SRP buckets, written ONCE as partitioned tables that every
+incoming batch joins against.
 
-At 10^12 docs the committed corpus's MinHash signatures and SRP buckets are
-written ONCE as partitioned tables and every incoming batch joins against
-them; ``localCheckpoint`` blocks are unreplicated and die with an executor,
-and are not resumable across jobs. The reference's analog of durable
-cross-run state is its persisted WebDAV task registry + recovery
-(``task_health/task_health.py:15-139``).
+At 10^12 docs neither can be recomputed per batch, and in-memory state
+(``similarity.srp_banded_buckets(materialize=True)``'s ``localCheckpoint``)
+is unreplicated, dies with an executor and is not resumable across jobs.
+The reference's analog of durable cross-run state is its persisted WebDAV
+task registry + recovery (``task_health/task_health.py:15-139``).
 
 Layout under ``base_dir`` (local-parquet twin of an Iceberg table):
 

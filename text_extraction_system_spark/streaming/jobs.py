@@ -235,8 +235,8 @@ def incremental_dedup_stream(
     No aggregation is needed on the stream: the estimate is identical for
     every band a pair collides in, so multi-band duplicates are dropped by
     watermark-bounded key dedup on (doc_id, dup_of) — state stays bounded
-    by (ingest rate x horizon). The static side is the MAX_BUCKET-guarded
-    signature_table, so a micro-batch can never join into a degenerate
+    by (ingest rate x horizon). The static side is MAX_BUCKET-guarded
+    (``dedup.signature_rows``), so a micro-batch can never join into a degenerate
     bucket. Emits (doc_id, dup_of, est_jaccard, ingest_ts)."""
     from ..operators import dedup
 

@@ -23,8 +23,6 @@ import hashlib
 
 from .core import spec
 
-_HEX = "0123456789abcdef"
-
 
 def _h(*parts: object) -> str:
     return hashlib.md5(":".join(str(p) for p in parts).encode()).hexdigest()

@@ -3,9 +3,11 @@
 Times individual declared queries with the noop sink, labeled jobs, and
 optional explain("formatted") capture.
 
-    python tools/qprof.py --sf /root/testdata/sf1.0 --repeats 3 \
-        --explain-dir plans/r06 --suffix _before ann_topk ann_ivf_topk
-    python tools/qprof.py --sf /root/testdata/sf0.1 --all-explains plans/r06 _before
+    python tools/qprof.py --repeats 5 --explain-dir /tmp/plans \
+        --suffix _before reading_order deskew
+    python tools/qprof.py --all-explains /tmp/plans _before
+
+``--sf`` defaults to the sf0.1 test corpus.
 
 Prints one JSON line: {"queries": {name: [t1, t2, ...]}, "sf": ...}.
 Runs on ``get_spark``'s default master (``local[$SPARK_GRAFT_CPUS]``) with
