@@ -369,9 +369,8 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     base = _state_dir(sf_dir)
     # committed = 2/3 of the corpus, batch = 1/3: the batch is genuinely the
-    # small side, matching incremental_near_dup's broadcast-the-batch plan
-    # (the previous demo inverted the proportions, broadcasting 2/3 of the
-    # corpus — exactly the footgun the broadcast_batch parameter guards)
+    # small side that incremental_near_dup broadcasts (the committed table
+    # is never shuffled)
     if not state.signature_table_exists(base):
         state.write_signature_table(
             docs.where(F.col("doc_id") % INCR_COMMITTED_MOD != 0), base
@@ -1658,9 +1657,11 @@ FROM hits WHERE n_hits >= 1
 """
 
     # incremental-dedup twin: the near_dup minhash machinery, split into a
-    # committed side (doc_id % INCR_COMMITTED_MOD == 0) and a batch side,
-    # MAX_BUCKET applied PER SIDE (each table is guarded independently, as
-    # signature_table guards at write time); verify = sketch estimate
+    # committed side (doc_id % INCR_COMMITTED_MOD != 0) and a batch side
+    # (= 0). Only the committed side is MAX_BUCKET-guarded, as
+    # state.write_signature_table guards it at write time; the batch side
+    # is unguarded, as in incremental_near_dup, so a wave of copies in one
+    # batch still matches; verify = sketch estimate
     _perms = spec.MINHASH_PERMS
     _rpb = spec.MINHASH_PERMS // spec.LSH_BANDS
     sql["incremental_dedup"] = f"""
@@ -1694,11 +1695,7 @@ old_k AS (
     SELECT *, count(*) OVER (PARTITION BY b, band_sig) AS bn
     FROM bands WHERE raw_id % {INCR_COMMITTED_MOD} != 0) WHERE bn <= {dedup.MAX_BUCKET}
 ),
-new_k AS (
-  SELECT * FROM (
-    SELECT *, count(*) OVER (PARTITION BY b, band_sig) AS bn
-    FROM bands WHERE raw_id % {INCR_COMMITTED_MOD} = 0) WHERE bn <= {dedup.MAX_BUCKET}
-),
+new_k AS (SELECT * FROM bands WHERE raw_id % {INCR_COMMITTED_MOD} = 0),
 cand AS (
   SELECT DISTINCT n.doc_id AS doc_id, o.doc_id AS dup_of,
          n.sig AS sig_new, o.sig AS sig_old
@@ -1843,7 +1840,7 @@ WITH bb AS (
 counted AS (
   SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bucket_n FROM bb
 ),
-kept AS (SELECT * FROM counted WHERE bucket_n <= {similarity.MAX_BUCKET})"""
+kept AS (SELECT * FROM counted WHERE bucket_n <= {dedup.MAX_BUCKET})"""
 
     # multi-probe twin: each query also probes band buckets within Hamming
     # radius MULTIPROBE_RADIUS of its own — bucket strings flipped at the
@@ -1888,8 +1885,8 @@ SELECT query_id, cand_id, cosine, rank FROM ranked WHERE rank <= 5
     # incremental-ANN twin: committed side (vec_id % MOD != 0) builds its
     # bucket table WITH the MAX_BUCKET guard (matching what
     # state.write_srp_buckets persisted); the query batch (vec_id % MOD = 0,
-    # < MAX) expands multi-probe keys with NO intra-batch guard, mirroring
-    # incremental_ann_topk's max_bucket=0 batch side.
+    # < MAX) expands multi-probe keys with NO intra-batch guard, as
+    # incremental_ann_topk probes from the kernel's unguarded band rows.
     sql["incremental_ann"] = f"""
 WITH bbc AS (
   SELECT vec_id AS vid, embedding AS vec, tt.b AS band,
@@ -1900,7 +1897,7 @@ WITH bbc AS (
 countedc AS (
   SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bucket_n FROM bbc
 ),
-keptc AS (SELECT * FROM countedc WHERE bucket_n <= {similarity.MAX_BUCKET}),
+keptc AS (SELECT * FROM countedc WHERE bucket_n <= {dedup.MAX_BUCKET}),
 q AS (
   SELECT vid AS query_id, vec AS qv, band, {_probe_bucket} AS bucket
   FROM (
@@ -2559,7 +2556,7 @@ bb AS (
 counted AS (
   SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bucket_n FROM bb
 ),
-kept AS (SELECT * FROM counted WHERE bucket_n <= {similarity.MAX_BUCKET}),
+kept AS (SELECT * FROM counted WHERE bucket_n <= {dedup.MAX_BUCKET}),
 pairs AS (
   SELECT DISTINCT a.vid AS id_a, a.vec AS va, c.vid AS id_b, c.vec AS vb
   FROM kept a JOIN kept c ON a.band = c.band AND a.bucket = c.bucket

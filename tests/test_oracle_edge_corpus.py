@@ -312,6 +312,22 @@ def test_curate_edge_corpus_reaches_each_case(spark, curate_corpus):
     assert {r["score"] for r in tfidf if r["token"] == "tokx"} == {77_000_000}
 
 
+def test_incremental_dedup_wave_parity(spark):
+    """A wave of MAX_BUCKET + 1 identical new docs (doc_id % 3 == 0), each
+    a near-copy of the one committed doc: the batch side's bucket is over
+    the cap, and both engines still match every wave doc (only the
+    committed side is guarded)."""
+    from text_extraction_system_spark.operators import dedup
+
+    rows = [(1, _EN, "en", "s")] + [
+        (3 * (i + 1), _EN + " again", "en", "s") for i in range(dedup.MAX_BUCKET + 1)
+    ]
+    d, con = _corpus(spark, rows)
+    got = entry.queries()["incremental_dedup"](spark, d).collect()
+    assert len(got) == dedup.MAX_BUCKET + 1 and {r["dup_of"] for r in got} == {"1"}
+    _assert_parity(spark, con, d, "incremental_dedup")
+
+
 def test_decontaminate_eval_without_shingles(spark):
     """An eval split whose docs have no 3-shingle (empty, NULL, two words)
     contaminates nothing: zero rows, as in the oracle."""

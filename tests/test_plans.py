@@ -124,17 +124,17 @@ def test_srp_bucket_space_and_skew_guard(spark):
     per-band bucket space is 2^16 (not the round-1 flat 16-bucket table),
     and after the MAX_BUCKET guard no (band, bucket) key exceeds the cap —
     the properties that bound the self-join at 10^9+ vectors."""
-    from text_extraction_system_spark.operators import similarity
+    from text_extraction_system_spark.operators import dedup, similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     bb = similarity.srp_banded_buckets(emb, n_bands=2, planes_per_band=16)
     rows = bb.groupBy("band", "bucket").count().collect()
     assert all(len(r["bucket"]) == 16 for r in rows)  # 2^16-wide key space
-    assert all(r["count"] <= similarity.MAX_BUCKET for r in rows)
+    assert all(r["count"] <= dedup.MAX_BUCKET for r in rows)
     # defaults are banded too, with the same guarantee
     bb_def = similarity.srp_banded_buckets(emb)
     counts = bb_def.groupBy("band", "bucket").count()
-    assert counts.agg(F.max("count")).collect()[0][0] <= similarity.MAX_BUCKET
+    assert counts.agg(F.max("count")).collect()[0][0] <= dedup.MAX_BUCKET
     assert similarity.N_BANDS * similarity.PLANES_PER_BAND >= 16
 
 
@@ -149,6 +149,29 @@ def test_srp_candidates_subset_of_all_pairs_and_verified(spark):
     assert len(seen) == len(pairs)  # no duplicate pairs from the band union
     assert all(r["cosine"] >= 0.3 for r in pairs)
     assert all(r["id_a"] < r["id_b"] for r in pairs)
+
+
+@pytest.mark.parametrize("query", ["ann_lsh_topk", "emb_near_dup"])
+def test_srp_query_runs_the_kernel_once(spark, monkeypatch, query):
+    """Both SRP queries read their bucket table twice (``srp_lsh_topk``'s
+    query and candidate sides, ``srp_candidate_pairs``' self-join) through
+    one lazy localCheckpoint (``similarity._bucket_table``): the SRP kernel
+    is one MapInPandas, in the checkpointed plan, and the query's own plan
+    holds none (without the checkpoint ``ann_lsh_topk`` holds two)."""
+    import __spark_entry__ as e
+
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    checkpointed = []
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    plan = _plan(e.queries()[query](spark, SF))
+    assert "MapInPandas" not in plan, plan
+    assert [p.count("MapInPandas") for p in checkpointed] == [1], checkpointed
 
 
 def _inertia(X, cents) -> float:

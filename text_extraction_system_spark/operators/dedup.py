@@ -12,6 +12,11 @@ materializes an intermediate table except the label rounds of
 ``connected_components``; the committed corpus's signatures persist as
 ``state.write_signature_table``.
 
+The skew guard (``guard_buckets``) serves MinHash here and SRP in
+``similarity``, with one MAX_BUCKET. ``_band_matches`` is the one
+cross-batch matcher, run by ``incremental_near_dup`` and the stream
+``incremental_dedup_stream``.
+
 MinHash family: h_p(s) = ((2p+1) * h(s) + p) mod MINHASH_MOD over the doc's
 distinct shingles, where h(s) is an md5-prefix integer — ONE md5 per shingle,
 PERMS cheap affine maps. Deterministic, RNG-free, reproducible in any engine
@@ -29,8 +34,9 @@ from pyspark.sql.window import Window
 from .. import arrowmap
 from ..core import spec
 
-#: buckets larger than this are dropped as degenerate (boilerplate shingles);
-#: a bucket of b docs yields b^2 pairs — this caps join blowup at scale
+#: LSH buckets (MinHash bands and SRP bands alike) larger than this are
+#: dropped as degenerate (boilerplate shingles, zero-ish embeddings); a
+#: bucket of b rows yields b^2 pairs — this caps join blowup at scale
 MAX_BUCKET = 64
 
 
@@ -115,20 +121,31 @@ def _signature_band_rows(
     )
 
 
+def guard_buckets(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The LSH skew guard of both families: ``rows`` whose bucket (the
+    ``keys`` columns) holds at most MAX_BUCKET rows, as ``count(*) over
+    (keys)``. Its shuffle partitions by the bucket keys, so a grouping on
+    them downstream (``near_dup_pairs``) needs no second exchange."""
+    counted = rows.withColumn(
+        "bucket_n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    )
+    return counted.where(F.col("bucket_n") <= MAX_BUCKET).drop("bucket_n")
+
+
 def near_dup_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one LSH band,
     verified with exact Jaccard over their distinct shingles.
 
-    Plan: ``signature_rows`` (band rows behind the skew guard ``count(*)
-    over (band, band_sig) <= MAX_BUCKET``) -> ``collect_list`` of each
-    bucket's ids on the same keys (the window's shuffle serves both; the
-    guard runs first, so a hot bucket never becomes a list) -> the
-    in-bucket pairs -> distinct. Only the candidates are verified: each
-    pair is joined to its two docs' texts and one Arrow kernel computes
-    ``|A & B| / |A | B|`` over ``_shingles``, an integer ratio in IEEE
-    double, as the oracle does. Nothing is materialized, and no shingle
-    set is built for a doc that is in no pair."""
+    Plan: ``signature_rows`` (band rows behind ``guard_buckets`` on
+    (band, band_sig)) -> ``collect_list`` of each bucket's ids on the same
+    keys (the window's shuffle serves both; the guard runs first, so a hot
+    bucket never becomes a list) -> the in-bucket pairs -> distinct. Only
+    the candidates are verified: each pair is joined to its two docs'
+    texts and one Arrow kernel computes ``|A & B| / |A | B|`` over
+    ``_shingles``, an integer ratio in IEEE double, as the oracle does.
+    Nothing is materialized, and no shingle set is built for a doc that is
+    in no pair."""
     buckets = (
         signature_rows(docs, doc_id_col, text_col)
         .groupBy("band", "band_sig")
@@ -201,14 +218,51 @@ def contamination_report(
 def signature_rows(docs: DataFrame, doc_id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """(doc_id, sig, band, band_sig) — the dedup state of a corpus, as a
-    plan (no materialization). Degenerate buckets are dropped (MAX_BUCKET),
-    so batch joins against the rows are bounded. Signatures come from the
-    Arrow kernel (``_signature_band_rows``)."""
-    exploded = _signature_band_rows(docs, doc_id_col, text_col)
-    counted = exploded.withColumn(
-        "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "band_sig"))
+    plan (no materialization): the Arrow kernel's band rows
+    (``_signature_band_rows``) behind ``guard_buckets``, so batch joins
+    against the rows are bounded."""
+    return guard_buckets(
+        _signature_band_rows(docs, doc_id_col, text_col), ["band", "band_sig"]
     )
-    return counted.where(F.col("bucket_n") <= MAX_BUCKET).drop("bucket_n")
+
+
+def _band_matches(band_rows: DataFrame, committed_sigs: DataFrame,
+                  est_threshold: float, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, dup_of, est_jaccard, *carry), one row per band in which a
+    ``_signature_band_rows`` row shares its bucket with a committed doc and
+    the MinHash estimate (the fraction of agreeing signature components)
+    reaches ``est_threshold``; a pair has the same estimate on every band.
+
+    When ``committed_sigs`` is the persisted table (it carries the
+    ``sig_prefix`` partition column — ``state.read_signature_table``), the
+    join also keys on (band, sig_prefix): a broadcast batch side's key set
+    then drives dynamic partition pruning, so a small batch reads only the
+    committed partitions holding its candidate buckets."""
+    keys = ["band", "band_sig"]
+    if "sig_prefix" in committed_sigs.columns:
+        from . import state
+
+        band_rows = band_rows.withColumn(
+            "sig_prefix", state.sig_prefix_col(F.col("band_sig"))
+        )
+        keys = ["band", "sig_prefix", "band_sig"]
+    old = committed_sigs.select(
+        F.col("doc_id").alias("dup_of"), F.col("sig").alias("sig_old"), *keys
+    )
+    est = (
+        F.size(
+            F.filter(
+                F.zip_with(F.col("sig"), F.col("sig_old"), lambda a, b: a == b),
+                lambda x: x,
+            )
+        )
+        / F.size(F.col("sig"))
+    ).cast("double")
+    return (
+        band_rows.join(old, keys)
+        .select("doc_id", "dup_of", est.alias("est_jaccard"), *carry)
+        .where(F.col("est_jaccard") >= est_threshold)
+    )
 
 
 def incremental_near_dup(
@@ -217,7 +271,6 @@ def incremental_near_dup(
     doc_id_col: str = "doc_id",
     text_col: str = "text",
     est_threshold: float = 0.5,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Cross-batch near-dup: which NEW docs duplicate an already-committed
     doc. The production shape of dedup at scale — a batch is signed (narrow,
@@ -230,61 +283,15 @@ def incremental_near_dup(
     10^12 committed docs the raw shingle sets are not retained. Returns
     (doc_id, dup_of, est_jaccard) with doc_id from the new batch.
 
-    When ``committed_sigs`` is the persisted table (it carries the
-    ``sig_prefix`` partition column — ``state.read_signature_table``), the
-    join also keys on (band, sig_prefix): the batch side's key set then
-    drives dynamic partition pruning, so a small batch touches only the
-    committed partitions holding its candidate buckets instead of scanning
-    the whole 10^12-doc signature table."""
-    batch = signature_rows(new_docs, doc_id_col, text_col).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("sig").alias("sig_new"),
-        "band",
-        "band_sig",
-    )
-    keys = ["band", "band_sig"]
-    if "sig_prefix" in committed_sigs.columns:
-        from . import state
-
-        batch = batch.withColumn("sig_prefix", state.sig_prefix_col(F.col("band_sig")))
-        keys = ["band", "sig_prefix", "band_sig"]
-    old = committed_sigs.select(
-        F.col("doc_id").alias("dup_of"),
-        F.col("sig").alias("sig_old"),
-        *keys,
-    )
-    # in the production shape the batch is the small side (a day's arrivals
-    # vs the whole committed corpus): broadcasting it means the committed
-    # table is never shuffled, and — against the persisted table — dynamic
-    # partition pruning drops committed partitions outside the batch's
-    # (band, sig_prefix) key set before any signature file is read (spark's
-    # DPP is broadcast-reuse-only by default). The hint bypasses
-    # autoBroadcastJoinThreshold, so it is caller-controlled: pass
-    # broadcast_batch=False for a bulk-reprocess batch that rivals the
-    # committed corpus — the join then shuffles both sides instead of
-    # collecting an unbounded batch to the driver
-    bside = F.broadcast(batch) if broadcast_batch else batch
-    cand = (
-        bside.join(old, keys)
-        .select("new_id", "dup_of", "sig_new", "sig_old")
-        .groupBy("new_id", "dup_of")
-        .agg(F.first("sig_new").alias("sig_new"), F.first("sig_old").alias("sig_old"))
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_new"), F.col("sig_old"), lambda a, b: a == b),
-                lambda x: x,
-            )
-        )
-        / F.size(F.col("sig_new"))
-    ).cast("double")
-    return (
-        cand.select(
-            F.col("new_id").alias("doc_id"), "dup_of", est.alias("est_jaccard")
-        )
-        .where(F.col("est_jaccard") >= est_threshold)
-    )
+    The batch's band rows (``_signature_band_rows``, no skew guard: the
+    committed table was guarded when written, which bounds candidate
+    volume, and a wave of copies inside one batch must still match) are
+    broadcast — the committed table is never shuffled, and against the
+    persisted table the batch's keys prune its partitions — and matched by
+    ``_band_matches``, the core ``incremental_dedup_stream`` runs too; a
+    pair colliding in several bands is kept once."""
+    batch = F.broadcast(_signature_band_rows(new_docs, doc_id_col, text_col))
+    return _band_matches(batch, committed_sigs, est_threshold).distinct()
 
 
 #: window width (in tokens) for cross-document duplicated-window scoring —

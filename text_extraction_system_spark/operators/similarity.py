@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import dedup
+
 
 def dot_col(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product (deterministic order)."""
@@ -239,11 +241,6 @@ def brute_force_topk(
 N_BANDS = 4
 PLANES_PER_BAND = 8
 
-#: (band, bucket) keys holding more than this many vectors are dropped as
-#: degenerate (e.g. zero-ish embeddings all hashing together) — mirrors
-#: dedup.MAX_BUCKET; a bucket of b vectors costs b^2 join rows
-MAX_BUCKET = 64
-
 #: exact-cosine acceptance threshold for embedding near-duplicate pairs —
 #: shared with the DuckDB oracle (interpolated there, never hardcoded)
 NEAR_DUP_THRESHOLD = 0.3
@@ -271,10 +268,9 @@ def _srp_band_rows(
     dim: int,
     id_col: str,
     vec_col: str,
-    keep_vec: bool,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(vid[, vec], *carry, band, bucket) via one numpy Arrow pass: per
+    """(vid, vec, *carry, band, bucket) via one numpy Arrow pass: per
     band, the sign bits of that band's planes (global plane index
     band*planes_per_band + j), bit p = sign(vec . plane_p). The plane dots
     are ``_fold_dots`` folds, which the DuckDB oracle replays, so every
@@ -310,12 +306,10 @@ def _srp_band_rows(
             ]
             yield out
 
-    cols = [F.col(id_col).alias("vid")]
-    if keep_vec:
-        cols.append(F.col(vec_col).alias("vec"))
     # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
     return embeddings.select(*sel).mapInPandas(gen, schema=out_schema).select(
-        *cols, *carry, F.posexplode("buckets").alias("band", "bucket")
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), *carry,
+        F.posexplode("buckets").alias("band", "bucket"),
     )
 
 
@@ -326,42 +320,33 @@ def srp_banded_buckets(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_vec: bool = False,
-    materialize: bool = True,
-    max_bucket: int | None = None,
 ) -> DataFrame:
-    """(vid, band, bucket[, vec]) rows, degenerate buckets dropped
-    (``max_bucket``, default MAX_BUCKET; pass ``max_bucket=0`` to skip the
-    guard AND its count-window shuffle — right for a QUERY batch, whose
-    intra-batch bucket sizes say nothing about committed-side candidate
-    volume).
+    """(vid, vec, band, bucket) rows behind the LSH skew guard
+    (``dedup.guard_buckets`` on (band, bucket), ``dedup.MAX_BUCKET``), as a
+    plan. The vector comes back from the kernel anyway; a caller that
+    selects past it prunes it below the guard's window.
 
     The bucket signature is one narrow numpy pass (``_srp_band_rows``); at
     10^12 rows this is the table you would materialize once and
     bucket-partition by (band, bucket) — that durable form is
     ``state.write_srp_buckets`` (parquet partitioned by (band,
-    bucket_prefix)), which passes ``materialize=False`` to get the raw plan
-    for its write."""
-    exploded = _srp_band_rows(
-        embeddings, n_bands, planes_per_band, dim, id_col, vec_col, keep_vec
+    bucket_prefix))."""
+    return dedup.guard_buckets(
+        _srp_band_rows(embeddings, n_bands, planes_per_band, dim, id_col, vec_col),
+        ["band", "bucket"],
     )
-    limit = MAX_BUCKET if max_bucket is None else max_bucket
-    if limit:
-        counted = exploded.withColumn(
-            "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-        )
-        kept = counted.where(F.col("bucket_n") <= limit).drop("bucket_n")
-    else:
-        kept = exploded
-    # consumers self-join this table: materialize lazily (first action) so
-    # the signature + window plan runs once, not once per join branch.
-    # localCheckpoint rather than persist: checkpoint blocks are freed when
-    # the DataFrame is garbage-collected, while cached plans stay in the
-    # CacheManager until an explicit unpersist. The blocks are unreplicated
-    # and lineage-truncated: fine single-JVM, but an executor loss on a
-    # cluster is unrecoverable — at cluster scale write the bucket table out
-    # partitioned by (band, bucket) instead (``state.write_srp_buckets``).
-    return kept.localCheckpoint(eager=False) if materialize else kept
+
+
+def _bucket_table(bb: DataFrame) -> DataFrame:
+    """``bb`` (``srp_banded_buckets`` rows) as a lazy ``localCheckpoint``
+    for the consumers that read the bucket table twice (the self-join of
+    ``srp_candidate_pairs``, ``srp_lsh_topk``'s query and candidate
+    sides): the SRP kernel and the guard window run once, at the first
+    action, and the small checkpointed table is broadcast into the join.
+    Unlike a persist, checkpoint blocks are freed when the DataFrame is
+    garbage-collected. They are unreplicated: an executor loss on a
+    cluster is unrecoverable — there, serve ``state.write_srp_buckets``."""
+    return bb.localCheckpoint(eager=False)
 
 
 def srp_candidate_pairs(
@@ -373,8 +358,12 @@ def srp_candidate_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs colliding in at least one band —
-    the union of per-band bucket self-joins."""
-    bb = srp_banded_buckets(embeddings, n_bands, planes_per_band, dim, id_col, vec_col)
+    the union of per-band self-joins of the checkpointed bucket table."""
+    bb = _bucket_table(
+        srp_banded_buckets(
+            embeddings, n_bands, planes_per_band, dim, id_col, vec_col
+        ).select("vid", "band", "bucket")
+    )
     a = bb.select("band", "bucket", F.col("vid").alias("id_a"))
     b = bb.select("band", "bucket", F.col("vid").alias("id_b"))
     return (
@@ -413,8 +402,9 @@ def srp_near_dup_pairs(
 #: each query also probes band buckets within this bit distance of its own.
 #: Radius 2 over 8-plane bands = 37 bucket keys per band per query — the
 #: probe fan-out multiplies only the (tiny, broadcast) QUERY side; candidate
-#: volume stays bounded by MAX_BUCKET per probed key. Measured on the sf0.01
-#: corpus (weak neighbors, top-5 cosine 0.25-0.49): recall@5 0.09 -> 0.74.
+#: volume stays bounded by dedup.MAX_BUCKET per probed key. Measured on the
+#: sf0.01 corpus (weak neighbors, top-5 cosine 0.25-0.49): recall@5 0.09 ->
+#: 0.74.
 MULTIPROBE_RADIUS = 2
 
 
@@ -455,9 +445,9 @@ def _flip_bits_col(bucket: Column, positions: tuple[int, ...], n_bits: int) -> C
 
 
 def _probe_keys(bb: DataFrame, planes_per_band: int, multiprobe: int,
-                probe_budget: int | None) -> DataFrame:
-    """(query_id, band, bucket, qv): each row of a ``keep_vec`` bucket
-    table expanded to its multi-probe keys per band, nearest-first
+                probe_budget: int | None, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(query_id, band, bucket, qv, *carry): each row of a bucket table
+    expanded to its multi-probe keys per band, nearest-first
     (``_probe_masks``)."""
     masks = _probe_masks(planes_per_band, multiprobe, probe_budget)
     return bb.select(
@@ -469,6 +459,7 @@ def _probe_keys(bb: DataFrame, planes_per_band: int, multiprobe: int,
             )
         ).alias("bucket"),
         F.col("vec").alias("qv"),
+        *carry,
     )
 
 
@@ -500,8 +491,8 @@ def srp_lsh_topk(
     every probe within the radius (the default 8-plane/radius-2 setup: 37).
     Recall degrades gracefully as the budget shrinks (pinned by
     tests/test_recall.py)."""
-    bb = srp_banded_buckets(
-        embeddings, n_bands, planes_per_band, dim, id_col, vec_col, keep_vec=True
+    bb = _bucket_table(
+        srp_banded_buckets(embeddings, n_bands, planes_per_band, dim, id_col, vec_col)
     )
     qs = _probe_keys(bb.where(F.col("vid") < n_queries), planes_per_band,
                      multiprobe, probe_budget)
@@ -518,6 +509,40 @@ def srp_lsh_topk(
     return _rank_topk(scored, k)
 
 
+def _committed_candidates(qs: DataFrame, committed_buckets: DataFrame,
+                          carry: tuple[str, ...] = ()) -> DataFrame:
+    """(query_id, cand_id, qv, *carry): one row per probe key of ``qs``
+    (``_probe_keys`` output) that hits a committed vector other than the
+    query. When the committed table carries the ``bucket_prefix`` partition
+    column (``state.read_srp_buckets``), the probes key on it too, so a
+    broadcast query side drives dynamic partition pruning."""
+    keys = ["band", "bucket"]
+    if "bucket_prefix" in committed_buckets.columns:
+        from . import state
+
+        qs = qs.withColumn("bucket_prefix", state.bucket_prefix_col(F.col("bucket")))
+        keys = ["band", "bucket_prefix", "bucket"]
+    old = committed_buckets.select(F.col("vid").alias("cand_id"), *keys)
+    return (
+        qs.join(old, keys)
+        .where(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", "qv", *carry)
+    )
+
+
+def _cosine_scored(cands: DataFrame, committed_vecs: DataFrame, id_col: str,
+                   vec_col: str, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(query_id, cand_id, cosine, *carry): each candidate joined to its
+    committed vector and scored with ``cosine_col``."""
+    vecs = committed_vecs.select(
+        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+    )
+    return cands.join(vecs, "cand_id").select(
+        "query_id", "cand_id", cosine_col(F.col("qv"), F.col("cv")).alias("cosine"),
+        *carry,
+    )
+
+
 def incremental_ann_topk(
     new_vecs: DataFrame,
     committed_buckets: DataFrame,
@@ -530,7 +555,6 @@ def incremental_ann_topk(
     vec_col: str = "embedding",
     multiprobe: int = MULTIPROBE_RADIUS,
     probe_budget: int | None = None,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Serve ANN queries for a NEW batch of vectors against the COMMITTED
     corpus's PERSISTED SRP bucket table — the ANN analog of
@@ -539,50 +563,34 @@ def incremental_ann_topk(
     (band, bucket_prefix)) and every arriving batch probes them; the
     committed vectors are never re-hashed.
 
-    The batch side computes its own band buckets (one narrow Arrow pass —
-    NO intra-batch skew window: the committed table already dropped its
+    The batch side is the kernel's band rows (``_srp_band_rows`` — NO
+    intra-batch skew window: the committed table already dropped its
     degenerate buckets at write time, which is the guard that bounds
-    candidate volume) and expands them to ``multiprobe``/``probe_budget``
-    keys per band (nearest-first order, see ``_probe_masks``). When the
-    committed table carries the ``bucket_prefix`` partition column, probes
-    also key on it, so the (broadcast) batch's key set drives dynamic
-    partition pruning — a small batch touches only the committed partitions
-    holding its probed buckets (plan-asserted by tests/test_plans.py).
+    candidate volume), expanded to ``multiprobe``/``probe_budget`` keys
+    per band (nearest-first order, see ``_probe_masks``) and broadcast
+    into ``_committed_candidates``: against the persisted table its key
+    set drives dynamic partition pruning, so a small batch touches only
+    the committed partitions holding its probed buckets (plan-asserted by
+    tests/test_state.py).
 
     Candidate (query, cand) pairs are deduped across bands/probes BEFORE
-    vectors are fetched, then exact cosine is computed from one hash join
-    against ``committed_vecs`` (broadcast candidate side: bounded by
-    queries x probes x bucket width). Returns (query_id, cand_id, cosine,
-    rank<=k). ``broadcast_batch=False`` drops the broadcast hints (and with
-    them DPP) for the rare bulk-reprocess case where the batch rivals the
-    committed corpus."""
-    batch = srp_banded_buckets(
-        new_vecs, n_bands, planes_per_band, dim, id_col, vec_col,
-        keep_vec=True, materialize=False, max_bucket=0,
+    vectors are fetched, then ``_cosine_scored`` computes the exact cosine
+    from one hash join against ``committed_vecs`` (broadcast candidate
+    side: bounded by queries x probes x bucket width). The streaming job
+    ``incremental_ann_stream`` runs the same two steps. Returns (query_id,
+    cand_id, cosine, rank<=k)."""
+    qs = _probe_keys(
+        _srp_band_rows(new_vecs, n_bands, planes_per_band, dim, id_col, vec_col),
+        planes_per_band, multiprobe, probe_budget,
     )
-    qs = _probe_keys(batch, planes_per_band, multiprobe, probe_budget)
-    keys = ["band", "bucket"]
-    if "bucket_prefix" in committed_buckets.columns:
-        from . import state
-
-        qs = qs.withColumn("bucket_prefix", state.bucket_prefix_col(F.col("bucket")))
-        keys = ["band", "bucket_prefix", "bucket"]
-    old = committed_buckets.select(F.col("vid").alias("cand_id"), *keys)
-    qside = F.broadcast(qs) if broadcast_batch else qs
     cands = (
-        qside.join(old, keys)
-        .where(F.col("cand_id") != F.col("query_id"))
+        _committed_candidates(F.broadcast(qs), committed_buckets)
         .groupBy("query_id", "cand_id")
         .agg(F.first("qv").alias("qv"))
     )
-    vecs = committed_vecs.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+    return _rank_topk(
+        _cosine_scored(F.broadcast(cands), committed_vecs, id_col, vec_col), k
     )
-    cside = F.broadcast(cands) if broadcast_batch else cands
-    scored = cside.join(vecs, "cand_id").select(
-        "query_id", "cand_id", cosine_col(F.col("qv"), F.col("cv")).alias("cosine")
-    )
-    return _rank_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,7 @@ signatures and SRP buckets, written ONCE as partitioned tables that every
 incoming batch joins against.
 
 At 10^12 docs neither can be recomputed per batch, and in-memory state
-(``similarity.srp_banded_buckets(materialize=True)``'s ``localCheckpoint``)
+(the bucket table ``similarity._bucket_table`` holds as a ``localCheckpoint``)
 is unreplicated, dies with an executor and is not resumable across jobs.
 The reference's analog of durable cross-run state is its persisted WebDAV
 task registry + recovery (``task_health/task_health.py:15-139``).
@@ -92,29 +92,17 @@ def signature_table_exists(base_dir: str) -> bool:
     return os.path.exists(os.path.join(base_dir, _SIG_DIR, "_SUCCESS"))
 
 
-def write_srp_buckets(
-    embeddings: DataFrame,
-    base_dir: str,
-    n_bands: int | None = None,
-    planes_per_band: int | None = None,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Materialize the corpus's SRP band buckets, partitioned by
-    (band, bucket_prefix). Returns the table path."""
+def write_srp_buckets(embeddings: DataFrame, base_dir: str) -> str:
+    """Materialize the corpus's SRP band buckets (``vec_id``/``embedding``
+    columns, the default bands), partitioned by (band, bucket_prefix).
+    Returns the table path."""
     from . import similarity
 
-    kw = {}
-    if n_bands is not None:
-        kw["n_bands"] = n_bands
-    if planes_per_band is not None:
-        kw["planes_per_band"] = planes_per_band
     path = os.path.join(base_dir, _SRP_DIR)
-    rows = similarity.srp_banded_buckets(
-        embeddings, dim=dim, id_col=id_col, vec_col=vec_col,
-        materialize=False, **kw
-    ).withColumn("bucket_prefix", bucket_prefix_col(F.col("bucket")))
+    rows = similarity.srp_banded_buckets(embeddings).select(
+        "vid", "bucket", "band",
+        bucket_prefix_col(F.col("bucket")).alias("bucket_prefix"),
+    )
     rows.write.mode("overwrite").partitionBy("band", "bucket_prefix").parquet(path)
     return path
 

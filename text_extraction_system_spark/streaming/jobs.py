@@ -1,4 +1,4 @@
-"""Structured Streaming twins of the batch pipeline and event operators.
+"""Structured Streaming jobs over the batch pipeline and event operators.
 
 The reference is an async task queue, not a stream processor (SURVEY.md
 section 2.10) — batch is the canonical mode. These jobs exist for the
@@ -6,6 +6,12 @@ continuous-ingest deployment shape: the same extraction transforms bound to
 ``readStream``/``writeStream``, with watermarked windowed aggregates for the
 event operators. Tested with file sources + ``Trigger.AvailableNow`` so runs
 are hermetic and deterministic.
+
+The incremental dedup and ANN streams are not copies of their batch
+operators: they call the same kernels and candidate cores
+(``dedup._band_matches``; ``similarity._probe_keys``,
+``_committed_candidates`` and ``_cosine_scored``) and add only the
+watermark-bounded key dedup a continuous emitter needs.
 
 Scale notes: the extraction stream is stateless (one row in, one row out), so
 it scales exactly like the batch job. The windowed aggregates keep state
@@ -80,16 +86,10 @@ SESSION_OUT_SCHEMA = (
 )
 
 
-def sessionize_stream(
-    events_stream: DataFrame, gap_sec: int = 1800, idle_timeout: bool = False
-) -> DataFrame:
+def sessionize_stream(events_stream: DataFrame, gap_sec: int = 1800) -> DataFrame:
     """Custom stateful operator: gap-based sessionization with
     ``applyInPandasWithState`` (per-user GroupState). A session closes when
-    the gap since its last event exceeds ``gap_sec``; with
-    ``idle_timeout=True`` a processing-time timeout additionally flushes
-    sessions for users that stop sending (continuous deployments ONLY —
-    a pending timeout keeps scheduling micro-batches, so an
-    ``availableNow`` drain would never terminate).
+    the gap since its last event exceeds ``gap_sec``.
 
     State is one (start, last, n) triple per user — bounded, no event buffer.
     """
@@ -101,33 +101,22 @@ def sessionize_stream(
     def fn(key: tuple, pdfs, state: GroupState):
         (user_id,) = key
         rows = []
-        if state.hasTimedOut:
-            if state.exists:
-                s, last, n = state.get
-                rows.append((user_id, s, last, n))
-                state.remove()
-        else:
-            us = []
-            for pdf in pdfs:
-                us.extend(int(v) for v in (pdf["ts"].astype("int64") // 1000))
-            us.sort()
-            if state.exists:
-                cur = list(state.get)
+        us = []
+        for pdf in pdfs:
+            us.extend(int(v) for v in (pdf["ts"].astype("int64") // 1000))
+        us.sort()
+        cur = list(state.get) if state.exists else None
+        for t in us:
+            if cur is None:
+                cur = [t, t, 0]
+            if t - cur[1] > gap_us:
+                rows.append((user_id, cur[0], cur[1], cur[2]))
+                cur = [t, t, 1]
             else:
-                cur = None
-            for t in us:
-                if cur is None:
-                    cur = [t, t, 0]
-                if t - cur[1] > gap_us:
-                    rows.append((user_id, cur[0], cur[1], cur[2]))
-                    cur = [t, t, 1]
-                else:
-                    cur[1] = max(cur[1], t)
-                    cur[2] += 1
-            if cur is not None:
-                state.update(tuple(cur))
-                if idle_timeout:
-                    state.setTimeoutDuration(gap_sec * 1000)
+                cur[1] = max(cur[1], t)
+                cur[2] += 1
+        if cur is not None:
+            state.update(tuple(cur))
         yield pd.DataFrame(
             rows, columns=["user_id", "session_start_us", "session_end_us", "n_events"]
         )
@@ -140,11 +129,7 @@ def sessionize_stream(
             outputStructType=SESSION_OUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if idle_timeout
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -169,27 +154,32 @@ def run_windowed_counts_stream(
     )
 
 
+def _first_within(stream: DataFrame, ts_col: str, watermark: str,
+                  keys: list[str]) -> DataFrame:
+    """The first row of each ``keys`` value within the watermark horizon on
+    ``ts_col`` (cast to timestamp): ``dropDuplicatesWithinWatermark`` keeps
+    state for (ingest rate x horizon), not for the corpus."""
+    return (
+        stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        .withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(keys)
+    )
+
+
 def dedup_stream(
     docs_stream: DataFrame,
     ts_col: str = "ingest_ts",
     watermark: str = "1 hour",
     text_col: str = "text",
 ) -> DataFrame:
-    """Streaming exact dedup — the continuous-ingest twin of the batch
-    hash-groupBy dedup: first occurrence of each content hash within the
-    watermark horizon passes, later duplicates are dropped.
-
-    ``dropDuplicatesWithinWatermark`` keys state on the md5 content hash and
-    expires it past the watermark, so state is bounded by (ingest rate x
-    horizon), not corpus size — the only formulation that survives an
-    unbounded stream. Exact-once global dedup across all history is the
-    batch job's task (or a MERGE against the committed table)."""
-    hashed = docs_stream.withColumn("content_hash", F.md5(F.col(text_col))).withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
-    )
-    return hashed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
-    )
+    """Streaming exact dedup — the continuous-ingest form of the batch
+    hash-groupBy dedup: first occurrence of each md5 content hash within
+    the watermark horizon passes, later duplicates are dropped
+    (``_first_within``) — the only formulation that survives an unbounded
+    stream. Exact-once global dedup across all history is the batch job's
+    task (or a MERGE against the committed table)."""
+    hashed = docs_stream.withColumn("content_hash", F.md5(F.col(text_col)))
+    return _first_within(hashed, ts_col, watermark, ["content_hash"])
 
 
 def curation_stream(
@@ -197,20 +187,17 @@ def curation_stream(
     ts_col: str = "ingest_ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming twin of the curation funnel's KEEP path: the stateless
-    gates (language agreement, quality, token budget) run per row exactly as
-    in batch (shared curation.keep_predicate), then watermark-bounded exact
-    dedup keeps the first occurrence of each surviving content hash. The
-    survivor stream is what feeds the training table; the per-source funnel
-    REPORT stays a batch job over the committed table."""
+    """The curation funnel's KEEP path as a stream: the stateless gates
+    (language agreement, quality, token budget) run per row exactly as in
+    batch (shared curation.keep_predicate), then ``dedup_stream``'s
+    content-hash step keeps the first occurrence of each surviving content
+    hash. The survivor stream is what feeds the training table; the
+    per-source funnel REPORT stays a batch job over the committed table."""
     from ..operators import curation
 
-    s = curation.doc_signals(docs_stream, extra_cols=(ts_col,)).withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
-    )
-    kept = s.where(curation.keep_predicate())
-    return kept.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
+    s = curation.doc_signals(docs_stream, extra_cols=(ts_col,))
+    return _first_within(
+        s.where(curation.keep_predicate()), ts_col, watermark, ["content_hash"]
     )
 
 
@@ -223,50 +210,26 @@ def incremental_dedup_stream(
     doc_id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Continuous-ingest twin of ``dedup.incremental_near_dup``: each
-    arriving doc is MinHash-signed by the batch signature kernel (a
-    stateless Arrow map — stream-safe, carrying the event time through)
-    and STREAM-STATIC joined against the committed corpus's persisted
-    signature table; matches verified by the sketch estimate. Pass
+    """``dedup.incremental_near_dup`` on a stream: each arriving doc is
+    MinHash-signed by the batch signature kernel (a stateless Arrow map,
+    carrying the event time through) and STREAM-STATIC matched against the
+    committed corpus's signatures by the batch candidate core
+    (``dedup._band_matches``: same join, same sketch estimate). Pass
     ``state.read_signature_table(...)`` as ``committed_sigs`` for the
     production shape (durable partitioned table on disk — pytest runs the
     stream against exactly that).
 
-    No aggregation is needed on the stream: the estimate is identical for
-    every band a pair collides in, so multi-band duplicates are dropped by
-    watermark-bounded key dedup on (doc_id, dup_of) — state stays bounded
-    by (ingest rate x horizon). The static side is MAX_BUCKET-guarded
-    (``dedup.signature_rows``), so a micro-batch can never join into a degenerate
-    bucket. Emits (doc_id, dup_of, est_jaccard, ingest_ts)."""
+    A pair has the same estimate on every band it collides in, so
+    multi-band matches are dropped by watermark-bounded key dedup on
+    (doc_id, dup_of). Emits (doc_id, dup_of, est_jaccard, ingest_ts)."""
     from ..operators import dedup
 
-    sigs = dedup._signature_band_rows(
+    rows = dedup._signature_band_rows(
         docs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
         doc_id_col, text_col, carry=(ts_col,),
-    ).withColumnRenamed("sig", "sig_new")
-    old = committed_sigs.select(
-        F.col("doc_id").alias("dup_of"),
-        F.col("sig").alias("sig_old"),
-        "band",
-        "band_sig",
     )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_new"), F.col("sig_old"), lambda a, b: a == b),
-                lambda x: x,
-            )
-        )
-        / F.size(F.col("sig_new"))
-    ).cast("double")
-    matched = (
-        sigs.join(old, ["band", "band_sig"])
-        .select("doc_id", "dup_of", est.alias("est_jaccard"), ts_col)
-        .where(F.col("est_jaccard") >= est_threshold)
-    )
-    return matched.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["doc_id", "dup_of"]
-    )
+    matched = dedup._band_matches(rows, committed_sigs, est_threshold, carry=(ts_col,))
+    return _first_within(matched, ts_col, watermark, ["doc_id", "dup_of"])
 
 
 def incremental_ann_stream(
@@ -282,64 +245,35 @@ def incremental_ann_stream(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
-    """Continuous-ingest twin of ``similarity.incremental_ann_topk``: each
-    arriving vector is SRP-bucketed by the batch bucket kernel (a stateless
-    Arrow map — stream-safe, carrying the event time through) with
-    multi-probe key expansion, STREAM-STATIC joined against the
-    committed corpus's persisted bucket table (pass
-    ``state.read_srp_buckets(...)``; when the table carries the
-    ``bucket_prefix`` partition column the probe keys include it, keeping
-    the partition-pruned scan shape), then exact-cosine verified against
-    the committed vectors and thresholded — ANN *matching* on arrival
-    rather than ranked top-k, since per-query ranking is an aggregation a
-    continuous emitter should not hold open.
+    """``similarity.incremental_ann_topk`` on a stream: each arriving vector
+    is SRP-bucketed by the batch bucket kernel (a stateless Arrow map,
+    carrying the event time through), expanded to its multi-probe keys
+    (``similarity._probe_keys``) and STREAM-STATIC joined against the
+    committed corpus's persisted bucket table by the batch candidate join
+    (``similarity._committed_candidates``; pass ``state.read_srp_buckets(...)``),
+    then scored by the batch cosine step (``similarity._cosine_scored``)
+    and thresholded — ANN *matching* on arrival rather than ranked top-k,
+    since per-query ranking is an aggregation a continuous emitter should
+    not hold open.
 
     A pair colliding in several bands/probes scores identically each time,
-    so duplicates are dropped by watermark-bounded key dedup on
-    (query_id, cand_id) — state stays bounded by (ingest rate x horizon).
-    The static side is the MAX_BUCKET-guarded committed table, so a
-    micro-batch can never join into a degenerate bucket. Emits
-    (query_id, cand_id, cosine, ingest_ts)."""
-    from ..operators import similarity, state
+    so the matches that pass the threshold are deduped on (query_id,
+    cand_id) within the watermark: the dedup state holds matches, not
+    candidates. Emits (query_id, cand_id, cosine, ingest_ts)."""
+    from ..operators import similarity
 
-    n_bands = similarity.N_BANDS
     ppb = similarity.PLANES_PER_BAND
     radius = similarity.MULTIPROBE_RADIUS if multiprobe is None else multiprobe
-
-    base = similarity._srp_band_rows(
+    rows = similarity._srp_band_rows(
         vecs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
-        n_bands, ppb, dim, id_col, vec_col, keep_vec=True, carry=(ts_col,),
+        similarity.N_BANDS, ppb, dim, id_col, vec_col, carry=(ts_col,),
     )
-    masks = similarity._probe_masks(ppb, radius, probe_budget)
-    probes = base.select(
-        F.col("vid").cast("bigint").alias("query_id"), ts_col,
-        F.col("vec").alias("qv"), "band",
-        F.explode(
-            F.array(
-                *[similarity._flip_bits_col(F.col("bucket"), m, ppb) for m in masks]
-            )
-        ).alias("bucket"),
+    qs = similarity._probe_keys(rows, ppb, radius, probe_budget, carry=(ts_col,))
+    cands = similarity._committed_candidates(qs, committed_buckets, carry=(ts_col,))
+    scored = similarity._cosine_scored(
+        cands, committed_vecs, id_col, vec_col, carry=(ts_col,)
     )
-    keys = ["band", "bucket"]
-    if "bucket_prefix" in committed_buckets.columns:
-        probes = probes.withColumn(
-            "bucket_prefix", state.bucket_prefix_col(F.col("bucket"))
-        )
-        keys = ["band", "bucket_prefix", "bucket"]
-    old = committed_buckets.select(F.col("vid").alias("cand_id"), *keys)
-    cand = probes.join(old, keys).where(F.col("cand_id") != F.col("query_id"))
-    vecs = committed_vecs.select(
-        F.col(id_col).cast("bigint").alias("cand_id"), F.col(vec_col).alias("cv")
-    )
-    scored = (
-        cand.join(vecs, "cand_id")
-        .select(
-            "query_id", "cand_id",
-            similarity.cosine_col(F.col("qv"), F.col("cv")).alias("cosine"),
-            ts_col,
-        )
-        .where(F.col("cosine") >= threshold)
-    )
-    return scored.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["query_id", "cand_id"]
+    return _first_within(
+        scored.where(F.col("cosine") >= threshold), ts_col, watermark,
+        ["query_id", "cand_id"],
     )
