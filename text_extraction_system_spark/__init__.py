@@ -9,8 +9,10 @@ plain-text assembly with page/paragraph separators -> structure segmentation
 checkpointed sink.
 
 Design stance (SURVEY.md section 7.0): DataFrame + built-in functions on the
-hot path, Arrow-vectorized pandas UDFs where semantics require Python, no
-per-row Python anywhere.
+hot path; where semantics require Python, per-row Python kernels over Arrow
+batches through ``arrowmap`` (``mapInArrow``, among them the extraction
+kernel) and whole-column numpy kernels through ``mapInPandas``. No pandas
+UDFs.
 """
 
 __version__ = "0.1.0"

@@ -18,16 +18,71 @@ columns without per-row object Series, and a single vectorized pass keeps
 the UDF boundary one cost (CIDR 2022, "Accelerating Python UDFs in
 Vectorized Query Execution"). Kernels that take and return whole numpy
 columns stay on ``mapInPandas``; this module is for per-row Python.
+
+The boundary also has a fixed cost per task that no kernel causes. Before
+each task, pyspark's worker (``worker_util.setup_spark_files``) calls
+``importlib.invalidate_caches()``, and on CPython before 3.13 that makes
+every ``zipimporter`` re-read its archive's whole directory. A reused
+worker holds 12 importers on ``pyspark.zip`` (1,328 entries, 12.5 ms a
+read) and 2 on the ``spark-core`` jar (5,359 entries, 51 ms a read): about
+0.25 s of worker CPU per task on CPython 3.11.7 (4-core host), while the
+JVM task thread waits on the worker's socket. ``guard_zip_rereads``,
+called at the top of every Python boundary's batch generator, makes that
+re-read conditional on the archive's ``(st_mtime_ns, st_size)`` having
+changed since its last read. A trivial 4-task ``map_rows`` stage (4,000
+rows, local[4], median of 10 warm writes) went from 0.43 s to 0.21 s; the
+same stage without Python takes 0.06-0.09 s. The first task in a fresh
+worker still pays once, as its caches are invalidated before the kernel is
+unpickled. Do not measure this cost with the JVM's "time to initialize
+Python workers" task metric: it reads larger than the task's own duration.
 """
 
 from __future__ import annotations
 
 import gc
+import os
+import sys
+import zipimport
 from collections.abc import Callable, Iterable
 from itertools import repeat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+#: archive path -> its ``(st_mtime_ns, st_size)`` when its directory was
+#: last read through ``_guarded_invalidate`` (None: it could not be stat'ed)
+_ZIP_STAMPS: dict[str, tuple[int, int] | None] = {}
+#: the interpreter's own ``zipimporter.invalidate_caches`` (a full re-read)
+_zip_reread: Callable | None = None
+
+
+def _guarded_invalidate(self) -> None:
+    """``zipimporter.invalidate_caches``, re-reading the archive only when
+    its stamp differs from the one at its last read. An unchanged archive
+    hands every importer on it the shared directory from that read."""
+    try:
+        st = os.stat(self.archive)
+        stamp = st.st_mtime_ns, st.st_size
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is not None and files is not None and _ZIP_STAMPS.get(self.archive) == stamp:
+        self._files = files
+        return
+    _zip_reread(self)
+    _ZIP_STAMPS[self.archive] = stamp
+
+
+def guard_zip_rereads() -> None:
+    """Install ``_guarded_invalidate`` as ``zipimporter.invalidate_caches``
+    in this process, once. A no-op on CPython 3.13+, whose importers
+    re-read lazily."""
+    global _zip_reread
+    zi = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or zi.invalidate_caches is _guarded_invalidate:
+        return
+    _zip_reread = zi.invalidate_caches
+    zi.invalidate_caches = _guarded_invalidate
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -111,6 +166,7 @@ def map_rows(
     row_type = pa.struct(list(to_arrow_schema(out_schema)))
 
     def gen(batches):
+        guard_zip_rereads()
         for batch in batches:
             def build():
                 cols = [_pylist(c) for c in batch.columns]
@@ -140,6 +196,7 @@ def append_column(
     idx = [df.columns.index(c) for c in cols]
 
     def gen(batches):
+        guard_zip_rereads()
         for batch in batches:
             def build():
                 values = fn(*(_pylist(batch.column(i)) for i in idx))

@@ -44,6 +44,7 @@ def char_coord_stats(assembled: DataFrame) -> DataFrame:
     emitted data: n_chars vs n_boxes)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        arrowmap.guard_zip_rereads()
         cols = ["doc_id", "n_chars", "n_boxes", "n_zero", "sum_x", "sum_y"]
         for pdf in batches:
             texts, bb = _batch(pdf)
@@ -87,6 +88,7 @@ def text_to_coords(assembled: DataFrame) -> DataFrame:
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        arrowmap.guard_zip_rereads()
         cols = ["doc_id", "par_start", "par_end", "x", "y", "w", "h"]
         for pdf in batches:
             texts, bb = _batch(pdf)
@@ -122,6 +124,7 @@ def coords_to_text(assembled: DataFrame) -> DataFrame:
     from ..core import geometry
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        arrowmap.guard_zip_rereads()
         cols = ["doc_id", "sel_start", "sel_end", "sel_text"]
         for pdf in batches:
             texts, bb = _batch(pdf)

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import arrowmap
 from . import dedup
 
 
@@ -150,6 +151,7 @@ def _scored_topk_partials(
     )
 
     def gen(batches):
+        arrowmap.guard_zip_rereads()
         # per query: parallel lists of (order_key, cand_id, cosine), <= k each
         best_key = [np.empty(0)] * m
         best_id = [np.empty(0, dtype=object)] * m
@@ -290,6 +292,7 @@ def _srp_band_rows(
     )
 
     def gen(batches):
+        arrowmap.guard_zip_rereads()
         P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), exact
         for pdf in batches:
             if len(pdf) == 0:
@@ -659,6 +662,7 @@ def _nearest_cells(
     books = [(lo, np.asarray(cb, dtype=np.float64)) for lo, cb in blocks]
 
     def gen(batches):
+        arrowmap.guard_zip_rereads()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -898,6 +902,7 @@ def _adc_topk_partials(
     has_cell = "cell" in [f.name for f in cands.schema.fields]
 
     def gen(batches):
+        arrowmap.guard_zip_rereads()
         best_key = [np.empty(0)] * nq
         best_id = [np.empty(0, dtype=np.int64)] * nq
         for pdf in batches:

@@ -1,7 +1,8 @@
 """Per-query profiling harness (bench.py stays frozen; guide §1.4/§1.5).
 
 Times individual declared queries with the noop sink, labeled jobs, and
-optional explain("formatted") capture.
+optional explain("formatted") capture. Each timed write is of a freshly
+built DataFrame.
 
     python tools/qprof.py --repeats 5 --explain-dir /tmp/plans \
         --suffix _before reading_order deskew
@@ -70,6 +71,10 @@ def main() -> None:
         spark.stop()
         return
 
+    # every write gets a freshly built DataFrame: a query with a lazy
+    # localCheckpoint fills it in the write that first runs it, so a second
+    # write of the same DataFrame would skip everything below the checkpoint.
+    # Jobs the query runs while it is built (e.g. collects) are not timed.
     out: dict[str, list[float]] = {}
     for name in args.names:
         df = qs[name](spark, args.sf)
@@ -82,6 +87,7 @@ def main() -> None:
         ts = []
         for i in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
+            df = qs[name](spark, args.sf)
             t0 = time.time()
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.time() - t0, 3))
