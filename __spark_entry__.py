@@ -61,8 +61,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf0.1, 1.16→0.71 s at 50k-vector scale; ann_topk 0.72→0.35 /
     # 0.73→0.40; family-wide ~2.5 s at sf0.1, ~1.5 s at 10x). A production
     # 10^9-vector table is multi-row-group and splits in the scan anyway.
-    # SPARK_GRAFT_SPREAD only tunes spread_unsplittable, which this read
-    # does not call, so no env setting spreads it.
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 

@@ -83,9 +83,10 @@ HEADLINE = [
 ]
 
 #: a timed attempt counts as quiet when co-runner (foreign-session) CPU and
-#: hypervisor steal stay below these many cores — same thresholds as
-#: tools/scaling_bench.py, which proved them discriminative (one steal-hit
-#: attempt at 3.1 cores collapsed measured efficiency 0.75 -> 0.195).
+#: hypervisor steal stay below these many cores — the thresholds the
+#: round-6 scaling tool (BENCH.md; in git history) proved discriminative
+#: (one steal-hit attempt at 3.1 cores collapsed measured efficiency 0.75
+#: -> 0.195).
 QUIET_FOREIGN_CORES = float(os.environ.get("BENCH_QUIET_FOREIGN_CORES", "1.5"))
 QUIET_STEAL_CORES = float(os.environ.get("BENCH_QUIET_STEAL_CORES", "0.5"))
 #: minimum timed attempts per phase (min-of-k is the stable plan-cost

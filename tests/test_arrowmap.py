@@ -11,6 +11,7 @@ import zipfile
 import zipimport
 
 import pytest
+from pyspark.sql import types as T
 
 from text_extraction_system_spark import arrowmap
 
@@ -115,17 +116,35 @@ def test_guard_is_a_no_op_from_3_13(monkeypatch, unguarded):
 
 
 @needs_eager_reread
-def test_workers_run_the_guarded_invalidate(spark):
-    df = spark.range(0, 64, 1, 4)
-    arrowmap.map_rows(df, lambda i: [(i,)], "x long").collect()
+@pytest.mark.parametrize("helper", ["map_rows", "append_column", "map_batches"])
+def test_workers_run_the_guarded_invalidate(spark, helper):
+    """Every task of each boundary helper runs with the guard installed,
+    also in a worker whose previous task took it out: each task reports
+    whether its worker is guarded and then restores the unguarded
+    ``invalidate_caches``, and 64 one-row tasks over a few reused workers
+    make most tasks start in such a worker."""
 
-    def report(i):
+    def guarded():
         import zipimport
 
         from text_extraction_system_spark import arrowmap as am
 
-        yield os.getpid(), zipimport.zipimporter.invalidate_caches is am._guarded_invalidate
+        zi = zipimport.zipimporter
+        was = zi.invalidate_caches is am._guarded_invalidate
+        if was:
+            zi.invalidate_caches = am._zip_reread
+        return was
 
-    rows = arrowmap.map_rows(df, report, "pid long, guarded boolean").collect()
+    df = spark.range(0, 64, 1, 64)
+    out = {
+        "map_rows": lambda: arrowmap.map_rows(
+            df, lambda i: [(guarded(),)], "guarded boolean"),
+        "append_column": lambda: arrowmap.append_column(
+            df, "guarded", T.BooleanType(), lambda ids: [guarded() for _ in ids], "id"),
+        "map_batches": lambda: arrowmap.map_batches(
+            df, lambda batches: (([guarded() for _ in ids],) for ids, in batches),
+            "guarded boolean"),
+    }[helper]()
+    rows = out.collect()
     assert len(rows) == 64
     assert all(r.guarded for r in rows)

@@ -177,6 +177,7 @@ KERNEL_QUERIES = [
     "tfidf_keywords", "dup_windows", "near_dup_pairs", "incremental_dedup",
     "ann_topk", "ann_ivf_topk", "ann_ivf_trained", "ann_pq_topk",
     "ann_pq_rerank", "ann_ivf_pq", "emb_near_dup", "media_near_dup",
+    "ann_lsh_topk", "incremental_ann",
     "simhash", "repetition", "reading_order", "media_rotate",
 ]
 

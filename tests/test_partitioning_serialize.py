@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from text_extraction_system_spark import pipeline, synth
@@ -20,6 +21,24 @@ def test_cost_salted_balance(spark):
     a = parts.withColumn("pid", F.spark_partition_id()).select("doc_id", "pid").collect()
     b = other.withColumn("pid", F.spark_partition_id()).select("doc_id", "pid").collect()
     assert {r["doc_id"]: r["pid"] for r in a} != {r["doc_id"]: r["pid"] for r in b}
+
+
+@pytest.mark.parametrize("row_groups, spread", [(1, True), (8, False)])
+def test_spread_follows_the_input_row_groups(spark, tmp_path, row_groups, spread):
+    """``spread_unsplittable`` repartitions a scan whose parquet footers
+    hold fewer row groups than the session's parallelism (4 on the test
+    session's local[4]) and leaves one that holds as many alone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "docs.parquet")
+    table = pa.table({"doc_id": list(range(800)), "text": ["words"] * 800})
+    pq.write_table(table, path, row_group_size=800 // row_groups)
+    assert pq.ParquetFile(path).metadata.num_row_groups == row_groups
+    df = partitioning.spread_unsplittable(spark.read.parquet(path), "doc_id")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("Exchange" in plan) == spread, plan
+    assert df.count() == 800
 
 
 def test_doc_cost_charges_media(spark):

@@ -7,7 +7,7 @@ silently adds a shuffle or breaks column pruning fails CI:
 * extraction from spans is shuffle-free (no Exchange)
 * every extraction entry point is one narrow mapInArrow stage, and every
   declared extraction query one kernel pass
-* every per-row Python kernel crosses the boundary as mapInArrow (arrowmap)
+* every Python kernel crosses the boundary as mapInArrow (arrowmap)
 * dimension joins broadcast (BroadcastHashJoin, no SortMergeJoin)
 """
 
@@ -156,7 +156,7 @@ def test_srp_query_runs_the_kernel_once(spark, monkeypatch, query):
     """Both SRP queries read their bucket table twice (``srp_lsh_topk``'s
     query and candidate sides, ``srp_candidate_pairs``' self-join) through
     one lazy localCheckpoint (``similarity._bucket_table``): the SRP kernel
-    is one MapInPandas, in the checkpointed plan, and the query's own plan
+    is one MapInArrow, in the checkpointed plan, and the query's own plan
     holds none (without the checkpoint ``ann_lsh_topk`` holds two)."""
     import __spark_entry__ as e
 
@@ -170,8 +170,8 @@ def test_srp_query_runs_the_kernel_once(spark, monkeypatch, query):
 
     monkeypatch.setattr(cls, "localCheckpoint", recording)
     plan = _plan(e.queries()[query](spark, SF))
-    assert "MapInPandas" not in plan, plan
-    assert [p.count("MapInPandas") for p in checkpointed] == [1], checkpointed
+    assert "MapInArrow" not in plan, plan
+    assert [p.count("MapInArrow") for p in checkpointed] == [1], checkpointed
 
 
 def _inertia(X, cents) -> float:
@@ -657,13 +657,18 @@ def test_extraction_queries_are_one_kernel_pass(spark, name):
 def _row_kernel_operators():
     from text_extraction_system_spark.operators import (
         coords, dedup, deskew_op, multimodal, readorder_op, rotation,
-        serialize, structure, tables_op, textstats, toc,
+        serialize, similarity, structure, tables_op, textstats, toc,
     )
 
     import __spark_entry__ as e
 
     def res(docs):  # extraction results without structure
         return pipeline.extract_from_documents(docs, with_structure=False)
+
+    def emb(docs):  # the embeddings table of the same corpus
+        return docs.sparkSession.read.parquet(f"{SF}/embeddings.parquet")
+
+    hash_books = [similarity.ivf_centroid_values(8, 16)] * 8
 
     return {
         "extract": pipeline.extract_from_documents,
@@ -697,15 +702,22 @@ def _row_kernel_operators():
         "with_char_boxes": lambda d: coords.with_char_boxes(res(d)),
         "to_char_bboxes_proto_column": lambda d: serialize.to_char_bboxes_proto_column(
             coords.with_char_boxes(res(d))),
+        "char_coord_stats": lambda d: coords.char_coord_stats(res(d)),
+        "text_to_coords": lambda d: coords.text_to_coords(res(d)),
+        "coords_to_text": lambda d: coords.coords_to_text(res(d)),
+        "srp_banded_buckets": lambda d: similarity.srp_banded_buckets(emb(d)),
+        "assign_cells_vectorized": lambda d: similarity.assign_cells_vectorized(emb(d)),
+        "brute_force_topk": lambda d: similarity.brute_force_topk(emb(d)),
+        "pq_topk": lambda d: similarity.pq_topk(emb(d), hash_books),
     }
 
 
 
 @pytest.mark.parametrize("name", sorted(_row_kernel_operators()))
 def test_row_kernels_cross_python_through_map_in_arrow(spark, name):
-    """Every per-row Python kernel crosses the boundary through
-    ``arrowmap`` (``mapInArrow``), never a hand-rolled ``mapInPandas`` or a
-    scalar ``pandas_udf`` (``ArrowEvalPython``)."""
+    """Every Python kernel, per-row or whole-column numpy, crosses the
+    boundary through ``arrowmap`` (``mapInArrow``), never a hand-rolled
+    ``mapInPandas`` or a scalar ``pandas_udf`` (``ArrowEvalPython``)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(_row_kernel_operators()[name](docs))
     assert "MapInArrow" in plan, plan

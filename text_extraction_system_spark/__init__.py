@@ -9,9 +9,9 @@ plain-text assembly with page/paragraph separators -> structure segmentation
 checkpointed sink.
 
 Design stance (SURVEY.md section 7.0): DataFrame + built-in functions on the
-hot path; where semantics require Python, per-row Python kernels over Arrow
-batches through ``arrowmap`` (``mapInArrow``, among them the extraction
-kernel) and whole-column numpy kernels through ``mapInPandas``. No pandas
+hot path; where semantics require Python, one boundary: per-row Python
+kernels (among them the extraction kernel) and whole-column numpy kernels
+run over Arrow batches through ``arrowmap`` (``mapInArrow``). No pandas
 UDFs.
 """
 

@@ -9,16 +9,16 @@ All four operators run the batched kernel (``charboxes.BatchBoxes``): one
 numpy pass over the concatenation of the whole Arrow batch's texts instead
 of python-per-document / python-per-paragraph loops — the per-paragraph
 ``line_areas`` calls alone were ~60% of the text_coords query's wall time.
+The three query operators cross the Python boundary through
+``arrowmap.map_batches``, ``with_char_boxes`` through
+``arrowmap.append_column``.
 The batched outputs are pinned row-for-row against the per-doc kernels by
 pytest (tests/test_charboxes.py, tests/test_geometry.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -30,40 +30,38 @@ CHAR_STATS_SCHEMA = (
 )
 
 
-def _bounds(pages: list) -> list[tuple[int, int]]:
-    return [(p["start"], p["end"]) for p in pages]
+def _batch(texts: list, pages: list) -> tuple[list[str], charboxes.BatchBoxes]:
+    texts = [t or "" for t in texts]
+    bounds = [[(p["start"], p["end"]) for p in ps or []] for ps in pages]
+    return texts, charboxes.BatchBoxes(texts, bounds)
 
 
-def _batch(pdf: pd.DataFrame) -> tuple[list[str], charboxes.BatchBoxes]:
-    texts = [t or "" for t in pdf["plain_text"]]
-    return texts, charboxes.BatchBoxes(texts, [_bounds(p) for p in pdf["pages"]])
+def _coord_pass(assembled: DataFrame, kernel, schema: str) -> DataFrame:
+    """One ``arrowmap.map_batches`` pass over (doc_id, plain_text, pages):
+    ``kernel(doc_ids, texts, boxes)`` maps a batch to its output columns."""
+
+    def gen(batches):
+        for doc_ids, texts, pages in batches:
+            texts, bb = _batch(texts, pages)
+            yield kernel(np.asarray(doc_ids, dtype=object), texts, bb)
+
+    return arrowmap.map_batches(
+        assembled.select("doc_id", "plain_text", "pages"), gen, schema
+    )
 
 
 def char_coord_stats(assembled: DataFrame) -> DataFrame:
     """Per-doc char-box aggregates (len(text)==len(boxes) is part of the
     emitted data: n_chars vs n_boxes)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arrowmap.guard_zip_rereads()
-        cols = ["doc_id", "n_chars", "n_boxes", "n_zero", "sum_x", "sum_y"]
-        for pdf in batches:
-            texts, bb = _batch(pdf)
-            n = bb.doc_off[1:] - bb.doc_off[:-1]
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "n_chars": n,
-                "n_boxes": n,  # the invariant: one box per char
-                "n_zero": bb.doc_sums(~bb.printable),
-                # box coords are integral multiples of CHAR_W/H — exact int64
-                "sum_x": bb.doc_sums(bb.boxes[:, 0]),
-                "sum_y": bb.doc_sums(bb.boxes[:, 1]),
-            })
-            yield out[cols]
+    def kernel(doc_ids, texts, bb):
+        n = bb.doc_off[1:] - bb.doc_off[:-1]
+        # n_boxes == n_chars is the invariant: one box per char; box coords
+        # are integral multiples of CHAR_W/H, so the sums are exact int64
+        return (doc_ids, n, n, bb.doc_sums(~bb.printable),
+                bb.doc_sums(bb.boxes[:, 0]), bb.doc_sums(bb.boxes[:, 1]))
 
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema=CHAR_STATS_SCHEMA
-    )
+    return _coord_pass(assembled, kernel, CHAR_STATS_SCHEMA)
 
 
 #: J5 selection area: everything on page-local lines 1 and 2, any column
@@ -87,30 +85,16 @@ def text_to_coords(assembled: DataFrame) -> DataFrame:
     CHAR_W/CHAR_H keep the emitted coords exact bigints (SQL-oracle-checkable).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arrowmap.guard_zip_rereads()
-        cols = ["doc_id", "par_start", "par_end", "x", "y", "w", "h"]
-        for pdf in batches:
-            texts, bb = _batch(pdf)
-            starts, ends, docs = bb.runs(bb.printable)
-            x0 = bb.boxes[starts, 0].astype(np.int64)
-            y0 = bb.boxes[starts, 1].astype(np.int64)
-            x1 = (bb.boxes[ends - 1, 0] + bb.boxes[ends - 1, 2]).astype(np.int64)
-            off = bb.doc_off[docs]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy()[docs],
-                "par_start": starts - off,
-                "par_end": ends - off,
-                "x": x0,
-                "y": y0,
-                "w": x1 - x0,
-                "h": np.full(len(starts), int(charboxes.CHAR_H), dtype=np.int64),
-            })[cols]
+    def kernel(doc_ids, texts, bb):
+        starts, ends, docs = bb.runs(bb.printable)
+        x0 = bb.boxes[starts, 0].astype(np.int64)
+        y0 = bb.boxes[starts, 1].astype(np.int64)
+        x1 = (bb.boxes[ends - 1, 0] + bb.boxes[ends - 1, 2]).astype(np.int64)
+        off = bb.doc_off[docs]
+        return (doc_ids[docs], starts - off, ends - off, x0, y0, x1 - x0,
+                np.full(len(starts), int(charboxes.CHAR_H), dtype=np.int64))
 
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema=TEXT_COORDS_SCHEMA
-    )
+    return _coord_pass(assembled, kernel, TEXT_COORDS_SCHEMA)
 
 
 def coords_to_text(assembled: DataFrame) -> DataFrame:
@@ -123,38 +107,21 @@ def coords_to_text(assembled: DataFrame) -> DataFrame:
     the whole batch, then a per-doc first-of-group selection."""
     from ..core import geometry
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arrowmap.guard_zip_rereads()
-        cols = ["doc_id", "sel_start", "sel_end", "sel_text"]
-        for pdf in batches:
-            texts, bb = _batch(pdf)
-            if len(bb.printable) == 0:
-                yield pd.DataFrame({c: [] for c in cols})
-                continue
-            mask = geometry.overlaps_enough(bb.boxes, SELECTION_AREA)
-            starts, ends, docs = bb.runs(mask)
-            if len(starts) == 0:
-                yield pd.DataFrame({c: [] for c in cols})
-                continue
-            # per doc: longest run, earliest start on ties (argmax-first)
-            order = np.lexsort((starts, -(ends - starts), docs))
-            _, first = np.unique(docs[order], return_index=True)
-            best = order[first]
-            off = bb.doc_off[docs[best]]
-            ls = starts[best] - off
-            le = ends[best] - off
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy()[docs[best]],
-                "sel_start": ls,
-                "sel_end": le,
-                "sel_text": [texts[d][s:e] for d, s, e in
-                             zip(docs[best], ls, le)],
-            })[cols]
+    def kernel(doc_ids, texts, bb):
+        if len(bb.printable) == 0:
+            return [], [], [], []
+        starts, ends, docs = bb.runs(geometry.overlaps_enough(bb.boxes, SELECTION_AREA))
+        # per doc: longest run, earliest start on ties (argmax-first)
+        order = np.lexsort((starts, -(ends - starts), docs))
+        _, first = np.unique(docs[order], return_index=True)
+        best = order[first]
+        off = bb.doc_off[docs[best]]
+        ls = starts[best] - off
+        le = ends[best] - off
+        return (doc_ids[docs[best]], ls, le,
+                [texts[d][s:e] for d, s, e in zip(docs[best], ls, le)])
 
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema=COORDS_TEXT_SCHEMA
-    )
+    return _coord_pass(assembled, kernel, COORDS_TEXT_SCHEMA)
 
 
 def with_char_boxes(assembled: DataFrame) -> DataFrame:
@@ -162,9 +129,7 @@ def with_char_boxes(assembled: DataFrame) -> DataFrame:
     one box per char of ``plain_text``, in one narrow pass."""
 
     def boxes(texts, pages):
-        bb = charboxes.BatchBoxes(
-            [t or "" for t in texts], [_bounds(p or []) for p in pages]
-        )
+        _, bb = _batch(texts, pages)
         return [bb.boxes[s:e].tolist() for s, e in zip(bb.doc_off[:-1], bb.doc_off[1:])]
 
     return arrowmap.append_column(

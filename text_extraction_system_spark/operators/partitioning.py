@@ -31,25 +31,46 @@ def spread_unsplittable(df: DataFrame, key: str) -> DataFrame:
     parquet scan cannot split inside a row group, so a SINGLE ROW-GROUP
     file (the driver corpora; gzip-class inputs in production) yields its
     30+ configured splits with every row in ONE of them — every narrow
-    stage above the scan (the derive->ocr->restitch chain, every Arrow
-    kernel) then runs on one core regardless of cluster size (measured: a
-    mapInPandas probe saw 50000/50000 rows in one task at sf1.0). One
-    deterministic hash repartition on the table id right after the read
-    moves a few MB once and unlocks full parallelism downstream. Partition
-    count follows the session's parallelism (x2 slack for hash imbalance),
-    so the same code is right at any cluster size; SPARK_GRAFT_SPREAD=0
-    disables it (splittable production layouts), SPARK_GRAFT_SPREAD=N pins
-    N. Hash on the id (not round-robin) keeps row placement deterministic
-    under task retry (guide §2.5, SPARK-38388) and skips the
-    sort-before-repartition pass a keyless repartition pays."""
-    import os
+    stage above the scan (every Arrow kernel) then runs on one core
+    regardless of cluster size (measured: a Python batch probe saw
+    50000/50000 rows in one task at sf1.0). One deterministic hash
+    repartition on the table id right after the read moves a few MB once
+    and unlocks full parallelism downstream. Partition count follows the
+    session's parallelism (x2 slack for hash imbalance), so the same code
+    is right at any cluster size. Hash on the id (not round-robin) keeps
+    row placement deterministic under task retry (guide §2.5, SPARK-38388)
+    and skips the sort-before-repartition pass a keyless repartition pays.
 
-    spark = df.sparkSession
-    n = int(os.environ.get("SPARK_GRAFT_SPREAD",
-                           2 * spark.sparkContext.defaultParallelism))
-    if n <= 0:
+    The input decides: when the parquet footers of ``df.inputFiles()``
+    hold at least ``defaultParallelism`` row groups, the scan can split
+    that wide and ``df`` is returned as is. Inputs whose footers cannot be
+    read (not local, not parquet, no files) are spread."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if _row_groups_at_least(df.inputFiles(), parallelism):
         return df
-    return df.repartition(n, F.col(key))
+    return df.repartition(2 * parallelism, F.col(key))
+
+
+def _row_groups_at_least(paths: list[str], n: int) -> bool:
+    """Whether the parquet footers of ``paths`` (local files) hold at least
+    ``n`` row groups; False when one cannot be read. Stops reading once
+    ``n`` is reached."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    total = 0
+    for path in paths:
+        url = urlparse(path)
+        if url.scheme not in ("", "file"):
+            return False
+        try:
+            total += pq.ParquetFile(unquote(url.path)).metadata.num_row_groups
+        except (OSError, ValueError):
+            return False
+        if total >= n:
+            return True
+    return False
 
 
 def doc_cost_col(spans: Column) -> Column:

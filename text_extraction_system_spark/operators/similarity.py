@@ -1,9 +1,11 @@
 """Similarity search over an embedding column (``array<float>``).
 
 * ``brute_force_topk`` — exact cosine top-k: the (small) query set rides
-  inside a numpy kernel that scores each task's rows and emits a per-task
-  partial top-k; the scan side stays partition-parallel with no shuffle
-  until the final per-query top-k (tiny).
+  inside the partial top-k kernel (``_topk_partials``), which scores each
+  task's rows and emits its per-task partial top-k; the scan side stays
+  partition-parallel with no shuffle until the final per-query top-k
+  (tiny). The IVF, PQ and IVF-PQ paths run the same kernel with their own
+  score.
 * ``srp_lsh_topk`` — the scale path: sign-random-projection buckets from
   deterministic md5-derived hyperplanes; candidates restricted to the same
   bucket. At 10^12 vectors the bucket join replaces the broadcast scan.
@@ -24,12 +26,17 @@ through ``_fold_dots``: dim-major accumulation in double precision, the
 same IEEE sequence as the ``dot_col`` fold and the DuckDB oracle's
 ``list_reduce``, so scores, buckets, cells, codes and trained centroids are
 bit-reproducible in SQL.
+
+Every numpy kernel here crosses the Python boundary through ``arrowmap``:
+``map_batches`` when it returns new columns only, ``append_column`` when its
+caller keeps every input column (``_vector_pass``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .. import arrowmap
@@ -84,7 +91,24 @@ def _matrix(vectors):
     double is exact)."""
     import numpy as np
 
-    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+    return np.asarray(vectors, dtype=np.float64)
+
+
+def _vector_pass(df: DataFrame, vec_col: str, keep: list[str], name: str,
+                 dtype: T.DataType, fn) -> DataFrame:
+    """``keep`` columns of ``df`` plus ``name``, where ``fn`` maps a batch's
+    ``vec_col`` values to one ``dtype`` value per row. The vector crosses
+    back only when the caller keeps it: then ``fn``'s column is appended to
+    the batch (``arrowmap.append_column``), else the pass returns ``keep``
+    and ``name`` alone (``arrowmap.map_batches``)."""
+    if vec_col in keep:
+        return arrowmap.append_column(df.select(*keep), name, dtype, fn, vec_col)
+    fields = {f.name: f for f in df.schema.fields}
+    return arrowmap.map_batches(
+        df.select(*keep, vec_col),
+        lambda batches: ((*cols[:-1], fn(cols[-1])) for cols in batches),
+        T.StructType([fields[c] for c in keep] + [T.StructField(name, dtype)]),
+    )
 
 
 def _proxy_dists(X, C):
@@ -95,110 +119,103 @@ def _proxy_dists(X, C):
 
 
 def _query_rows(embeddings: DataFrame, n_queries: int,
-                id_col: str, vec_col: str) -> list[tuple]:
-    """The (tiny) query side as driver rows: n_queries x dim floats — the
-    same collect class as the IVF centroid/seed reads (similarity.py
-    ``ivf_train``), never the corpus."""
+                id_col: str, vec_col: str) -> tuple[list, list]:
+    """The (tiny) query side as driver lists (ids, vectors): n_queries x dim
+    floats — the same collect class as the IVF centroid/seed reads
+    (``_lloyd``), never the corpus."""
     rows = (
         embeddings.where(F.col(id_col) < n_queries)
         .select(id_col, vec_col).collect()
     )
-    return [(r[0], [float(x) for x in r[1]]) for r in rows]
+    return [r[0] for r in rows], [[float(x) for x in r[1]] for r in rows]
 
 
-def _scored_topk_partials(
+def _topk_partials(
     cands: DataFrame,
-    queries: list[tuple],
+    qids: list,
     k: int,
-    probe_cells: dict | None = None,
+    score: tuple,
+    probes: list | None = None,
 ) -> DataFrame:
-    """Per-task partial top-k of exact cosine scores against a small query
-    set — the guide-section-8 move: every task scores its own rows against
-    the (in-Python) query vectors with one vectorized numpy pass per batch
-    and emits only its k best rows per query, so no join ships vectors and
-    the final ranking window sees n_tasks x n_queries x k rows instead of
-    the full score matrix.
+    """Per-task partial top-k against a small query set — the
+    guide-section-8 move: every task scores its own rows against the
+    (in-Python) queries with one vectorized numpy pass per batch and emits
+    only its k best rows per query, so no join ships vectors and the final
+    ranking window sees n_tasks x n_queries x k rows instead of the full
+    score matrix.
 
-    BIT-IDENTICAL scores to ``cosine_col``: the dot/norm accumulations are
-    ``_fold_dots`` folds — the ``aggregate`` fold's IEEE sequence per row —
-    and zero-norm pairs yield NULL like try_divide. Partial top-k keeps, per
-    query, the k best under (cosine DESC NULLS LAST, cand_id ASC) — the
-    final window's exact total order — so the union of partials is a
-    superset of the global top-k and the window output is unchanged
-    (pinned by the DuckDB oracle: ``ann_topk``, ``ann_ivf_topk``).
+    ``score`` is ``(name, keys, value)`` (``_cosine_score``,
+    ``_adc_score``): ``keys(xs)`` maps a batch's ``x`` values to the (n,
+    n_queries) float64 rank keys, best lowest, and ``value(kept)`` turns one
+    query's kept keys into the output column ``name``. Per query the kernel
+    keeps the k best under (key ASC, cand_id ASC) — the final window's exact
+    total order — so the union of partials is a superset of the global
+    top-k and the window output is unchanged (pinned by the DuckDB oracle:
+    ``ann_topk``, ``ann_ivf_topk``, ``ann_pq_*``, ``ann_ivf_pq``).
 
-    ``cands`` must be (cand_id, cv) or (cand_id, cv, cell);
-    ``probe_cells`` maps query_id -> cell ids the query probes (None = scan
-    everything, the brute-force shape)."""
+    ``cands`` is (cand_id, x) or (cand_id, x, cell), and query_id takes
+    cand_id's type; ``probes`` holds, per query, the cell ids it probes
+    (None = scan everything, the brute-force shape)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    in_fields = {f.name: f for f in cands.schema.fields}
+    name, keys, value = score
+    id_type = cands.schema["cand_id"].dataType
     out_schema = T.StructType([
-        T.StructField("query_id", in_fields["cand_id"].dataType, True),
-        T.StructField("cand_id", in_fields["cand_id"].dataType, True),
-        T.StructField("cosine", T.DoubleType(), True),
+        T.StructField("query_id", id_type), T.StructField("cand_id", id_type),
+        T.StructField(name, T.DoubleType()),
     ])
-    has_cell = "cell" in in_fields
-    qids = [q[0] for q in queries]
-    m = len(qids)
-    Q = _matrix([q[1] for q in queries]) if m else None
-    qns = np.sqrt(_fold_dots(Q, Q)) if m else None
-    probes = (
-        [np.asarray(sorted(probe_cells[qid]), dtype=np.int64) for qid in qids]
-        if probe_cells is not None else None
-    )
 
     def gen(batches):
-        arrowmap.guard_zip_rereads()
-        # per query: parallel lists of (order_key, cand_id, cosine), <= k each
-        best_key = [np.empty(0)] * m
-        best_id = [np.empty(0, dtype=object)] * m
-        best_cos = [[] for _ in range(m)]
-        for pdf in batches:
-            if len(pdf) == 0 or not m:
+        best = [(np.empty(0), np.empty(0, dtype=int))] * len(qids)  # (keys, ids)
+        for ids, xs, *cells in batches:
+            if not qids:
                 continue
-            ids = pdf["cand_id"].to_numpy()
-            X = _matrix(pdf["cv"])
-            cells = pdf["cell"].to_numpy() if has_cell else None
-            cn = np.sqrt(_fold_dots(X, X))
-            dacc = _fold_dots(X[:, None, :], Q)
-            for qi in range(m):
-                mask = ids != qids[qi]
-                if cells is not None and probes is not None:
+            ids = np.asarray(ids)
+            cells = np.asarray(cells[0]) if cells else None
+            batch_keys = keys(xs)
+            for qi, qid in enumerate(qids):
+                mask = ids != qid
+                if probes is not None:
                     mask &= np.isin(cells, probes[qi])
                 if not mask.any():
                     continue
-                denom = qns[qi] * cn[mask]
-                dot = dacc[mask, qi]
+                key = batch_keys[mask, qi]
                 sid = ids[mask]
-                zero = denom == 0.0
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dot / denom
-                key = np.where(zero, -2.0, cos)
-                # batch top-k under (key desc, cand_id asc), merged with
-                # the running best and re-cut to k
-                take = np.lexsort((sid, -key))[: k]
-                kk = np.concatenate((best_key[qi], key[take]))
-                ii = np.concatenate((best_id[qi], sid[take]))
-                cc = best_cos[qi] + [
-                    None if zero[t] else float(cos[t]) for t in take
-                ]
-                order = np.lexsort((ii, -kk))[: k]
-                best_key[qi] = kk[order]
-                best_id[qi] = ii[order]
-                best_cos[qi] = [cc[t] for t in order]
-        out = {"query_id": [], "cand_id": [], "cosine": []}
-        for qi in range(m):
-            for t in range(len(best_id[qi])):
-                out["query_id"].append(qids[qi])
-                out["cand_id"].append(best_id[qi][t])
-                out["cosine"].append(best_cos[qi][t])
-        yield pd.DataFrame(out, columns=["query_id", "cand_id", "cosine"])
+                # batch top-k under (key, cand_id), merged with the running
+                # best and re-cut to k
+                take = np.lexsort((sid, key))[:k]
+                kk = np.concatenate((best[qi][0], key[take]))
+                ii = np.concatenate((best[qi][1].astype(sid.dtype, copy=False), sid[take]))
+                order = np.lexsort((ii, kk))[:k]
+                best[qi] = kk[order], ii[order]
+        yield (
+            [qid for qid, (_, ii) in zip(qids, best) for _ in ii],
+            [c for _, ii in best for c in ii.tolist()],
+            [v for kk, _ in best for v in value(kk)],
+        )
 
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return cands.mapInPandas(gen, schema=out_schema)
+    return arrowmap.map_batches(cands, gen, out_schema)
+
+
+def _cosine_score(qvecs: list) -> tuple:
+    """The exact-cosine score of ``_topk_partials``: key -cosine (2.0 where
+    a norm is zero), value cosine (NULL there) — cosine DESC NULLS LAST.
+    BIT-IDENTICAL to ``cosine_col``: the dot/norm accumulations are
+    ``_fold_dots`` folds, the ``aggregate`` fold's IEEE sequence per row,
+    and negation is exact."""
+    import numpy as np
+
+    Q = _matrix(qvecs)
+    qns = np.sqrt(_fold_dots(Q, Q))
+
+    def keys(vectors):
+        X = _matrix(vectors)
+        denom = np.sqrt(_fold_dots(X, X))[:, None] * qns
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = _fold_dots(X[:, None, :], Q) / denom
+        return np.where(denom == 0.0, 2.0, -cos)
+
+    return "cosine", keys, lambda kept: [None if v == 2.0 else -v for v in kept.tolist()]
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -219,17 +236,17 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
 
-    The query vectors ride inside a numpy ``mapInPandas`` kernel
+    The query vectors ride inside the numpy partial top-k kernel
     (n_queries x dim floats — the centroid-collect class, never the
     corpus) that scores each task's rows in one vectorized pass per batch
     and emits per-task partial top-k, so only n_tasks x n_queries x k rows
     reach the ranking window — no per-pair interpreted cosine (N x
     n_queries evaluations, the measured 85% of this query's runtime at
     sf1.0 when it ran as a broadcast join). Scores are bit-identical to
-    ``cosine_col`` (see ``_scored_topk_partials``)."""
+    ``cosine_col`` (see ``_cosine_score``)."""
     cands = embeddings.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    queries = _query_rows(embeddings, n_queries, id_col, vec_col)
-    return _rank_topk(_scored_topk_partials(cands, queries, k), k)
+    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    return _rank_topk(_topk_partials(cands, qids, k, _cosine_score(qvecs)), k)
 
 
 #: SRP LSH banding defaults: N_BANDS x PLANES_PER_BAND hyperplanes total.
@@ -272,46 +289,32 @@ def _srp_band_rows(
     vec_col: str,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(vid, vec, *carry, band, bucket) via one numpy Arrow pass: per
-    band, the sign bits of that band's planes (global plane index
+    """(vid, *carry, band, bucket) via one numpy Arrow pass: per band, the
+    sign bits of that band's planes (global plane index
     band*planes_per_band + j), bit p = sign(vec . plane_p). The plane dots
     are ``_fold_dots`` folds, which the DuckDB oracle replays, so every
     bucket string is bit-reproducible in SQL.
-    ``carry`` columns pass through the kernel untouched (the streaming job's
-    event-time column); batch callers ship only the id and vector."""
+    ``carry`` columns pass through the kernel untouched, ``vec_col`` among
+    them renamed ``vec`` (``_vector_pass``: a caller that drops the vector
+    does not get it back)."""
     import numpy as np
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    planes = srp_plane_values(dim, n_bands * planes_per_band)
+    P = np.asarray(srp_plane_values(dim, n_bands * planes_per_band), dtype=np.float64)
 
-    sel = [id_col, vec_col, *carry]
-    fields = {f.name: f for f in embeddings.schema.fields}
-    out_schema = StructType(
-        [fields[c] for c in sel]
-        + [StructField("buckets", ArrayType(StringType()), False)]
-    )
+    def buckets(vectors):
+        bits = np.where(_fold_dots(_matrix(vectors)[:, None, :], P) >= 0, "1", "0")
+        return [
+            ["".join(row[b * planes_per_band:(b + 1) * planes_per_band])
+             for b in range(n_bands)]
+            for row in bits
+        ]
 
-    def gen(batches):
-        arrowmap.guard_zip_rereads()
-        P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), exact
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            acc = _fold_dots(_matrix(pdf[vec_col])[:, None, :], P)
-            bits = np.where(acc >= 0, "1", "0")  # (n, n_planes) of '0'/'1'
-            out = pdf[sel].copy()
-            out["buckets"] = [
-                [
-                    "".join(row[b * planes_per_band : (b + 1) * planes_per_band])
-                    for b in range(n_bands)
-                ]
-                for row in bits
-            ]
-            yield out
-
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return embeddings.select(*sel).mapInPandas(gen, schema=out_schema).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), *carry,
+    keep = [id_col, *carry]
+    return _vector_pass(
+        embeddings, vec_col, keep, "buckets", T.ArrayType(T.StringType()), buckets
+    ).select(
+        F.col(id_col).alias("vid"),
+        *[F.col(c).alias("vec") if c == vec_col else c for c in carry],
         F.posexplode("buckets").alias("band", "bucket"),
     )
 
@@ -326,16 +329,31 @@ def srp_banded_buckets(
 ) -> DataFrame:
     """(vid, vec, band, bucket) rows behind the LSH skew guard
     (``dedup.guard_buckets`` on (band, bucket), ``dedup.MAX_BUCKET``), as a
-    plan. The vector comes back from the kernel anyway; a caller that
-    selects past it prunes it below the guard's window.
+    plan; ``_guarded_buckets`` is the same table without the vector.
 
     The bucket signature is one narrow numpy pass (``_srp_band_rows``); at
     10^12 rows this is the table you would materialize once and
     bucket-partition by (band, bucket) — that durable form is
     ``state.write_srp_buckets`` (parquet partitioned by (band,
     bucket_prefix))."""
+    return _guarded_buckets(
+        embeddings, n_bands, planes_per_band, dim, id_col, vec_col, (vec_col,)
+    )
+
+
+def _guarded_buckets(
+    embeddings: DataFrame,
+    n_bands: int = N_BANDS,
+    planes_per_band: int = PLANES_PER_BAND,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``_srp_band_rows`` behind ``dedup.guard_buckets``: (vid, *carry,
+    band, bucket)."""
     return dedup.guard_buckets(
-        _srp_band_rows(embeddings, n_bands, planes_per_band, dim, id_col, vec_col),
+        _srp_band_rows(embeddings, n_bands, planes_per_band, dim, id_col, vec_col, carry),
         ["band", "bucket"],
     )
 
@@ -363,9 +381,7 @@ def srp_candidate_pairs(
     """Distinct (id_a < id_b) pairs colliding in at least one band —
     the union of per-band self-joins of the checkpointed bucket table."""
     bb = _bucket_table(
-        srp_banded_buckets(
-            embeddings, n_bands, planes_per_band, dim, id_col, vec_col
-        ).select("vid", "band", "bucket")
+        _guarded_buckets(embeddings, n_bands, planes_per_band, dim, id_col, vec_col)
     )
     a = bb.select("band", "bucket", F.col("vid").alias("id_a"))
     b = bb.select("band", "bucket", F.col("vid").alias("id_b"))
@@ -583,7 +599,8 @@ def incremental_ann_topk(
     ``incremental_ann_stream`` runs the same two steps. Returns (query_id,
     cand_id, cosine, rank<=k)."""
     qs = _probe_keys(
-        _srp_band_rows(new_vecs, n_bands, planes_per_band, dim, id_col, vec_col),
+        _srp_band_rows(new_vecs, n_bands, planes_per_band, dim, id_col, vec_col,
+                       (vec_col,)),
         planes_per_band, multiprobe, probe_budget,
     )
     cands = (
@@ -649,36 +666,21 @@ def _nearest_cells(
     step of ``_lloyd`` runs it, so training, serving and the DuckDB oracle
     (``ann_ivf_trained``, ``ann_pq_*``, ``ann_ivf_pq``) agree bit for bit.
 
-    One narrow Arrow pass, no shuffle; partitionBy on the cell column
-    downstream is the 10^12-row materialization strategy."""
+    One narrow Arrow pass (``_vector_pass``), no shuffle; partitionBy on
+    the cell column downstream is the 10^12-row materialization
+    strategy."""
     import numpy as np
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    fields = {f.name: f for f in df.schema.fields}
-    out_schema = StructType(
-        [fields[c] for c in keep]
-        + [StructField("cells", ArrayType(IntegerType(), False), False)]
-    )
     books = [(lo, np.asarray(cb, dtype=np.float64)) for lo, cb in blocks]
 
-    def gen(batches):
-        arrowmap.guard_zip_rereads()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = _matrix(pdf[vec_col])
-            cells = np.stack([
-                np.argmin(_proxy_dists(X[:, lo:lo + C.shape[1]], C), axis=1)
-                for lo, C in books
-            ], axis=1)
-            out = pdf[keep].copy()
-            out["cells"] = cells.tolist()
-            yield out
+    def cells(vectors):
+        X = _matrix(vectors)
+        return np.stack([
+            np.argmin(_proxy_dists(X[:, lo:lo + C.shape[1]], C), axis=1)
+            for lo, C in books
+        ], axis=1).tolist()
 
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return df.select(*dict.fromkeys([*keep, vec_col])).mapInPandas(
-        gen, schema=out_schema
-    )
+    return _vector_pass(df, vec_col, keep, "cells", T.ArrayType(T.IntegerType()), cells)
 
 
 def assign_cells_vectorized(
@@ -803,35 +805,41 @@ def pq_train(
     return _lloyd(embeddings, m, k, iters, dim, id_col, vec_col)
 
 
-def _probe_cells(queries: list[tuple], cents: list[list[float]],
-                 n_probe: int) -> dict:
-    """query_id -> its n_probe nearest cells by the kernel's
+def _probe_cells(qvecs: list, cents: list[list[float]], n_probe: int) -> list:
+    """Per query, its n_probe nearest cells by the kernel's
     ``_proxy_dists``, ties broken by cell index."""
     import numpy as np
 
-    if not queries:
-        return {}
-    d = _proxy_dists(_matrix([qv for _, qv in queries]), np.asarray(cents))
-    return {
-        qid: np.argsort(row, kind="stable")[:n_probe].tolist()
-        for (qid, _), row in zip(queries, d)
-    }
+    if not qvecs:
+        return []
+    d = _proxy_dists(_matrix(qvecs), np.asarray(cents))
+    return list(np.argsort(d, axis=1, kind="stable")[:, :n_probe])
 
 
-def _pq_tables(queries: list[tuple], codebooks: list) -> list[tuple]:
-    """[(query_id, flattened m*k ADC table)]: per block b and centroid j,
-    the ``_proxy_dists`` of the query's block-b slice — the kernel's
-    encoding order, so a code's table entry is its encoding distance."""
+def _adc_score(qvecs: list, codebooks: list) -> tuple:
+    """The ADC score of ``_topk_partials``: key and value ``adc_dist``, ASC.
+    Per query one flattened m x k table — per block b and centroid j the
+    ``_proxy_dists`` of the query's block-b slice, the kernel's encoding
+    order, so a code's table entry is its encoding distance — and a
+    candidate's distance is one gather + add per block, folded in ascending
+    block order from 0.0 (the engine-portable order the oracle replays)."""
     import numpy as np
 
-    if not queries:
-        return []
-    Q = _matrix([qv for _, qv in queries])
+    m, kcent = len(codebooks), len(codebooks[0])
+    Q = _matrix(qvecs)
     tabs = np.concatenate([
         _proxy_dists(Q[:, lo:lo + len(cb[0])], np.asarray(cb))
         for lo, cb in _blocks(codebooks)
-    ], axis=1)
-    return [(qid, tab) for (qid, _), tab in zip(queries, tabs)]
+    ], axis=1) if qvecs else None
+
+    def keys(codes):
+        C = np.asarray(codes, dtype=np.int64)
+        acc = np.zeros((len(C), len(tabs)))
+        for b in range(m):  # ascending blocks: the oracle's fold order
+            acc += tabs[:, b * kcent + C[:, b]].T
+        return acc
+
+    return "adc_dist", keys, lambda kept: kept.tolist()
 
 
 def ivf_topk(
@@ -856,90 +864,20 @@ def ivf_topk(
     IVF deployment shape: train once, serve many. Trained centroids cut the
     probes needed at equal recall (pinned by tests/test_recall.py).
 
-    Candidates are scored in the same numpy kernel class as the assignment
-    (``_scored_topk_partials``): the query vectors and their probe-cell
-    sets (``_probe_cells``) ride inside the kernel and each task emits its
+    Candidates are scored by the partial top-k kernel
+    (``_topk_partials``): the query vectors and their probe-cell sets
+    (``_probe_cells``) ride inside the kernel and each task emits its
     partial top-k, so no cell-keyed join or per-pair cosine expression is
     in the plan."""
     cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
     base = assign_cells_vectorized(
         embeddings, dim=dim, id_col=id_col, vec_col=vec_col, centroids=cents,
     ).select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "cell")
-    queries = _query_rows(embeddings, n_queries, id_col, vec_col)
+    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
     return _rank_topk(
-        _scored_topk_partials(
-            base, queries, k, probe_cells=_probe_cells(queries, cents, n_probe)
-        ),
+        _topk_partials(base, qids, k, _cosine_score(qvecs),
+                       _probe_cells(qvecs, cents, n_probe)),
         k,
-    )
-
-
-def _adc_topk_partials(
-    cands: DataFrame,
-    queries: list[tuple],
-    k: int,
-    m: int,
-    kcent: int,
-    probe_cells: dict | None = None,
-) -> DataFrame:
-    """Per-task partial top-k by ADC distance — the PQ sibling of
-    ``_scored_topk_partials``: each query's flattened m x kcent table rides
-    inside the kernel, candidates cost one numpy gather + add per block
-    (blocks folded in ascending order from 0.0 — the engine-portable
-    order the oracle replays), and only each task's
-    k best (adc ASC, cand_id ASC) reach the ranking window. ``queries``
-    is [(query_id, tab_list)]; ``cands`` is (cand_id, codes[, cell])."""
-    import numpy as np
-    import pandas as pd
-
-    qids = [q[0] for q in queries]
-    tabs = [np.asarray(q[1]) for q in queries]
-    probes = (
-        [np.asarray(sorted(probe_cells[qid]), dtype=np.int64) for qid in qids]
-        if probe_cells is not None else None
-    )
-    nq = len(qids)
-    has_cell = "cell" in [f.name for f in cands.schema.fields]
-
-    def gen(batches):
-        arrowmap.guard_zip_rereads()
-        best_key = [np.empty(0)] * nq
-        best_id = [np.empty(0, dtype=np.int64)] * nq
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["cand_id"].to_numpy()
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            cells = pdf["cell"].to_numpy() if has_cell else None
-            for qi in range(nq):
-                mask = ids != qids[qi]
-                if cells is not None and probes is not None:
-                    mask &= np.isin(cells, probes[qi])
-                if not mask.any():
-                    continue
-                sub_codes = codes[mask]
-                sid = ids[mask]
-                acc = np.zeros(len(sid))
-                t = tabs[qi]
-                for b in range(m):  # ascending blocks: the oracle's fold order
-                    acc += t[b * kcent + sub_codes[:, b]]
-                take = np.lexsort((sid, acc))[: k]
-                kk = np.concatenate((best_key[qi], acc[take]))
-                ii = np.concatenate((best_id[qi], sid[take]))
-                order = np.lexsort((ii, kk))[: k]
-                best_key[qi] = kk[order]
-                best_id[qi] = ii[order]
-        out = {"query_id": [], "cand_id": [], "adc_dist": []}
-        for qi in range(nq):
-            for t_ in range(len(best_id[qi])):
-                out["query_id"].append(qids[qi])
-                out["cand_id"].append(int(best_id[qi][t_]))
-                out["adc_dist"].append(float(best_key[qi][t_]))
-        yield pd.DataFrame(out, columns=["query_id", "cand_id", "adc_dist"])
-
-    # numpy batch kernel (whole columns in and out, no per-row loop): mapInPandas
-    return cands.mapInPandas(
-        gen, schema="query_id bigint, cand_id bigint, adc_dist double"
     )
 
 
@@ -992,19 +930,17 @@ def pq_topk(
     (c2 - 2*q_b.c — the same monotone L2 proxy as IVF), then every
     candidate costs m TABLE LOOKUPS instead of a dim-length float scan —
     the arithmetic that makes exhaustive scoring of a coarse cell feasible
-    when vectors live as codes. The query tables ride inside a numpy
-    kernel (``_adc_topk_partials``) that emits per-task partial top-k, so
-    no cross join or per-pair ADC expression is in the plan; the ADC sum
-    folds blocks in ascending order from 0.0 (the engine-portable order);
-    ties rank by candidate id."""
+    when vectors live as codes. The query tables ride inside the partial
+    top-k kernel (``_topk_partials`` with ``_adc_score``), so no cross join
+    or per-pair ADC expression is in the plan; the ADC sum folds blocks in
+    ascending order from 0.0 (the engine-portable order); ties rank by
+    candidate id."""
     cands = _nearest_cells(
         embeddings, _blocks(codebooks), vec_col, [id_col]
     ).select(F.col(id_col).alias("cand_id"), F.col("cells").alias("codes"))
-    queries = _pq_tables(
-        _query_rows(embeddings, n_queries, id_col, vec_col), codebooks
-    )
-    scored = _adc_topk_partials(
-        cands, queries, rerank if rerank else k, len(codebooks), len(codebooks[0]),
+    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    scored = _topk_partials(
+        cands, qids, rerank if rerank else k, _adc_score(qvecs, codebooks)
     )
     return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)
 
@@ -1043,13 +979,12 @@ def ivf_pq_topk(
         embeddings, _blocks([centroids]) + _blocks(codebooks), vec_col, [id_col]
     ).select(
         F.col(id_col).alias("cand_id"),
-        F.col("cells")[0].alias("cell"),
         F.slice(F.col("cells"), 2, len(codebooks)).alias("codes"),
+        F.col("cells")[0].alias("cell"),
     )
-    qrows = _query_rows(embeddings, n_queries, id_col, vec_col)
-    scored = _adc_topk_partials(
-        cands, _pq_tables(qrows, codebooks), rerank if rerank else k,
-        len(codebooks), len(codebooks[0]),
-        probe_cells=_probe_cells(qrows, centroids, n_probe),
+    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    scored = _topk_partials(
+        cands, qids, rerank if rerank else k, _adc_score(qvecs, codebooks),
+        _probe_cells(qvecs, centroids, n_probe),
     )
     return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)

@@ -99,7 +99,7 @@ def write_srp_buckets(embeddings: DataFrame, base_dir: str) -> str:
     from . import similarity
 
     path = os.path.join(base_dir, _SRP_DIR)
-    rows = similarity.srp_banded_buckets(embeddings).select(
+    rows = similarity._guarded_buckets(embeddings).select(
         "vid", "bucket", "band",
         bucket_prefix_col(F.col("bucket")).alias("bucket_prefix"),
     )

@@ -266,7 +266,7 @@ def incremental_ann_stream(
     radius = similarity.MULTIPROBE_RADIUS if multiprobe is None else multiprobe
     rows = similarity._srp_band_rows(
         vecs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
-        similarity.N_BANDS, ppb, dim, id_col, vec_col, carry=(ts_col,),
+        similarity.N_BANDS, ppb, dim, id_col, vec_col, carry=(vec_col, ts_col),
     )
     qs = similarity._probe_keys(rows, ppb, radius, probe_budget, carry=(ts_col,))
     cands = similarity._committed_candidates(qs, committed_buckets, carry=(ts_col,))

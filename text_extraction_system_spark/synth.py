@@ -165,8 +165,7 @@ def corpus_df(spark, n_per_archetype: int = 3):
 
 def replicate_corpus(docs, rep: int, num_partitions: int):
     """Replicate a documents table ``rep`` times with distinct doc_ids —
-    the shared bench-corpus builder (bench.py and tools/scaling_bench.py use
-    the same derivation so both benchmarks measure the same data shape)."""
+    bench.py's pipeline corpus builder."""
     from pyspark.sql import functions as F
 
     return (
