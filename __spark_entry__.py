@@ -14,13 +14,13 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from itertools import groupby
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from text_extraction_system_spark import pipeline
-from text_extraction_system_spark.core import charboxes, spec
-from text_extraction_system_spark.operators import derive_spans as ds
+from text_extraction_system_spark.core import charboxes, oracle, spec
 from text_extraction_system_spark.operators import (
     boilerplate,
     coords,
@@ -29,7 +29,6 @@ from text_extraction_system_spark.operators import (
     dedup,
     events,
     multimodal,
-    ocr,
     tables_op,
     rotation,
     similarity,
@@ -37,6 +36,7 @@ from text_extraction_system_spark.operators import (
     textstats,
 )
 from text_extraction_system_spark.operators import deskew_op, readorder_op, toc
+from text_extraction_system_spark.operators import spans as spans_op
 from text_extraction_system_spark.operators import structure as structure_op
 
 _HEX = "0123456789abcdef"
@@ -91,25 +91,26 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _q_spans_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1/S3: documents -> interleaved spans, exploded to one row per span."""
-    spans = ds.derive_spans(_docs(spark, sf_dir))
-    return spans.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.offset").alias("span_offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
+    """J1/S3: documents -> interleaved spans, one row per span."""
+    return spans_op.span_rows(
+        _docs(spark, sf_dir),
+        lambda doc_id, spans: ((doc_id, s.offset, s.kind, s.text, s.media_ref) for s in spans),
+        "doc_id string, span_offset int, kind string, text string, media_ref string",
     )
+
+
+def _route_rows(doc_id: str, spans: list[oracle.Span], *key) -> tuple:
+    """``(doc_id, *key, text_cover, media_cover, needs_ocr)`` of ``spans``."""
+    text_cover, media_cover = oracle.covers(spans, oracle.media_spans(spans))
+    return doc_id, *key, text_cover, media_cover, oracle.requires_ocr(text_cover, media_cover)
 
 
 def _q_ocr_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2/F3/A1: per-doc text/media covers + OCR-decision classifier."""
-    spans = ds.derive_spans(_docs(spark, sf_dir))
-    return spans.select(
-        "doc_id",
-        ocr.text_cover_col(F.col("spans")).alias("text_cover"),
-        ocr.media_cover_col(F.col("spans")).alias("media_cover"),
-        ocr.needs_ocr_col(F.col("spans")).alias("needs_ocr"),
+    return spans_op.span_rows(
+        _docs(spark, sf_dir),
+        lambda doc_id, spans: [_route_rows(doc_id, spans)],
+        "doc_id string, text_cover bigint, media_cover bigint, needs_ocr boolean",
     )
 
 
@@ -709,27 +710,17 @@ def _q_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ocr_route_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 at the reference's true granularity: per-PAGE OCR decision
-    (page_requires_ocr is per page in pdf/pdf.py:31-33)."""
-    spans = ds.derive_spans(_docs(spark, sf_dir))
-    s = spans.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.floor(F.col("s.offset") / spec.PAGE_SPANS).cast("bigint").alias("page_number"),
-        F.when(F.col("s.kind") == "text", F.length("s.text")).otherwise(0)
-        .cast("bigint").alias("tc"),
-        F.when(F.col("s.kind") == "media", ocr.media_area_col(F.col("s.media_ref")))
-        .otherwise(0).cast("bigint").alias("mc"),
-    )
-    return s.groupBy("doc_id", "page_number").agg(
-        F.sum("tc").alias("text_cover"),
-        F.sum("mc").alias("media_cover"),
-    ).select(
-        "doc_id",
-        "page_number",
-        "text_cover",
-        "media_cover",
-        (F.col("text_cover") < F.lit(spec.OCR_RATIO) * F.col("media_cover")).alias(
-            "page_needs_ocr"
-        ),
+    (page_requires_ocr is per page in pdf/pdf.py:31-33). Page p holds the
+    spans with offset in [PAGE_SPANS*p, PAGE_SPANS*(p+1))."""
+
+    def rows(doc_id, spans):
+        for page, on_page in groupby(spans, lambda s: s.offset // spec.PAGE_SPANS):
+            yield _route_rows(doc_id, list(on_page), page)
+
+    return spans_op.span_rows(
+        _docs(spark, sf_dir), rows,
+        "doc_id string, page_number bigint, text_cover bigint, media_cover bigint, "
+        "page_needs_ocr boolean",
     )
 
 
@@ -957,7 +948,8 @@ def _sql_ocr_text(ref: str) -> str:
     )
 
 
-#: derived span rows — shared CTE prefix (mirrors operators/derive_spans.py)
+#: derived span rows — shared CTE prefix, the SQL twin of
+#: core/oracle.derive_spans (which the span pass, operators/spans.py, runs)
 _SQL_SPANS_CTE = f"""
 WITH src AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -2332,7 +2324,7 @@ FROM snapped
     )
 
     # rotate_media_inline twin: the payload is the md5-hex synthetic
-    # (media_payload_col), the fallback byte rotation shifts by
+    # (ocr_stub.media_payload), the fallback byte rotation shifts by
     # quarter-turns of the snapped angle, and the fingerprint is md5 over
     # the LOWERCASE HEX of the rotated bytes — a 2k-char rotation of the
     # hex string IS the k-byte rotation, so no blob md5 is needed.

@@ -161,26 +161,61 @@ def test_detect_rotation_real_branch_with_fake_pil():
     )
 
 
-def test_detected_rotation_rows_match_stub_column(spark):
-    """Through the full Arrow payload path (no PIL in this container /
-    synthetic payloads), detected_rotation_rows == raw_angle_col exactly —
-    the stub and the real plumbing agree per media ref."""
-    from pyspark.sql import functions as F
+def test_rotation_rows_take_the_pixel_path_or_the_stub(spark):
+    """``rotation_rows`` runs ``detect_rotation`` on each media span's real
+    payload inside the span pass. A PIL-like module that decodes the
+    payload (into a page skewed by an angle its first byte picks) makes
+    the pixel estimate the raw angle; the snap, the fold and the guard
+    follow ``core.angles``. A module that raises gives every span
+    ``stub_raw_angle``, and rows equal to the default's."""
+    import numpy as np
 
+    from text_extraction_system_spark.core import angles
     from text_extraction_system_spark.operators import rotation
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
-    got = {
-        (r["doc_id"], r["media_ref"]): r["raw_angle"]
-        for r in rotation.detected_rotation_rows(docs).collect()
-    }
-    want = {
-        (r["doc_id"], r["media_ref"]): r["raw_angle"]
-        for r in rotation.rotation_rows(docs)
-        .select("doc_id", "media_ref", "raw_angle")
-        .collect()
-    }
-    assert got == want and got
+    thetas = (-4.0, 0.0, 4.0)
+
+    class Page:
+        def __init__(self, theta, h=128, w=128):
+            arr = np.full((h, w), 255.0)
+            slope = -np.tan(np.radians(theta))
+            xs = np.arange(w)
+            for y0 in range(8, h - int(abs(slope) * w) - 2, 16):
+                arr[np.clip(np.round(y0 + slope * xs).astype(int), 0, h - 1), xs] = 0.0
+            self.arr = arr
+
+        def convert(self, mode):
+            return self
+
+        def __array__(self, dtype=None, copy=None):
+            return self.arr if dtype is None else self.arr.astype(dtype)
+
+    class DecodingMod:
+        @staticmethod
+        def open(fp):
+            payload = fp.read()
+            assert payload == payload[:16] * (len(payload) // 16)
+            return Page(thetas[payload[0] % 3])
+
+    class ExplodingMod:
+        @staticmethod
+        def open(fp):
+            raise RuntimeError("poison payload")
+
+    docs = _docs(spark).limit(20)
+    pixel = rotation.rotation_rows(docs, DecodingMod).collect()
+    assert pixel
+    for r in pixel:
+        theta = thetas[hashlib.md5(r["media_ref"].encode()).digest()[0] % 3]
+        assert abs(r["raw_angle"] - theta) <= 1.0, (theta, r)
+        assert r["detected_angle"] == angles.snap_rotation(r["raw_angle"])
+        assert r["angle90"] == angles.normalize_angle_90(r["detected_angle"])
+        assert not r["should_correct"] or r["detected_angle"] != 0.0
+
+    stub = rotation.rotation_rows(docs, ExplodingMod).collect()
+    assert [r["raw_angle"] for r in stub] == [rotation.stub_raw_angle(r["media_ref"]) for r in stub]
+    assert sorted(stub) == sorted(rotation.rotation_rows(docs).collect())
+    assert sorted(r["media_ref"] for r in stub) == sorted(r["media_ref"] for r in pixel)
 
 
 def test_dilated_rows_estimator_recovers_skew():

@@ -1,7 +1,8 @@
 """Engine-vs-oracle parity on an ADVERSARIAL mini-corpus the generated
 testdata never produces: NUL-bearing text (F5 scrub path), empty text,
-whitespace-only text. Every documents-only query must agree with its DuckDB
-twin on row count and values — these were real latent asymmetries found in
+whitespace-only text, and sentence boundaries (``[.!?] ``). Every
+documents-only query must agree with its DuckDB twin on row count and
+values — these were real latent asymmetries found in
 round-2 review (pages-CTE scrub, zero-chunk boilerplate, zero-span covers,
 zero-token reading order). The same check runs on the sf0.001 corpus for the
 kernel-backed similarity/dedup/tfidf operators, whose only second
@@ -23,17 +24,19 @@ from text_extraction_system_spark import pipeline
 
 DOCS = pd.DataFrame(
     {
-        "doc_id": [1, 2, 3, 4, 5],
+        "doc_id": [1, 2, 3, 4, 5, 6],
         "text": [
             "abc\x00def words here to fill the doc with content",
             "",
             "   ",
             "normal words only document",
             "\x00 lone nul then words follow here",
+            "The first sentence ends here. Does the second one ask? "
+            "Yes it does! Then a fourth without end",
         ],
-        "lang": ["en"] * 5,
-        "source": ["srcX"] * 5,
-        "n_chars": [49, 0, 3, 26, 34],
+        "lang": ["en"] * 6,
+        "source": ["srcX"] * 6,
+        "n_chars": [49, 0, 3, 26, 34, 93],
     }
 )
 

@@ -23,22 +23,39 @@ def test_cost_salted_balance(spark):
     assert {r["doc_id"]: r["pid"] for r in a} != {r["doc_id"]: r["pid"] for r in b}
 
 
-@pytest.mark.parametrize("row_groups, spread", [(1, True), (8, False)])
-def test_spread_follows_the_input_row_groups(spark, tmp_path, row_groups, spread):
-    """``spread_unsplittable`` repartitions a scan whose parquet footers
-    hold fewer row groups than the session's parallelism (4 on the test
-    session's local[4]) and leaves one that holds as many alone."""
+@pytest.mark.parametrize("rows, row_groups, split_bytes, spread", [
+    pytest.param(800, 1, None, True, id="1-True"),
+    pytest.param(800, 8, None, True, id="8-True"),
+    pytest.param(400_000, 8, None, True, id="8-400k-True"),
+    pytest.param(400_000, 8, 1 << 16, False, id="8-split-False"),
+])
+def test_spread_follows_the_input_row_groups(spark, tmp_path, rows, row_groups,
+                                             split_bytes, spread):
+    """``spread_unsplittable`` repartitions a scan that splits fewer ways
+    than the session's parallelism (4 on the test session's local[4]) and
+    leaves one that splits as many ways alone. A file of 8 row groups
+    still scans as one partition under the default split size, so it is
+    spread too; with ``split_bytes`` as the split size the 400,000-row
+    file splits into its row groups and is not."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "docs.parquet")
-    table = pa.table({"doc_id": list(range(800)), "text": ["words"] * 800})
-    pq.write_table(table, path, row_group_size=800 // row_groups)
+    table = pa.table({"doc_id": list(range(rows)), "text": [f"words {i}" for i in range(rows)]})
+    pq.write_table(table, path, row_group_size=rows // row_groups)
     assert pq.ParquetFile(path).metadata.num_row_groups == row_groups
-    df = partitioning.spread_unsplittable(spark.read.parquet(path), "doc_id")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    key = "spark.sql.files.maxPartitionBytes"
+    if split_bytes:
+        spark.conf.set(key, str(split_bytes))
+    try:
+        scan = spark.read.parquet(path)
+        assert (scan.rdd.getNumPartitions() >= 4) == (not spread)
+        df = partitioning.spread_unsplittable(scan, "doc_id")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset(key)
     assert ("Exchange" in plan) == spread, plan
-    assert df.count() == 800
+    assert df.count() == rows
 
 
 def test_doc_cost_charges_media(spark):

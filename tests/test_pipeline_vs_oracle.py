@@ -72,9 +72,9 @@ def test_span_texts_contain_no_separator_chars(spark, docs_df):
     spans AND the OCR'd output spans."""
     from pyspark.sql import functions as F
 
-    from text_extraction_system_spark.operators import derive_spans as ds
+    from text_extraction_system_spark.operators import spans as spans_op
 
-    derived = ds.derive_spans(docs_df).select(F.col("spans").alias("out_spans"))
+    derived = spans_op.derive_spans(docs_df).select(F.col("spans").alias("out_spans"))
     out = pipeline.extract_from_documents(docs_df, with_structure=False)
     bad = derived.unionByName(out.select("out_spans")).select(
         F.exists(
@@ -85,6 +85,23 @@ def test_span_texts_contain_no_separator_chars(spark, docs_df):
         ).alias("bad")
     ).where("bad")
     assert bad.count() == 0
+
+
+def test_span_pass_gives_blank_text_no_spans(spark):
+    """A NULL, empty or blank text derives no spans, so no media rows, and
+    its covers are ``(0, 0, false)`` — what the DuckDB span and cover
+    twins give such a document."""
+    from text_extraction_system_spark.core import oracle
+    from text_extraction_system_spark.operators import multimodal
+    from text_extraction_system_spark.operators import spans as spans_op
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "two words")], "doc_id int, text string")
+    got = {r["doc_id"]: r["spans"] for r in spans_op.derive_spans(docs).collect()}
+    assert got == {"1": [], "2": [], "3": [], "4": [("text", "two words", "", 0)]}
+    assert multimodal.media_table(docs.where("doc_id < 4")).count() == 0
+    assert oracle.covers([], oracle.media_spans([])) == (0, 0)
+    assert oracle.requires_ocr(0, 0) is False
 
 
 def _long_doc_corpus() -> list[tuple[str, str | None]]:

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from text_extraction_system_spark import pipeline
-from text_extraction_system_spark.operators import derive_spans as ds
+from text_extraction_system_spark.operators import spans as spans_op
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,7 +28,7 @@ def _plan(df) -> str:
 
 def test_column_pruning_reaches_scan(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(ds.derive_spans(docs))
+    plan = _plan(spans_op.derive_spans(docs))
     assert "ReadSchema" in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "doc_id" in read_schema and "text" in read_schema
@@ -38,7 +38,7 @@ def test_column_pruning_reaches_scan(spark):
 
 def test_inline_path_is_shuffle_free(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    spans = ds.derive_spans(docs)
+    spans = spans_op.derive_spans(docs)
     assembled = pipeline.extract_from_spans(spans, with_structure=False)
     plan = _plan(assembled)
     assert "Exchange" not in plan, plan
@@ -94,7 +94,7 @@ def test_filter_pushdown_reaches_scan(spark):
     partition/row-group pruning is what makes selective reads cheap at
     100 TB."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").where("doc_id = 42")
-    plan = _plan(ds.derive_spans(docs))
+    plan = _plan(spans_op.derive_spans(docs))
     pushed = plan.split("PushedFilters:")[1].splitlines()[0]
     assert "doc_id" in pushed and "42" in pushed, pushed
 
@@ -620,19 +620,21 @@ _EXTRACTIONS = {
     "documents": pipeline.extract_from_documents,
     "documents_no_structure": lambda d: pipeline.extract_from_documents(
         d, with_structure=False),
-    "spans": lambda d: pipeline.extract_from_spans(ds.derive_spans(d)),
-    "spans_no_structure": lambda d: pipeline.extract_from_spans(
-        ds.derive_spans(d), with_structure=False),
+    "spans": pipeline.extract_from_spans,
+    "spans_no_structure": lambda s: pipeline.extract_from_spans(s, with_structure=False),
 }
 
 
 @pytest.mark.parametrize("entry", sorted(_EXTRACTIONS))
-def test_default_extraction_is_one_narrow_stage(spark, entry):
-    """Extraction, from documents or spans, with or without structure, is a
-    single mapInArrow pass over the scan: no giant-doc fan-out shuffle, no
-    union, no second python boundary."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(_EXTRACTIONS[entry](docs))
+def test_default_extraction_is_one_narrow_stage(spark, tmp_path, entry):
+    """Extraction, from documents or from a stored spans table, with or
+    without structure, is a single mapInArrow pass over the scan: no
+    giant-doc fan-out shuffle, no union, no second python boundary."""
+    src = spark.read.parquet(f"{SF}/documents.parquet")
+    if entry.startswith("spans"):
+        spans_op.derive_spans(src).write.parquet(str(tmp_path / "spans"))
+        src = spark.read.parquet(str(tmp_path / "spans"))
+    plan = _plan(_EXTRACTIONS[entry](src))
     assert "Exchange" not in plan, plan
     assert "Union" not in plan, plan
     assert plan.count("MapInArrow") == 1, plan
@@ -641,11 +643,15 @@ def test_default_extraction_is_one_narrow_stage(spark, entry):
 
 @pytest.mark.parametrize("name", ["extract_restitch", "plain_text", "pages",
                                   "paragraphs", "sentences", "titles",
-                                  "reading_order", "deskew"])
+                                  "reading_order", "deskew",
+                                  "spans_derive", "ocr_route", "ocr_route_pages",
+                                  "rotation", "media_rotate", "media_decode",
+                                  "media_features", "tables"])
 def test_extraction_queries_are_one_kernel_pass(spark, name):
-    """Each declared extraction query, and each layout query, runs one
-    kernel pass: one mapInArrow, no pandas UDF, and no shuffle but
-    ``_docs``' spread."""
+    """Each declared extraction query, each layout query and each span,
+    media and rotation query runs one kernel pass: one mapInArrow, no
+    pandas UDF, and no shuffle but ``_docs``' spread (the page route
+    groups its spans by page inside the pass)."""
     import __spark_entry__ as e
 
     plan = _plan(e.queries()[name](spark, SF))
@@ -690,7 +696,9 @@ def _row_kernel_operators():
         "resize_media": multimodal.resize_media,
         "sample_frames": multimodal.sample_frames,
         "rotate_media_inline": multimodal.rotate_media_inline,
-        "detected_rotation_rows": rotation.detected_rotation_rows,
+        "rotation_rows": rotation.rotation_rows,
+        "derive_spans": spans_op.derive_spans,
+        "media_table": multimodal.media_table,
         "detect_tables": tables_op.detect_tables,
         "reading_order_rows": readorder_op.reading_order_rows,
         "deskew_rows": lambda d: deskew_op.deskew_rows(deskew_op.synth_glyph_arrays(

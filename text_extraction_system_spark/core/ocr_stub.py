@@ -4,9 +4,9 @@ Reference analog: ``ocr/ocr.py:80-131`` (``ocr_page_to_pdf``) runs tesseract
 ``--psm 1 -c textonly_pdf=1`` per page image. Here, media bytes do not exist;
 instead the recognized text is a pure function of ``media_ref`` so that
 expected outputs are computable without pixel work (FIXTURES.md section 1
-"Determinism"). The same function is reproducible in Spark built-ins and in
-DuckDB SQL (md5 + hex-char position), keeping all three implementations in
-lock-step.
+"Determinism"). Media payloads are synthetic too (``media_payload``). Each
+function reads the ref's md5 hex digest only, so the DuckDB twins replay it
+with md5 and hex-char positions.
 """
 
 from __future__ import annotations
@@ -35,3 +35,10 @@ def media_area(digest: str) -> int:
     the OCR-decision classifier (reference: calc_covers,
     pdf/pdf.py:261-273)."""
     return (1 + _HEX.index(digest[0])) * spec.MEDIA_AREA_UNIT
+
+
+def media_payload(digest: str) -> bytes:
+    """Synthetic binary payload of a media span from its ``media_hash``:
+    the md5 digest bytes repeated ``1 + hexval(digest[0])`` times (16..256
+    bytes), the stand-in for an image's bytes."""
+    return bytes.fromhex(digest) * (1 + _HEX.index(digest[0]))

@@ -1,16 +1,21 @@
-"""Single-threaded Python oracle — the slow reference implementation.
+"""The engine's per-document library: one document's spans, OCR decision,
+re-stitched output spans, plain text and structure, in plain Python.
 
-Computes, for one flat document row ``(doc_id, text)``, everything the Spark
-pipeline must reproduce: the derived interleaved span sequence, the OCR
-decision, the re-stitched output spans, the assembled plain text and the
-structure record. pytest compares the distributed pipeline against this
-module (FIXTURES.md section 2 ``expected_extraction``).
+Every per-document step of the engine runs this code. The extraction
+kernel (``pipeline._extract``) runs ``derive_spans`` (for documents) and
+``stitch`` (the span contract check, ``process_spans`` and ``assemble``);
+the span pass (``operators.spans``) runs ``derive_spans``, ``media_spans``,
+``covers`` and ``requires_ocr`` for the span, OCR-route, media, table and
+rotation operators. The DuckDB twins in ``__spark_entry__.oracle_sql`` are
+the independent second implementation the engine is checked against.
+The module keeps its old name while the benchmark imports it (ROADMAP
+item 0).
 
-The extraction kernel (``pipeline._extract``) runs ``derive_spans`` (for
-documents) and ``stitch`` (the span contract check, ``process_spans`` and
-``assemble``) per document; ``extract_spans`` scores each paragraph/sentence
-slice on its own (``langid.detect_language``), the reference the kernel's
-one-scan ``langid.LangIndex`` is checked against.
+``extract`` is the whole lifecycle for one flat ``(doc_id, text)`` row, the
+expected value pytest and the benchmark compare pipeline output with
+(FIXTURES.md section 2 ``expected_extraction``). ``extract_spans`` scores
+each paragraph/sentence slice on its own (``langid.detect_language``), the
+reference the kernel's one-scan ``langid.LangIndex`` is checked against.
 
 Reference lifecycle being mirrored: ``process_document`` -> ``process_pdf``
 page fan-out -> OCR -> ``merge_pdf_pages`` re-stitch ->
@@ -73,24 +78,38 @@ def derive_spans(doc_id: str, text: str) -> list[Span]:
     return spans
 
 
+def media_spans(spans: list[Span]) -> list[tuple[int, Span, str]]:
+    """``(index, span, media_hash)`` for each media span, in span order:
+    each ref is hashed once, for its area, its OCR text and its payload."""
+    return [(i, s, ocr_stub.media_hash(s.media_ref))
+            for i, s in enumerate(spans) if s.kind == "media"]
+
+
+def covers(spans: list[Span], media: list[tuple[int, Span, str]]) -> tuple[int, int]:
+    """``(text_cover, media_cover)`` of ``spans``, whose ``media_spans`` are
+    ``media``: text characters and synthetic media areas (reference
+    calc_covers, pdf/pdf.py:261-273)."""
+    text_cover = sum(len(s.text) for s in spans if s.kind == "text")
+    return text_cover, sum(ocr_stub.media_area(h) for _, _, h in media)
+
+
+def requires_ocr(text_cover: int, media_cover: int) -> bool:
+    """The OCR decision, reference page_requires_ocr (pdf/pdf.py:31-33):
+    text_cover < OCR_RATIO * media_cover."""
+    return text_cover < spec.OCR_RATIO * media_cover
+
+
 def process_spans(spans: list[Span]) -> tuple[bool, list[Span], list[str]]:
     """OCR decision, then re-stitch: ``(needs_ocr, out_spans, failures)``.
 
-    The decision is the reference page_requires_ocr (pdf/pdf.py:31-33):
-    text_cover < OCR_RATIO * media_cover, with synthetic media areas. Media
-    spans gain OCR text iff the doc needs OCR and the ref is decodable
-    (media:// scheme); undecodable refs become failure codes, never
-    exceptions. (kind, media_ref, order) are preserved exactly — the
+    Media spans gain OCR text iff the doc ``requires_ocr`` and the ref is
+    decodable (media:// scheme); undecodable refs become failure codes,
+    never exceptions. (kind, media_ref, order) are preserved exactly — the
     north-rule invariant (reference merge order: tasks.py:394-429,
-    pdf/pdf.py:327-367).
-
-    Each media ref is hashed once, for both its area and its OCR text; a
-    span that gains no OCR text is passed through, not copied."""
-    media = [(i, s, ocr_stub.media_hash(s.media_ref))
-             for i, s in enumerate(spans) if s.kind == "media"]
-    text_cover = sum(len(s.text) for s in spans if s.kind == "text")
-    media_cover = sum(ocr_stub.media_area(h) for _, _, h in media)
-    ocr = text_cover < spec.OCR_RATIO * media_cover
+    pdf/pdf.py:327-367). A span that gains no OCR text is passed through,
+    not copied."""
+    media = media_spans(spans)
+    ocr = requires_ocr(*covers(spans, media))
     out = list(spans)
     failures: list[str] = []
     for i, s, h in media:

@@ -1,11 +1,11 @@
 """ENGINE SPEC v1 — the deterministic contract shared by every implementation.
 
-Three independent implementations must agree byte-for-byte on these semantics:
+Two independent implementations must agree byte-for-byte on these semantics:
 
-1. the distributed Spark pipeline (``operators/`` + ``pipeline.py``),
-2. the single-threaded Python oracle (``core/oracle.py``) used by pytest,
-3. the DuckDB ANSI-SQL oracle (``__spark_entry__.oracle_sql``) used by the
-   driver's correctness gate.
+1. the Spark engine (``operators/`` + ``pipeline.py``), whose per-document
+   steps run the per-document library ``core/oracle.py``,
+2. the DuckDB ANSI-SQL oracle (``__spark_entry__.oracle_sql``) used by the
+   correctness gate.
 
 Reference semantics being modeled (citations into /root/reference/):
 

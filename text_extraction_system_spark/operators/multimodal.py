@@ -3,10 +3,11 @@
 Media payloads are opaque ``binary`` columns with typed metadata. The
 container has no image/audio libs, so decode is a clearly-marked
 DETERMINISTIC FAKE: the payload is a repetition of md5(media_ref) digest
-bytes, and "decoding" parses width/height/format out of the leading digest
-bytes. What is REAL and under test is the Spark-side plumbing: binary column
-synthesis in Catalyst expressions, Arrow transfer of binary batches through
-``arrowmap.map_rows``, schema and batch shape.
+bytes (``core.ocr_stub.media_payload``), and "decoding" parses
+width/height/format out of the leading digest bytes. What is REAL and under
+test is the Spark-side plumbing: each kernel runs per media span inside the
+span pass (``spans.media_rows``), binary values cross the Arrow boundary,
+and schema and batch shape are those a real decoder would produce.
 
 Real-deployment note: swap the ``_decode_row`` body for PIL/ffmpeg calls;
 signatures, schema, and partitioning stay identical.
@@ -16,11 +17,9 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from .. import arrowmap
-from . import derive_spans as ds
+from . import spans
 
 FORMATS = ("jpeg", "png", "tiff", "webp")
 
@@ -30,22 +29,12 @@ DECODED_SCHEMA = (
 )
 
 
-def media_payload_col(media_ref: Column) -> Column:
-    """Synthetic binary payload: md5 digest bytes repeated 1+hexval(h[0])
-    times (16..256 bytes). unhex(repeat(md5)) stays JVM-side."""
-    h = F.md5(media_ref)
-    k = F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1))  # 1..16
-    return F.unhex(F.repeat(h, k))
-
-
 def media_table(docs: DataFrame) -> DataFrame:
     """One row per media span with its binary payload."""
-    spans = ds.derive_spans(docs)
-    media = spans.select(
-        "doc_id",
-        F.explode(F.filter(F.col("spans"), lambda s: s["kind"] == "media")).alias("s"),
-    ).select("doc_id", F.col("s.media_ref").alias("media_ref"))
-    return media.withColumn("payload", media_payload_col(F.col("media_ref")))
+    return spans.media_rows(
+        docs, lambda doc_id, ref, payload: [(doc_id, ref, payload)],
+        "doc_id string, media_ref string, payload binary",
+    )
 
 
 def _decode_row(doc_id, ref, payload):
@@ -61,7 +50,7 @@ def _decode_row(doc_id, ref, payload):
 
 def decode_media(docs: DataFrame) -> DataFrame:
     """Binary payloads -> typed media metadata via Arrow batches."""
-    return arrowmap.map_rows(media_table(docs), _decode_row, DECODED_SCHEMA)
+    return spans.media_rows(docs, _decode_row, DECODED_SCHEMA)
 
 
 FEATURE_DIM = 16
@@ -82,7 +71,7 @@ def extract_features(docs: DataFrame) -> DataFrame:
         hist = np.bincount(b >> 4, minlength=FEATURE_DIM).astype(np.float64)
         yield doc_id, ref, (hist / max(len(b), 1)).tolist()
 
-    return arrowmap.map_rows(media_table(docs), rows, FEATURES_SCHEMA)
+    return spans.media_rows(docs, rows, FEATURES_SCHEMA)
 
 
 @functools.cache
@@ -136,7 +125,7 @@ def resize_media(docs: DataFrame, target: int = 64) -> DataFrame:
     def rows(doc_id, ref, payload):
         yield doc_id, ref, target, target, _resize_payload(payload, target, _pil_image())
 
-    return arrowmap.map_rows(media_table(docs), rows, RESIZED_SCHEMA)
+    return spans.media_rows(docs, rows, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = (
@@ -157,7 +146,7 @@ def sample_frames(docs: DataFrame, every: int = 2) -> DataFrame:
         for i in range(0, len(payload) // FRAME_BYTES, every):
             yield doc_id, ref, i, payload[i * FRAME_BYTES:(i + 1) * FRAME_BYTES]
 
-    return arrowmap.map_rows(media_table(docs), rows, FRAMES_SCHEMA)
+    return spans.media_rows(docs, rows, FRAMES_SCHEMA)
 
 
 ROTATED_SCHEMA = (
@@ -197,23 +186,18 @@ def _rotate_payload(b: bytes, angle: float, image_mod=None) -> bytes:
 def rotate_media_inline(docs: DataFrame) -> DataFrame:
     """Apply rotation correction to media payloads (reference I5: rotate the
     page image by the detected angle before OCR). The angle is
-    ``rotation.rotation_rows``' guarded decision, selected in the same
-    narrow pass that builds the payload: ``detected_angle`` where
+    ``rotation.media_rotations``' guarded decision, made in the same span
+    pass that rotates the payload: ``detected_angle`` where
     ``should_correct``, else 0. The pixel kernel runs PIL when importable
     AND the payload decodes; otherwise the deterministic quarter-turn byte
     rotation runs — same fence as resize_media. Pinned by the
     ``media_rotate`` oracle."""
     from . import rotation
 
-    with_angle = rotation.rotation_rows(docs).select(
-        "doc_id",
-        "media_ref",
-        F.when(F.col("should_correct"), F.col("detected_angle"))
-        .otherwise(F.lit(0.0)).alias("applied_angle"),
-        media_payload_col(F.col("media_ref")).alias("payload"),
-    )
+    def rows(doc_id, doc_spans):
+        image_mod = _pil_image()
+        for s, payload, _, angle, correct in rotation.media_rotations(doc_spans, image_mod):
+            applied = angle if correct else 0.0
+            yield doc_id, s.media_ref, applied, _rotate_payload(payload, applied, image_mod)
 
-    def rows(doc_id, ref, angle, payload):
-        yield doc_id, ref, angle, _rotate_payload(payload, angle, _pil_image())
-
-    return arrowmap.map_rows(with_angle, rows, ROTATED_SCHEMA)
+    return spans.span_rows(docs, rows, ROTATED_SCHEMA)

@@ -41,12 +41,19 @@ def spread_unsplittable(df: DataFrame, key: str) -> DataFrame:
     row placement deterministic under task retry (guide §2.5, SPARK-38388)
     and skips the sort-before-repartition pass a keyless repartition pays.
 
-    The input decides: when the parquet footers of ``df.inputFiles()``
-    hold at least ``defaultParallelism`` row groups, the scan can split
-    that wide and ``df`` is returned as is. Inputs whose footers cannot be
-    read (not local, not parquet, no files) are spread."""
+    The input decides: ``df`` is returned as is when its scan already
+    splits at least ``defaultParallelism`` ways, that is when the parquet
+    footers of ``df.inputFiles()`` hold that many row groups and the scan
+    plans that many partitions (``df.rdd.getNumPartitions()``: planning
+    only, no job). Both are needed: Spark packs a small file into one
+    byte-sized split whatever its row groups (an 8-row-group file of 800
+    or 400,000 rows scans as one partition on local[4] under
+    ``session.get_spark``'s defaults), and many splits of one row group
+    leave all but one empty. Inputs whose footers cannot be read (not
+    local, not parquet, no files) are spread."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if _row_groups_at_least(df.inputFiles(), parallelism):
+    if (_row_groups_at_least(df.inputFiles(), parallelism)
+            and df.rdd.getNumPartitions() >= parallelism):
         return df
     return df.repartition(2 * parallelism, F.col(key))
 

@@ -3,22 +3,29 @@
 In the reference, per-page pixel work (tile deskew / dilated-contour
 estimates) produces a raw angle which is then normalized, snapped to the
 nearest right angle (or rejected), and gated by ``should_correct_rotation``
-(``data_extract.py:386-418``). The sandbox has no cv2, so the Catalyst query
-path uses the deterministic stub ``(hexval(md5(media_ref)[3]) * 24) - 180``;
-``detect_rotation`` additionally carries a REAL pixel estimator — the
-reference's tile-mode scheme (``ocr/rotation_detection.py:98-126``) over a
-projection-profile per-tile skew — that runs whenever a PIL-like module can
-decode the payload, with the stub as the never-raise fallback (the same
-fence as ``multimodal._resize_payload``). The downstream normalize/snap/
-guard pipeline is Catalyst columns with a SQL twin either way.
+(``data_extract.py:386-418``). Here every step runs per media span in the
+span pass (``media_rotations``): ``detect_rotation`` estimates the raw
+angle from the span's payload, ``core.angles.snap_rotation`` and
+``normalize_angle_90`` fold it, and the text-share guard reads the
+document's covers (``core.oracle.covers``). ``detect_rotation`` carries a
+REAL pixel estimator — the reference's tile-mode scheme
+(``ocr/rotation_detection.py:98-126``) over a projection-profile per-tile
+skew — that runs whenever a PIL-like module can decode the payload, with the
+deterministic stub ``(hexval(md5(media_ref)[2]) * 24) - 180`` as the
+never-raise fallback (the same fence as ``multimodal._resize_payload``).
+Without PIL every span takes the stub, which the DuckDB ``rotation`` twin
+replays.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import hashlib
 
-from . import derive_spans as ds
+from pyspark.sql import DataFrame
+
+from ..core import angles as core_angles
+from ..core import ocr_stub, oracle
+from . import multimodal, spans
 
 _HEX = "0123456789abcdef"
 
@@ -27,32 +34,10 @@ SNAP_MAX_DIFF = 10.0
 #: word_percent > 40 -> don't rotate; data_extract.py:386-418)
 TEXT_DOMINANCE_GUARD = 0.4
 
-
-def raw_angle_col(media_ref: Column) -> Column:
-    """Deterministic stub for the pixel-domain angle estimate."""
-    hexval = F.instr(F.lit(_HEX), F.substring(F.md5(media_ref), 3, 1)) - 1
-    return (hexval.cast("double") * 24.0) - 180.0
-
-
-def norm_angle_col(a: Column) -> Column:
-    """[-180, 180) — twin of core.angles.norm_angle."""
-    m = a - F.floor(a / 360.0) * 360.0
-    return F.when(m < 180.0, m).otherwise(m - 360.0)
-
-
-def snap_rotation_col(a: Column, max_diff: float = SNAP_MAX_DIFF) -> Column:
-    """Twin of core.angles.snap_rotation."""
-    n = norm_angle_col(a)
-    return F.when(
-        F.abs(n - F.round(n / 90.0, 0) * 90.0) > max_diff, F.lit(0.0)
-    ).otherwise(n)
-
-
-def normalize_angle_90_col(a: Column) -> Column:
-    """Twin of core.angles.normalize_angle_90 (inscribe into [-45, 45])."""
-    sign = F.when(a < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-    aa = F.abs(a)
-    return sign * F.when(aa > 45.0, aa - 90.0).otherwise(aa)
+ROTATION_SCHEMA = (
+    "doc_id string, span_offset int, media_ref string, raw_angle double, "
+    "detected_angle double, angle90 double, should_correct boolean"
+)
 
 
 #: candidate skew angles for the projection-profile estimate (0.5-degree
@@ -65,9 +50,7 @@ TILE_PART_SIZE = 32
 
 
 def stub_raw_angle(media_ref: str) -> float:
-    """Python twin of ``raw_angle_col`` (the deterministic no-pixels stub)."""
-    import hashlib
-
+    """The deterministic no-pixels raw angle of ``media_ref``."""
     return float(_HEX.index(hashlib.md5(media_ref.encode()).hexdigest()[2])) * 24.0 - 180.0
 
 
@@ -332,8 +315,6 @@ def dilated_rows_status(gray, kernel=DILATE_KERNEL, iters: int = DILATE_ITERS,
             a += 90.0
         angles.append(a)
         areas.append(area)
-    from ..core import angles as core_angles
-
     w_angle = core_angles.weighted_trimmed_mean(angles, areas, 0.1)
     w_angle = math.floor(w_angle * 10.0 + 0.5) / 10.0  # half-up, 1 decimal
     share = math.floor(100.0 * sum(areas) / gray.size * 100.0 + 0.5) / 100.0
@@ -373,8 +354,6 @@ def detect_rotation(media_ref: str, payload: bytes, image_mod=None,
                         arr = np.rot90(arr, orient // 90)
                 st = dilated_rows_status(arr)
                 if st is not None:
-                    from ..core import angles as core_angles
-
                     return core_angles.norm_angle(orient + st[0])
             else:
                 a = _most_frequent_tile_angle(arr, part_size)
@@ -385,55 +364,34 @@ def detect_rotation(media_ref: str, payload: bytes, image_mod=None,
     return stub_raw_angle(media_ref)
 
 
-def detected_rotation_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, media_ref, raw_angle) through the REAL payload path: Arrow
-    binary batches into ``detect_rotation``. On synthetic payloads this
-    equals ``raw_angle_col`` exactly (pinned by pytest); with PIL and real
-    images the pixel estimate takes over, plumbing unchanged."""
-    from .. import arrowmap
-    from . import multimodal
+def media_rotations(doc_spans: list[oracle.Span], image_mod=None):
+    """``(span, payload, raw_angle, detected_angle, should_correct)`` for
+    each media span of one document: ``detect_rotation`` over the span's
+    payload, snapped to a right angle or rejected (``core.angles``), and
+    corrected only when the angle is nonzero and text covers less than
+    ``TEXT_DOMINANCE_GUARD`` of the document."""
+    media = oracle.media_spans(doc_spans)
+    text_cover, media_cover = oracle.covers(doc_spans, media)
+    text_share = text_cover / max(text_cover + media_cover, 1)
+    for _, s, h in media:
+        payload = ocr_stub.media_payload(h)
+        raw = detect_rotation(s.media_ref, payload, image_mod)
+        angle = core_angles.snap_rotation(raw, SNAP_MAX_DIFF)
+        yield s, payload, raw, angle, abs(angle) > 0.0 and text_share < TEXT_DOMINANCE_GUARD
 
-    def rows(doc_id, ref, payload):
-        yield doc_id, ref, detect_rotation(ref, payload, multimodal._pil_image())
 
-    return arrowmap.map_rows(
-        multimodal.media_table(docs), rows,
-        "doc_id string, media_ref string, raw_angle double",
-    )
+def rotation_rows(docs: DataFrame, image_mod=None) -> DataFrame:
+    """Per-media-span rotation decision (``ROTATION_SCHEMA``), one span
+    pass. ``image_mod`` is the PIL-like decoder ``detect_rotation`` tries;
+    by default ``PIL.Image`` when the worker can import it."""
 
+    def rows(doc_id, doc_spans):
+        mod = image_mod or multimodal._pil_image()
+        for s, _, raw, angle, correct in media_rotations(doc_spans, mod):
+            yield (doc_id, s.offset, s.media_ref, raw, angle,
+                   core_angles.normalize_angle_90(angle), correct)
 
-def rotation_rows(docs: DataFrame) -> DataFrame:
-    """Per-media-span rotation decision over the derived spans corpus."""
-    spans = ds.derive_spans(docs)
-    text_share = F.col("text_cover") / F.greatest(
-        F.col("text_cover") + F.col("media_cover"), F.lit(1).cast("bigint")
-    )
-    from . import ocr  # local import to avoid cycle
-
-    per_doc = spans.select(
-        "doc_id",
-        "spans",
-        ocr.text_cover_col(F.col("spans")).alias("text_cover"),
-        ocr.media_cover_col(F.col("spans")).alias("media_cover"),
-    )
-    media = per_doc.select(
-        "doc_id",
-        text_share.alias("text_share"),
-        F.explode(F.filter(F.col("spans"), lambda s: s["kind"] == "media")).alias("s"),
-    )
-    raw = raw_angle_col(F.col("s.media_ref"))
-    snapped = snap_rotation_col(raw)
-    return media.select(
-        "doc_id",
-        F.col("s.offset").alias("span_offset"),
-        F.col("s.media_ref").alias("media_ref"),
-        raw.alias("raw_angle"),
-        snapped.alias("detected_angle"),
-        normalize_angle_90_col(snapped).alias("angle90"),
-        ((F.abs(snapped) > 0.0) & (F.col("text_share") < TEXT_DOMINANCE_GUARD)).alias(
-            "should_correct"
-        ),
-    )
+    return spans.span_rows(docs, rows, ROTATION_SCHEMA)
 
 
 def detect_orientation(gray):

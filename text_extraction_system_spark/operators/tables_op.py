@@ -1,5 +1,5 @@
 """``detect_tables`` operator (SURVEY.md I8-I10) — table regions from media
-spans via one ``arrowmap.map_rows`` pass.
+spans, detected per media span inside the span pass (``spans.media_rows``).
 
 The pixel stage (contours from a rendered page — ``table_detection.py:311+``)
 is stubbed: cell boxes are derived deterministically from md5(media_ref), the
@@ -14,11 +14,9 @@ import hashlib
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .. import arrowmap
 from ..core import tables as T
-from . import derive_spans as ds
+from . import spans
 
 TABLE_ROWS_SCHEMA = (
     "doc_id string, media_ref string, table_idx int, "
@@ -83,20 +81,11 @@ def detect_tables_for_ref(doc_id: str, media_ref: str) -> list[dict]:
 
 
 def detect_tables(docs: DataFrame) -> DataFrame:
-    """One row per detected table over all media spans of the corpus.
-
-    The media-ref rows are rebalanced across all cores before the Arrow
-    stage: the stage is CPU-bound python (numpy clustering per ref), and a
-    small parquet input bin-packs into a handful of scan splits that would
-    otherwise serialize it. The shuffled rows are two thin strings — cheap
-    relative to the compute they unlock (also the right shape at scale:
-    detection cost is per media ref, not per input byte)."""
-    spans = ds.derive_spans(docs)
-    media = spans.select(
-        "doc_id",
-        F.explode(F.filter(F.col("spans"), lambda s: s["kind"] == "media")).alias("s"),
-    ).select("doc_id", F.col("s.media_ref").alias("media_ref"))
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    return arrowmap.map_rows(
-        media.repartition(parallelism), detect_tables_for_ref, TABLE_ROWS_SCHEMA
+    """One row per detected table over all media spans of the corpus,
+    detected inside the span pass. Like every per-document kernel it runs
+    in ``docs``' partitions, so a caller spreads an unsplittable scan first
+    (``partitioning.spread_unsplittable``)."""
+    return spans.media_rows(
+        docs, lambda doc_id, ref, _payload: detect_tables_for_ref(doc_id, ref),
+        TABLE_ROWS_SCHEMA,
     )

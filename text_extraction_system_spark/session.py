@@ -69,18 +69,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # InferFiltersFromGenerate rewrites explode(expr) into
-        # Filter(size(expr)>0 AND isnotnull(expr)) + explode(expr): for a
-        # computed array column the pushed filter RE-EVALUATES the entire
-        # expression per row below the Generate. The explodes over the
-        # derive_spans HOF array pay for it: with the rule on, spans_derive
-        # took 1.05 s vs 0.50 s and ocr_route_pages 0.52 s vs 0.26 s (sf0.1,
-        # local[4] on a 4-core host, min of 3 warm noop writes per setting,
-        # alternated); the other 57 declared queries, extraction included
-        # (its explodes read the kernel's output), moved within noise. No
-        # explode here scans a stored array column the filter could prune.
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_MAX_RECORDS_PER_BATCH))
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(DEFAULT_MAX_BYTES_PER_BATCH))
