@@ -982,7 +982,8 @@ spans AS (
 _SQL_COVERS_CTE = f"""
 covers AS (
   -- LEFT JOIN from documents: a zero-span doc (empty/whitespace text) still
-  -- gets a (0, 0, false) row, matching the engine's per-doc array aggregate
+  -- gets a (0, 0, false) row, matching the engine's per-doc array aggregate;
+  -- NULL-safe, so a NULL-id doc keeps its text cover
   SELECT d.doc_id,
          coalesce(sp.text_cover, 0) AS text_cover,
          coalesce(sp.media_cover, 0) AS media_cover
@@ -994,7 +995,7 @@ covers AS (
                THEN strpos('{_HEX}', substr(md5(media_ref), 1, 1)) * {spec.MEDIA_AREA_UNIT}
                ELSE 0 END) AS media_cover
     FROM spans GROUP BY doc_id
-  ) sp ON d.doc_id = sp.doc_id
+  ) sp ON d.doc_id IS NOT DISTINCT FROM sp.doc_id
 ),
 needs AS (
   SELECT doc_id, text_cover, media_cover,
@@ -1014,7 +1015,7 @@ outspans AS (
               THEN {_sql_ocr_text('s.media_ref')}
               ELSE s.text END AS text,
          s.media_ref
-  FROM spans s JOIN needs nd ON s.doc_id = nd.doc_id
+  FROM spans s JOIN needs nd ON s.doc_id IS NOT DISTINCT FROM nd.doc_id
 )
 """
 )
@@ -2301,7 +2302,7 @@ media AS (
   SELECT s.doc_id, s.span_offset, s.media_ref,
          nd.text_cover / greatest(nd.text_cover + nd.media_cover, 1) AS text_share,
          (strpos('{_HEX}', substr(md5(s.media_ref), 3, 1)) - 1) * 24.0e0 - 180.0e0 AS raw_angle
-  FROM spans s JOIN needs nd ON s.doc_id = nd.doc_id
+  FROM spans s JOIN needs nd ON s.doc_id IS NOT DISTINCT FROM nd.doc_id
   WHERE s.kind = 'media'
 ),
 norm AS (
@@ -2338,7 +2339,7 @@ media AS (
          nd.text_cover / greatest(nd.text_cover + nd.media_cover, 1) AS text_share,
          (strpos('{_HEX}', substr(md5(s.media_ref), 3, 1)) - 1) * 24.0e0 - 180.0e0 AS raw_angle,
          repeat(md5(s.media_ref), strpos('{_HEX}', substr(md5(s.media_ref), 1, 1))) AS ph
-  FROM spans s JOIN needs nd ON s.doc_id = nd.doc_id
+  FROM spans s JOIN needs nd ON s.doc_id IS NOT DISTINCT FROM nd.doc_id
   WHERE s.kind = 'media'
 ),
 norm AS (

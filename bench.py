@@ -1,7 +1,8 @@
 """Benchmark harness — one JSON line for the driver.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] (default 32) and prints:
+on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on)
+and prints:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec}, "sf": <sf>, "docs_per_sec": ..., ...}
 
@@ -182,7 +183,7 @@ def main() -> None:
     from text_extraction_system_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     # size scan splits for the bench corpora: the sf0.1 tables are a few MB

@@ -133,6 +133,33 @@ EVENT_QUERIES = ["sessionize", "tumbling"]
 
 
 @pytest.fixture(scope="module")
+def null_id_duck(spark):
+    """Two 200-word documents, one with a NULL ``doc_id``."""
+    d = tempfile.mkdtemp()
+    text = " ".join(f"w{i}" for i in range(200))
+    spark.createDataFrame(
+        [(None, text, "en", "srcX", len(text)), (7, text, "en", "srcX", len(text))],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(f"{d}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'"
+    )
+    return d, con
+
+
+@pytest.mark.parametrize("name", [
+    "spans_derive", "ocr_route", "ocr_route_pages", "extract_restitch",
+    "rotation", "media_rotate",
+])
+def test_null_doc_id_parity(spark, null_id_duck, name):
+    """A NULL ``doc_id`` has no media key, so its document derives text
+    spans only, and its covers count that text, in both engines."""
+    d, con = null_id_duck
+    _assert_parity(spark, con, d, name)
+
+
+@pytest.fixture(scope="module")
 def ev_dir(spark):
     base = pd.Timestamp("2026-01-01 00:00:00")
     rows = []
@@ -147,6 +174,10 @@ def ev_dir(spark):
     # user 3: events exactly at the session-gap boundary spacing
     for k in range(3):
         rows.append((eid, base + pd.Timedelta(seconds=k * 1800), 3, "click", 2.0, "{}"))
+        eid += 1
+    # user 4: two events one microsecond past the gap, which must split
+    for dt in [pd.Timedelta(0), pd.Timedelta(seconds=1800, microseconds=1)]:
+        rows.append((eid, base + dt, 4, "view", 0.5, "{}"))
         eid += 1
     pdf = pd.DataFrame(
         rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
@@ -168,7 +199,8 @@ def ev_duck(ev_dir):
 @pytest.mark.parametrize("name", EVENT_QUERIES)
 def test_edge_events_parity(spark, ev_dir, ev_duck, name):
     """Timestamp ties (ordering falls to event_id), single-event users, and
-    events exactly at the session-gap boundary must not diverge."""
+    events exactly at the session-gap boundary (merged) and 1 µs past it
+    (split) must not diverge."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _assert_parity(spark, ev_duck, ev_dir, name)
 

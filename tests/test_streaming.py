@@ -67,46 +67,58 @@ def test_windowed_counts_stream(spark, tmp_path):
 
 
 def test_stateful_sessionize_stream(spark, tmp_path):
-    """applyInPandasWithState sessionizer: closed sessions emitted by the
-    stream must equal the batch sessionization minus each user's final
-    session (still open in state when the AvailableNow drain ends)."""
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.write.parquet(in_dir)
+    """The watermarked session stream emits exactly the batch sessions the
+    final watermark closed (last event + gap at or before max(ts) -
+    watermark) and keeps the rest in state. One event far in the future
+    moves the watermark past them, and the next drain emits every one: the
+    state is released, not kept per user forever."""
+    import datetime
 
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(in_dir)
-    out_dir = str(tmp_path / "out")
-    (
-        jobs.sessionize_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = {
-        (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
+    from pyspark.sql import functions as F
 
     from text_extraction_system_spark.operators import events as ev_ops
 
-    batch = ev_ops.sessionize(spark.read.parquet(in_dir)).collect()
-    last_start = {}
-    for r in batch:
-        last_start[r["user_id"]] = max(
-            last_start.get(r["user_id"], -1), r["session_start_us"]
+    in_dir, ckpt, out_dir = (str(tmp_path / d) for d in ("in", "ckpt", "out"))
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(in_dir)
+
+    def drain():
+        (
+            jobs.sessionize_stream(
+                spark.readStream.schema(jobs.EVENTS_SCHEMA).parquet(in_dir)
+            )
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
-    closed = {
+        return {
+            (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
+            for r in spark.read.parquet(out_dir).collect()
+        }
+
+    events = spark.read.parquet(in_dir)
+    batch = {
         (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in batch
-        if r["session_start_us"] != last_start[r["user_id"]]
+        for r in ev_ops.sessionize(events).collect()
     }
-    assert got == closed
+    max_ts, max_us = (
+        events.select(F.max(F.col("ts").cast("timestamp")).alias("m"))
+        .select("m", F.unix_micros("m")).first()
+    )
+    gap_us = ev_ops.SESSION_GAP_SEC * 1_000_000
+    watermark_us = max_us - 2 * 3600 * 1_000_000  # jobs.EVENT_WATERMARK
+    closed = {s for s in batch if s[2] + gap_us <= watermark_us}
+    assert drain() == closed
+    assert closed < batch
+
+    spark.createDataFrame(
+        [(10**9, max_ts + datetime.timedelta(days=30), -1, "view", 0.0, "{}")],
+        jobs.EVENTS_SCHEMA,
+    ).write.mode("append").parquet(in_dir)
+    assert drain() == batch
 
 
 def test_dedup_stream_drops_duplicates(spark, tmp_path):

@@ -12,7 +12,8 @@ Design stance (SURVEY.md section 7.0): DataFrame + built-in functions on the
 hot path; where semantics require Python, one boundary: per-row Python
 kernels (among them the extraction kernel) and whole-column numpy kernels
 run over Arrow batches through ``arrowmap`` (``mapInArrow``). No pandas
-UDFs.
+UDFs and no pandas state functions: the event streams are the batch session
+and hourly aggregates under a watermark.
 """
 
 __version__ = "0.1.0"

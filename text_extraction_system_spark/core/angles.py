@@ -16,7 +16,7 @@ Re-derived from the reference's behavioral contract (not a code port):
   clipped mass renormalized by (1-2q). Goldens: 9.9 / 5.5 / 5.991
   (``ocr/tests/test_rotation_detection.py:11-47``).
 
-Everything is numpy-vectorizable and is reused inside the deskew pandas UDF
+Everything is numpy-vectorizable and is reused inside the deskew kernel
 and the SQL oracle twins.
 """
 

@@ -58,18 +58,21 @@ class Extraction:
     sections: list[dict] = field(default_factory=list)
 
 
-def derive_spans(doc_id: str, text: str) -> list[Span]:
+def derive_spans(doc_id: str | None, text: str) -> list[Span]:
     """Flat text -> interleaved text+media span sequence (spec section 1).
 
     Reference analog: a PDF is an interleaved sequence of text and image
     elements (``pdf/pdf.py:201-232`` separates them); here the interleaving is
-    synthesized deterministically from the document content hash.
+    synthesized deterministically from the document content hash. A NULL
+    ``doc_id`` keys no media marker or ref, so its spans are text only.
     """
     words = [w for w in text.split(" ") if w]
+    chunks = [" ".join(words[i: i + spec.SPAN_WORDS])
+              for i in range(0, len(words), spec.SPAN_WORDS)]
+    if doc_id is None:
+        return [Span("text", chunk, "", i) for i, chunk in enumerate(chunks)]
     spans: list[Span] = []
-    n_text = (len(words) + spec.SPAN_WORDS - 1) // spec.SPAN_WORDS
-    for i in range(n_text):
-        chunk = " ".join(words[i * spec.SPAN_WORDS: (i + 1) * spec.SPAN_WORDS])
+    for i, chunk in enumerate(chunks):
         spans.append(Span("text", chunk, "", len(spans)))
         h = hashlib.md5(f"{doc_id}:{i}".encode("utf-8")).hexdigest()
         if h[0] in spec.MEDIA_HEX:

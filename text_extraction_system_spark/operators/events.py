@@ -1,8 +1,10 @@
-"""Event-stream batch analogs: sessionization and tumbling windows.
+"""Event operators: gap sessions and tumbling hourly counts.
 
 The reference has no stream semantics (SURVEY.md section 2.10) — these are
-the standard large-pipeline operators added per the task brief. Batch
-formulations here; ``streaming/`` carries the Structured Streaming twins.
+the standard large-pipeline operators added per the task brief. Each
+operator is one expression; ``streaming/jobs.py`` runs the same expression
+on a watermarked stream, so Spark emits a session or an hour once the
+watermark passes its end and then drops its state.
 
 Numeric note: double sums are not associative, so aggregates over the
 ``value`` column go through fixed-point micro-units (floor(x*1e6) as bigint)
@@ -26,48 +28,63 @@ def _us(c) -> "F.Column":
     return F.unix_micros(c.cast("timestamp"))
 
 
-def sessionize(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
-    """Gap-based sessions per user: a new session starts when the time since
-    the previous event exceeds ``gap_sec``. One shuffle (partition by user),
-    then pure window functions."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = events.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.when(
-            _us(F.col("ts"))
-            - _us(F.lag("ts").over(w))
-            > gap_sec * 1_000_000,
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    with_sid = flagged.withColumn(
-        "session_seq",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return with_sid.groupBy("user_id", "session_seq").agg(
-        _us(F.min("ts")).alias("session_start_us"),
-        _us(F.max("ts")).alias("session_end_us"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def tumbling_counts(events: DataFrame, interval: str = "hour") -> DataFrame:
-    """Tumbling-window aggregate per (window, event_type); fixed-point sum."""
+def sessions(events: DataFrame) -> DataFrame:
+    """Gap sessions per user: a new session starts when the time since the
+    previous event exceeds ``SESSION_GAP_SEC``. A session window spans
+    [first event, last event + gap], and Spark merges the next event's
+    window when it starts at or before that end: events exactly the gap
+    apart share a session, events 1 µs further apart do not. ``ts`` is
+    windowed as it is: a cast would hide a stream's watermark from the
+    aggregate."""
+    gap = F.session_window("ts", f"{SESSION_GAP_SEC} seconds")
     return (
-        events.select(
-            _us(F.date_trunc(interval, F.col("ts"))).alias("window_start_us"),
-            "event_type",
-            F.floor(F.col("value") * F.lit(1000000.0)).cast("bigint").alias("v"),
+        events.groupBy("user_id", gap)
+        .agg(
+            _us(F.min("ts")).alias("session_start_us"),
+            _us(F.max("ts")).alias("session_end_us"),
+            F.count(F.lit(1)).alias("n_events"),
         )
-        .groupBy("window_start_us", "event_type")
+        .drop("session_window")
+    )
+
+
+def sessionize(events: DataFrame) -> DataFrame:
+    """``sessions`` numbered per user in time order (``session_seq`` from 0)."""
+    seq = F.row_number().over(
+        Window.partitionBy("user_id").orderBy("session_start_us")
+    ) - 1
+    return sessions(events).select(
+        "user_id", seq.alias("session_seq"),
+        "session_start_us", "session_end_us", "n_events",
+    )
+
+
+def hour_keys(events: DataFrame) -> DataFrame:
+    """The tumbling key: each event's ``hour`` (``date_trunc``) with its
+    ``event_type`` and fixed-point value."""
+    return events.select(
+        F.date_trunc("hour", F.col("ts")).alias("hour"),
+        "event_type",
+        F.floor(F.col("value") * F.lit(1000000.0)).cast("bigint").alias("v"),
+    )
+
+
+def hour_counts(keyed: DataFrame) -> DataFrame:
+    """Count and fixed-point value sum per (``hour``, event_type) of
+    ``hour_keys`` rows."""
+    return (
+        keyed.groupBy("hour", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("v").alias("sum_value_micros"),
         )
+        .select(
+            _us(F.col("hour")).alias("window_start_us"),
+            "event_type", "n", "sum_value_micros",
+        )
     )
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Tumbling hourly aggregate per (window, event_type)."""
+    return hour_counts(hour_keys(events))

@@ -1,8 +1,9 @@
 """SparkSession factory with the engine's tuned configuration.
 
-Scale posture (SURVEY.md section 4): Arrow enabled for every pandas UDF,
-bounded Arrow batches so one giant document cannot blow an executor
-(north-rule ``maxRecordsPerBatch``), AQE on for runtime coalescing/skew.
+Scale posture (SURVEY.md section 4): Arrow on for ``toPandas``, bounded
+Arrow batches for the ``arrowmap`` kernels so one giant document cannot
+blow an executor (north-rule ``maxRecordsPerBatch``), AQE on for runtime
+coalescing/skew.
 """
 
 from __future__ import annotations

@@ -3,9 +3,13 @@
 The reference is an async task queue, not a stream processor (SURVEY.md
 section 2.10) — batch is the canonical mode. These jobs exist for the
 continuous-ingest deployment shape: the same extraction transforms bound to
-``readStream``/``writeStream``, with watermarked windowed aggregates for the
-event operators. Tested with file sources + ``Trigger.AvailableNow`` so runs
-are hermetic and deterministic.
+``readStream``/``writeStream``. Tested with file sources +
+``Trigger.AvailableNow`` so runs are hermetic and deterministic.
+
+The event streams are the batch event operators' expressions
+(``events.sessions``; ``events.hour_keys`` then ``events.hour_counts``)
+over a watermarked input: one ``EVENT_WATERMARK`` for both, no state
+function of their own.
 
 The incremental dedup and ANN streams are not copies of their batch
 operators: they call the same kernels and candidate cores
@@ -14,8 +18,8 @@ operators: they call the same kernels and candidate cores
 watermark-bounded key dedup a continuous emitter needs.
 
 Scale notes: the extraction stream is stateless (one row in, one row out), so
-it scales exactly like the batch job. The windowed aggregates keep state
-bounded by the watermark; checkpointing gives exactly-once sinks.
+it scales exactly like the batch job. The session and hourly aggregates keep
+state bounded by the watermark; checkpointing gives exactly-once sinks.
 """
 
 from __future__ import annotations
@@ -24,6 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import pipeline, schemas
+from ..operators import events
+
+#: how late an event may arrive, for both event streams
+EVENT_WATERMARK = "2 hours"
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 
 def read_spans_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -52,96 +64,25 @@ def run_extraction_stream(
     )
 
 
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type — the streaming twin
-    of ``operators.events.tumbling_counts``. Late rows beyond the watermark
-    are dropped; state is bounded."""
-    ts = F.col("ts").cast("timestamp")
-    return (
-        events_stream.withColumn("ts_tz", ts)
-        .withWatermark("ts_tz", watermark)
-        .groupBy(F.window("ts_tz", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.floor(F.col("value") * F.lit(1000000.0)).cast("bigint")
-            ).alias("sum_value_micros"),
-        )
-        .select(
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "event_type",
-            "n",
-            "sum_value_micros",
-        )
-    )
+def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
+    """``events.tumbling_counts`` on a stream: the watermark is on the
+    hour key, so each hour is emitted once the watermark passes it and its
+    state is dropped; rows later than the watermark are dropped."""
+    keyed = events.hour_keys(events_stream).withWatermark("hour", EVENT_WATERMARK)
+    return events.hour_counts(keyed)
 
 
-SESSION_STATE_SCHEMA = "start_us long, last_us long, n long"
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_start_us long, session_end_us long, n_events long"
-)
-
-
-def sessionize_stream(events_stream: DataFrame, gap_sec: int = 1800) -> DataFrame:
-    """Custom stateful operator: gap-based sessionization with
-    ``applyInPandasWithState`` (per-user GroupState). A session closes when
-    the gap since its last event exceeds ``gap_sec``.
-
-    State is one (start, last, n) triple per user — bounded, no event buffer.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = gap_sec * 1_000_000
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        (user_id,) = key
-        rows = []
-        us = []
-        for pdf in pdfs:
-            us.extend(int(v) for v in (pdf["ts"].astype("int64") // 1000))
-        us.sort()
-        cur = list(state.get) if state.exists else None
-        for t in us:
-            if cur is None:
-                cur = [t, t, 0]
-            if t - cur[1] > gap_us:
-                rows.append((user_id, cur[0], cur[1], cur[2]))
-                cur = [t, t, 1]
-            else:
-                cur[1] = max(cur[1], t)
-                cur[2] += 1
-        if cur is not None:
-            state.update(tuple(cur))
-        yield pd.DataFrame(
-            rows, columns=["user_id", "session_start_us", "session_end_us", "n_events"]
-        )
-
-    return (
-        events_stream.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+def sessionize_stream(events_stream: DataFrame) -> DataFrame:
+    """``events.sessions`` on a stream watermarked on ``ts``: a session is
+    emitted, and its state dropped, once the watermark passes its last event
+    plus the gap."""
+    return events.sessions(events_stream.withWatermark("ts", EVENT_WATERMARK))
 
 
 def run_windowed_counts_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
 ) -> None:
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
     out = windowed_event_counts(stream)
     (
         out.writeStream.format("parquet")
