@@ -759,17 +759,16 @@ MEDIA_NEAR_DUP_THRESHOLD = 0.85
 
 def _q_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-operator composition: multimodal feature extraction feeds the
-    banded SRP-LSH near-dup machinery (dim=16) — near-duplicate media
-    payloads by feature cosine. Features are exact dyadics, plane dots are
-    exact, so bucketing and scoring are bit-deterministic in both engines."""
-    feats = multimodal.extract_features(_docs(spark, sf_dir))
-    return similarity.srp_near_dup_pairs(
-        feats,
-        threshold=MEDIA_NEAR_DUP_THRESHOLD,
-        dim=multimodal.FEATURE_DIM,
-        id_col="media_ref",
-        vec_col="feature",
+    banded SRP-LSH near-dup machinery — near-duplicate media payloads by
+    feature cosine. The features become the similarity contract's
+    (``vec_id``, ``embedding``) here, and the SRP planes take their
+    FEATURE_DIM width from the features. Features are exact dyadics, plane
+    dots are exact, so bucketing and scoring are bit-deterministic in both
+    engines."""
+    feats = multimodal.extract_features(_docs(spark, sf_dir)).select(
+        F.col("media_ref").alias("vec_id"), F.col("feature").alias("embedding")
     )
+    return similarity.srp_near_dup_pairs(feats, threshold=MEDIA_NEAR_DUP_THRESHOLD)
 
 
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,7 +1078,7 @@ LEFT JOIN (
          CAST(sum(length(ptext)) AS BIGINT) AS n_chars,
          CAST(count(*) AS BIGINT) AS n_pages
   FROM pagebounds GROUP BY doc_id
-) a ON d.doc_id = a.doc_id
+) a ON d.doc_id IS NOT DISTINCT FROM a.doc_id
 """
     )
 
@@ -1113,7 +1112,7 @@ SELECT c.doc_id,
        pb.page_start + c.prev_len + c.k + length(c.text) AS par_end,
        {_sql_lang('c.text')} AS language
 FROM contrib c
-JOIN pagebounds pb ON c.doc_id = pb.doc_id AND c.page_number = pb.page_number
+JOIN pagebounds pb ON c.doc_id IS NOT DISTINCT FROM pb.doc_id AND c.page_number = pb.page_number
 WHERE c.text != ''
 """
     )
@@ -1342,15 +1341,19 @@ SELECT l.doc_id, l.n_lines,
         )
         + """
 FROM line_stats l
-JOIN top2 t USING (doc_id)
-JOIN tot2 g USING (doc_id)
+JOIN top2 t ON t.doc_id IS NOT DISTINCT FROM l.doc_id
+JOIN tot2 g ON g.doc_id IS NOT DISTINCT FROM l.doc_id
 """
         + "\n".join(
-            f"LEFT JOIN top{n} t{n} USING (doc_id)\nLEFT JOIN tot{n} g{n} USING (doc_id)"
+            f"LEFT JOIN top{n} t{n} ON t{n}.doc_id IS NOT DISTINCT FROM l.doc_id\n"
+            f"LEFT JOIN tot{n} g{n} ON g{n}.doc_id IS NOT DISTINCT FROM l.doc_id"
             for n in textstats.TOP_NS[1:]
         )
         + "\n"
-        + "\n".join(f"LEFT JOIN dup{n} d{n} USING (doc_id)" for n in textstats.DUP_NS)
+        + "\n".join(
+            f"LEFT JOIN dup{n} d{n} ON d{n}.doc_id IS NOT DISTINCT FROM l.doc_id"
+            for n in textstats.DUP_NS
+        )
         + "\n"
     )
 
@@ -1443,7 +1446,7 @@ canon AS (SELECT content_hash, min(doc_id) AS doc_id FROM kept GROUP BY content_
     sql["curation_funnel"] = f"""{_cur_cte},
 surv AS (
   SELECT k.source, k.n_tokens FROM kept k JOIN canon c
-  ON k.content_hash = c.content_hash AND k.doc_id = c.doc_id
+  ON k.content_hash = c.content_hash AND k.doc_id IS NOT DISTINCT FROM c.doc_id
 ),
 stages AS (
   SELECT source,
@@ -1524,7 +1527,7 @@ paras AS (
          pb.page_start + c.prev_len + c.k AS par_start,
          string_split(regexp_replace(c.text, '([.!?]) ', '\\1 ' || chr(1), 'g'), chr(1)) AS segs
   FROM contrib c
-  JOIN pagebounds pb ON c.doc_id = pb.doc_id AND c.page_number = pb.page_number
+  JOIN pagebounds pb ON c.doc_id IS NOT DISTINCT FROM pb.doc_id AND c.page_number = pb.page_number
 ),
 sents AS (
   SELECT doc_id,
@@ -1717,7 +1720,8 @@ WHERE est_jaccard >= {INCR_THRESHOLD}e0
     _sw = splits.DEFAULT_WEIGHTS
     _sw_total = sum(_sw.values())
     _sw_items = list(_sw.items())
-    _split_h = _hex8_int("md5('split0:' || CAST(doc_id AS VARCHAR))")
+    # concat_ws skips a NULL doc_id in both engines, so a NULL id hashes 'split0'
+    _split_h = _hex8_int("md5(concat_ws(':', 'split0', CAST(doc_id AS VARCHAR)))")
     _acc = 0.0
     _cases = []
     for _name, _w in _sw_items[:-1]:
@@ -1733,7 +1737,7 @@ FROM documents
     # packing twin: the single global-window formulation of the two-level
     # prefix sum (identical assignment — the engine's shard offsets
     # reconstruct exactly this cumsum under the same (shard, ok) order)
-    _pk_ok = "md5('pack0:' || CAST(doc_id AS VARCHAR))"
+    _pk_ok = "md5(concat_ws(':', 'pack0', CAST(doc_id AS VARCHAR)))"
     _pk_shard = f"{_hex8_int(_pk_ok)} % {splits.PACK_SHARDS}"
     sql["pack_bins"] = f"""
 WITH t AS (
@@ -1760,7 +1764,7 @@ FROM c
     sql["release_manifest"] = f"""{_cur_cte},
 surv2 AS (
   SELECT k.doc_id, k.source, k.n_tokens FROM kept k JOIN canon c
-  ON k.content_hash = c.content_hash AND k.doc_id = c.doc_id
+  ON k.content_hash = c.content_hash AND k.doc_id IS NOT DISTINCT FROM c.doc_id
 ),
 sp AS (
   SELECT *, CASE {' '.join(_cases)} ELSE '{_sw_items[-1][0]}' END AS split
@@ -1782,7 +1786,7 @@ b AS (
   FROM c2
 )
 SELECT sp.doc_id, sp.source, sp.split, sp.n_tokens, b.bin
-FROM sp LEFT JOIN b ON sp.doc_id = b.doc_id
+FROM sp LEFT JOIN b ON sp.doc_id IS NOT DISTINCT FROM b.doc_id
 """
 
     def _dotp(a: str, b: str, dim: int = 64) -> str:
@@ -2434,7 +2438,7 @@ WITH p AS (
     CAST(sum(b.c) OVER (PARTITION BY b.doc_id ORDER BY b.a) AS DOUBLE) AS cumw,
     CAST(coalesce(sum(b.c) OVER (PARTITION BY b.doc_id ORDER BY b.a
          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE) AS low
-  FROM bins b JOIN dom d ON b.doc_id = d.doc_id
+  FROM bins b JOIN dom d ON b.doc_id IS NOT DISTINCT FROM d.doc_id
   WHERE abs(b.a - d.dom_rep) <= {2 * _dk.deskew.MERGE_WITHIN_DEG}e0
 ), est AS (
   SELECT doc_id,
@@ -2459,7 +2463,7 @@ WITH p AS (
     CAST(floor((norm - rot0) * 1000.0e0 + 0.5e0) AS BIGINT) AS skew_milli,
     CAST(d.ncl AS INT) AS n_clusters,
     CAST(d.top_count AS INT) AS top_count
-  FROM n3 JOIN dom d ON n3.doc_id = d.doc_id
+  FROM n3 JOIN dom d ON n3.doc_id IS NOT DISTINCT FROM d.doc_id
 ), sh AS (
   SELECT doc_id,
     CASE dmode WHEN 0 THEN hv WHEN 1 THEN -hv ELSE 0 END AS dx,
@@ -2487,6 +2491,8 @@ WITH p AS (
   FROM tr
 )
 SELECT * FROM gout UNION ALL SELECT * FROM tout
+-- a NULL doc_id has no md5, hence no glyphs: the kernel's empty-sample row
+UNION ALL SELECT doc_id, 0, CAST(0 AS BIGINT), 0, 0 FROM p WHERE h IS NULL
 """
 
     # media feature twin: payload = md5 digest bytes repeated k times, so the
@@ -2615,7 +2621,7 @@ SELECT s.doc_id,
            ), chr(10)), b -> trim(b) != ''),
                      b -> {_keep}),
          b -> {_strip}), chr(10)), '') AS main_text
-FROM src s LEFT JOIN html h ON s.doc_id = h.doc_id
+FROM src s LEFT JOIN html h ON s.doc_id IS NOT DISTINCT FROM h.doc_id
 """
 
     _head_pat = r"'^(\d+(?:\.\d+)*)\.?\s+(\S.*)$'"
@@ -2662,7 +2668,7 @@ SELECT s.doc_id, s.start,
        CAST(coalesce(min(t.start), any_value(s.total_len)) AS BIGINT) AS "end",
        s.title, s.title_start, s.title_end, s.level
 FROM secs s
-LEFT JOIN secs t ON t.doc_id = s.doc_id AND t.start > s.start AND t.level <= s.level
+LEFT JOIN secs t ON t.doc_id IS NOT DISTINCT FROM s.doc_id AND t.start > s.start AND t.level <= s.level
 GROUP BY s.doc_id, s.start, s.title, s.title_start, s.title_end, s.level
 """
 
@@ -2707,7 +2713,7 @@ SELECT p.doc_id,
   'SECTION ' || CAST(p.page_number AS VARCHAR) AS title,
   CAST(1 AS BIGINT) AS level,
   'toc' AS source
-FROM pagebounds p JOIN tocdocs t USING (doc_id)
+FROM pagebounds p JOIN tocdocs t ON p.doc_id IS NOT DISTINCT FROM t.doc_id
 """
     )
 
@@ -2818,7 +2824,7 @@ SELECT d.doc_id,
        CASE WHEN length(coalesce(f.text, '')) BETWEEN 1 AND 80
             THEN f.text ELSE '' END AS title
 FROM (SELECT CAST(doc_id AS VARCHAR) AS doc_id FROM documents) d
-LEFT JOIN firsts f ON d.doc_id = f.doc_id
+LEFT JOIN firsts f ON d.doc_id IS NOT DISTINCT FROM f.doc_id
 """
     )
 
@@ -2846,7 +2852,7 @@ SELECT d.doc_id,
        CAST(coalesce(sum(ps.sx), 0) AS BIGINT) AS sum_x,
        CAST(coalesce(sum(ps.sy), 0) AS BIGINT) AS sum_y
 FROM (SELECT CAST(doc_id AS VARCHAR) AS doc_id FROM documents) d
-LEFT JOIN pagestats ps ON d.doc_id = ps.doc_id
+LEFT JOIN pagestats ps ON d.doc_id IS NOT DISTINCT FROM ps.doc_id
 GROUP BY d.doc_id
 """
     )

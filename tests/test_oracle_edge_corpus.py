@@ -150,11 +150,18 @@ def null_id_duck(spark):
 
 @pytest.mark.parametrize("name", [
     "spans_derive", "ocr_route", "ocr_route_pages", "extract_restitch",
-    "rotation", "media_rotate",
+    "rotation", "media_rotate", "plain_text", "pages", "paragraphs",
+    "sentences", "titles", "sections", "boilerplate", "token_count",
+    "token_count_bpe", "lang_id", "quality", "fingerprint", "simhash",
+    "split_assign", "pack_bins", "char_coords", "text_coords", "coords_text",
+    "deskew", "repetition",
 ])
 def test_null_doc_id_parity(spark, null_id_duck, name):
     """A NULL ``doc_id`` has no media key, so its document derives text
-    spans only, and its covers count that text, in both engines."""
+    spans only, and its covers count that text, in both engines. The
+    engine keeps the NULL-id document's rows, so the oracle joins on
+    ``doc_id`` null-safely, and hashes a NULL id as the engine's
+    ``concat_ws`` does (``split_assign``, ``pack_bins``)."""
     d, con = null_id_duck
     _assert_parity(spark, con, d, name)
 

@@ -120,21 +120,18 @@ def test_ivf_topk_shape_and_plan(spark):
 
 
 def test_srp_bucket_space_and_skew_guard(spark):
-    """Scale posture of the banded SRP LSH: with 16 planes per band the
-    per-band bucket space is 2^16 (not the round-1 flat 16-bucket table),
-    and after the MAX_BUCKET guard no (band, bucket) key exceeds the cap —
-    the properties that bound the self-join at 10^9+ vectors."""
+    """Scale posture of the banded SRP LSH: every bucket key is one band's
+    PLANES_PER_BAND sign bits (a 2^PLANES_PER_BAND-wide key space per band,
+    not the round-1 flat 16-bucket table), and after the MAX_BUCKET guard
+    no (band, bucket) key exceeds the cap — the properties that bound the
+    self-join at 10^9+ vectors."""
     from text_extraction_system_spark.operators import dedup, similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    bb = similarity.srp_banded_buckets(emb, n_bands=2, planes_per_band=16)
-    rows = bb.groupBy("band", "bucket").count().collect()
-    assert all(len(r["bucket"]) == 16 for r in rows)  # 2^16-wide key space
+    rows = similarity.srp_banded_buckets(emb).groupBy("band", "bucket").count().collect()
+    assert {r["band"] for r in rows} == set(range(similarity.N_BANDS))
+    assert all(len(r["bucket"]) == similarity.PLANES_PER_BAND for r in rows)
     assert all(r["count"] <= dedup.MAX_BUCKET for r in rows)
-    # defaults are banded too, with the same guarantee
-    bb_def = similarity.srp_banded_buckets(emb)
-    counts = bb_def.groupBy("band", "bucket").count()
-    assert counts.agg(F.max("count")).collect()[0][0] <= dedup.MAX_BUCKET
     assert similarity.N_BANDS * similarity.PLANES_PER_BAND >= 16
 
 
@@ -714,7 +711,8 @@ def _row_kernel_operators():
         "text_to_coords": lambda d: coords.text_to_coords(res(d)),
         "coords_to_text": lambda d: coords.coords_to_text(res(d)),
         "srp_banded_buckets": lambda d: similarity.srp_banded_buckets(emb(d)),
-        "assign_cells_vectorized": lambda d: similarity.assign_cells_vectorized(emb(d)),
+        "assign_cells_vectorized": lambda d: similarity.assign_cells_vectorized(
+            emb(d), similarity.ivf_centroid_values(64, similarity.IVF_CENTROIDS)),
         "brute_force_topk": lambda d: similarity.brute_force_topk(emb(d)),
         "pq_topk": lambda d: similarity.pq_topk(emb(d), hash_books),
     }

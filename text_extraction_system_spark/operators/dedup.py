@@ -448,6 +448,5 @@ def connected_components(
             )
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
-        "component diameter exceeds the bound; raise max_iter or switch to "
-        "the large-star/small-star variant"
+        "component diameter exceeds the bound; raise max_iter"
     )

@@ -1,4 +1,14 @@
-"""Similarity search over an embedding column (``array<float>``).
+"""Similarity search over a vector table.
+
+One input contract for every operator here (and for
+``state.write_srp_buckets`` / ``read_srp_buckets`` and
+``streaming.jobs.incremental_ann_stream``): the table has a ``vec_id``
+column and an ``embedding`` column (``array<float>``); a caller with other
+names renames them once, at its call site. The vector width is taken from
+the vectors themselves — the SRP kernel from its batch, ``_lloyd`` from its
+seed rows, ``ivf_topk``'s hash centroids from its query rows — never from
+an option, and never at the cost of an extra Spark job. A table with no
+vectors has no width: training on one raises ``ValueError``.
 
 * ``brute_force_topk`` — exact cosine top-k: the (small) query set rides
   inside the partial top-k kernel (``_topk_partials``), which scores each
@@ -33,6 +43,8 @@ caller keeps every input column (``_vector_pass``).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -87,25 +99,25 @@ def _fold_dots(X, M):
 
 
 def _matrix(vectors):
-    """(n, dim) float64 matrix of a batch's vector column (float32 ->
+    """(n, width) float64 matrix of a batch's vector column (float32 ->
     double is exact)."""
     import numpy as np
 
     return np.asarray(vectors, dtype=np.float64)
 
 
-def _vector_pass(df: DataFrame, vec_col: str, keep: list[str], name: str,
+def _vector_pass(df: DataFrame, keep: list[str], name: str,
                  dtype: T.DataType, fn) -> DataFrame:
     """``keep`` columns of ``df`` plus ``name``, where ``fn`` maps a batch's
-    ``vec_col`` values to one ``dtype`` value per row. The vector crosses
+    ``embedding`` values to one ``dtype`` value per row. The vector crosses
     back only when the caller keeps it: then ``fn``'s column is appended to
     the batch (``arrowmap.append_column``), else the pass returns ``keep``
     and ``name`` alone (``arrowmap.map_batches``)."""
-    if vec_col in keep:
-        return arrowmap.append_column(df.select(*keep), name, dtype, fn, vec_col)
+    if "embedding" in keep:
+        return arrowmap.append_column(df.select(*keep), name, dtype, fn, "embedding")
     fields = {f.name: f for f in df.schema.fields}
     return arrowmap.map_batches(
-        df.select(*keep, vec_col),
+        df.select(*keep, "embedding"),
         lambda batches: ((*cols[:-1], fn(cols[-1])) for cols in batches),
         T.StructType([fields[c] for c in keep] + [T.StructField(name, dtype)]),
     )
@@ -118,14 +130,13 @@ def _proxy_dists(X, C):
     return _fold_dots(C, C)[None, :] - 2.0 * _fold_dots(X[:, None, :], C)
 
 
-def _query_rows(embeddings: DataFrame, n_queries: int,
-                id_col: str, vec_col: str) -> tuple[list, list]:
-    """The (tiny) query side as driver lists (ids, vectors): n_queries x dim
-    floats — the same collect class as the IVF centroid/seed reads
+def _query_rows(embeddings: DataFrame, n_queries: int) -> tuple[list, list]:
+    """The (tiny) query side as driver lists (ids, vectors): n_queries x
+    width floats — the same collect class as the IVF centroid/seed reads
     (``_lloyd``), never the corpus."""
     rows = (
-        embeddings.where(F.col(id_col) < n_queries)
-        .select(id_col, vec_col).collect()
+        embeddings.where(F.col("vec_id") < n_queries)
+        .select("vec_id", "embedding").collect()
     )
     return [r[0] for r in rows], [[float(x) for x in r[1]] for r in rows]
 
@@ -228,28 +239,24 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def brute_force_topk(
-    embeddings: DataFrame,
-    n_queries: int = 20,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, n_queries: int = 20, k: int = 5
 ) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
 
     The query vectors ride inside the numpy partial top-k kernel
-    (n_queries x dim floats — the centroid-collect class, never the
+    (n_queries x width floats — the centroid-collect class, never the
     corpus) that scores each task's rows in one vectorized pass per batch
     and emits per-task partial top-k, so only n_tasks x n_queries x k rows
     reach the ranking window — no per-pair interpreted cosine (N x
     n_queries evaluations, the measured 85% of this query's runtime at
     sf1.0 when it ran as a broadcast join). Scores are bit-identical to
     ``cosine_col`` (see ``_cosine_score``)."""
-    cands = embeddings.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    cands = embeddings.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
+    qids, qvecs = _query_rows(embeddings, n_queries)
     return _rank_topk(_topk_partials(cands, qids, k, _cosine_score(qvecs)), k)
 
 
-#: SRP LSH banding defaults: N_BANDS x PLANES_PER_BAND hyperplanes total.
+#: SRP LSH banding: N_BANDS x PLANES_PER_BAND hyperplanes total.
 #: A single flat table of few planes (the round-1 shape: 4 planes -> 16
 #: buckets) is O(n^2/16) at 10^9+ rows with 16-way key skew; banding keeps
 #: each band's bucket space 2^PLANES_PER_BAND wide (raise PLANES_PER_BAND at
@@ -265,68 +272,63 @@ PLANES_PER_BAND = 8
 NEAR_DUP_THRESHOLD = 0.3
 
 
-def srp_plane_values(dim: int, n_planes: int) -> list[list[float]]:
+def srp_plane_values(width: int, n_planes: int) -> list[list[float]]:
     """Deterministic hyperplanes: plane p component j =
     hexval(md5(p || ':' || j)[0]) - 7.5 (zero-mean, reproducible anywhere —
-    the DuckDB oracle recomputes the same md5 expression)."""
+    the DuckDB oracle recomputes the same md5 expression). Component j does
+    not depend on ``width``, so the planes of a narrower width are a prefix
+    of a wider one's."""
     import hashlib
 
     return [
         [
             float(int(hashlib.md5(f"{p}:{j}".encode()).hexdigest()[0], 16)) - 7.5
-            for j in range(dim)
+            for j in range(width)
         ]
         for p in range(n_planes)
     ]
 
 
-def _srp_band_rows(
-    embeddings: DataFrame,
-    n_bands: int,
-    planes_per_band: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """(vid, *carry, band, bucket) via one numpy Arrow pass: per band, the
-    sign bits of that band's planes (global plane index
-    band*planes_per_band + j), bit p = sign(vec . plane_p). The plane dots
-    are ``_fold_dots`` folds, which the DuckDB oracle replays, so every
-    bucket string is bit-reproducible in SQL.
-    ``carry`` columns pass through the kernel untouched, ``vec_col`` among
-    them renamed ``vec`` (``_vector_pass``: a caller that drops the vector
-    does not get it back)."""
+@functools.lru_cache(maxsize=None)
+def _srp_planes(width: int):
+    """The N_BANDS * PLANES_PER_BAND planes at ``width`` as a float64
+    matrix, built once per Python worker (about 3.5 ms at width 64)."""
     import numpy as np
 
-    P = np.asarray(srp_plane_values(dim, n_bands * planes_per_band), dtype=np.float64)
+    return np.asarray(srp_plane_values(width, N_BANDS * PLANES_PER_BAND), dtype=np.float64)
+
+
+def _srp_band_rows(embeddings: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(vid, *carry, band, bucket) via one numpy Arrow pass: per band, the
+    sign bits of that band's planes (global plane index
+    band*PLANES_PER_BAND + j), bit p = sign(vec . plane_p). The planes are
+    ``srp_plane_values`` at the batch's own vector width. The plane dots
+    are ``_fold_dots`` folds, which the DuckDB oracle replays, so every
+    bucket string is bit-reproducible in SQL.
+    ``carry`` columns pass through the kernel untouched, ``embedding``
+    among them renamed ``vec`` (``_vector_pass``: a caller that drops the
+    vector does not get it back)."""
+    import numpy as np
 
     def buckets(vectors):
-        bits = np.where(_fold_dots(_matrix(vectors)[:, None, :], P) >= 0, "1", "0")
+        X = _matrix(vectors)
+        bits = np.where(_fold_dots(X[:, None, :], _srp_planes(X.shape[1])) >= 0, "1", "0")
         return [
-            ["".join(row[b * planes_per_band:(b + 1) * planes_per_band])
-             for b in range(n_bands)]
+            ["".join(row[b * PLANES_PER_BAND:(b + 1) * PLANES_PER_BAND])
+             for b in range(N_BANDS)]
             for row in bits
         ]
 
-    keep = [id_col, *carry]
     return _vector_pass(
-        embeddings, vec_col, keep, "buckets", T.ArrayType(T.StringType()), buckets
+        embeddings, ["vec_id", *carry], "buckets", T.ArrayType(T.StringType()), buckets
     ).select(
-        F.col(id_col).alias("vid"),
-        *[F.col(c).alias("vec") if c == vec_col else c for c in carry],
+        F.col("vec_id").alias("vid"),
+        *[F.col(c).alias("vec") if c == "embedding" else c for c in carry],
         F.posexplode("buckets").alias("band", "bucket"),
     )
 
 
-def srp_banded_buckets(
-    embeddings: DataFrame,
-    n_bands: int = N_BANDS,
-    planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def srp_banded_buckets(embeddings: DataFrame) -> DataFrame:
     """(vid, vec, band, bucket) rows behind the LSH skew guard
     (``dedup.guard_buckets`` on (band, bucket), ``dedup.MAX_BUCKET``), as a
     plan; ``_guarded_buckets`` is the same table without the vector.
@@ -336,26 +338,13 @@ def srp_banded_buckets(
     bucket-partition by (band, bucket) — that durable form is
     ``state.write_srp_buckets`` (parquet partitioned by (band,
     bucket_prefix))."""
-    return _guarded_buckets(
-        embeddings, n_bands, planes_per_band, dim, id_col, vec_col, (vec_col,)
-    )
+    return _guarded_buckets(embeddings, ("embedding",))
 
 
-def _guarded_buckets(
-    embeddings: DataFrame,
-    n_bands: int = N_BANDS,
-    planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
+def _guarded_buckets(embeddings: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """``_srp_band_rows`` behind ``dedup.guard_buckets``: (vid, *carry,
     band, bucket)."""
-    return dedup.guard_buckets(
-        _srp_band_rows(embeddings, n_bands, planes_per_band, dim, id_col, vec_col, carry),
-        ["band", "bucket"],
-    )
+    return dedup.guard_buckets(_srp_band_rows(embeddings, carry), ["band", "bucket"])
 
 
 def _bucket_table(bb: DataFrame) -> DataFrame:
@@ -370,19 +359,10 @@ def _bucket_table(bb: DataFrame) -> DataFrame:
     return bb.localCheckpoint(eager=False)
 
 
-def srp_candidate_pairs(
-    embeddings: DataFrame,
-    n_bands: int = N_BANDS,
-    planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def srp_candidate_pairs(embeddings: DataFrame) -> DataFrame:
     """Distinct (id_a < id_b) pairs colliding in at least one band —
     the union of per-band self-joins of the checkpointed bucket table."""
-    bb = _bucket_table(
-        _guarded_buckets(embeddings, n_bands, planes_per_band, dim, id_col, vec_col)
-    )
+    bb = _bucket_table(_guarded_buckets(embeddings))
     a = bb.select("band", "bucket", F.col("vid").alias("id_a"))
     b = bb.select("band", "bucket", F.col("vid").alias("id_b"))
     return (
@@ -394,21 +374,13 @@ def srp_candidate_pairs(
 
 
 def srp_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = NEAR_DUP_THRESHOLD,
-    n_bands: int = N_BANDS,
-    planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, threshold: float = NEAR_DUP_THRESHOLD
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: banded SRP candidates (the
     10^12-vector shape — all-pairs never materializes, buckets are bounded),
     verified with the exact cosine and thresholded."""
-    pairs = srp_candidate_pairs(
-        embeddings, n_bands, planes_per_band, dim, id_col, vec_col
-    )
-    vecs = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    pairs = srp_candidate_pairs(embeddings)
+    vecs = embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     return (
         pairs.join(vecs.select(F.col("vid").alias("id_a"), F.col("vec").alias("va")), "id_a")
         .join(vecs.select(F.col("vid").alias("id_b"), F.col("vec").alias("vb")), "id_b")
@@ -463,18 +435,18 @@ def _flip_bits_col(bucket: Column, positions: tuple[int, ...], n_bits: int) -> C
     return F.concat(*parts)
 
 
-def _probe_keys(bb: DataFrame, planes_per_band: int, multiprobe: int,
-                probe_budget: int | None, carry: tuple[str, ...] = ()) -> DataFrame:
+def _probe_keys(bb: DataFrame, multiprobe: int, probe_budget: int | None,
+                carry: tuple[str, ...] = ()) -> DataFrame:
     """(query_id, band, bucket, qv, *carry): each row of a bucket table
     expanded to its multi-probe keys per band, nearest-first
     (``_probe_masks``)."""
-    masks = _probe_masks(planes_per_band, multiprobe, probe_budget)
+    masks = _probe_masks(PLANES_PER_BAND, multiprobe, probe_budget)
     return bb.select(
         F.col("vid").alias("query_id"),
         "band",
         F.explode(
             F.array(
-                *[_flip_bits_col(F.col("bucket"), m, planes_per_band) for m in masks]
+                *[_flip_bits_col(F.col("bucket"), m, PLANES_PER_BAND) for m in masks]
             )
         ).alias("bucket"),
         F.col("vec").alias("qv"),
@@ -486,11 +458,6 @@ def srp_lsh_topk(
     embeddings: DataFrame,
     n_queries: int = 20,
     k: int = 5,
-    n_bands: int = N_BANDS,
-    planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     multiprobe: int = MULTIPROBE_RADIUS,
     probe_budget: int | None = None,
 ) -> DataFrame:
@@ -510,11 +477,8 @@ def srp_lsh_topk(
     every probe within the radius (the default 8-plane/radius-2 setup: 37).
     Recall degrades gracefully as the budget shrinks (pinned by
     tests/test_recall.py)."""
-    bb = _bucket_table(
-        srp_banded_buckets(embeddings, n_bands, planes_per_band, dim, id_col, vec_col)
-    )
-    qs = _probe_keys(bb.where(F.col("vid") < n_queries), planes_per_band,
-                     multiprobe, probe_budget)
+    bb = _bucket_table(srp_banded_buckets(embeddings))
+    qs = _probe_keys(bb.where(F.col("vid") < n_queries), multiprobe, probe_budget)
     cands = bb.select(
         F.col("vid").alias("cand_id"), "band", "bucket", F.col("vec").alias("cv")
     )
@@ -549,12 +513,12 @@ def _committed_candidates(qs: DataFrame, committed_buckets: DataFrame,
     )
 
 
-def _cosine_scored(cands: DataFrame, committed_vecs: DataFrame, id_col: str,
-                   vec_col: str, carry: tuple[str, ...] = ()) -> DataFrame:
+def _cosine_scored(cands: DataFrame, committed_vecs: DataFrame,
+                   carry: tuple[str, ...] = ()) -> DataFrame:
     """(query_id, cand_id, cosine, *carry): each candidate joined to its
     committed vector and scored with ``cosine_col``."""
     vecs = committed_vecs.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
     )
     return cands.join(vecs, "cand_id").select(
         "query_id", "cand_id", cosine_col(F.col("qv"), F.col("cv")).alias("cosine"),
@@ -567,11 +531,6 @@ def incremental_ann_topk(
     committed_buckets: DataFrame,
     committed_vecs: DataFrame,
     k: int = 5,
-    n_bands: int = N_BANDS,
-    planes_per_band: int = PLANES_PER_BAND,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     multiprobe: int = MULTIPROBE_RADIUS,
     probe_budget: int | None = None,
 ) -> DataFrame:
@@ -598,18 +557,14 @@ def incremental_ann_topk(
     side: bounded by queries x probes x bucket width). The streaming job
     ``incremental_ann_stream`` runs the same two steps. Returns (query_id,
     cand_id, cosine, rank<=k)."""
-    qs = _probe_keys(
-        _srp_band_rows(new_vecs, n_bands, planes_per_band, dim, id_col, vec_col,
-                       (vec_col,)),
-        planes_per_band, multiprobe, probe_budget,
-    )
+    qs = _probe_keys(_srp_band_rows(new_vecs, ("embedding",)), multiprobe, probe_budget)
     cands = (
         _committed_candidates(F.broadcast(qs), committed_buckets)
         .groupBy("query_id", "cand_id")
         .agg(F.first("qv").alias("qv"))
     )
     return _rank_topk(
-        _cosine_scored(F.broadcast(cands), committed_vecs, id_col, vec_col), k
+        _cosine_scored(F.broadcast(cands), committed_vecs), k
     )
 
 
@@ -625,7 +580,7 @@ def incremental_ann_topk(
 IVF_CENTROIDS = 64
 IVF_PROBE = 8
 
-#: PQ geometry: m sub-blocks of dim/m components, k centroids per block.
+#: PQ geometry: m sub-blocks of width/m components, k centroids per block.
 #: 8 blocks x 16 centroids = 8 4-bit codes per vector — a 64-dim float32
 #: embedding (256 B) compresses to 4 B of codes, the 64x reduction that
 #: makes a 10^12-vector serving tier fit in memory; IVF routes queries to
@@ -634,7 +589,7 @@ PQ_BLOCKS = 8
 PQ_CENTROIDS = 16
 
 
-def ivf_centroid_values(dim: int = 64, n_centroids: int = IVF_CENTROIDS) -> list[list[float]]:
+def ivf_centroid_values(width: int, n_centroids: int) -> list[list[float]]:
     """Centroid c component j = hexval(md5('ivf:c:j')[0]) - 7.5 — half-integer
     values, so squared norms are exact dyadics (order-independent in float)."""
     import hashlib
@@ -642,7 +597,7 @@ def ivf_centroid_values(dim: int = 64, n_centroids: int = IVF_CENTROIDS) -> list
     return [
         [
             float(int(hashlib.md5(f"ivf:{c}:{j}".encode()).hexdigest()[0], 16)) - 7.5
-            for j in range(dim)
+            for j in range(width)
         ]
         for c in range(n_centroids)
     ]
@@ -655,9 +610,7 @@ def _blocks(codebooks: list[list[list[float]]]) -> list[tuple]:
     return [(b * len(cb[0]), cb) for b, cb in enumerate(codebooks)]
 
 
-def _nearest_cells(
-    df: DataFrame, blocks: list[tuple], vec_col: str, keep: list[str]
-) -> DataFrame:
+def _nearest_cells(df: DataFrame, blocks: list[tuple], keep: list[str]) -> DataFrame:
     """``keep`` columns plus ``cells array<int>``: per (lo, codebook) block,
     the index of the codebook centroid nearest to vec[lo : lo + width] —
     argmin of ``_proxy_dists``, first index on exact ties. The one
@@ -680,44 +633,33 @@ def _nearest_cells(
             for lo, C in books
         ], axis=1).tolist()
 
-    return _vector_pass(df, vec_col, keep, "cells", T.ArrayType(T.IntegerType()), cells)
+    return _vector_pass(df, keep, "cells", T.ArrayType(T.IntegerType()), cells)
 
 
 def assign_cells_vectorized(
-    embeddings: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
+    embeddings: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """(id_col, vec_col, cell): each vector's nearest IVF centroid (the
-    default hash centroids, or explicit e.g. ``ivf_train``-ed ones) — the
-    one-block case of ``_nearest_cells``."""
-    cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
+    """(vec_id, embedding, cell): each vector's nearest IVF centroid among
+    ``centroids`` (``ivf_train``-ed, or ``ivf_centroid_values`` hash ones)
+    — the one-block case of ``_nearest_cells``."""
     return _nearest_cells(
-        embeddings, _blocks([cents]), vec_col, [id_col, vec_col]
-    ).select(id_col, vec_col, F.col("cells")[0].alias("cell"))
+        embeddings, _blocks([centroids]), ["vec_id", "embedding"]
+    ).select("vec_id", "embedding", F.col("cells")[0].alias("cell"))
 
 
 def _lloyd(
-    embeddings: DataFrame,
-    m: int,
-    k: int,
-    iters: int,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, m: int, k: int, iters: int
 ) -> list[list[list[float]]]:
-    """k-means over each of ``m`` dim/m-component blocks at once; returns
-    codebooks[m][k][dim/m].
+    """k-means over each of ``m`` width/m-component blocks at once; returns
+    codebooks[m][k][width/m], where width is the seed vectors' own.
 
     Forgy init: the first k vectors by id, read once (a top-k read at any
     scale) and sliced per block; a corpus of fewer than k vectors pads
-    every block with hash centroids (``ivf_centroid_values(dim/m, k)``).
+    every block with hash centroids (``ivf_centroid_values(width/m, k)``),
+    and a corpus of none raises ``ValueError`` (no width to train).
     Each of the ``iters`` Lloyd steps is one ``_nearest_cells`` pass, one
     posexplode to (vid, dim, x) keyed by the vector's cell in its block,
-    one ``groupBy(cell, dim)`` mean and one collect of the m*k*(dim/m)
+    one ``groupBy(cell, dim)`` mean and one collect of the m*k*(width/m)
     means — 1 + iters actions however many blocks train, and no vector
     reaches the driver. Empty cells keep their previous centroid (the
     standard k-means convention); at 10^12 rows you train on a uniform
@@ -731,11 +673,13 @@ def _lloyd(
     (``list_reduce(list_prepend(0.0, list(x ORDER BY vid)), +)``). The
     fold holds each cell's member values as one sorted array per (cell,
     dim) group — bounded by training-sample occupancy."""
-    sub = dim // m
     seeds = [
-        [float(x) for x in r[vec_col]]
-        for r in embeddings.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
+        [float(x) for x in r["embedding"]]
+        for r in embeddings.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
     ]
+    if not seeds:
+        raise ValueError("no vectors to train on: the table is empty")
+    sub = len(seeds[0]) // m
     pad = ivf_centroid_values(sub, k)[len(seeds):]
     books = [
         [v[b * sub:(b + 1) * sub] for v in seeds] + [list(p) for p in pad]
@@ -743,10 +687,10 @@ def _lloyd(
     ]
     for _ in range(iters):
         means = (
-            _nearest_cells(embeddings, _blocks(books), vec_col, [id_col, vec_col])
+            _nearest_cells(embeddings, _blocks(books), ["vec_id", "embedding"])
             .select(
-                F.col(id_col).alias("vid"), "cells",
-                F.posexplode(F.col(vec_col)).alias("dim", "x"),
+                F.col("vec_id").alias("vid"), "cells",
+                F.posexplode("embedding").alias("dim", "x"),
             )
             .groupBy(F.expr(f"cells[dim div {sub}]").alias("cell"), "dim")
             .agg(
@@ -769,12 +713,7 @@ def _lloyd(
 
 
 def ivf_train(
-    embeddings: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    iters: int = 5,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    embeddings: DataFrame, n_centroids: int = IVF_CENTROIDS, iters: int = 5
 ) -> list[list[float]]:
     """The trained IVF quantizer: ``_lloyd`` with one full-width block.
     Pass it to ``ivf_topk(centroids=...)`` — train once, serve many.
@@ -786,23 +725,16 @@ def ivf_train(
     the bit-exact ORACLE twin (plan shape under test); the trained path is
     the one with a real recall/scan trade-off (tests/test_recall.py pins
     occupancy spread and the recall-vs-probes curve)."""
-    return _lloyd(embeddings, 1, n_centroids, iters, dim, id_col, vec_col)[0]
+    return _lloyd(embeddings, 1, n_centroids, iters)[0]
 
 
-def pq_train(
-    embeddings: DataFrame,
-    m: int = PQ_BLOCKS,
-    k: int = PQ_CENTROIDS,
-    iters: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """The m per-block PQ codebooks, codebooks[m][k][dim/m]: all blocks
-    train together in ``_lloyd`` (same seed, folds and job count as one
-    IVF training), so trained PQ is bit-reproducible and the DuckDB
-    oracle replays all m trainings."""
-    return _lloyd(embeddings, m, k, iters, dim, id_col, vec_col)
+def pq_train(embeddings: DataFrame, iters: int = 3) -> list[list[list[float]]]:
+    """The PQ_BLOCKS per-block codebooks of PQ_CENTROIDS centroids each,
+    codebooks[PQ_BLOCKS][PQ_CENTROIDS][width/PQ_BLOCKS]: all blocks train
+    together in ``_lloyd`` (same seed, folds and job count as one IVF
+    training), so trained PQ is bit-reproducible and the DuckDB oracle
+    replays all PQ_BLOCKS trainings."""
+    return _lloyd(embeddings, PQ_BLOCKS, PQ_CENTROIDS, iters)
 
 
 def _probe_cells(qvecs: list, cents: list[list[float]], n_probe: int) -> list:
@@ -846,11 +778,7 @@ def ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 20,
     k: int = 5,
-    n_centroids: int = IVF_CENTROIDS,
     n_probe: int = IVF_PROBE,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k via an inverted file: every vector is assigned to
@@ -860,8 +788,9 @@ def ivf_topk(
     scored twice.
 
     ``centroids`` serves the index from an explicit (e.g. ``ivf_train``-ed)
-    quantizer instead of the default deterministic hash centroids — the real
-    IVF deployment shape: train once, serve many. Trained centroids cut the
+    quantizer instead of the default IVF_CENTROIDS deterministic hash
+    centroids, which take their width from the query rows — the real IVF
+    deployment shape: train once, serve many. Trained centroids cut the
     probes needed at equal recall (pinned by tests/test_recall.py).
 
     Candidates are scored by the partial top-k kernel
@@ -869,11 +798,13 @@ def ivf_topk(
     (``_probe_cells``) ride inside the kernel and each task emits its
     partial top-k, so no cell-keyed join or per-pair cosine expression is
     in the plan."""
-    cents = centroids if centroids is not None else ivf_centroid_values(dim, n_centroids)
-    base = assign_cells_vectorized(
-        embeddings, dim=dim, id_col=id_col, vec_col=vec_col, centroids=cents,
-    ).select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "cell")
-    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    qids, qvecs = _query_rows(embeddings, n_queries)
+    cents = centroids if centroids is not None else ivf_centroid_values(
+        len(qvecs[0]) if qvecs else 0, IVF_CENTROIDS
+    )
+    base = assign_cells_vectorized(embeddings, cents).select(
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"), "cell"
+    )
     return _rank_topk(
         _topk_partials(base, qids, k, _cosine_score(qvecs),
                        _probe_cells(qvecs, cents, n_probe)),
@@ -886,8 +817,6 @@ def _adc_rank(
     scored: DataFrame,
     n_queries: int,
     k: int,
-    id_col: str,
-    vec_col: str,
     rerank: int | None,
 ) -> DataFrame:
     """Rank ADC partials into the top-k shortlist — or, with ``rerank``, the
@@ -901,9 +830,9 @@ def _adc_rank(
     )
     if not rerank:
         return shortlist
-    vecs = embeddings.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    qvecs = embeddings.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    vecs = embeddings.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
+    qvecs = embeddings.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     exact = (
         F.broadcast(shortlist.select("query_id", "cand_id"))
@@ -920,29 +849,26 @@ def pq_topk(
     codebooks: list[list[list[float]]],
     n_queries: int = 20,
     k: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rerank: int | None = None,
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation (ADC): each
     query precomputes one m x k distance table against the codebooks
     (c2 - 2*q_b.c — the same monotone L2 proxy as IVF), then every
-    candidate costs m TABLE LOOKUPS instead of a dim-length float scan —
+    candidate costs m TABLE LOOKUPS instead of a width-long float scan —
     the arithmetic that makes exhaustive scoring of a coarse cell feasible
     when vectors live as codes. The query tables ride inside the partial
     top-k kernel (``_topk_partials`` with ``_adc_score``), so no cross join
     or per-pair ADC expression is in the plan; the ADC sum folds blocks in
     ascending order from 0.0 (the engine-portable order); ties rank by
     candidate id."""
-    cands = _nearest_cells(
-        embeddings, _blocks(codebooks), vec_col, [id_col]
-    ).select(F.col(id_col).alias("cand_id"), F.col("cells").alias("codes"))
-    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    cands = _nearest_cells(embeddings, _blocks(codebooks), ["vec_id"]).select(
+        F.col("vec_id").alias("cand_id"), F.col("cells").alias("codes")
+    )
+    qids, qvecs = _query_rows(embeddings, n_queries)
     scored = _topk_partials(
         cands, qids, rerank if rerank else k, _adc_score(qvecs, codebooks)
     )
-    return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)
+    return _adc_rank(embeddings, scored, n_queries, k, rerank)
 
 
 def ivf_pq_topk(
@@ -952,9 +878,6 @@ def ivf_pq_topk(
     n_queries: int = 20,
     k: int = 5,
     n_probe: int = IVF_PROBE,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rerank: int | None = None,
 ) -> DataFrame:
     """IVF-PQ — the composed industry-standard ANN serving architecture:
@@ -976,15 +899,15 @@ def ivf_pq_topk(
     per-task partial top-k with the driver-replayed probe cells
     (``_probe_cells``)."""
     cands = _nearest_cells(
-        embeddings, _blocks([centroids]) + _blocks(codebooks), vec_col, [id_col]
+        embeddings, _blocks([centroids]) + _blocks(codebooks), ["vec_id"]
     ).select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.slice(F.col("cells"), 2, len(codebooks)).alias("codes"),
         F.col("cells")[0].alias("cell"),
     )
-    qids, qvecs = _query_rows(embeddings, n_queries, id_col, vec_col)
+    qids, qvecs = _query_rows(embeddings, n_queries)
     scored = _topk_partials(
         cands, qids, rerank if rerank else k, _adc_score(qvecs, codebooks),
         _probe_cells(qvecs, centroids, n_probe),
     )
-    return _adc_rank(embeddings, scored, n_queries, k, id_col, vec_col, rerank)
+    return _adc_rank(embeddings, scored, n_queries, k, rerank)

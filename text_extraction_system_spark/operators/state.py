@@ -93,9 +93,11 @@ def signature_table_exists(base_dir: str) -> bool:
 
 
 def write_srp_buckets(embeddings: DataFrame, base_dir: str) -> str:
-    """Materialize the corpus's SRP band buckets (``vec_id``/``embedding``
-    columns, the default bands), partitioned by (band, bucket_prefix).
-    Returns the table path."""
+    """Materialize the corpus's SRP band buckets, partitioned by (band,
+    bucket_prefix). ``embeddings`` follows the similarity contract: a
+    bigint ``vec_id`` and an ``embedding`` whose width is the data's own;
+    the bands are the module's N_BANDS x PLANES_PER_BAND, the geometry
+    every probe of the table assumes. Returns the table path."""
     from . import similarity
 
     path = os.path.join(base_dir, _SRP_DIR)
@@ -107,12 +109,10 @@ def write_srp_buckets(embeddings: DataFrame, base_dir: str) -> str:
     return path
 
 
-def read_srp_buckets(spark: SparkSession, base_dir: str,
-                     schema: str = SRP_TABLE_SCHEMA) -> DataFrame:
-    """``schema`` must match the id type the table was written with (vid is
-    bigint for the embeddings corpus; pass a string-vid schema for
-    string-keyed vectors)."""
-    return spark.read.schema(schema).parquet(os.path.join(base_dir, _SRP_DIR))
+def read_srp_buckets(spark: SparkSession, base_dir: str) -> DataFrame:
+    """The persisted bucket table as (vid bigint, bucket, band,
+    bucket_prefix): ``vid`` is the ``vec_id`` it was written from."""
+    return spark.read.schema(SRP_TABLE_SCHEMA).parquet(os.path.join(base_dir, _SRP_DIR))
 
 
 def srp_buckets_exist(base_dir: str) -> bool:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import pipeline, schemas
-from ..operators import events
+from ..operators import events, similarity
 
 #: how late an event may arrive, for both event streams
 EVENT_WATERMARK = "2 hours"
@@ -180,18 +180,17 @@ def incremental_ann_stream(
     ts_col: str = "ingest_ts",
     watermark: str = "1 hour",
     threshold: float = 0.3,
-    multiprobe: int | None = None,
+    multiprobe: int = similarity.MULTIPROBE_RADIUS,
     probe_budget: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
 ) -> DataFrame:
-    """``similarity.incremental_ann_topk`` on a stream: each arriving vector
-    is SRP-bucketed by the batch bucket kernel (a stateless Arrow map,
-    carrying the event time through), expanded to its multi-probe keys
-    (``similarity._probe_keys``) and STREAM-STATIC joined against the
-    committed corpus's persisted bucket table by the batch candidate join
-    (``similarity._committed_candidates``; pass ``state.read_srp_buckets(...)``),
+    """``similarity.incremental_ann_topk`` on a stream: each arriving
+    (``vec_id``, ``embedding``) row — the similarity contract, width from
+    the data — is SRP-bucketed by the batch bucket kernel (a stateless
+    Arrow map, carrying the event time through), expanded to its
+    multi-probe keys (``similarity._probe_keys``) and STREAM-STATIC joined
+    against the committed corpus's persisted bucket table by the batch
+    candidate join (``similarity._committed_candidates``; pass
+    ``state.read_srp_buckets(...)``),
     then scored by the batch cosine step (``similarity._cosine_scored``)
     and thresholded — ANN *matching* on arrival rather than ranked top-k,
     since per-query ranking is an aggregation a continuous emitter should
@@ -201,19 +200,13 @@ def incremental_ann_stream(
     so the matches that pass the threshold are deduped on (query_id,
     cand_id) within the watermark: the dedup state holds matches, not
     candidates. Emits (query_id, cand_id, cosine, ingest_ts)."""
-    from ..operators import similarity
-
-    ppb = similarity.PLANES_PER_BAND
-    radius = similarity.MULTIPROBE_RADIUS if multiprobe is None else multiprobe
     rows = similarity._srp_band_rows(
         vecs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
-        similarity.N_BANDS, ppb, dim, id_col, vec_col, carry=(vec_col, ts_col),
+        carry=("embedding", ts_col),
     )
-    qs = similarity._probe_keys(rows, ppb, radius, probe_budget, carry=(ts_col,))
+    qs = similarity._probe_keys(rows, multiprobe, probe_budget, carry=(ts_col,))
     cands = similarity._committed_candidates(qs, committed_buckets, carry=(ts_col,))
-    scored = similarity._cosine_scored(
-        cands, committed_vecs, id_col, vec_col, carry=(ts_col,)
-    )
+    scored = similarity._cosine_scored(cands, committed_vecs, carry=(ts_col,))
     return _first_within(
         scored.where(F.col("cosine") >= threshold), ts_col, watermark,
         ["query_id", "cand_id"],
