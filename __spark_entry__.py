@@ -295,7 +295,7 @@ def _q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.near_dup_pairs(_docs(spark, sf_dir)).where(
         F.col("jaccard") >= DUP_CLUSTER_MIN_JACCARD
     )
-    return dedup.connected_components(pairs, id_a="doc_a", id_b="doc_b")
+    return dedup.connected_components(pairs)
 
 
 #: deterministic eval-set selector for the decontamination query: every
@@ -316,9 +316,8 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: fixed token budget for the packing query (a training-sequence length)
 PACK_BUDGET = 2048
 
-#: committed-corpus selector + estimate threshold for incremental dedup
+#: committed-corpus selector for incremental dedup
 INCR_COMMITTED_MOD = 3
-INCR_THRESHOLD = 0.5
 
 
 def _state_dir(sf_dir: str) -> str:
@@ -376,7 +375,7 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     committed = state.read_signature_table(spark, base)
     new = docs.where(F.col("doc_id") % INCR_COMMITTED_MOD == 0)
-    return dedup.incremental_near_dup(new, committed, est_threshold=INCR_THRESHOLD)
+    return dedup.incremental_near_dup(new, committed)
 
 
 def _q_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -385,24 +384,23 @@ def _q_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing of the train split. One narrow signal pass, the dedup hash
     shuffle, then the split hash (no shuffle) and the two-level packing
     prefix sum — the manifest a 10^12-doc release job would write out."""
-    from pyspark.sql.window import Window
-
     s = curation.doc_signals(_docs(spark, sf_dir))
     kept = s.where(curation.keep_predicate())
-    # one-pass exact dedup: keep the min-doc_id row per content_hash with a
-    # row_number window — the previous groupBy + self-join formulation
-    # evaluated the whole curation signal pass twice (once per join branch)
-    # and reshuffled both sides on the composite join key
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
+    # one-pass exact dedup: the funnel's survivor (curation.first_copy) per
+    # content_hash, a window over the kept rows — a groupBy + self-join
+    # would evaluate the whole curation signal pass twice (once per join
+    # branch) and reshuffle both sides on the composite join key
     surv = (
-        kept.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+        kept.withColumn("_first", curation.first_copy("content_hash"))
+        .where("_first")
         .select("doc_id", "source", "n_tokens")
     )
     sp = surv.withColumn("split", splits.split_col(F.col("doc_id")))
     train = sp.where(F.col("split") == "train").select("doc_id", "n_tokens")
-    packed = splits.pack_bins(train, budget=PACK_BUDGET).select("doc_id", "bin")
-    return sp.join(packed, "doc_id", "left").select(
+    packed = splits.pack_bins(train, budget=PACK_BUDGET).select(
+        F.col("doc_id").alias("bin_doc"), "bin")
+    # null-safe: a NULL-id survivor keeps its bin, as in the oracle
+    return sp.join(packed, F.col("doc_id").eqNullSafe(F.col("bin_doc")), "left").select(
         "doc_id", "source", "split", "n_tokens", "bin"
     )
 
@@ -434,7 +432,7 @@ def _q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-sequence packing: docs -> fixed token-budget bins under a
     deterministic seeded order. The engine runs the two-level distributed
-    prefix sum (n_shards independent sorts); the oracle is the single
+    prefix sum (PACK_SHARDS independent sorts); the oracle is the single
     global-window formulation — identical assignment by construction."""
     from text_extraction_system_spark.operators import textstats
 
@@ -1395,7 +1393,9 @@ WITH t AS (
 ),
 m AS (
   SELECT doc_id, toks, len(toks) AS n,
-    1 + (strpos('{_HEX}', substr(md5('cols:' || doc_id), 1, 1)) - 1) % 3 AS n_cols
+    -- a NULL id has no column hash: one column, as in the engine
+    coalesce(1 + (strpos('{_HEX}', substr(md5('cols:' || doc_id), 1, 1)) - 1) % 3, 1)
+      AS n_cols
   FROM t
 )
 SELECT doc_id,
@@ -1478,7 +1478,7 @@ FROM documents
 """
 
     bit_terms = []
-    for b in range(32):
+    for b in range(textstats.SIMHASH_BITS):
         bit_terms.append(
             f"CASE WHEN coalesce(list_sum(list_transform(hs, "
             f"h -> CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END)), 0) > 0 "
@@ -1703,7 +1703,7 @@ est AS (
   FROM cand
 )
 SELECT doc_id, dup_of, est_jaccard FROM est
-WHERE est_jaccard >= {INCR_THRESHOLD}e0
+WHERE est_jaccard >= {dedup.EST_THRESHOLD}e0
 """
 
     # split-assignment twin: same md5-prefix integer, same exact integer
@@ -1720,8 +1720,9 @@ WHERE est_jaccard >= {INCR_THRESHOLD}e0
     _sw = splits.DEFAULT_WEIGHTS
     _sw_total = sum(_sw.values())
     _sw_items = list(_sw.items())
-    # concat_ws skips a NULL doc_id in both engines, so a NULL id hashes 'split0'
-    _split_h = _hex8_int("md5(concat_ws(':', 'split0', CAST(doc_id AS VARCHAR)))")
+    # concat_ws skips a NULL doc_id in both engines, so a NULL id hashes the seed
+    _split_h = _hex8_int(
+        f"md5(concat_ws(':', '{splits.SPLIT_SEED}', CAST(doc_id AS VARCHAR)))")
     _acc = 0.0
     _cases = []
     for _name, _w in _sw_items[:-1]:
@@ -1737,7 +1738,7 @@ FROM documents
     # packing twin: the single global-window formulation of the two-level
     # prefix sum (identical assignment — the engine's shard offsets
     # reconstruct exactly this cumsum under the same (shard, ok) order)
-    _pk_ok = "md5(concat_ws(':', 'pack0', CAST(doc_id AS VARCHAR)))"
+    _pk_ok = f"md5(concat_ws(':', '{splits.PACK_SEED}', CAST(doc_id AS VARCHAR)))"
     _pk_shard = f"{_hex8_int(_pk_ok)} % {splits.PACK_SHARDS}"
     sql["pack_bins"] = f"""
 WITH t AS (

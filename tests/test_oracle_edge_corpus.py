@@ -154,14 +154,15 @@ def null_id_duck(spark):
     "sentences", "titles", "sections", "boilerplate", "token_count",
     "token_count_bpe", "lang_id", "quality", "fingerprint", "simhash",
     "split_assign", "pack_bins", "char_coords", "text_coords", "coords_text",
-    "deskew", "repetition",
+    "deskew", "repetition", "reading_order",
 ])
 def test_null_doc_id_parity(spark, null_id_duck, name):
     """A NULL ``doc_id`` has no media key, so its document derives text
     spans only, and its covers count that text, in both engines. The
     engine keeps the NULL-id document's rows, so the oracle joins on
     ``doc_id`` null-safely, and hashes a NULL id as the engine's
-    ``concat_ws`` does (``split_assign``, ``pack_bins``)."""
+    ``concat_ws`` does (``split_assign``, ``pack_bins``). Nor has it a
+    column hash: its reading-order page is one column."""
     d, con = null_id_duck
     _assert_parity(spark, con, d, name)
 
@@ -369,6 +370,20 @@ def test_incremental_dedup_wave_parity(spark):
     got = entry.queries()["incremental_dedup"](spark, d).collect()
     assert len(got) == dedup.MAX_BUCKET + 1 and {r["dup_of"] for r in got} == {"1"}
     _assert_parity(spark, con, d, "incremental_dedup")
+
+
+@pytest.mark.parametrize("name", ["curation_funnel", "release_manifest"])
+def test_exact_dedup_survivor_skips_null_id(spark, name):
+    """Two kept copies of one text, ids NULL and 7, in different sources:
+    exact dedup keeps doc 7 in both engines (a NULL id ranks last; the
+    oracle's ``min(doc_id)`` skips it), so source ``b`` holds the survivor."""
+    d, con = _corpus(spark, [(None, _EN, "en", "a"), (7, _EN, "en", "b")])
+    _assert_parity(spark, con, d, name)
+    rows = entry.queries()[name](spark, d).collect()
+    if name == "curation_funnel":
+        assert {r["source"]: r["n_deduped"] for r in rows} == {"a": 0, "b": 1}
+    else:
+        assert [(r["doc_id"], r["source"]) for r in rows] == [("7", "b")]
 
 
 def test_decontaminate_eval_without_shingles(spark):

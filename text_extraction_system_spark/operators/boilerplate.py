@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import schemas
+
 MIN_TEXT_LEN = 10
 MIN_DENSITY = 0.25
 MAX_LINK_DENSITY = 0.5
@@ -62,10 +64,6 @@ def main_content_col(html: Column) -> Column:
     return F.array_join(F.transform(kept, _stripped), "\n")
 
 
-def strip_boilerplate(
-    docs: DataFrame, doc_id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        main_content_col(F.col(html_col)).alias("main_text"),
-    )
+def strip_boilerplate(docs: DataFrame) -> DataFrame:
+    """(doc_id, html) -> (doc_id, main_text)."""
+    return schemas.keyed(docs, main_content_col(F.col("html")).alias("main_text"))

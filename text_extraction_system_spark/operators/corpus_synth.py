@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..core import spec
 
 NAV_LINE = '<nav><a href="/">home</a><a href="/x">more</a></nav>'
@@ -39,10 +40,7 @@ def html_doc_col(text: Column) -> Column:
 
 
 def html_docs(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        html_doc_col(F.col("text")).alias("html"),
-    )
+    return schemas.keyed(docs, html_doc_col(F.col("text")).alias("html"))
 
 
 def heading_doc_col(text: Column) -> Column:
@@ -59,7 +57,4 @@ def heading_doc_col(text: Column) -> Column:
 
 
 def heading_docs(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        heading_doc_col(F.col("text")).alias("plain_text"),
-    )
+    return schemas.keyed(docs, heading_doc_col(F.col("text")).alias("plain_text"))

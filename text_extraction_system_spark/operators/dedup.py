@@ -31,13 +31,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .. import arrowmap
+from .. import arrowmap, schemas
 from ..core import spec
 
 #: LSH buckets (MinHash bands and SRP bands alike) larger than this are
 #: dropped as degenerate (boilerplate shingles, zero-ish embeddings); a
 #: bucket of b rows yields b^2 pairs — this caps join blowup at scale
 MAX_BUCKET = 64
+
+#: the MinHash estimate a cross-batch match must reach, in batch
+#: (``incremental_near_dup``), in the stream and in the oracle
+EST_THRESHOLD = 0.5
 
 
 def _shingles(text: str) -> "set[str]":
@@ -62,12 +66,7 @@ def shingle_hash_set(text: str) -> "list[int]":
     ]
 
 
-def _signature_band_rows(
-    docs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
+def _signature_band_rows(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, sig, band, band_sig) exploded band rows via ONE Arrow pass:
     ``sig`` is the MINHASH_PERMS-long array of min affine-permuted shingle
     hashes, ``band_sig`` the md5 of each band's comma-joined rows. Exact by
@@ -113,10 +112,7 @@ def _signature_band_rows(
         "doc_id string, sig array<bigint>, band int, band_sig string"
     )
     return arrowmap.map_rows(
-        docs.select(
-            F.col(doc_id_col).cast("string").alias(doc_id_col), text_col, *carry
-        ),
-        rows,
+        schemas.documents(docs, *carry), rows,
         T.StructType(schema.fields + [fields[c] for c in carry]),
     )
 
@@ -132,8 +128,7 @@ def guard_buckets(rows: DataFrame, keys: list[str]) -> DataFrame:
     return counted.where(F.col("bucket_n") <= MAX_BUCKET).drop("bucket_n")
 
 
-def near_dup_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def near_dup_pairs(docs: DataFrame) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one LSH band,
     verified with exact Jaccard over their distinct shingles.
 
@@ -147,7 +142,7 @@ def near_dup_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
     Nothing is materialized, and no shingle set is built for a doc that is
     in no pair."""
     buckets = (
-        signature_rows(docs, doc_id_col, text_col)
+        signature_rows(docs)
         .groupBy("band", "band_sig")
         .agg(F.collect_list("doc_id").alias("ids"))
     )
@@ -157,7 +152,7 @@ def near_dup_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
         .where(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
-    texts = docs.select(F.col(doc_id_col).cast("string"), F.col(text_col))
+    texts = schemas.documents(docs)
     cand = pairs.join(texts.toDF("doc_a", "text_a"), "doc_a").join(
         texts.toDF("doc_b", "text_b"), "doc_b"
     )
@@ -172,13 +167,7 @@ def near_dup_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
     )
 
 
-def contamination_report(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    min_hits: int = 1,
-) -> DataFrame:
+def contamination_report(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination: training docs sharing word k-shingles with
     an evaluation set (the n-gram collision check every LLM training
     pipeline runs before a data release).
@@ -188,50 +177,47 @@ def contamination_report(
     become one driver-side frozenset (this runs one job when the DataFrame
     is built). The train side is then a single narrow Arrow pass: a doc's
     hit count is doc-local, so the kernel counts its shingles found in the
-    set, with no join and no shuffle. Only contaminated docs (n_hits >=
-    max(min_hits, 1)) are emitted, so the output is a small report, not a
-    second corpus, with one row per such train row (callers pass unique
-    doc ids). Shingle identity = the same FP_HEX_CHARS md5-prefix hash the
-    dedup family uses (deterministic, engine-agnostic; 28-bit space <
-    MINHASH_MOD, so ``shingle_hash_set``'s mod never fires and the values
-    equal the raw token_hash_col the oracle computes).
+    set, with no join and no shuffle. Only contaminated docs (at least one
+    hit) are emitted, so the output is a small report, not a second corpus,
+    with one row per such train row (callers pass unique doc ids). Shingle
+    identity = the same FP_HEX_CHARS md5-prefix hash the dedup family uses
+    (deterministic, engine-agnostic; 28-bit space < MINHASH_MOD, so
+    ``shingle_hash_set``'s mod never fires and the values equal the raw
+    token_hash_col the oracle computes).
 
     Returns (doc_id, n_hits, n_shingles, contamination = n_hits/n_shingles).
     """
     ev = frozenset(
-        h for (text,) in eval_docs.select(text_col).collect()
+        h for (text,) in eval_docs.select("text").collect()
         for h in shingle_hash_set(text)
     )
 
     def rows(doc_id, text):
         hs = shingle_hash_set(text)
         n_hits = sum(h in ev for h in hs)
-        if n_hits and n_hits >= min_hits:
+        if n_hits:
             yield doc_id, n_hits, len(hs), n_hits / len(hs)
 
     return arrowmap.map_rows(
-        train.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
-        rows, "doc_id string, n_hits bigint, n_shingles bigint, contamination double",
+        schemas.documents(train), rows,
+        "doc_id string, n_hits bigint, n_shingles bigint, contamination double",
     )
 
 
-def signature_rows(docs: DataFrame, doc_id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def signature_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, sig, band, band_sig) — the dedup state of a corpus, as a
     plan (no materialization): the Arrow kernel's band rows
     (``_signature_band_rows``) behind ``guard_buckets``, so batch joins
     against the rows are bounded."""
-    return guard_buckets(
-        _signature_band_rows(docs, doc_id_col, text_col), ["band", "band_sig"]
-    )
+    return guard_buckets(_signature_band_rows(docs), ["band", "band_sig"])
 
 
 def _band_matches(band_rows: DataFrame, committed_sigs: DataFrame,
-                  est_threshold: float, carry: tuple[str, ...] = ()) -> DataFrame:
+                  carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, dup_of, est_jaccard, *carry), one row per band in which a
     ``_signature_band_rows`` row shares its bucket with a committed doc and
     the MinHash estimate (the fraction of agreeing signature components)
-    reaches ``est_threshold``; a pair has the same estimate on every band.
+    reaches ``EST_THRESHOLD``; a pair has the same estimate on every band.
 
     When ``committed_sigs`` is the persisted table (it carries the
     ``sig_prefix`` partition column — ``state.read_signature_table``), the
@@ -261,17 +247,11 @@ def _band_matches(band_rows: DataFrame, committed_sigs: DataFrame,
     return (
         band_rows.join(old, keys)
         .select("doc_id", "dup_of", est.alias("est_jaccard"), *carry)
-        .where(F.col("est_jaccard") >= est_threshold)
+        .where(F.col("est_jaccard") >= EST_THRESHOLD)
     )
 
 
-def incremental_near_dup(
-    new_docs: DataFrame,
-    committed_sigs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    est_threshold: float = 0.5,
-) -> DataFrame:
+def incremental_near_dup(new_docs: DataFrame, committed_sigs: DataFrame) -> DataFrame:
     """Cross-batch near-dup: which NEW docs duplicate an already-committed
     doc. The production shape of dedup at scale — a batch is signed (narrow,
     batch-sized) and joined against the committed signature rows; the
@@ -290,8 +270,8 @@ def incremental_near_dup(
     persisted table the batch's keys prune its partitions — and matched by
     ``_band_matches``, the core ``incremental_dedup_stream`` runs too; a
     pair colliding in several bands is kept once."""
-    batch = F.broadcast(_signature_band_rows(new_docs, doc_id_col, text_col))
-    return _band_matches(batch, committed_sigs, est_threshold).distinct()
+    batch = F.broadcast(_signature_band_rows(new_docs))
+    return _band_matches(batch, committed_sigs).distinct()
 
 
 #: window width (in tokens) for cross-document duplicated-window scoring —
@@ -302,10 +282,9 @@ def incremental_near_dup(
 DUP_WINDOW_TOKENS = 8
 
 
-def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
-                             text_col: str) -> DataFrame:
-    """(doc_id, win, occ) per-doc window-hash counts via one Arrow pass —
-    the shuffle-free form of explode(ngram) -> 60-bit md5 ->
+def _doc_window_counts_arrow(docs: DataFrame) -> DataFrame:
+    """(doc_id, win, occ) per-doc DUP_WINDOW_TOKENS-window hash counts via
+    one Arrow pass — the shuffle-free form of explode(ngram) -> 60-bit md5 ->
     groupBy(doc_id, win).count(): grouping keyed by (doc, window) is
     per-document local, so each task produces its docs' distinct counts
     with a python Counter instead of shipping every window occurrence
@@ -319,6 +298,8 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
 
     from .textstats import py_tokens
 
+    n = DUP_WINDOW_TOKENS
+
     def rows(doc_id, text):
         toks = py_tokens(text)
         cnt = Counter(
@@ -329,17 +310,14 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
             yield doc_id, win, occ
 
     return arrowmap.map_rows(
-        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
-        rows, "doc_id string, win bigint, occ bigint",
+        schemas.documents(docs), rows, "doc_id string, win bigint, occ bigint"
     )
 
 
-def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
-                        doc_id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def dup_window_coverage(docs: DataFrame) -> DataFrame:
     """Per-document cross-corpus duplication signal: the fraction of the
-    doc's n-token windows that also occur in at least one OTHER document
-    (plus the distinct shared-window count). Doc-level MinHash finds
+    doc's DUP_WINDOW_TOKENS-token windows that also occur in at least one
+    OTHER document (plus the distinct shared-window count). Doc-level MinHash finds
     whole-document near-copies; THIS finds shared boilerplate runs inside
     otherwise-distinct documents — the signal exact-substring dedup cuts
     on, at window granularity (window-fraction, not merged-interval
@@ -357,9 +335,9 @@ def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
     build side. Nothing is pairwise; an md5 collision would need ~2^30
     distinct shared windows per partition-of-interest (birthday bound) and
     is deterministic and engine-identical anyway, so the oracle stays
-    bit-exact. Docs shorter than n tokens have no windows and emit no
-    row."""
-    per_doc_win = _doc_window_counts_arrow(docs, n, doc_id_col, text_col)
+    bit-exact. Docs shorter than DUP_WINDOW_TOKENS tokens have no windows
+    and emit no row."""
+    per_doc_win = _doc_window_counts_arrow(docs)
     counted = per_doc_win.withColumn(
         "n_docs_with", F.count(F.lit(1)).over(Window.partitionBy("win"))
     )
@@ -379,12 +357,7 @@ def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Duplicate-CLUSTER resolution: connected components over the
     near-dup pair graph, labeling every vertex with the minimum doc id
     reachable from it — the step a release pipeline runs after pair
@@ -404,13 +377,14 @@ def connected_components(
     per round). Raises after ``max_iter`` rounds instead of returning a
     silently-partial labeling.
 
-    Returns (doc_id, cluster_id) for every vertex that appears in a pair;
-    singletons never enter the graph and keep themselves as canonical by
-    construction."""
+    ``pairs`` holds the ``doc_a`` / ``doc_b`` edges ``near_dup_pairs``
+    emits. Returns (doc_id, cluster_id) for every vertex that appears in a
+    pair; singletons never enter the graph and keep themselves as canonical
+    by construction."""
     edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     ).distinct().localCheckpoint(eager=True)
 
     labels = (

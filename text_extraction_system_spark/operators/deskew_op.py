@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import arrowmap
+from .. import arrowmap, schemas
 from ..core import deskew
 
 _HEX = "0123456789abcdef"
@@ -153,7 +153,5 @@ def deskew_query(spark, sf_dir: str) -> DataFrame:
     # in one task (see partitioning.spread_unsplittable)
     from .partitioning import spread_unsplittable
 
-    docs = spread_unsplittable(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id"
-    ).select(F.col("doc_id").cast("string").alias("doc_id"))
-    return deskew_rows(synth_glyph_arrays(docs))
+    docs = spread_unsplittable(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+    return deskew_rows(synth_glyph_arrays(schemas.keyed(docs)))

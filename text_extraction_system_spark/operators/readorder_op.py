@@ -21,9 +21,8 @@ import hashlib
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .. import arrowmap
+from .. import arrowmap, schemas
 from ..core import readorder
 from . import textstats
 
@@ -40,9 +39,16 @@ def scrambled_boxes(doc_id: str, text: str) -> list:
     (lines_per_col = ceil(total_lines/n_cols)); per-doc column pitch =
     32*(max_word_len+1) + 40, so the inter-column gap always exceeds the
     intra-line word gap (8 px) by more than COLUMN_GAP_MIN. Integer layout
-    arithmetic, exact as doubles."""
+    arithmetic, exact as doubles.
+
+    A NULL ``doc_id`` has no per-doc hash key: its page is one column and
+    its boxes keep their typeset order (as in the oracle, whose
+    ``md5('cols:' || doc_id)`` is NULL there)."""
+    def key(s: str) -> str:
+        return "" if doc_id is None else hashlib.md5(s.encode()).hexdigest()
+
     toks = textstats.py_tokens(text)
-    n_cols = 1 + int(hashlib.md5(f"cols:{doc_id}".encode()).hexdigest()[0], 16) % 3
+    n_cols = 1 if doc_id is None else 1 + int(key(f"cols:{doc_id}")[0], 16) % 3
     total_lines = -(-len(toks) // WORDS_PER_LINE)
     lines_per_col = -(-total_lines // n_cols) if total_lines else 1
     max_len = max((len(t) for t in toks), default=0)
@@ -54,13 +60,13 @@ def scrambled_boxes(doc_id: str, text: str) -> list:
         if k == 0:
             x_in_line = 0
         boxes.append((
-            hashlib.md5(f"{doc_id}:{i}".encode()).hexdigest(), word,
+            key(f"{doc_id}:{i}"), word,
             float(line // lines_per_col * pitch + x_in_line),
             float((line % lines_per_col) * LINE_H),
             float(CHAR_W * len(word)),
         ))
         x_in_line += CHAR_W * (len(word) + 1)
-    boxes.sort()
+    boxes.sort(key=lambda b: b[0])  # stable: equal keys keep typeset order
     return boxes
 
 
@@ -80,9 +86,7 @@ def reading_order_rows(docs: DataFrame) -> DataFrame:
         yield doc_id, " ".join(words[i] for i in order), readorder.n_columns(x, w)
 
     return arrowmap.map_rows(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
-        rows,
-        "doc_id string, reconstructed string, n_columns int",
+        schemas.documents(docs), rows, "doc_id string, reconstructed string, n_columns int"
     )
 
 

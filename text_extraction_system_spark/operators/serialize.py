@@ -39,34 +39,32 @@ except ImportError:
     _packb = minipack.packb
 
 
-def to_json_column(results: DataFrame, struct_col: str = "structure") -> DataFrame:
-    """Append ``<struct_col>_json`` — stays entirely JVM-side."""
-    return results.withColumn(f"{struct_col}_json", F.to_json(F.col(struct_col)))
+def to_json_column(results: DataFrame) -> DataFrame:
+    """Append ``structure_json`` — stays entirely JVM-side."""
+    return results.withColumn("structure_json", F.to_json(F.col("structure")))
 
 
-def to_msgpack_column(results: DataFrame, struct_col: str = "structure") -> DataFrame:
-    """Append ``<struct_col>_msgpack`` (binary) via Arrow batches."""
+def to_msgpack_column(results: DataFrame) -> DataFrame:
+    """Append ``structure_msgpack`` (binary) via Arrow batches."""
     return arrowmap.append_column(
-        results, f"{struct_col}_msgpack", T.BinaryType(),
+        results, "structure_msgpack", T.BinaryType(),
         lambda structs: [_packb(v, use_single_float=True) for v in structs],
-        struct_col,
+        "structure",
     )
 
 
-def to_protobuf_column(results: DataFrame, struct_col: str = "structure",
-                       pages_col: str | None = "pages",
-                       toc_col: str | None = "table_of_contents") -> DataFrame:
-    """Append ``<struct_col>_proto`` (binary): the reference's ``Pages``
+def to_protobuf_column(results: DataFrame) -> DataFrame:
+    """Append ``structure_proto`` (binary): the reference's ``Pages``
     contract message (contract_pages.proto) via Arrow batches and the
-    vendored proto2 encoder. Same ``arrowmap.append_column`` shape as the
-    msgpack sink. When a ``toc_col`` array column is present (e.g. the toc
-    operator's rows collected per doc), its items are emitted as
-    ``table_of_contents`` (field 7) alongside the structure's own
-    segments."""
+    vendored proto2 encoder, with the ``pages`` column when ``results`` has
+    one. Same ``arrowmap.append_column`` shape as the msgpack sink. When a
+    ``table_of_contents`` array column is present (e.g. the toc operator's
+    rows collected per doc), its items are emitted as field 7 alongside the
+    structure's own segments."""
     from ..core import miniproto
 
-    has_pages = pages_col is not None and pages_col in results.columns
-    has_toc = toc_col is not None and toc_col in results.columns
+    has_pages = "pages" in results.columns
+    has_toc = "table_of_contents" in results.columns
 
     def encode(structs, *extra):
         extra = list(extra)
@@ -80,21 +78,20 @@ def to_protobuf_column(results: DataFrame, struct_col: str = "structure",
         return blobs
 
     return arrowmap.append_column(
-        results, f"{struct_col}_proto", T.BinaryType(), encode, struct_col,
-        *([pages_col] if has_pages else []), *([toc_col] if has_toc else []),
+        results, "structure_proto", T.BinaryType(), encode, "structure",
+        *["pages"] * has_pages, *["table_of_contents"] * has_toc,
     )
 
 
-def to_char_bboxes_proto_column(results: DataFrame,
-                                bboxes_col: str = "char_bboxes") -> DataFrame:
-    """Append ``<bboxes_col>_proto`` (binary): the reference's pdf-coordinates
+def to_char_bboxes_proto_column(results: DataFrame) -> DataFrame:
+    """Append ``char_bboxes_proto`` (binary): the reference's pdf-coordinates
     leg (``contract_char_bboxes.proto`` CharBboxes, encoded at
     ``tasks.py:490-508``) from the ``coords.with_char_boxes`` array column.
     The reference DTO always serializes with ``__initialised__=True``."""
     from ..core import miniproto
 
     return arrowmap.append_column(
-        results, f"{bboxes_col}_proto", T.BinaryType(),
+        results, "char_bboxes_proto", T.BinaryType(),
         lambda boxes: [miniproto.encode_char_bboxes(b, initialised=True) for b in boxes],
-        bboxes_col,
+        "char_bboxes",
     )

@@ -31,7 +31,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import arrowmap, schemas
@@ -47,20 +46,16 @@ def span_rows(
     (``doc_id``, ``text``), ``spans`` being its derived ``oracle.Span``
     list and ``doc_id`` a string (see ``arrowmap.map_rows`` for the row and
     schema forms)."""
-    src = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     return arrowmap.map_rows(
-        src, lambda doc_id, text: fn(doc_id, oracle.derive_spans(doc_id, text or "")), schema
+        schemas.documents(docs),
+        lambda doc_id, text: fn(doc_id, oracle.derive_spans(doc_id, text or "")), schema,
     )
 
 
-def derive_spans(docs: DataFrame, doc_id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def derive_spans(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id: string, spans: array<struct<...>>), one row per
     document."""
-    return span_rows(
-        docs.select(F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("text")),
-        lambda doc_id, spans: [(doc_id, spans)],
-        schemas.SPANS_INPUT,
-    )
+    return span_rows(docs, lambda doc_id, spans: [(doc_id, spans)], schemas.SPANS_INPUT)
 
 
 def media_rows(

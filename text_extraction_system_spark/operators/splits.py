@@ -2,9 +2,10 @@
 of a training-data pipeline (companions to curation/dedup: once a corpus is
 curated, it is split train/val/test and packed into fixed token budgets).
 
-Both are deterministic, seed-keyed, and RNG-free (md5 arithmetic), so any
-engine reproduces the same assignment — the property that makes a 10^12-doc
-split auditable.
+Both are deterministic and RNG-free: each hashes the doc id under its one
+fixed seed (``SPLIT_SEED``, ``PACK_SEED``) with md5 arithmetic, so any engine
+reproduces the same assignment — the property that makes a 10^12-doc split
+auditable.
 """
 
 from __future__ import annotations
@@ -13,12 +14,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import schemas
+
 #: 2^32 — the split hash is the first 8 md5 hex chars as an integer, giving
 #: a uniform bucket in [0, 2^32); weights compare against exact integer
 #: thresholds (no float rounding at the boundary)
 _HASH_SPACE = 1 << 32
 
 DEFAULT_WEIGHTS: dict[str, float] = {"train": 0.98, "val": 0.01, "test": 0.01}
+#: the hash seeds of split assignment and of the packing order
+SPLIT_SEED = "split0"
+PACK_SEED = "pack0"
 
 
 def split_hash_col(doc_id: Column, seed: str) -> Column:
@@ -30,18 +36,16 @@ def split_hash_col(doc_id: Column, seed: str) -> Column:
     ).cast("bigint")
 
 
-def split_col(doc_id: Column, weights: dict[str, float] | None = None,
-              seed: str = "split0") -> Column:
-    """Split label by hash threshold: doc -> first split whose cumulative
-    weight threshold exceeds its bucket. Deterministic per (seed, doc_id) —
-    re-running, resharding, or growing the corpus never reassigns a doc
-    (the property hash-mod splits have and sampled splits lack)."""
-    weights = weights or DEFAULT_WEIGHTS
-    total = sum(weights.values())
-    h = split_hash_col(doc_id, seed)
+def split_col(doc_id: Column) -> Column:
+    """Split label by hash threshold: doc -> first split of DEFAULT_WEIGHTS
+    whose cumulative weight threshold exceeds its bucket. Deterministic per
+    doc_id — re-running, resharding, or growing the corpus never reassigns a
+    doc (the property hash-mod splits have and sampled splits lack)."""
+    total = sum(DEFAULT_WEIGHTS.values())
+    h = split_hash_col(doc_id, SPLIT_SEED)
     expr = None
     acc = 0.0
-    items = list(weights.items())
+    items = list(DEFAULT_WEIGHTS.items())
     for name, w in items[:-1]:
         acc += w
         thresh = int(acc / total * _HASH_SPACE)
@@ -51,42 +55,31 @@ def split_col(doc_id: Column, weights: dict[str, float] | None = None,
     return (expr.otherwise(F.lit(last)) if expr is not None else F.lit(last)).alias("split")
 
 
-def assign_splits(docs: DataFrame, doc_id_col: str = "doc_id",
-                  weights: dict[str, float] | None = None,
-                  seed: str = "split0") -> DataFrame:
+def assign_splits(docs: DataFrame) -> DataFrame:
     """(doc_id, split) — one narrow projection, no shuffle."""
-    return docs.select(
-        F.col(doc_id_col),
-        split_col(F.col(doc_id_col), weights, seed).alias("split"),
-    )
+    return schemas.keyed(docs, split_col(F.col("doc_id")))
 
 
 #: shard count for the two-level packing prefix sum. At 10^12 docs a single
 #: global window ORDER BY is one executor sorting the world; sharding by a
-#: doc hash bounds every sort/cumsum to corpus/n_shards rows, and the shard
-#: prefix offsets are an n_shards-row driver-side fold.
+#: doc hash bounds every sort/cumsum to corpus/PACK_SHARDS rows, and the
+#: shard prefix offsets are a PACK_SHARDS-row window.
 PACK_SHARDS = 32
 
 
-def pack_bins(
-    docs: DataFrame,
-    budget: int,
-    doc_id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    seed: str = "pack0",
-    n_shards: int = PACK_SHARDS,
-) -> DataFrame:
-    """Assign docs to fixed token-budget bins (training-sequence packing,
-    boundary-straddle variant): under the deterministic global order
-    (shard, order_key), doc d goes to bin floor((cumsum_before d)/budget).
+def pack_bins(docs: DataFrame, budget: int) -> DataFrame:
+    """Assign (doc_id, n_tokens) docs to fixed token-budget bins
+    (training-sequence packing, boundary-straddle variant): under the
+    deterministic global order (shard, order_key), doc d goes to bin
+    floor((cumsum_before d)/budget).
     Bins fill to >= budget (the straddling doc closes its bin), every doc
     lands in exactly one bin, bin ids are dense from 0.
 
     Scale shape — a DISTRIBUTED PREFIX SUM, not a global window:
-      1. shard = md5-hash of doc id mod n_shards (uniform);
-      2. within-shard cumsum via a window bounded to corpus/n_shards rows;
-      3. per-shard totals (an n_shards-row aggregate) -> exclusive prefix
-         offsets via a second window over those n_shards rows, broadcast-
+      1. shard = md5-hash of doc id mod PACK_SHARDS (uniform);
+      2. within-shard cumsum via a window bounded to corpus/PACK_SHARDS rows;
+      3. per-shard totals (a PACK_SHARDS-row aggregate) -> exclusive prefix
+         offsets via a second window over those rows, broadcast-
          joined back on shard — ENTIRELY inside the plan (construction runs
          no jobs; an earlier driver-side fold executed the shard-totals jobs
          at DataFrame-construction time, before bench warm-up);
@@ -94,27 +87,23 @@ def pack_bins(
          n_tokens)/budget).
     The single-ORDER-BY formulation any SQL engine would write is the
     semantic twin (the DuckDB oracle uses it); this plan replaces its one
-    world-wide sort with n_shards independent ones plus one 32-row window.
+    world-wide sort with PACK_SHARDS independent ones plus one 32-row window.
 
     Returns (doc_id, n_tokens, bin).
     """
-    order_key = F.md5(
-        F.concat_ws(":", F.lit(seed), F.col(doc_id_col).cast("string"))
-    )
-    sharded = docs.select(
-        F.col(doc_id_col),
-        F.col(tokens_col).cast("bigint").alias("n_tokens"),
-        order_key.alias("ok"),
+    order_key = F.md5(F.concat_ws(":", F.lit(PACK_SEED), F.col("doc_id").cast("string")))
+    sharded = schemas.keyed(
+        docs, F.col("n_tokens").cast("bigint").alias("n_tokens"), order_key.alias("ok")
     ).withColumn(
         "shard",
-        F.conv(F.substring(F.col("ok"), 1, 8), 16, 10).cast("bigint") % n_shards,
+        F.conv(F.substring(F.col("ok"), 1, 8), 16, 10).cast("bigint") % PACK_SHARDS,
     )
-    w = Window.partitionBy("shard").orderBy("ok", doc_id_col).rowsBetween(
+    w = Window.partitionBy("shard").orderBy("ok", "doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     within = sharded.withColumn("cum_in_shard", F.sum("n_tokens").over(w))
     # per-shard totals -> exclusive prefix offsets, in-plan: the second
-    # window runs over n_shards rows (one tiny partition — the deliberate
+    # window runs over PACK_SHARDS rows (one tiny partition — the deliberate
     # two-level trade: 32 rows sort nowhere, the corpus sorts per-shard);
     # shards absent from totals hold no docs, so they drop out of both the
     # running sum and the join
@@ -124,7 +113,7 @@ def pack_bins(
         "shard", F.coalesce(F.sum("t").over(wo), F.lit(0)).alias("shard_offset")
     )
     return within.join(F.broadcast(offsets), "shard").select(
-        doc_id_col,
+        "doc_id",
         "n_tokens",
         F.floor(
             (F.col("cum_in_shard") + F.col("shard_offset") - F.col("n_tokens"))
@@ -140,12 +129,7 @@ _MIX_SEED = "mix0"
 
 
 def mixture_plan(
-    docs: DataFrame,
-    weights: dict[str, int] | None,
-    token_budget: int,
-    doc_id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
+    docs: DataFrame, weights: dict[str, int] | None, token_budget: int
 ) -> DataFrame:
     """Data-mixture sampling plan + deterministic per-source sample — the
     pretraining-release step that turns "train on 30% web, 30% code, 40%
@@ -171,13 +155,10 @@ def mixture_plan(
     Scale shape: one narrow token-count pass; per-source totals (small
     agg); rates broadcast back; the sample predicate is a per-row hash
     compare; final per-source rollup. No global sort, nothing pairwise."""
-    from . import textstats  # noqa: F401  (token_count_col lives there)
     from .textstats import token_count_col
 
-    counts = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.col(source_col).alias("source"),
-        token_count_col(F.col(text_col)).alias("n_tokens"),
+    counts = schemas.documents(docs, "source").select(
+        "doc_id", "source", token_count_col(F.col("text")).alias("n_tokens")
     )
     totals = counts.groupBy("source").agg(
         F.sum("n_tokens").cast("bigint").alias("tokens_avail"),

@@ -61,18 +61,13 @@ def bucket_prefix_col(bucket) -> F.Column:
     return F.substring(bucket, 1, BUCKET_PREFIX_LEN)
 
 
-def write_signature_table(
-    docs: DataFrame,
-    base_dir: str,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def write_signature_table(docs: DataFrame, base_dir: str) -> str:
     """Materialize the committed corpus's dedup signatures, partitioned by
     (band, sig_prefix). Returns the table path."""
     from . import dedup
 
     path = os.path.join(base_dir, _SIG_DIR)
-    rows = dedup.signature_rows(docs, doc_id_col, text_col).withColumn(
+    rows = dedup.signature_rows(docs).withColumn(
         "sig_prefix", sig_prefix_col(F.col("band_sig"))
     )
     rows.write.mode("overwrite").partitionBy("band", "sig_prefix").parquet(path)

@@ -6,7 +6,7 @@ leaned on lexnlp (``data_extract.py:149-186``). ``_structure_of`` is the
 per-document function; the extraction kernel (``pipeline._extract``) calls
 it in its own pass, and queries that need one row per paragraph or
 sentence explode the kernel's ``structure`` column. ``section_rows`` emits
-heading-detected section rows for any text column through
+heading-detected section rows of a ``plain_text`` column through
 ``arrowmap.map_rows``.
 
 The segmentation rules themselves live in ``core.textseg`` / ``core.langid``
@@ -64,7 +64,7 @@ def with_structure(assembled: DataFrame) -> DataFrame:
         lambda texts: [_structure_of(t or "") for t in texts], "plain_text")
 
 
-def section_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
+def section_rows(assembled: DataFrame) -> DataFrame:
     """Row-per-section heading detection (W3/J8)."""
 
     def rows(doc_id, text):
@@ -74,7 +74,7 @@ def section_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFram
                    sec["title_start"], sec["title_end"], sec["level"])
 
     return arrowmap.map_rows(
-        assembled.select("doc_id", text_col), rows,
+        assembled.select("doc_id", "plain_text"), rows,
         "doc_id string, start long, end long, title string, "
         "title_start long, title_end long, level long",
     )

@@ -16,17 +16,17 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .. import arrowmap
+from .. import arrowmap, schemas
 from ..core import spec
 
-def tokens_col(text: Column) -> Column:
+def word_tokens_col(text: Column) -> Column:
     """Whitespace tokens, lowercased, \\s+ squashed first (lang.py:10,23)."""
     squashed = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
     return F.filter(F.split(squashed, " "), lambda w: w != "")
 
 
 def token_count_col(text: Column) -> Column:
-    return F.size(tokens_col(text)).cast("bigint")
+    return F.size(word_tokens_col(text)).cast("bigint")
 
 
 #: BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation marks
@@ -50,7 +50,7 @@ def detect_language_from_tokens(toks: Column, text: Column) -> Column:
     """Argmax of stopword hits with LANG_PRIORITY tie-break; all-zero -> 'en'.
     Matches ``core.langid.detect_language`` exactly. Takes the token array
     as a BOUND value so callers can share one tokenization across signals
-    (the naive per-signal form re-evaluated tokens_col once per stopword
+    (the naive per-signal form re-evaluated word_tokens_col once per stopword
     table — 12x per row)."""
     h = {lang: _stopword_hits(toks, lang) for lang in spec.LANG_PRIORITY}
     return (
@@ -66,13 +66,13 @@ def detect_language_col(text: Column) -> Column:
     """One-shot form: tokens let-bound, detection applied once."""
     from .exprutil import let
 
-    return let(tokens_col(text), lambda toks: detect_language_from_tokens(toks, text))
+    return let(word_tokens_col(text), lambda toks: detect_language_from_tokens(toks, text))
 
 
 def quality_cols(text: Column) -> dict[str, Column]:
     """Quality-scoring signals: word count, mean word length, stopword ratio,
     punctuation ratio, and a composite keep-score in [0,1]."""
-    return quality_cols_from_tokens(tokens_col(text), text)
+    return quality_cols_from_tokens(word_tokens_col(text), text)
 
 
 def quality_cols_from_tokens(toks: Column, text: Column) -> dict[str, Column]:
@@ -120,7 +120,7 @@ def token_hash_col(token: Column, hex_chars: int = spec.FP_HEX_CHARS) -> Column:
 def fingerprint_col(text: Column) -> Column:
     """Rolling polynomial hash over token hashes:
     acc = (acc*FP_BASE + tok) % FP_MOD, acc0 = 0."""
-    toks = tokens_col(text)
+    toks = word_tokens_col(text)
     hashes = F.transform(toks, lambda t: token_hash_col(t) % spec.FP_MOD)
     return F.aggregate(
         hashes,
@@ -141,7 +141,7 @@ DUP_NS = (5, 6, 7, 8, 9, 10)
 
 
 def py_tokens(text: str) -> list:
-    """Python twin of ``tokens_col`` (lower -> \\s+ squash -> trim ->
+    """Python twin of ``word_tokens_col`` (lower -> \\s+ squash -> trim ->
     split-on-space -> drop empties); exact on the corpus alphabet (ASCII —
     Java/Python lowercase and \\s agree there). Shared by Arrow kernels."""
     import re
@@ -150,19 +150,23 @@ def py_tokens(text: str) -> list:
     return [w for w in squashed.split(" ") if w]
 
 
-def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
-                 bits: int = 32):
-    """(doc_id, simhash) per doc: for each bit, every token votes +1/-1 by
-    that bit of its 8-hex-char md5 hash; the bit is set iff the vote is
-    > 0. Exact integer arithmetic over the ``tokens_col`` token stream, so
-    the DuckDB ``simhash`` oracle reproduces every value. A Catalyst vote
-    fold costs 32 interpreted zip_with lambdas per token; numpy does the
-    votes in one (tokens x bits) pass (~1.5 s -> ~0.4 s at sf0.1)."""
+#: simhash width: one bit per bit of a token's 8-hex-char md5 prefix
+SIMHASH_BITS = 32
+
+
+def simhash_rows(docs):
+    """(doc_id, simhash) per doc: for each of the SIMHASH_BITS bits, every
+    token votes +1/-1 by that bit of its 8-hex-char md5 hash; the bit is
+    set iff the vote is > 0. Exact integer arithmetic over the
+    ``word_tokens_col`` token stream, so the DuckDB ``simhash`` oracle
+    reproduces every value. A Catalyst vote fold costs 32 interpreted
+    zip_with lambdas per token; numpy does the votes in one (tokens x bits)
+    pass (~1.5 s -> ~0.4 s at sf0.1)."""
     import hashlib
 
     import numpy as np
 
-    shifts = np.arange(bits, dtype=np.uint64)
+    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
     def rows(doc_id, text):
         toks = py_tokens(text)
@@ -178,8 +182,7 @@ def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
         yield doc_id, int(((votes > 0).astype(np.uint64) << shifts).sum())
 
     return arrowmap.map_rows(
-        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
-        rows, "doc_id string, simhash bigint",
+        schemas.documents(docs), rows, "doc_id string, simhash bigint"
     )
 
 
@@ -190,7 +193,7 @@ def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
 NP_CHAIN_MIN_TOKENS = 4096
 
 
-def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
+def repetition_rows_arrow(assembled):
     """Gopher-style repetition quality signals over the EXTRACTED text (the
     post-extraction filter every LLM data pipeline runs — Rae et al. 2021
     'repetition' heuristics): fraction of duplicate lines (count and
@@ -310,7 +313,7 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
         )
 
     return arrowmap.map_rows(
-        assembled.select("doc_id", text_col), rows,
+        assembled.select("doc_id", "plain_text"), rows,
         "doc_id string, n_lines bigint, dup_line_frac double, "
         "dup_line_char_frac double, top_gram string, "
         "top_gram_char_frac double, "
@@ -318,12 +321,12 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
     )
 
 
-def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
+def _doc_token_counts_arrow(docs):
     """(doc_id, token, tf) per-doc term frequencies via one Arrow pass —
-    the shuffle-free form of explode(tokens_col) -> groupBy(doc_id, token)
+    the shuffle-free form of explode(word_tokens_col) -> groupBy(doc_id, token)
     (r6): the tf grouping is doc-local, so a python Counter per doc
     produces the distinct counts without shipping every token occurrence
-    through an exchange. Same tokenization as ``tokens_col`` via
+    through an exchange. Same tokenization as ``word_tokens_col`` via
     ``py_tokens``; docs with zero tokens emit no rows (explode's
     inner-join semantics). Pinned by the ``tfidf_keywords`` oracle."""
     from collections import Counter
@@ -333,13 +336,11 @@ def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
             yield doc_id, tok, tf
 
     return arrowmap.map_rows(
-        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
-        rows, "doc_id string, token string, tf bigint",
+        schemas.documents(docs), rows, "doc_id string, token string, tf bigint"
     )
 
 
-def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
-                   text_col: str = "text"):
+def tfidf_keywords(docs, k: int = 3):
     """Per-document top-k keywords by TF-IDF — the corpus-level two-pass
     curation operator (per-doc signals like quality/repetition need no
     corpus state; this one does): one per-doc term-frequency table feeds
@@ -358,13 +359,13 @@ def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
     ``count(*) over (partition by token)`` on them (one vocabulary-keyed
     shuffle of the tf rows), then the per-doc top-k window (a shuffle on
     doc_id). ``n_docs`` is counted from the scan as the oracle
-    defines it — distinct doc ids with at least one ``tokens_col`` token —
+    defines it — distinct doc ids with at least one ``word_tokens_col`` token —
     and rides in as a 1-row broadcast cross join; it needs no Python."""
     from pyspark.sql.window import Window
 
-    tf = _doc_token_counts_arrow(docs, doc_id_col, text_col)
-    n_docs = docs.where(token_count_col(F.col(text_col)) > 0).agg(
-        F.count_distinct(F.col(doc_id_col).cast("string")).alias("n_docs")
+    tf = _doc_token_counts_arrow(docs)
+    n_docs = docs.where(token_count_col(F.col("text")) > 0).agg(
+        F.count_distinct(F.col("doc_id").cast("string")).alias("n_docs")
     )
     weighted = (
         tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("token")))
@@ -388,8 +389,7 @@ def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
     )
 
 
-def source_stats(docs, doc_id_col: str = "doc_id", text_col: str = "text",
-                 source_col: str = "source"):
+def source_stats(docs):
     """Per-source corpus distribution report: doc counts, token totals, and
     EXACT rank-based quantiles (p50/p90) of per-doc token counts. Quantiles
     are percentile-disc by rank — the value at rank ceil(q * n) within the
@@ -405,10 +405,8 @@ def source_stats(docs, doc_id_col: str = "doc_id", text_col: str = "text",
     cost; for monitoring, run on a sample — the operator is unchanged."""
     from pyspark.sql.window import Window
 
-    counts = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.col(source_col).alias("source"),
-        token_count_col(F.col(text_col)).alias("n_tokens"),
+    counts = schemas.documents(docs, "source").select(
+        "doc_id", "source", token_count_col(F.col("text")).alias("n_tokens")
     )
     w = Window.partitionBy("source").orderBy("n_tokens", "doc_id")
     ranked = counts.select(

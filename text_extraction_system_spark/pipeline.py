@@ -68,14 +68,10 @@ def _extract(df: DataFrame, spans_of, with_structure: bool) -> DataFrame:
     return arrowmap.map_rows(df, row, T.StructType(fields))
 
 
-def extract_from_documents(
-    docs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    with_structure: bool = True,
-) -> DataFrame:
-    """documents -> extraction results (one row per doc): the kernel derives
-    each document's spans (``core.oracle.derive_spans``) in its own pass.
+def extract_from_documents(docs: DataFrame, with_structure: bool = True) -> DataFrame:
+    """documents (``doc_id``, ``text``) -> extraction results (one row per
+    doc): the kernel derives each document's spans
+    (``core.oracle.derive_spans``) in its own pass.
 
     Every document, whatever its length, runs in the one kernel pass: a
     span-level fan-out would give a document no parallelism (its
@@ -85,7 +81,7 @@ def extract_from_documents(
     4-core / 15 GiB host, 7g heap, median of 5 warm passes): 0.72 s for a
     200k-word doc and 1.94 s for an 800k-word one (119k spans)."""
     return _extract(
-        docs.select(F.col(doc_id_col).cast("string").alias("doc_id"), text_col),
+        schemas.documents(docs),
         lambda doc_id, text: oracle.derive_spans(doc_id, text or ""),
         with_structure,
     )
@@ -95,11 +91,13 @@ def extract_from_spans(spans_df: DataFrame, with_structure: bool = True) -> Data
     """spans table (input_hint shape: doc_id, spans) -> extraction results,
     one row per input row. Spans that break the span contract (NULLs,
     offsets out of order or out of range; ``core.spec``) give their doc a
-    failure code instead of results."""
+    failure code instead of results. The ``doc_id`` is keyed as the
+    documents path keys it (``schemas.keyed``), so either input may carry
+    bigint ids."""
     # one array per span field: they cross into Python as flat columns,
     # which arrowmap decodes through numpy, instead of one dict per span
     fields = [F.col("spans")[f].alias(f) for f in oracle.Span._fields]
-    return _extract(spans_df.select("doc_id", *fields), _spans_of, with_structure)
+    return _extract(schemas.keyed(spans_df, *fields), _spans_of, with_structure)
 
 
 def summary(results: DataFrame) -> DataFrame:

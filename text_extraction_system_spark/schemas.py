@@ -1,4 +1,5 @@
-"""Spark schemas for the extraction engine.
+"""Spark schemas for the extraction engine, and the one projection every
+document operator reads its input through (``keyed`` / ``documents``).
 
 Mirrors the reference DTOs (``text_extraction_system_api/.../dto.py:87-213``)
 per the SURVEY.md section 1 mapping: FloatType (not Double) for coordinates to
@@ -9,7 +10,26 @@ match the reference's float32 contract
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# --- input: documents table ------------------------------------------------
+
+
+def keyed(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """``df``'s ``doc_id`` as the string every document operator emits,
+    then ``cols``: the one projection of the document contract. An input
+    column keeps its fixed name (``doc_id``, ``text``, ``spans``, ``source``,
+    ``html``, ``n_tokens``, ``ingest_ts``, ...); a caller with other names
+    renames them at its call site."""
+    return df.select(F.col("doc_id").cast("string").alias("doc_id"), *cols)
+
+
+def documents(df: DataFrame, *carry: str | Column) -> DataFrame:
+    """A documents table as (doc_id string, text, *carry)."""
+    return keyed(df, "text", *carry)
+
 
 # --- input: interleaved spans table (BASELINE.json input_hint) -------------
 

@@ -17,6 +17,10 @@ operators: they call the same kernels and candidate cores
 ``_committed_candidates`` and ``_cosine_scored``) and add only the
 watermark-bounded key dedup a continuous emitter needs.
 
+The document and vector streams read the batch contracts (``doc_id`` +
+``text``; ``vec_id`` + ``embedding``) plus an ``ingest_ts`` arrival time,
+and remember an emitted key for one ``INGEST_WATERMARK``.
+
 Scale notes: the extraction stream is stateless (one row in, one row out), so
 it scales exactly like the batch job. The session and hourly aggregates keep
 state bounded by the watermark; checkpointing gives exactly-once sinks.
@@ -32,6 +36,9 @@ from ..operators import events, similarity
 
 #: how late an event may arrive, for both event streams
 EVENT_WATERMARK = "2 hours"
+#: how long the document and vector streams remember an emitted key, on
+#: their ``ingest_ts``
+INGEST_WATERMARK = "1 hour"
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -95,39 +102,33 @@ def run_windowed_counts_stream(
     )
 
 
-def _first_within(stream: DataFrame, ts_col: str, watermark: str,
-                  keys: list[str]) -> DataFrame:
-    """The first row of each ``keys`` value within the watermark horizon on
-    ``ts_col`` (cast to timestamp): ``dropDuplicatesWithinWatermark`` keeps
-    state for (ingest rate x horizon), not for the corpus."""
+def _ingest_time(stream: DataFrame) -> DataFrame:
+    return stream.withColumn("ingest_ts", F.col("ingest_ts").cast("timestamp"))
+
+
+def _first_within(stream: DataFrame, keys: list[str]) -> DataFrame:
+    """The first row of each ``keys`` value within INGEST_WATERMARK on
+    ``ingest_ts`` (cast to timestamp): ``dropDuplicatesWithinWatermark``
+    keeps state for (ingest rate x horizon), not for the corpus."""
     return (
-        stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
+        _ingest_time(stream)
+        .withWatermark("ingest_ts", INGEST_WATERMARK)
         .dropDuplicatesWithinWatermark(keys)
     )
 
 
-def dedup_stream(
-    docs_stream: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark: str = "1 hour",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_stream(docs_stream: DataFrame) -> DataFrame:
     """Streaming exact dedup — the continuous-ingest form of the batch
     hash-groupBy dedup: first occurrence of each md5 content hash within
     the watermark horizon passes, later duplicates are dropped
     (``_first_within``) — the only formulation that survives an unbounded
     stream. Exact-once global dedup across all history is the batch job's
     task (or a MERGE against the committed table)."""
-    hashed = docs_stream.withColumn("content_hash", F.md5(F.col(text_col)))
-    return _first_within(hashed, ts_col, watermark, ["content_hash"])
+    hashed = docs_stream.withColumn("content_hash", F.md5(F.col("text")))
+    return _first_within(hashed, ["content_hash"])
 
 
-def curation_stream(
-    docs_stream: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def curation_stream(docs_stream: DataFrame) -> DataFrame:
     """The curation funnel's KEEP path as a stream: the stateless gates
     (language agreement, quality, token budget) run per row exactly as in
     batch (shared curation.keep_predicate), then ``dedup_stream``'s
@@ -136,26 +137,19 @@ def curation_stream(
     per-source funnel REPORT stays a batch job over the committed table."""
     from ..operators import curation
 
-    s = curation.doc_signals(docs_stream, extra_cols=(ts_col,))
-    return _first_within(
-        s.where(curation.keep_predicate()), ts_col, watermark, ["content_hash"]
-    )
+    s = curation.doc_signals(docs_stream, extra_cols=("ingest_ts",))
+    return _first_within(s.where(curation.keep_predicate()), ["content_hash"])
 
 
 def incremental_dedup_stream(
-    docs_stream: DataFrame,
-    committed_sigs: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark: str = "1 hour",
-    est_threshold: float = 0.5,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
+    docs_stream: DataFrame, committed_sigs: DataFrame
 ) -> DataFrame:
     """``dedup.incremental_near_dup`` on a stream: each arriving doc is
     MinHash-signed by the batch signature kernel (a stateless Arrow map,
     carrying the event time through) and STREAM-STATIC matched against the
     committed corpus's signatures by the batch candidate core
-    (``dedup._band_matches``: same join, same sketch estimate). Pass
+    (``dedup._band_matches``: same join, same sketch estimate and
+    ``dedup.EST_THRESHOLD``). Pass
     ``state.read_signature_table(...)`` as ``committed_sigs`` for the
     production shape (durable partitioned table on disk — pytest runs the
     stream against exactly that).
@@ -165,20 +159,15 @@ def incremental_dedup_stream(
     (doc_id, dup_of). Emits (doc_id, dup_of, est_jaccard, ingest_ts)."""
     from ..operators import dedup
 
-    rows = dedup._signature_band_rows(
-        docs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
-        doc_id_col, text_col, carry=(ts_col,),
-    )
-    matched = dedup._band_matches(rows, committed_sigs, est_threshold, carry=(ts_col,))
-    return _first_within(matched, ts_col, watermark, ["doc_id", "dup_of"])
+    rows = dedup._signature_band_rows(_ingest_time(docs_stream), carry=("ingest_ts",))
+    matched = dedup._band_matches(rows, committed_sigs, carry=("ingest_ts",))
+    return _first_within(matched, ["doc_id", "dup_of"])
 
 
 def incremental_ann_stream(
     vecs_stream: DataFrame,
     committed_buckets: DataFrame,
     committed_vecs: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark: str = "1 hour",
     threshold: float = 0.3,
     multiprobe: int = similarity.MULTIPROBE_RADIUS,
     probe_budget: int | None = None,
@@ -200,14 +189,11 @@ def incremental_ann_stream(
     so the matches that pass the threshold are deduped on (query_id,
     cand_id) within the watermark: the dedup state holds matches, not
     candidates. Emits (query_id, cand_id, cosine, ingest_ts)."""
-    rows = similarity._srp_band_rows(
-        vecs_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
-        carry=("embedding", ts_col),
-    )
-    qs = similarity._probe_keys(rows, multiprobe, probe_budget, carry=(ts_col,))
-    cands = similarity._committed_candidates(qs, committed_buckets, carry=(ts_col,))
-    scored = similarity._cosine_scored(cands, committed_vecs, carry=(ts_col,))
+    ts = ("ingest_ts",)
+    rows = similarity._srp_band_rows(_ingest_time(vecs_stream), carry=("embedding", *ts))
+    qs = similarity._probe_keys(rows, multiprobe, probe_budget, carry=ts)
+    cands = similarity._committed_candidates(qs, committed_buckets, carry=ts)
+    scored = similarity._cosine_scored(cands, committed_vecs, carry=ts)
     return _first_within(
-        scored.where(F.col("cosine") >= threshold), ts_col, watermark,
-        ["query_id", "cand_id"],
+        scored.where(F.col("cosine") >= threshold), ["query_id", "cand_id"]
     )
