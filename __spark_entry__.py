@@ -180,10 +180,11 @@ def _q_dup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level TF-IDF keyword extraction: one token explode feeds both
-    term frequencies and document frequencies; fixed-point integer IDF
-    ((1e6 * n_docs) div df — monotone in log-IDF) keeps the scoring
-    oracle-hashable; per-doc top-3 window with (score desc, token) order."""
+    """Corpus-level TF-IDF keyword extraction: a document-frequency table
+    collected when the query is built, then one per-doc kernel pass that
+    counts term frequencies and keeps the top 3 by (score desc, token);
+    fixed-point integer IDF ((1e6 * n_docs) div df — monotone in log-IDF)
+    keeps the scoring oracle-hashable."""
     return textstats.tfidf_keywords(_docs(spark, sf_dir), k=3)
 
 
@@ -396,13 +397,13 @@ def _q_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "n_tokens")
     )
     sp = surv.withColumn("split", splits.split_col(F.col("doc_id")))
-    train = sp.where(F.col("split") == "train").select("doc_id", "n_tokens")
-    packed = splits.pack_bins(train, budget=PACK_BUDGET).select(
-        F.col("doc_id").alias("bin_doc"), "bin")
-    # null-safe: a NULL-id survivor keeps its bin, as in the oracle
-    return sp.join(packed, F.col("doc_id").eqNullSafe(F.col("bin_doc")), "left").select(
-        "doc_id", "source", "split", "n_tokens", "bin"
-    )
+    train = F.col("split") == "train"
+    # the train rows carry source and split through the packing: no join
+    # back on doc_id, which is no key once two survivors have a NULL id
+    cols = ["doc_id", "source", "split", "n_tokens", "bin"]
+    packed = splits.pack_bins(sp.where(train), budget=PACK_BUDGET).select(cols)
+    return sp.where(~train).withColumn("bin", F.lit(None).cast("bigint")).select(
+        cols).unionByName(packed)
 
 
 #: token budget for the mixture-sampling query (about a third of the
@@ -907,9 +908,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 
 def _sql_tokens(text: str) -> str:
+    """``textstats.word_tokens_col`` in DuckDB: the separator class is
+    spelled out, as RE2's ``\\s`` lacks \\x0b, and ``trim`` is told to strip
+    spaces only (by default it strips every Unicode space, \\xa0 included)."""
     return (
-        f"list_filter(string_split(trim(regexp_replace(lower({text}), '\\s+', ' ', 'g')), ' '), "
-        "w -> w != '')"
+        f"list_filter(string_split(trim(regexp_replace(lower({text}), "
+        f"'{textstats.WS_REGEX}', ' ', 'g'), ' '), ' '), w -> w != '')"
     )
 
 
@@ -1441,13 +1445,13 @@ f AS (
   FROM m
 ),
 kept AS (SELECT * FROM f WHERE lang_ok AND q_ok AND tok_ok),
-canon AS (SELECT content_hash, min(doc_id) AS doc_id FROM kept GROUP BY content_hash)"""
+canon AS (
+  -- curation.first_copy: the least doc_id per text, a NULL id ranking last
+  SELECT * FROM kept
+  QUALIFY row_number() OVER (PARTITION BY content_hash ORDER BY doc_id NULLS LAST) = 1
+)"""
 
     sql["curation_funnel"] = f"""{_cur_cte},
-surv AS (
-  SELECT k.source, k.n_tokens FROM kept k JOIN canon c
-  ON k.content_hash = c.content_hash AND k.doc_id IS NOT DISTINCT FROM c.doc_id
-),
 stages AS (
   SELECT source,
     CAST(count(*) AS BIGINT) AS n_input,
@@ -1460,7 +1464,7 @@ stages AS (
 sv AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_deduped,
          CAST(sum(n_tokens) AS BIGINT) AS tokens_kept
-  FROM surv GROUP BY source
+  FROM canon GROUP BY source
 )
 SELECT s.source, s.n_input, s.n_lang, s.n_quality, s.n_tokens_ok,
        coalesce(v.n_deduped, 0) AS n_deduped,
@@ -1763,31 +1767,27 @@ FROM c
     # CASE -> pack window over the train split only (global formulation of
     # the engine's two-level prefix sum)
     sql["release_manifest"] = f"""{_cur_cte},
-surv2 AS (
-  SELECT k.doc_id, k.source, k.n_tokens FROM kept k JOIN canon c
-  ON k.content_hash = c.content_hash AND k.doc_id IS NOT DISTINCT FROM c.doc_id
-),
 sp AS (
-  SELECT *, CASE {' '.join(_cases)} ELSE '{_sw_items[-1][0]}' END AS split
-  FROM surv2
+  SELECT doc_id, source, n_tokens,
+         CASE {' '.join(_cases)} ELSE '{_sw_items[-1][0]}' END AS split
+  FROM canon
 ),
 tr AS (
-  SELECT doc_id, n_tokens, {_pk_ok} AS ok, {_pk_shard} AS shard
+  SELECT *, {_pk_ok} AS ok, {_pk_shard} AS shard
   FROM sp WHERE split = 'train'
 ),
 c2 AS (
-  SELECT doc_id, n_tokens,
+  SELECT *,
          sum(n_tokens) OVER (ORDER BY shard, ok, doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
   FROM tr
-),
-b AS (
-  SELECT doc_id,
-         CAST(floor(CAST(cum - n_tokens AS DOUBLE) / {PACK_BUDGET}) AS BIGINT) AS bin
-  FROM c2
 )
-SELECT sp.doc_id, sp.source, sp.split, sp.n_tokens, b.bin
-FROM sp LEFT JOIN b ON sp.doc_id IS NOT DISTINCT FROM b.doc_id
+SELECT doc_id, source, split, n_tokens, CAST(NULL AS BIGINT) AS bin
+FROM sp WHERE split != 'train'
+UNION ALL
+SELECT doc_id, source, split, n_tokens,
+       CAST(floor(CAST(cum - n_tokens AS DOUBLE) / {PACK_BUDGET}) AS BIGINT) AS bin
+FROM c2
 """
 
     def _dotp(a: str, b: str, dim: int = 64) -> str:

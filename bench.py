@@ -59,7 +59,10 @@ HEADLINE = [
     # dup_clusters is deliberately NOT here: connected_components runs its
     # iterative actions (checkpoint + convergence counts) when the query is
     # BUILT, so a noop-write timing would measure only the final label
-    # write, not the clustering — a dishonest number
+    # write, not the clustering — a dishonest number. tfidf_keywords and
+    # decontaminate stay: each collects one table when BUILT (document
+    # frequencies, eval shingles), so their entries omit that one job
+    # (tools/qprof.py times build and write)
     "near_dup_pairs",
     "dup_windows",
     "decontaminate",

@@ -60,10 +60,16 @@ def _assert_parity(spark, con, data_dir: str, name: str) -> None:
 
 def _assert_equals_oracle(q, con, name: str) -> None:
     """DataFrame ``q`` equals the DuckDB oracle of query ``name`` on ``con``."""
+    _assert_equals_sql(q, con, entry.oracle_sql()[name], name)
+
+
+def _assert_equals_sql(q, con, sql: str, name: str) -> None:
+    """DataFrame ``q`` equals DuckDB's ``sql`` on ``con``: same row count,
+    same values (compared as sorted strings)."""
     cols = q.columns
     sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)
     odf = (
-        con.execute(entry.oracle_sql()[name]).df()[cols]
+        con.execute(sql).df()[cols]
         .sort_values(by=cols).reset_index(drop=True).astype(str)
     )
     assert len(sdf) == len(odf), f"{name}: {len(sdf)} vs {len(odf)} rows"
@@ -356,6 +362,39 @@ def test_curate_edge_corpus_reaches_each_case(spark, curate_corpus):
     assert {r["score"] for r in tfidf if r["token"] == "tokx"} == {77_000_000}
 
 
+@pytest.mark.parametrize("k", [1, 3, 50])
+def test_tfidf_stopword_corpus_parity(spark, k):
+    """One token in 95 of 100 docs (the stopword hot key a per-token
+    window would pile onto one task), repeated words, and two words only
+    each doc holds (a score tie for its top rank, which the token breaks):
+    the engine equals the oracle at k=1, at the query's k=3,
+    and at a k past every doc's vocabulary (each doc then gives one row
+    per distinct token)."""
+    from text_extraction_system_spark.operators import textstats
+
+    rows = [
+        (i, ("The " if i % 20 else "") + f"w{i % 7} w{i % 7} z{i} x{i} y{i % 3}", "en", "s")
+        for i in range(100)
+    ]
+    d, con = _corpus(spark, rows)
+    q = textstats.tfidf_keywords(spark.read.parquet(f"{d}/documents.parquet"), k=k)
+    sql = entry.oracle_sql()["tfidf_keywords"].replace("WHERE rank <= 3", f"WHERE rank <= {k}")
+    _assert_equals_sql(q, con, sql, f"tfidf_keywords k={k}")
+    got = q.collect()
+    if k == 50:
+        assert {r["df"] for r in got if r["token"] == "the"} == {95}
+        assert len(got) == sum(len(set(t.lower().split())) for _, t, _, _ in rows)
+
+
+@pytest.mark.parametrize("texts", [[], ["", " ", "\t\n\x0b", None]], ids=["empty", "blank"])
+def test_tfidf_without_tokens_is_empty(spark, texts):
+    """A corpus with no document, and one whose documents have no token,
+    give zero TF-IDF rows in both engines."""
+    d, con = _corpus(spark, [(i, t, "en", "s") for i, t in enumerate(texts)])
+    _assert_parity(spark, con, d, "tfidf_keywords")
+    assert entry.queries()["tfidf_keywords"](spark, d).count() == 0
+
+
 def test_incremental_dedup_wave_parity(spark):
     """A wave of MAX_BUCKET + 1 identical new docs (doc_id % 3 == 0), each
     a near-copy of the one committed doc: the batch side's bucket is over
@@ -375,15 +414,30 @@ def test_incremental_dedup_wave_parity(spark):
 @pytest.mark.parametrize("name", ["curation_funnel", "release_manifest"])
 def test_exact_dedup_survivor_skips_null_id(spark, name):
     """Two kept copies of one text, ids NULL and 7, in different sources:
-    exact dedup keeps doc 7 in both engines (a NULL id ranks last; the
-    oracle's ``min(doc_id)`` skips it), so source ``b`` holds the survivor."""
+    exact dedup keeps doc 7 in both engines (a NULL id ranks last), so
+    source ``b`` holds the survivor. Two NULL-id copies of one text keep
+    one (the oracle ranks too, as ``curation.first_copy`` does), and two
+    NULL-id survivors of distinct texts give one manifest row each."""
+    q = entry.queries()[name]
     d, con = _corpus(spark, [(None, _EN, "en", "a"), (7, _EN, "en", "b")])
     _assert_parity(spark, con, d, name)
-    rows = entry.queries()[name](spark, d).collect()
+    rows = q(spark, d).collect()
     if name == "curation_funnel":
         assert {r["source"]: r["n_deduped"] for r in rows} == {"a": 0, "b": 1}
     else:
         assert [(r["doc_id"], r["source"]) for r in rows] == [("7", "b")]
+    d, con = _corpus(spark, [(None, _EN, "en", "a"), (None, _EN, "en", "a")])
+    _assert_parity(spark, con, d, name)
+    rows = q(spark, d).collect()
+    if name == "curation_funnel":
+        assert [(r["n_tokens_ok"], r["n_deduped"], r["tokens_kept"]) for r in rows] == [(2, 1, 29)]
+    else:
+        assert [(r["doc_id"], r["n_tokens"]) for r in rows] == [(None, 29)]
+    d, con = _corpus(spark, [(None, _EN, "en", "a"), (None, _EN + " again", "en", "a")])
+    _assert_parity(spark, con, d, name)
+    rows = q(spark, d).collect()
+    if name == "release_manifest":
+        assert sorted(r["n_tokens"] for r in rows) == [29, 30]
 
 
 def test_decontaminate_eval_without_shingles(spark):

@@ -314,6 +314,21 @@ def test_curate_operators_do_not_checkpoint(spark, name):
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
 
 
+def test_tfidf_ranks_inside_one_kernel(spark):
+    """TF-IDF runs at most 3 jobs, its build-time document-frequency table
+    included, and the plan it returns is one kernel pass that ranks each
+    doc's tokens itself: one MapInArrow, no Exchange and no Window."""
+    from text_extraction_system_spark.operators import textstats
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    jobs = _jobs(spark, "test-tfidf", lambda: textstats.tfidf_keywords(docs).write.format(
+        "noop").mode("overwrite").save())
+    assert 0 < jobs <= 3, jobs
+    plan = _plan(textstats.tfidf_keywords(docs))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan and "Window" not in plan, plan
+
+
 def test_near_dup_pairs_verifies_candidates_only(spark):
     """Shingle sets are built only for candidate pairs, inside the verify
     kernel: no plan node carries (let alone broadcasts) a shingle-array
@@ -666,7 +681,7 @@ def _row_kernel_operators():
         "toc_section_rows": lambda d: toc.toc_section_rows(res(d)),
         "simhash_rows": textstats.simhash_rows,
         "repetition_rows_arrow": lambda d: textstats.repetition_rows_arrow(res(d)),
-        "token_counts": textstats._doc_token_counts_arrow,
+        "tfidf_keywords": textstats.tfidf_keywords,
         "signature_rows": dedup.signature_rows,
         "near_dup_pairs": dedup.near_dup_pairs,
         "contamination_report": lambda d: dedup.contamination_report(d, d),

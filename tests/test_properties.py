@@ -251,3 +251,35 @@ def test_arrow_decode_equals_to_pylist(rows, lo, n):
         return (type(v), v)
 
     assert typed(_pylist(arr)) == typed(arr.to_pylist())
+
+
+#: texts over the tokenizer's separators (space, \t, \n, \x0b, \f, \r),
+#: the blanks Python's ``\s`` or DuckDB's ``trim`` would also take (\xa0,
+#: \x85, \x1c, \u2028, \u3000) and letters of both cases, ASCII and not.
+#: Left out: the two lowercasing differences this test found, where DuckDB
+#: lowers a word-final Σ to σ (Java and Python: ς) and İ to i (Java and
+#: Python: i followed by U+0307).
+TOKEN_TEXTS = st.lists(
+    st.text(alphabet=" \t\n\x0b\f\r\xa0\x85\x1c\u2028\u3000aBzÉẞΩ", max_size=12),
+    min_size=1, max_size=20,
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(TOKEN_TEXTS)
+def test_three_tokenizers_agree(spark, texts):
+    """``textstats.py_tokens``, the JVM's ``word_tokens_col`` and the DuckDB
+    oracle's ``_sql_tokens`` give equal token lists."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+    from text_extraction_system_spark.operators import textstats
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    jvm = [r[0] for r in df.orderBy("i").select(
+        textstats.word_tokens_col(F.col("text"))).collect()]
+    con = duckdb.connect()
+    duck = [con.execute(f"SELECT {entry._sql_tokens('?')}", [t]).fetchone()[0] for t in texts]
+    py = [textstats.py_tokens(t) for t in texts]
+    assert py == jvm == duck, texts

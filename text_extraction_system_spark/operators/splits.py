@@ -89,11 +89,13 @@ def pack_bins(docs: DataFrame, budget: int) -> DataFrame:
     semantic twin (the DuckDB oracle uses it); this plan replaces its one
     world-wide sort with PACK_SHARDS independent ones plus one 32-row window.
 
-    Returns (doc_id, n_tokens, bin).
+    Returns (doc_id, n_tokens, bin, *the input's other columns).
     """
     order_key = F.md5(F.concat_ws(":", F.lit(PACK_SEED), F.col("doc_id").cast("string")))
+    rest = [c for c in docs.columns if c not in ("doc_id", "n_tokens")]
     sharded = schemas.keyed(
-        docs, F.col("n_tokens").cast("bigint").alias("n_tokens"), order_key.alias("ok")
+        docs, F.col("n_tokens").cast("bigint").alias("n_tokens"), order_key.alias("ok"),
+        *rest,
     ).withColumn(
         "shard",
         F.conv(F.substring(F.col("ok"), 1, 8), 16, 10).cast("bigint") % PACK_SHARDS,
@@ -119,6 +121,7 @@ def pack_bins(docs: DataFrame, budget: int) -> DataFrame:
             (F.col("cum_in_shard") + F.col("shard_offset") - F.col("n_tokens"))
             / budget
         ).cast("bigint").alias("bin"),
+        *rest,
     )
 
 

@@ -1,8 +1,8 @@
 """Text-analytics operators — token stats, quality scoring, language ID,
 document fingerprinting, simhash, repetition, TF-IDF. Column expressions
 are pure Catalyst (JVM-side, whole-stage codegen); the per-document Python
-kernels (simhash, repetition, term counts) run through ``arrowmap.map_rows``.
-Every operator has a DuckDB-SQL twin in ``__spark_entry__``.
+kernels (simhash, repetition, TF-IDF) run through ``arrowmap``; all split
+tokens on WS_REGEX. Every operator has a DuckDB-SQL twin in ``__spark_entry__``.
 
 These are the training-data-pipeline operators layered on top of the
 reference's extraction capabilities (task brief: dedup / quality / lang-ID /
@@ -19,9 +19,15 @@ from pyspark.sql import functions as F
 from .. import arrowmap, schemas
 from ..core import spec
 
+#: the token separators, Java's ``\s`` spelled out: Python's is wider (\x1c-\x1f,
+#: \x85, \xa0, Unicode spaces) and RE2's narrower (no \x0b)
+WS_REGEX = r"[ \t\n\x0b\f\r]+"
+
+
 def word_tokens_col(text: Column) -> Column:
-    """Whitespace tokens, lowercased, \\s+ squashed first (lang.py:10,23)."""
-    squashed = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+    """Whitespace tokens, lowercased, WS_REGEX runs squashed first
+    (lang.py:10,23); ``trim`` strips spaces only."""
+    squashed = F.trim(F.regexp_replace(F.lower(text), WS_REGEX, " "))
     return F.filter(F.split(squashed, " "), lambda w: w != "")
 
 
@@ -140,14 +146,15 @@ TOP_NS = (2, 3, 4)
 DUP_NS = (5, 6, 7, 8, 9, 10)
 
 
-def py_tokens(text: str) -> list:
-    """Python twin of ``word_tokens_col`` (lower -> \\s+ squash -> trim ->
-    split-on-space -> drop empties); exact on the corpus alphabet (ASCII —
-    Java/Python lowercase and \\s agree there). Shared by Arrow kernels."""
-    import re
+#: ``py_tokens``' map of the WS_REGEX characters other than space to space
+_WS_TO_SPACE = str.maketrans("\t\n\x0b\f\r", "     ")
 
-    squashed = re.sub(r"\s+", " ", (text or "").lower()).strip()
-    return [w for w in squashed.split(" ") if w]
+
+def py_tokens(text: str) -> list:
+    """Python twin of ``word_tokens_col``, shared by the Arrow kernels:
+    ``str.translate`` then ``split(" ")`` gives squash -> trim -> split's
+    tokens at half a regex's cost."""
+    return [w for w in (text or "").lower().translate(_WS_TO_SPACE).split(" ") if w]
 
 
 #: simhash width: one bit per bit of a token's 8-hex-char md5 prefix
@@ -321,71 +328,59 @@ def repetition_rows_arrow(assembled):
     )
 
 
-def _doc_token_counts_arrow(docs):
-    """(doc_id, token, tf) per-doc term frequencies via one Arrow pass —
-    the shuffle-free form of explode(word_tokens_col) -> groupBy(doc_id, token)
-    (r6): the tf grouping is doc-local, so a python Counter per doc
-    produces the distinct counts without shipping every token occurrence
-    through an exchange. Same tokenization as ``word_tokens_col`` via
-    ``py_tokens``; docs with zero tokens emit no rows (explode's
-    inner-join semantics). Pinned by the ``tfidf_keywords`` oracle."""
+def tfidf_keywords(docs, k: int = 3):
+    """Per-document top-k keywords by TF-IDF, the corpus-level two-pass
+    curation operator: (doc_id, rank, token, tf, df, score).
+
+    Scoring is INTEGER-exact (oracle-hashable): score = tf * ((1_000_000 *
+    n_docs) div df), all BIGINT — a fixed-point IDF monotone in log-IDF, so
+    top-k sets differ only where log-IDF ties anyway. Ties break by token
+    ascending (Python's code-point order is Spark's UTF-8 byte order).
+    ``n_docs`` counts the docs with a non-NULL id and a token, ``df`` the
+    docs holding the token; each row ranks alone (callers pass unique ids).
+
+    Scale shape: two narrow passes, no shuffle of tf or doc rows. When the
+    DataFrame is built, one ``map_batches`` pass yields each task's partial
+    counts of every doc's distinct tokens (and a NULL-token row holding its
+    n_docs); ``groupBy(token).sum`` merges them, so a stopword piles up on
+    no task, and the table is collected. The returned plan is one
+    ``map_rows`` pass: a doc's Counter gives tf, ``heapq.nsmallest`` the top
+    k, so ranking needs no window. Docs with no token emit no rows.
+
+    Ceiling: the vocabulary must fit on the driver and in the kernel's
+    pickled closure (pyspark broadcasts one over 1 MB), like
+    ``dedup.contamination_report``'s eval set or a broadcast join's build
+    side: a 1M-entry table of 8-char tokens takes 88-120 driver bytes an
+    entry (tracemalloc, CPython 3.11) and pickles to 13-16; the sf0.1
+    corpus has 31 distinct tokens, a 4,000-doc curate corpus 1,920."""
+    import heapq
     from collections import Counter
 
+    def partials(batches):
+        df, n_docs = Counter(), 0
+        for ids, texts in batches:
+            for doc_id, text in zip(ids, texts):
+                toks = set(py_tokens(text))
+                df.update(toks)
+                n_docs += doc_id is not None and bool(toks)
+        yield [*df, None], [*df.values(), n_docs]
+
+    keyed = schemas.documents(docs)
+    parts = arrowmap.map_batches(keyed, partials, "token string, df bigint")
+    table = dict(parts.groupBy("token").agg(F.sum("df")).collect())
+    scale = 1_000_000 * table.pop(None, 0)
+
     def rows(doc_id, text):
-        for tok, tf in Counter(py_tokens(text)).items():
-            yield doc_id, tok, tf
+        top = heapq.nsmallest(k, (
+            (-tf * (scale // table[t]), t, tf)
+            for t, tf in Counter(py_tokens(text)).items()
+        ))
+        for rank, (neg, t, tf) in enumerate(top, 1):
+            yield doc_id, rank, t, tf, table[t], -neg
 
     return arrowmap.map_rows(
-        schemas.documents(docs), rows, "doc_id string, token string, tf bigint"
-    )
-
-
-def tfidf_keywords(docs, k: int = 3):
-    """Per-document top-k keywords by TF-IDF — the corpus-level two-pass
-    curation operator (per-doc signals like quality/repetition need no
-    corpus state; this one does): one per-doc term-frequency table feeds
-    BOTH the per-doc tf and the corpus document frequencies.
-
-    Scoring is INTEGER-exact (oracle-hashable — see the float-exact
-    recipe): idf_scaled = (1_000_000 * n_docs) div df (integer division,
-    the fixed-point inverse document frequency; the log() of textbook IDF
-    is monotone in this, so top-k sets differ only where log-IDF ties
-    anyway) and score = tf * idf_scaled, all BIGINT. Ties break by token
-    string ascending.
-
-    Scale shape: the tf stage is the Arrow Counter kernel
-    (``_doc_token_counts_arrow`` — per-doc grouping needs no exchange),
-    read once: its (doc, token) rows are distinct per doc, so ``df`` is
-    ``count(*) over (partition by token)`` on them (one vocabulary-keyed
-    shuffle of the tf rows), then the per-doc top-k window (a shuffle on
-    doc_id). ``n_docs`` is counted from the scan as the oracle
-    defines it — distinct doc ids with at least one ``word_tokens_col`` token —
-    and rides in as a 1-row broadcast cross join; it needs no Python."""
-    from pyspark.sql.window import Window
-
-    tf = _doc_token_counts_arrow(docs)
-    n_docs = docs.where(token_count_col(F.col("text")) > 0).agg(
-        F.count_distinct(F.col("doc_id").cast("string")).alias("n_docs")
-    )
-    weighted = (
-        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("token")))
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "token",
-            "tf",
-            "df",
-            (F.col("tf") * F.expr("(1000000 * n_docs) div df")).alias("score"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("token")
-    )
-    return (
-        weighted.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("doc_id", F.col("rank").cast("int").alias("rank"),
-                "token", "tf", "df", "score")
+        keyed, rows,
+        "doc_id string, rank int, token string, tf bigint, df bigint, score bigint",
     )
 
 

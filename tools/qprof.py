@@ -1,8 +1,9 @@
 """Per-query profiling harness (bench.py stays frozen; guide §1.4/§1.5).
 
 Times individual declared queries with the noop sink, labeled jobs, and
-optional explain("formatted") capture. Each timed write is of a freshly
-built DataFrame.
+optional explain("formatted") capture. Each timed repeat builds the
+DataFrame and writes it, so the jobs a query runs while it is built (the
+collects of ``tfidf_keywords`` and ``decontaminate``) count in its time.
 
     python tools/qprof.py --repeats 5 --explain-dir /tmp/plans \
         --suffix _before reading_order deskew
@@ -74,7 +75,7 @@ def main() -> None:
     # every write gets a freshly built DataFrame: a query with a lazy
     # localCheckpoint fills it in the write that first runs it, so a second
     # write of the same DataFrame would skip everything below the checkpoint.
-    # Jobs the query runs while it is built (e.g. collects) are not timed.
+    # The clock starts before the build, which may run jobs of its own.
     out: dict[str, list[float]] = {}
     for name in args.names:
         df = qs[name](spark, args.sf)
@@ -87,8 +88,8 @@ def main() -> None:
         ts = []
         for i in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
-            df = qs[name](spark, args.sf)
             t0 = time.time()
+            df = qs[name](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.time() - t0, 3))
         out[name] = ts
